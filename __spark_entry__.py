@@ -4101,10 +4101,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_t10(spark, sf):
         # MAJOR COMPACTION end to end: three overlapping generations ->
         # zero-shuffle k-way merge (full deletion-atom semantics) ->
-        # surviving atoms re-encoded -> range-sharded binary sink ->
-        # scan the OUTPUT back. The operation a reference user runs
-        # after the TTL strip: N sorted runs in, one non-overlapping
-        # generation set out, deletes preserved until gc_grace. The
+        # each key range's surviving atoms re-encoded into its own
+        # shard by the task that merged it -> scan the OUTPUT back. The
+        # operation a reference user runs after the TTL strip: N sorted
+        # runs in, one non-overlapping generation set out, deletes
+        # preserved until gc_grace. The
         # oracle maps the merged-state oracle through the same
         # deterministic atom reconstruction.
         from cassandra_ttl_remover_spark.sources import sstable as ss

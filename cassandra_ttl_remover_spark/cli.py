@@ -3,8 +3,16 @@
 Mirrors the reference's picocli surface (TTLRemoverCLI.java:25-70) and its
 option cross-validation matrix (:165-197): version <-> cql requirements,
 --sstables xor --sstable, output path handling. Produces a job spec and runs
-the distributed read -> strip -> sorted-write DAG that replaces the
-reference's sequential per-file loop (§3.1 step 5).
+it in parallel in place of the reference's sequential per-file loop (§3.1
+step 5):
+
+- sstable -> sstable is the reference's own dataflow: each index-snapped
+  split of each input table is decoded, stripped and re-encoded into its
+  own output shard (``rewrite_stripped``), with no shuffle. Merging many
+  generations into non-overlapping shards is compaction
+  (``compact_rewrite``), not this job.
+- sstable -> parquet and parquet -> parquet strip a cell frame and write it
+  sorted and range-partitioned (``write_sorted``).
 
 Usage:
     python -m cassandra_ttl_remover_spark.cli \
@@ -32,7 +40,6 @@ class JobSpec:
     clustering: list[str]
     input_format: str = "parquet"
     output_format: str = "parquet"
-    rewrite_mode: str = "reshard"
 
 
 class TTLRemovalError(RuntimeError):
@@ -67,15 +74,9 @@ def parse_args(argv: list[str]) -> JobSpec:
                         "(Data.db/Index.db directories)")
     p.add_argument("--output-format", default="parquet",
                    choices=["parquet", "sstable"],
-                   help="sstable = re-encode stripped cells through the "
-                        "distributed sharded SSTable sink (the "
-                        "reference's output side)")
-    p.add_argument("--rewrite-mode", default="reshard",
-                   choices=["reshard", "inplace"],
-                   help="sstable->sstable only: 'reshard' range-"
-                        "partitions into new shards (one exchange); "
-                        "'inplace' is the zero-shuffle per-split 1:1 "
-                        "rewrite (the reference's own dataflow)")
+                   help="sstable = rewrite each input split into its "
+                        "own stripped SSTable shard (the reference's "
+                        "output side; requires --input-format sstable)")
     a = p.parse_args(argv)
 
     # option matrix (TTLRemoverCLI.java:165-197): cql required iff the format
@@ -95,7 +96,6 @@ def parse_args(argv: list[str]) -> JobSpec:
         clustering=[c for c in a.clustering.split(",") if c],
         input_format=a.input_format,
         output_format=a.output_format,
-        rewrite_mode=a.rewrite_mode,
     )
 
 
@@ -106,29 +106,23 @@ def run(spec: JobSpec) -> int:
     spark = get_spark("ttl-remover-cli")
     try:
         if spec.input_format == "sstable":
-            # the reference's job verbatim on its NATIVE format: binary
-            # scan -> strip -> (sharded binary sink | sorted parquet).
-            # Sidecars (Filter/Summary/Statistics/Digest/TOC) are
-            # re-emitted by the sink, so outputs pass verify_digests.
+            # the reference's job verbatim on its NATIVE format: the
+            # zero-shuffle per-split rewrite (sidecars re-emitted, so
+            # outputs pass verify_digests), or scan -> strip -> sorted
+            # parquet
             from cassandra_ttl_remover_spark.sources.sstable import (
                 rewrite_stripped,
                 scan_sstable,
                 strip_ttl_cells,
-                write_sstable_distributed,
             )
 
-            if (spec.output_format == "sstable"
-                    and spec.rewrite_mode == "inplace"):
-                rewrite_stripped(spark, spec.input_path,
-                                 spec.output_path)
+            if spec.output_format == "sstable":
+                rewrite_stripped(spark, spec.input_path, spec.output_path)
                 return 0
             stripped = strip_ttl_cells(
                 scan_sstable(spark, spec.input_path))
-            if spec.output_format == "sstable":
-                write_sstable_distributed(stripped, spec.output_path)
-            else:
-                write_sorted(stripped, spec.output_path, pk="pk",
-                             clustering=["cell"])
+            write_sorted(stripped, spec.output_path, pk="pk",
+                         clustering=["cell"])
             return 0
         if spec.output_format == "sstable":
             raise TTLRemovalError(

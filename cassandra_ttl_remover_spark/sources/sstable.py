@@ -46,11 +46,12 @@ reads another split's bytes, so the scan parallelizes like any columnar
 split scan and would map 1:1 onto object-store ranged GETs. Cells stream
 out as flat rows; no partition is materialized whole except the one being
 decoded (the reference's iterator does the same —
-NoTTLSSTableIdentityIterator). The WRITER here is the deterministic
-fixture generator for tests/oracles (driver-side, sorted by key bytes);
-a production-scale writer would be a per-task ``mapPartitions`` emitting
-one sorted SSTable per task, exactly like sinks/writer.write_sorted does
-for parquet.
+NoTTLSSTableIdentityIterator). Every writer is per-task and shares one
+encoder (:func:`_encode_rows` over :func:`write_sstable`): the
+zero-shuffle rewrites of existing tables (strip, single-table GC, k-way
+compaction) run on one driver, :func:`_rewrite_shards`, that writes one
+shard per split or merge range; :func:`write_sstable_distributed`
+range-partitions an arbitrary cell frame into shards.
 """
 
 from __future__ import annotations
@@ -1620,7 +1621,7 @@ def _decode_cell_body(f, rlen, rval, pk: str, name: str,
 def _resolve_table_dirs(path: str) -> list[str]:
     """The ONE layout convention: ``path`` is either a single sstable
     (``Data.db`` directly inside) or a directory of shard/generation
-    sstables (the distributed writer's layout == a Cassandra data
+    sstables (every writer's output layout == a Cassandra data
     directory). Shared by the batch reader and the stats census so a
     future layout change cannot make them disagree on what a directory
     contains."""
@@ -2050,109 +2051,77 @@ def stream_sstable(spark, path: str, num_splits: int = 4):
     )
 
 
+def _split_specs(path: str, num_splits: int) -> list[tuple]:
+    """One rewrite task spec per index-snapped split of every table under
+    ``path``: ``(shard, data_path, start, end)``, where the shard name
+    ``<generation>_shard=<split>`` keeps a generation's splits together
+    and in key order."""
+    return [
+        (f"{os.path.basename(d.rstrip('/'))}_shard={i:05d}", *split)
+        for d in _resolve_table_dirs(path)
+        for i, split in enumerate(_plan_table_splits(d, num_splits))
+    ]
+
+
+_SPLIT_SPEC = "shard string, data_path string, start long, end long"
+
+
 def rewrite_stripped(spark, path: str, out_dir: str,
                      num_splits: int = 8) -> list:
-    """The reference's ENTIRE job with ZERO shuffle: every generation is
-    already sorted, and TTL strip is per-cell (expiring -> normal,
-    everything else verbatim — NoTTLColumnSerializer's exact rule), so
-    each index-snapped byte split decodes, strips, and re-encodes ITS
-    OWN output sstable in place: no repartition, no sort, no network.
-    The distributed sink (:func:`write_sstable_distributed`) is the
-    re-sharding variant (one range exchange); this is the 1:1 rewrite —
-    at 100 TB the difference is shuffling the entire corpus once versus
-    not at all, which is why the reference's per-file loop is the right
-    dataflow and only its single-threadedness needed replacing.
+    """The reference's ENTIRE job with ZERO shuffle, and the CLI's only
+    sstable->sstable path: every generation is already sorted, and TTL
+    strip is per-cell (expiring -> normal, everything else verbatim —
+    NoTTLColumnSerializer's exact rule), so each index-snapped byte split
+    decodes, strips, and re-encodes ITS OWN output sstable: no
+    repartition, no sort, no network. This is the reference's 1:1
+    per-file dataflow, parallelized. Consolidating many generations into
+    non-overlapping shards is compaction (:func:`compact_rewrite`), not
+    the strip.
 
-    Output layout: ``out_dir/<generation>_shard=<split>`` — each split's
-    partitions re-encoded through the shared row->cell mapping
-    (:func:`_row_to_cell`), partition-level deletions preserved, every
-    sidecar re-emitted (outputs pass :func:`verify_digests`). Returns
-    the per-shard report rows ``(shard, n_partitions, n_cells)``."""
-    import pandas as pd
+    Output layout: one shard per split, ``out_dir/<generation>_shard=
+    <split>`` (:func:`_rewrite_shards`), encoded by the shared
+    :func:`_encode_rows` — partition-level deletions preserved, every
+    sidecar re-emitted (outputs pass :func:`verify_digests`).
+    ``out_dir`` must be absent or empty. Returns the per-shard report
+    rows ``(shard, n_partitions, n_cells)``."""
 
-    os.makedirs(out_dir, exist_ok=True)
-    specs = []
-    for d in _resolve_table_dirs(path):
-        gen_name = os.path.basename(d.rstrip("/"))
-        for i, (data_path, start, end) in enumerate(
-                _plan_table_splits(d, num_splits)):
-            specs.append((gen_name, i, data_path, start, end))
+    def _strip(shard_dir, data_path, start, end):
+        return _encode_rows(
+            ((pk, cell, "normal", None, None, wt, val)
+             if kind == "expiring" else (pk, cell, kind, ttl, exp, wt, val)
+             for pk, cell, kind, ttl, exp, wt, val
+             in scan_data_range(data_path, int(start), int(end))),
+            shard_dir)
 
-    def _rewrite(batches):
-        for pdf in batches:
-            out_rows = []
-            for gen_name, i, data_path, start, end in pdf[
-                ["gen", "idx", "data_path", "start", "end"]
-            ].itertuples(index=False):
-                parts: dict[bytes, list] = {}
-                deletions: dict[bytes, tuple] = {}
-                n = 0
-                for r in scan_data_range(data_path, int(start), int(end)):
-                    pk, cell, kind, ttl, exp, wt, val = r
-                    if kind == "partition_tombstone":
-                        deletions[pk.encode()] = (int(exp), int(wt))
-                        parts.setdefault(pk.encode(), [])
-                        n += 1
-                        continue
-                    if kind == "expiring":
-                        kind, ttl, exp = "normal", None, None
-                    parts.setdefault(pk.encode(), []).append(
-                        _row_to_cell(cell, kind, ttl, exp, wt, val))
-                    n += 1
-                if not parts:
-                    continue
-                shard = f"{gen_name}_shard={int(i):05d}"
-                write_sstable(
-                    [(k, cs, deletions[k]) if k in deletions else (k, cs)
-                     for k, cs in parts.items()],
-                    os.path.join(out_dir, shard),
-                )
-                out_rows.append((shard, len(parts), n))
-            yield pd.DataFrame(
-                out_rows, columns=["shard", "n_partitions", "n_cells"])
-
-    report = (
-        local_frame(spark,
-            specs, "gen string, idx int, data_path string, "
-                   "start long, end long")
-        .repartition(min(len(specs), 32))
-        .mapInPandas(
-            _rewrite,
-            schema="shard string, n_partitions bigint, n_cells bigint",
-        )
-    )
-    return report.collect()
+    return _rewrite_shards(spark, out_dir, _split_specs(path, num_splits),
+                           _SPLIT_SPEC, _strip, ("n_partitions", "n_cells"))
 
 
-def _classify_atom(pd_wt: dict, rts: dict, atoms: dict,
-                   pk: str, cell, kind: str, wt: int, val) -> None:
-    """Route one decoded atom into the task-local resolution state — the
-    build half that pairs with :func:`_resolve_atoms` (shared by the
-    k-way merge and the single-table GC rewrite so neither half of the
-    semantics can drift between dataflows)."""
-    if kind == "partition_tombstone":
-        pd_wt[pk] = max(pd_wt.get(pk, wt), wt)
-    elif kind == "range_tombstone":
-        d_rt = rts.setdefault(pk, {})
-        span = (cell, val)
-        d_rt[span] = max(d_rt.get(span, wt), wt)
-    else:
-        atoms.setdefault((pk, cell), []).append((wt, kind, val))
-
-
-def _resolve_atoms(pd_wt: dict, rts: dict, atoms: dict,
-                   threshold: int) -> list[tuple]:
+def _resolve_atoms(rows: Iterable[tuple], threshold: int) -> list[tuple]:
     """Task-local application of compact_atoms' ONE shadowing rule —
     the single Python implementation shared by the k-way merge and the
     single-table GC rewrite so the two cannot drift from each other (or
     from the DataFrame plan: cross-plan equality is pinned in
     tests/test_sstable.py and the spec-model property tests).
 
-    Inputs: ``pd_wt[pk] -> max partition-delete writetime``;
-    ``rts[pk][(start, end)] -> max range-tombstone writetime``;
+    ``rows`` are decoded :data:`SSTABLE_SCHEMA` rows; they are grouped
+    into ``pd_wt[pk] -> max partition-delete writetime``,
+    ``rts[pk][(start, end)] -> max range-tombstone writetime`` and
     ``atoms[(pk, cell)] -> [(writetime, kind, value), …]``. Returns
     resolved ``(pk, cell, writetime, value, status)`` rows."""
-    rows: list[tuple] = []
+    pd_wt: dict[str, int] = {}
+    rts: dict[str, dict[tuple, int]] = {}
+    atoms: dict[tuple, list] = {}
+    for pk, cell, kind, _, _, wt, val in rows:
+        wt = int(wt)
+        if kind == "partition_tombstone":
+            pd_wt[pk] = max(pd_wt.get(pk, wt), wt)
+        elif kind == "range_tombstone":
+            d_rt = rts.setdefault(pk, {})
+            d_rt[(cell, val)] = max(d_rt.get((cell, val), wt), wt)
+        else:
+            atoms.setdefault((pk, cell), []).append((wt, kind, val))
+    out: list[tuple] = []
     for (pk, cell), versions in atoms.items():
         pw = pd_wt.get(pk)
         covering = [
@@ -2179,13 +2148,13 @@ def _resolve_atoms(pd_wt: dict, rts: dict, atoms: dict,
                 if tomb_wt is None or wt > tomb_wt
             ]
             if live:
-                rows.append((
+                out.append((
                     pk, cell, max(wt for wt, _ in live),
                     str(sum(v for _, v in live)),
                     "counter_live"))
             elif tomb_wt > threshold:
-                rows.append((pk, cell, tomb_wt, None,
-                             "tombstone_retained"))
+                out.append((pk, cell, tomb_wt, None,
+                            "tombstone_retained"))
             continue
         wt, kind, val = max(
             surv,
@@ -2193,21 +2162,21 @@ def _resolve_atoms(pd_wt: dict, rts: dict, atoms: dict,
                            a[2] if a[2] is not None else ""))
         if kind == "tombstone":
             if wt > threshold:
-                rows.append((pk, cell, wt, None,
-                             "tombstone_retained"))
+                out.append((pk, cell, wt, None,
+                            "tombstone_retained"))
         else:
-            rows.append((pk, cell, wt, val, "live"))
+            out.append((pk, cell, wt, val, "live"))
     for pk, spans in rts.items():
         pw = pd_wt.get(pk)
         for (s, e), m in spans.items():
             if (pw is None or m > pw) and m > threshold:
-                rows.append((pk, s, m, e,
-                             "range_tombstone_retained"))
+                out.append((pk, s, m, e,
+                            "range_tombstone_retained"))
     for pk, pwt in pd_wt.items():
         if pwt > threshold:
-            rows.append((pk, None, pwt, None,
-                         "partition_tombstone_retained"))
-    return rows
+            out.append((pk, None, pwt, None,
+                        "partition_tombstone_retained"))
+    return out
 
 
 def _iter_planner_keys(d: str):
@@ -2255,6 +2224,56 @@ def _plan_merge_cuts(dirs: list[str], num_splits: int,
     return buf[step::step][: max(0, num_splits - 1)]
 
 
+def _merge_ranges(dirs: list[str], num_splits: int,
+                  max_planner_keys: int = 65536) -> list[tuple]:
+    """The k-way merge's task specs: contiguous half-open key ranges
+    ``(start, stop)`` cut by :func:`_plan_merge_cuts`, ``None`` = open.
+    Cut points ship as HEX so partition keys stay opaque bytes end to
+    end — a strict-UTF-8 decode here crashed the planner on corpora with
+    non-UTF-8 keys even though the on-disk format and every comparison
+    treat keys as bytes (ADVICE r8)."""
+    cuts = [c.hex() for c in _plan_merge_cuts(dirs, num_splits,
+                                              max_planner_keys)]
+    bounds = [None, *cuts, None]
+    return list(zip(bounds, bounds[1:]))
+
+
+def _merge_range(dirs: list[str], ks: str | None, kp: str | None,
+                 threshold: int) -> list[tuple]:
+    """One merge task: seek the hex key range ``[ks, kp)`` in EVERY
+    generation (a summary-window index read, then one Data.db byte run
+    each) and resolve the atoms found there with :func:`_resolve_atoms`.
+    Returns resolved ``(pk, cell, writetime, value, status)`` rows."""
+    start = bytes.fromhex(ks) if ks is not None else None
+    stop = bytes.fromhex(kp) if kp is not None else None
+
+    def _rows(d):
+        win = _summary_window(d, start, stop)
+        index_path = os.path.join(d, "Index.db")
+        if win is not None:
+            ix_start, ix_end, win_end = win
+            with open(index_path, "rb") as ixf:
+                ixf.seek(ix_start)
+                buf = (ixf.read(ix_end - ix_start)
+                       if ix_end is not None else ixf.read())
+            entries = _parse_index_entries(
+                buf, _table_generation(d), index_path, base_off=ix_start)
+            end_data = win_end if win_end is not None else _data_size(d)
+        else:
+            entries = read_index(index_path)
+            end_data = _data_size(d)
+        _, bs, be = select_index_range(entries, end_data, start, stop)
+        if bs >= be:
+            return
+        for r in scan_data_range(os.path.join(d, "Data.db"), bs, be):
+            pk_b = r[0].encode()
+            if ((start is None or pk_b >= start)
+                    and (stop is None or pk_b < stop)):
+                yield r
+
+    return _resolve_atoms((r for d in dirs for r in _rows(d)), threshold)
+
+
 def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
                          now_us: int, num_splits: int = 8,
                          max_planner_keys: int = 65536):
@@ -2290,17 +2309,7 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     generation (:func:`_summary_window` — tasks never materialize a
     generation's sample list)."""
     dirs = _resolve_table_dirs(path)
-    cuts = _plan_merge_cuts(dirs, num_splits, max_planner_keys)
-    bounds = [None, *cuts, None]
-    # cut points ship as HEX so partition keys stay opaque bytes end to
-    # end — a strict-UTF-8 decode here crashed the planner on corpora
-    # with non-UTF-8 keys even though the on-disk format and every
-    # comparison treat keys as bytes (ADVICE r8)
-    ranges = [
-        ((bounds[i].hex() if bounds[i] is not None else None),
-         (bounds[i + 1].hex() if bounds[i + 1] is not None else None))
-        for i in range(len(bounds) - 1)
-    ]
+    ranges = _merge_ranges(dirs, num_splits, max_planner_keys)
     threshold = int(now_us) - int(gc_grace_us)
 
     def _merge(batches):
@@ -2309,44 +2318,7 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
         for pdf in batches:
             rows = []
             for ks, kp in zip(pdf["ks"], pdf["kp"]):
-                start = bytes.fromhex(ks) if ks is not None else None
-                stop = bytes.fromhex(kp) if kp is not None else None
-                pd_wt: dict[str, int] = {}
-                rts: dict[str, dict[tuple, int]] = {}
-                atoms: dict[tuple, list] = {}
-                for d in dirs:
-                    win = _summary_window(d, start, stop)
-                    if win is not None:
-                        ix_start, ix_end, win_end = win
-                        index_path = os.path.join(d, "Index.db")
-                        with open(index_path, "rb") as ixf:
-                            ixf.seek(ix_start)
-                            buf = (ixf.read(ix_end - ix_start)
-                                   if ix_end is not None else ixf.read())
-                        entries = _parse_index_entries(
-                            buf, _table_generation(d), index_path,
-                            base_off=ix_start)
-                        end_data = (win_end if win_end is not None
-                                    else _data_size(d))
-                    else:
-                        entries = read_index(
-                            os.path.join(d, "Index.db"))
-                        end_data = _data_size(d)
-                    _, bs, be = select_index_range(
-                        entries, end_data, start, stop)
-                    if bs >= be:
-                        continue
-                    for r in scan_data_range(
-                            os.path.join(d, "Data.db"), bs, be):
-                        pk_b = r[0].encode()
-                        if start is not None and pk_b < start:
-                            continue
-                        if stop is not None and pk_b >= stop:
-                            continue
-                        _classify_atom(pd_wt, rts, atoms, r[0], r[1],
-                                       r[2], int(r[5]), r[6])
-                rows.extend(
-                    _resolve_atoms(pd_wt, rts, atoms, threshold))
+                rows.extend(_merge_range(dirs, ks, kp, threshold))
             yield pd.DataFrame(
                 rows, columns=["pk", "cell", "writetime", "value",
                                "status"])
@@ -2513,13 +2485,12 @@ def stats_census(spark, path: str):
 
 
 # ---------------------------------------------------------------------------
-# distributed sink: cell frame -> sharded SSTables
+# writers: one encoder, one rewrite driver, one sink for cell frames
 # ---------------------------------------------------------------------------
 
 def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
     """Inverse of the scan's row decode: one SSTABLE_SCHEMA row back to
-    its writer cell tuple (shared by the distributed sink and the
-    zero-shuffle strip rewrite so the two write paths cannot drift)."""
+    its writer cell tuple (the cell half of :func:`_encode_rows`)."""
     name = str(cell).encode()
     if kind == "expiring":
         # expiration is an on-disk int32 of seconds — saturate like the
@@ -2547,59 +2518,146 @@ def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
     raise ValueError(f"cell kind {kind!r} is not a recognized atom kind")
 
 
+#: merge status -> the atom kind it re-encodes as
+_STATUS_KIND = {
+    "live": "normal",
+    "counter_live": "counter",
+    "tombstone_retained": "tombstone",
+    "range_tombstone_retained": "range_tombstone",
+    "partition_tombstone_retained": "partition_tombstone",
+}
+
+
+def _status_to_row(pk, cell, wt, val, status) -> tuple:
+    """SSTABLE_SCHEMA row for one resolved merge row — the ONE atom
+    reconstruction behind :func:`compact_rewrite` and
+    :func:`gc_rewrite_single` (its DuckDB mirror is
+    :func:`compact_rewrite_oracle_sql`). Deterministic and LOSSY EXACTLY
+    WHERE COMPACTION IS: surviving live cells re-encode as ``normal``
+    (this engine compacts post-strip corpora), counters with
+    ``timestampOfLastDelete = 0`` (shard history is consumed by the
+    additive merge), and retained deletion atoms re-derive their
+    localDeletionTime second from their own writetime."""
+    kind = _STATUS_KIND.get(status)
+    if kind is None:
+        raise ValueError(f"unexpected resolved status {status!r}")
+    exp = (None if kind == "normal" else 0 if kind == "counter"
+           else int(wt) // 1_000_000)
+    return (pk, cell, kind, None, exp, wt, val)
+
+
+def _encode_rows(rows: Iterable[tuple], out_dir: str,
+                 **write_kw) -> tuple[int, int]:
+    """The ONE encoder behind every per-task SSTable writer:
+    :data:`SSTABLE_SCHEMA` rows -> partitions (cells sorted by name, a
+    ``partition_tombstone`` row attached as its partition's header
+    deletion) -> one :func:`write_sstable` table at ``out_dir``.
+    ``write_kw`` passes through (generation, compression). Returns
+    ``(n_partitions, n_rows)``."""
+    parts: dict[bytes, list] = {}
+    deletions: dict[bytes, tuple] = {}
+    n = 0
+    for pk, cell, kind, ttl, exp, wt, val in rows:
+        n += 1
+        key = str(pk).encode()
+        cells = parts.setdefault(key, [])
+        if kind == "partition_tombstone":
+            # the header's localDeletionTime is an int32 like a cell's
+            deletions[key] = (_ldt_s(exp), int(wt))
+        else:
+            cells.append(_row_to_cell(cell, kind, ttl, exp, wt, val))
+    for cells in parts.values():
+        cells.sort(key=lambda c: c[0])
+    write_sstable(
+        ((k, cs, deletions[k]) if k in deletions else (k, cs)
+         for k, cs in parts.items()),
+        out_dir, **write_kw)
+    return len(parts), n
+
+
+def _claim_out_dir(out_dir: str) -> None:
+    """Create ``out_dir``, refusing one that already holds anything: every
+    subdirectory with a ``Data.db`` reads back as data
+    (:func:`_resolve_table_dirs`), so a stale shard from an earlier run
+    would silently join this run's output."""
+    if os.path.isdir(out_dir) and os.listdir(out_dir):
+        raise ValueError(
+            f"output directory {out_dir} is not empty; refusing to mix "
+            "its existing contents into this run's output")
+    os.makedirs(out_dir, exist_ok=True)
+
+
+def _rewrite_shards(spark, out_dir: str, specs: list[tuple],
+                    spec_schema: str, task, counts: tuple) -> list:
+    """The ONE zero-shuffle rewrite driver behind :func:`rewrite_stripped`,
+    :func:`gc_rewrite_single` and :func:`compact_rewrite`: task specs ->
+    :func:`~..plans.local_frame` -> ``mapInPandas`` -> one shard per spec
+    -> report rows. Each spec is ``(shard, *args)``; its task runs
+    ``task(out_dir/shard, *args)``, which writes that shard (through
+    :func:`_encode_rows`) and returns the report's ``counts``. Only the
+    spec rows are repartitioned; cell bytes never cross the network.
+    ``out_dir`` must be absent or empty (:func:`_claim_out_dir`). Returns
+    the collected ``(shard, *counts)`` rows; no specs = empty report."""
+    import pandas as pd
+
+    _claim_out_dir(out_dir)
+    if not specs:
+        return []
+    cols = ["shard", *counts]
+
+    def _run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(shard, *task(os.path.join(out_dir, shard), *args))
+                 for shard, *args in pdf.itertuples(index=False)],
+                columns=cols)
+
+    return (
+        local_frame(spark, specs, spec_schema)
+        .repartition(min(len(specs), 32))
+        .mapInPandas(_run, schema="shard string, " + ", ".join(
+            f"{c} bigint" for c in counts))
+        .collect()
+    )
+
+
 def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
                               generation: str = "v1",
                               compressed: bool = False):
-    """Distributed SSTable SINK — the reference job's OUTPUT side
-    (Cassandra3TTLRemover writes stripped SSTables back to disk;
-    NoTTLWriter in the patched stack). A cell frame in
-    :data:`SSTABLE_SCHEMA` shape range-partitions on ``pk`` (every cell
-    of a partition lands in ONE shard and shard key ranges don't
-    overlap — the sorted-run invariant across files), sorts within each
-    task, and each task encodes ONE sstable (``Data.db`` + ``Index.db``)
-    under ``out_dir/shard=NNNNN``. Exactly one shuffle; the per-task
-    encode is the byte-level inverse of :func:`scan_data_range`, so
-    write->scan roundtrips bit-faithfully. On a cluster each task would
-    PUT its shard to object storage — the same one-file-per-task shape
-    as ``sinks/writer.write_sorted`` uses for parquet.
+    """Distributed SSTable SINK for an ARBITRARY cell frame in
+    :data:`SSTABLE_SCHEMA` shape (queries and streaming shard sets; the
+    rewrites of existing tables use the zero-shuffle
+    :func:`_rewrite_shards` instead). The frame range-partitions on
+    ``pk`` — every cell of a partition lands in ONE shard and shard key
+    ranges don't overlap — and each task encodes ONE sstable through the
+    shared :func:`_encode_rows` under ``out_dir/shard=NNNNN``. Exactly
+    one shuffle; the encode is the byte-level inverse of
+    :func:`scan_data_range`, so write->scan roundtrips bit-faithfully.
+    ``out_dir`` must be absent or empty.
 
     Eagerly executes and returns the shard report rows
     ``(shard, n_partitions, n_cells)`` (bounded: one per shard)."""
+    import itertools
+
     import pandas as pd
 
-    os.makedirs(out_dir, exist_ok=True)
+    _claim_out_dir(out_dir)
 
     def _encode(batches):
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        parts: dict[bytes, list] = {}
-        deletions: dict[bytes, tuple] = {}
-        n = 0
-        for pdf in batches:
-            for pk, cell, kind, ttl, exp, wt, val in pdf[
-                ["pk", "cell", "kind", "ttl", "expiration",
-                 "writetime", "value"]
-            ].itertuples(index=False):
-                if kind == "partition_tombstone":
-                    deletions[str(pk).encode()] = (int(exp), int(wt))
-                    parts.setdefault(str(pk).encode(), [])
-                    n += 1
-                    continue
-                c = _row_to_cell(cell, kind, ttl, exp, wt, val)
-                parts.setdefault(str(pk).encode(), []).append(c)
-                n += 1
-        if parts:
-            shard = f"shard={pid:05d}"
-            write_sstable(
-                [(k, cs, deletions[k]) if k in deletions else (k, cs)
-                 for k, cs in parts.items()],
-                os.path.join(out_dir, shard),
+        shard = f"shard={TaskContext.get().partitionId():05d}"
+        rows = (r for pdf in batches for r in pdf[
+            ["pk", "cell", "kind", "ttl", "expiration", "writetime",
+             "value"]].itertuples(index=False))
+        first = next(rows, None)
+        if first is not None:  # an empty range writes no shard
+            n_parts, n = _encode_rows(
+                itertools.chain([first], rows), os.path.join(out_dir, shard),
                 generation=generation, compressed=compressed)
-            yield pd.DataFrame(
-                {"shard": [shard], "n_partitions": [len(parts)],
-                 "n_cells": [n]}
-            )
+            yield pd.DataFrame({"shard": [shard],
+                                "n_partitions": [n_parts],
+                                "n_cells": [n]})
 
     # repartitionByRange SAMPLES its input to place the range bounds, and
     # that sample job executes the ENTIRE upstream pipeline (here: the
@@ -2614,7 +2672,6 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
     report = (
         cells.localCheckpoint(eager=False)
         .repartitionByRange(shards, "pk")
-        .sortWithinPartitions("pk", "cell")
         .mapInPandas(
             _encode,
             schema="shard string, n_partitions bigint, n_cells bigint",
@@ -3155,53 +3212,36 @@ FROM e WHERE user_id % 23 = 0 GROUP BY pk
 
 
 def compact_rewrite(spark, path: str, out_dir: str, *, gc_grace_us: int,
-                    now_us: int, num_splits: int = 8,
-                    shards: int = 4) -> list:
-    """MAJOR COMPACTION, end to end on the native format: k-way
-    zero-shuffle merge (:func:`merge_compact_sorted` — full deletion-atom
-    semantics) -> surviving atoms re-encoded -> range-sharded binary sink
-    (:func:`write_sstable_distributed`, sidecars included). This is the
-    operation a user of the reference eventually runs AFTER the TTL
-    strip: N overlapping generations in, one sorted non-overlapping
-    generation set out, deletes preserved until gc_grace ("deletes are
-    data", SURVEY §1.2).
+                    now_us: int, num_splits: int = 8) -> list:
+    """MAJOR COMPACTION, end to end on the native format: the k-way
+    zero-shuffle merge of :func:`merge_compact_sorted` (full
+    deletion-atom semantics), with each key range's surviving atoms
+    re-encoded in the task that merged them (:func:`_rewrite_shards`,
+    sidecars included). This is the operation a user of the reference
+    eventually runs AFTER the TTL strip, and the one that consolidates:
+    N overlapping generations in, one sorted non-overlapping shard per
+    merge range out (``out_dir/shard=NNNNN``, at most ``num_splits``),
+    deletes preserved until gc_grace ("deletes are data", SURVEY §1.2).
 
-    Atom reconstruction from the merge's ``(pk, cell, writetime, value,
-    status)`` rows is deterministic and LOSSY EXACTLY WHERE COMPACTION IS
-    (documented contract): surviving live cells re-encode as ``normal``
-    (this engine compacts post-strip corpora — the reference exists to
-    make expiring cells normal), counters re-encode with
-    ``timestampOfLastDelete = 0`` (shard history is consumed by the
-    additive merge), and retained deletion atoms re-derive their
-    localDeletionTime second from their own writetime
-    (``writetime div 1e6``).
+    Atoms re-encode through :func:`_status_to_row`, the documented
+    lossy-where-compaction-is reconstruction. Scale: no cell byte
+    crosses the network — the merge and the encode share one task.
+    ``out_dir`` must be absent or empty. Returns one report row
+    ``(shard, n_partitions, n_cells)`` per merge range."""
+    dirs = _resolve_table_dirs(path)
+    threshold = int(now_us) - int(gc_grace_us)
+    specs = [(f"shard={i:05d}", ks, kp) for i, (ks, kp)
+             in enumerate(_merge_ranges(dirs, num_splits))]
 
-    Scale: merge moves zero cell bytes; the sink is the ONE range
-    exchange any re-sharding write needs. Returns the sink's per-shard
-    report rows (bounded: one per shard)."""
-    from pyspark.sql import functions as F
+    def _compact(shard_dir, ks, kp):
+        return _encode_rows(
+            (_status_to_row(*r)
+             for r in _merge_range(dirs, ks, kp, threshold)),
+            shard_dir)
 
-    merged = merge_compact_sorted(
-        spark, path, gc_grace_us=gc_grace_us, now_us=now_us,
-        num_splits=num_splits)
-    st = F.col("status")
-    sec = (F.col("writetime") / F.lit(1_000_000)).cast("long")
-    atoms = merged.select(
-        "pk", "cell",
-        F.when(st == "live", F.lit("normal"))
-        .when(st == "counter_live", F.lit("counter"))
-        .when(st == "tombstone_retained", F.lit("tombstone"))
-        .when(st == "range_tombstone_retained", F.lit("range_tombstone"))
-        .otherwise(F.lit("partition_tombstone")).alias("kind"),
-        F.lit(None).cast("bigint").alias("ttl"),
-        F.when(st == "counter_live", F.lit(0).cast("bigint"))
-        .when(st.isin("tombstone_retained", "range_tombstone_retained",
-                      "partition_tombstone_retained"), sec)
-        .otherwise(F.lit(None).cast("bigint")).alias("expiration"),
-        F.col("writetime"),
-        "value",
-    )
-    return write_sstable_distributed(atoms, out_dir, shards=shards)
+    return _rewrite_shards(spark, out_dir, specs,
+                           "shard string, ks string, kp string", _compact,
+                           ("n_partitions", "n_cells"))
 
 
 def compact_rewrite_oracle_sql(atoms_sql: str, *, gc_grace_us: int,
@@ -3534,25 +3574,6 @@ FROM atoms GROUP BY generation ORDER BY generation
 """
 
 
-def _status_to_cell(cell, wt, val, status) -> tuple:
-    """Writer cell tuple for one resolved merge row — the Python twin of
-    :func:`compact_rewrite`'s SQL reconstruction (same documented lossy
-    mapping; equality of the two pinned in tests)."""
-    name = str(cell).encode()
-    sec = _ldt_s(int(wt) // 1_000_000)
-    if status == "live":
-        return (name, 0, 0, 0, int(wt), str(val).encode())
-    if status == "counter_live":
-        return (name, COUNTER_MASK, 0, 0, int(wt), str(val).encode())
-    if status == "tombstone_retained":
-        return (name, DELETION_MASK, 0, 0, int(wt),
-                struct.pack(">i", sec))
-    if status == "range_tombstone_retained":
-        return (name, RANGE_TOMBSTONE_MASK, 0, sec, int(wt),
-                str(val).encode())
-    raise ValueError(f"unexpected resolved status {status!r}")
-
-
 def gc_rewrite_single(spark, path: str, out_dir: str, *,
                       gc_grace_us: int, now_us: int,
                       num_splits: int = 8) -> list:
@@ -3561,86 +3582,33 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
     independently (no cross-generation merge), dropping data its own
     deletes shadow and purging deletes past gc_grace. The everyday ops
     move when one table is bloated with expired deletes but a full
-    cross-generation compaction is too expensive — and the dataflow
-    shows why it is cheap: like :func:`rewrite_stripped` it is
-    ZERO-shuffle (each index-snapped split resolves and re-encodes its
-    own partitions in place; splits are partition-granular, so every
-    deletion atom is task-local to the partitions it shadows), whereas
-    :func:`merge_compact_sorted` must at least align key ranges across
-    generations. Uses the SAME :func:`_resolve_atoms` implementation as
-    the k-way merge — one semantics, three dataflows.
+    cross-generation compaction is too expensive. It runs on the same
+    zero-shuffle driver as :func:`rewrite_stripped`
+    (:func:`_rewrite_shards`): each index-snapped split resolves and
+    re-encodes its own partitions (splits are partition-granular, so
+    every deletion atom is task-local to the partitions it shadows),
+    with the SAME :func:`_resolve_atoms` and :func:`_status_to_row` as
+    :func:`compact_rewrite` — one semantics, one encoder.
 
-    Output layout mirrors rewrite_stripped
-    (``out_dir/<generation>_shard=<split>``, all sidecars, digest-clean).
-    Returns the per-shard report rows ``(shard, n_partitions,
+    Output layout is rewrite_stripped's (``out_dir/<generation>_shard=
+    <split>``, all sidecars, digest-clean); a fully-purged split still
+    writes its (empty) sstable — the PRIME gc target is a table whose
+    deletes all lapsed — and still reports. ``out_dir`` must be absent
+    or empty. Returns the per-shard report rows ``(shard, n_partitions,
     n_atoms_in, n_atoms_out)``."""
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
     threshold = int(now_us) - int(gc_grace_us)
-    specs = []
-    for d in _resolve_table_dirs(path):
-        gen_name = os.path.basename(d.rstrip("/"))
-        for i, (data_path, start, end) in enumerate(
-                _plan_table_splits(d, num_splits)):
-            specs.append((gen_name, i, data_path, start, end))
-    if not specs:
-        return []  # every generation empty: nothing to GC, empty report
 
-    def _rewrite(batches):
-        for pdf in batches:
-            out_rows = []
-            for gen_name, i, data_path, start, end in pdf[
-                ["gen", "idx", "data_path", "start", "end"]
-            ].itertuples(index=False):
-                pd_wt: dict = {}
-                rts: dict = {}
-                atoms: dict = {}
-                n_in = 0
-                for r in scan_data_range(data_path, int(start), int(end)):
-                    n_in += 1
-                    _classify_atom(pd_wt, rts, atoms, r[0], r[1],
-                                   r[2], int(r[5]), r[6])
-                resolved = _resolve_atoms(pd_wt, rts, atoms, threshold)
-                parts: dict[bytes, list] = {}
-                deletions: dict[bytes, tuple] = {}
-                for pk, cell, wt, val, status in resolved:
-                    kb = pk.encode()
-                    if status == "partition_tombstone_retained":
-                        deletions[kb] = (int(wt) // 1_000_000, int(wt))
-                        parts.setdefault(kb, [])
-                        continue
-                    parts.setdefault(kb, []).append(
-                        _status_to_cell(cell, wt, val, status))
-                # a fully-purged split still writes its (empty) sstable —
-                # the PRIME gc target is a table whose deletes all lapsed,
-                # and its output must stay scannable and digest-clean —
-                # and still reports, so n_atoms_in is never silently lost
-                shard = f"{gen_name}_shard={int(i):05d}"
-                write_sstable(
-                    [(k, sorted(cs, key=lambda c: c[0]), deletions[k])
-                     if k in deletions
-                     else (k, sorted(cs, key=lambda c: c[0]))
-                     for k, cs in parts.items()],
-                    os.path.join(out_dir, shard),
-                )
-                out_rows.append((shard, len(parts), n_in, len(resolved)))
-            yield pd.DataFrame(
-                out_rows, columns=["shard", "n_partitions", "n_atoms_in",
-                                   "n_atoms_out"])
+    def _gc(shard_dir, data_path, start, end):
+        atoms = list(scan_data_range(data_path, int(start), int(end)))
+        n_parts, n_out = _encode_rows(
+            (_status_to_row(*r)
+             for r in _resolve_atoms(atoms, threshold)),
+            shard_dir)
+        return n_parts, len(atoms), n_out
 
-    report = (
-        local_frame(spark,
-            specs, "gen string, idx int, data_path string, "
-                   "start long, end long")
-        .repartition(min(len(specs), 32))
-        .mapInPandas(
-            _rewrite,
-            schema=("shard string, n_partitions bigint, "
-                    "n_atoms_in bigint, n_atoms_out bigint"),
-        )
-    )
-    return report.collect()
+    return _rewrite_shards(spark, out_dir, _split_specs(path, num_splits),
+                           _SPLIT_SPEC, _gc,
+                           ("n_partitions", "n_atoms_in", "n_atoms_out"))
 
 
 def sstable_v2_gen1_atoms_sql(table: str = "events") -> str:

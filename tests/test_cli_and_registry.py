@@ -1,5 +1,6 @@
 """M3 strategy registry + M7 CLI option matrix + end-to-end CLI job."""
 
+import os
 import shutil
 import tempfile
 from pathlib import Path
@@ -57,13 +58,12 @@ def test_cli_end_to_end(spark, events):
         shutil.rmtree(work, ignore_errors=True)
 
 
-@pytest.mark.slow  # seal-gate tier (heavy equality/e2e sweep)
 def test_cli_sstable_to_sstable_is_the_reference_job(spark):
     """--input-format sstable --output-format sstable == the reference
-    tool end to end on its native format: scan -> strip -> sharded
-    binary sink. The output scans back as the stripped input, no
-    expiring cell survives, and every output shard passes the digest
-    sweep."""
+    tool end to end on its native format: each split decoded, stripped
+    and re-encoded into its own shard. The output scans back as
+    strip_ttl_cells of the input, no expiring cell survives, and every
+    output shard passes the digest sweep."""
     from cassandra_ttl_remover_spark.sources import sstable as ss
 
     work = Path(tempfile.mkdtemp(prefix="ctrs_clis_"))
@@ -95,6 +95,11 @@ def test_cli_sstable_option_matrix():
     spec = parse_args(["--input", "/in", "--output-path", "/out",
                        "--input-format", "sstable"])
     assert spec.input_format == "sstable" and spec.cql is None
+    # one sstable->sstable dataflow: there is no mode to select
+    with pytest.raises(SystemExit):
+        parse_args(["--input", "/in", "--output-path", "/out",
+                    "--input-format", "sstable",
+                    "--rewrite-mode", "inplace"])
     # binary sink without binary source is rejected at run() time
     from cassandra_ttl_remover_spark.cli import TTLRemovalError, run
 
@@ -105,29 +110,49 @@ def test_cli_sstable_option_matrix():
         run(bad)
 
 
-def test_cli_inplace_rewrite_matches_reshard(spark):
-    """--rewrite-mode inplace (zero shuffle) and reshard (one range
-    exchange) must produce scan-identical stripped outputs."""
+def test_cli_sstable_rewrite_empty_table(spark):
+    """A table with no partitions plans no splits: the rewrite writes
+    nothing and the CLI still exits 0."""
     from cassandra_ttl_remover_spark.sources import sstable as ss
 
-    work = Path(tempfile.mkdtemp(prefix="ctrs_clir_"))
+    work = Path(tempfile.mkdtemp(prefix="ctrs_clie_"))
     try:
-        src = work / "src"
-        ss.events_sstable_fixture(spark, "/root/testdata/sf0.001",
-                                  str(src))
-        for mode in ("inplace", "reshard"):
-            rc = main(["--input", str(src),
-                       "--output-path", str(work / mode),
-                       "--input-format", "sstable",
-                       "--output-format", "sstable",
-                       "--rewrite-mode", mode])
-            assert rc == 0
-        a = sorted((tuple(r) for r in
-                    ss.scan_sstable(spark, str(work / "inplace"))
-                    .collect()), key=repr)
-        b = sorted((tuple(r) for r in
-                    ss.scan_sstable(spark, str(work / "reshard"))
-                    .collect()), key=repr)
-        assert a == b and len(a) > 0
+        ss.write_sstable([], str(work / "src"))
+        assert ss.rewrite_stripped(spark, str(work / "src"),
+                                   str(work / "a")) == []
+        assert main(["--input", str(work / "src"),
+                     "--output-path", str(work / "b"),
+                     "--input-format", "sstable",
+                     "--output-format", "sstable"]) == 0
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_cli_sstable_rewrite_refuses_non_empty_output(spark, capsys):
+    """Every subdirectory holding a Data.db reads back as data, so a
+    rewrite into a directory that already holds a run would mix the
+    stale shards into the new output: the CLI must exit 1 and name the
+    directory, leaving its contents untouched."""
+    from cassandra_ttl_remover_spark.sources import sstable as ss
+
+    work = Path(tempfile.mkdtemp(prefix="ctrs_clis_"))
+    try:
+        src, out = work / "src", work / "out"
+        ss.write_sstable([(b"k1", [(b"c", 0, 0, 0, 1, b"v")])], str(src))
+        ss.write_sstable([(f"old{i:03d}".encode(), [(b"c", 0, 0, 0, 1,
+                                                     b"v")])
+                          for i in range(200)], str(out / "stale"))
+        rc = main(["--input", str(src), "--output-path", str(out),
+                   "--input-format", "sstable",
+                   "--output-format", "sstable"])
+        assert rc == 1
+        assert str(out) in capsys.readouterr().err
+        assert sorted(os.listdir(out)) == ["stale"]
+        assert ss.scan_sstable(spark, str(out)).count() == 200
+        with pytest.raises(ValueError, match="not empty"):
+            ss.rewrite_stripped(spark, str(src), str(out))
+        with pytest.raises(ValueError, match="not empty"):
+            ss.write_sstable_distributed(ss.scan_sstable(spark, str(src)),
+                                         str(out))
     finally:
         shutil.rmtree(work, ignore_errors=True)

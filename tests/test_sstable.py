@@ -740,14 +740,20 @@ def test_post_2038_deletion_seconds_saturate_not_crash(spark):
     """ADVICE r8: localDeletionTime is an on-disk int32 of seconds;
     atoms with writetime >= 2^31 seconds (year 2038+) must saturate at
     INT32_MAX — Cassandra's own no-expiry sentinel — instead of raising
-    struct.error mid-task. Unit-pins both cell constructors, then runs
-    the gc rewrite end-to-end on a future-dated tombstone."""
+    struct.error mid-task. Unit-pins the cell constructor on merge
+    statuses and scan rows, then runs the gc and compaction rewrites
+    end-to-end on a future-dated tombstone and partition deletion."""
     wt_2100 = 4_102_444_800 * 1_000_000  # year 2100, epoch µs
-    name, mask, ttl, exp, wt, val = ss._status_to_cell(
-        "c1", wt_2100, None, "tombstone_retained")
+
+    def status_cell(cell, val, status):
+        row = ss._status_to_row("k1", cell, wt_2100, val, status)
+        return ss._row_to_cell(*row[1:])
+
+    name, mask, ttl, exp, wt, val = status_cell(
+        "c1", None, "tombstone_retained")
     assert struct.unpack(">i", val)[0] == ss.INT32_MAX
-    _, _, _, exp_rt, _, _ = ss._status_to_cell(
-        "c1", wt_2100, "c9", "range_tombstone_retained")
+    _, _, _, exp_rt, _, _ = status_cell(
+        "c1", "c9", "range_tombstone_retained")
     assert exp_rt == ss.INT32_MAX
     cell = ss._row_to_cell("c1", "tombstone", None, wt_2100 // 1_000_000,
                            wt_2100, None)
@@ -756,22 +762,31 @@ def test_post_2038_deletion_seconds_saturate_not_crash(spark):
                            wt_2100 // 1_000_000 + 60, wt_2100, "v")
     assert cell[3] == ss.INT32_MAX
 
-    src, dst = _tmpdir(), _tmpdir()
+    src = _tmpdir()
     ss.write_sstable(
         [(b"k1", [
             (b"c1", ss.DELETION_MASK, 0, 0, wt_2100,
              struct.pack(">i", ss.INT32_MAX)),
             (b"c2", 0, 0, 0, wt_2100 + 1, b"v"),
-        ])], src)
-    # retained (inside grace): rewrite re-encodes the tombstone — the
-    # crash site before the clamp
-    reports = ss.gc_rewrite_single(spark, src, dst, gc_grace_us=10**15,
-                                   now_us=wt_2100 + 2)
-    assert reports
-    got = sorted(tuple(r) for r in ss.scan_sstable(spark, dst).collect())
-    kinds = [(r[1], r[2]) for r in got]
-    assert ("c1", "tombstone") in kinds and ("c2", "normal") in kinds
-    shutil.rmtree(src), shutil.rmtree(dst)
+        ]),
+         (b"k2", [(b"c3", 0, 0, 0, wt_2100 + 1, b"w")],
+          (ss.INT32_MAX, wt_2100))], src)
+    # retained (inside grace): both rewrites re-encode the tombstone and
+    # the partition deletion — the crash sites before the clamp
+    for rewrite in (ss.gc_rewrite_single, ss.compact_rewrite):
+        dst = _tmpdir()
+        reports = rewrite(spark, src, dst, gc_grace_us=10**15,
+                          now_us=wt_2100 + 2)
+        assert reports
+        got = [tuple(r) for r in ss.scan_sstable(spark, dst).collect()]
+        kinds = {(r[0], r[1], r[2]) for r in got}
+        assert {("k1", "c1", "tombstone"), ("k1", "c2", "normal"),
+                ("k2", None, "partition_tombstone"),
+                ("k2", "c3", "normal")} == kinds
+        assert [r[4] for r in got if r[2] == "partition_tombstone"] == [
+            ss.INT32_MAX]
+        shutil.rmtree(dst)
+    shutil.rmtree(src)
 
 
 def test_merge_planner_ships_cut_keys_as_opaque_bytes(spark):
@@ -1430,7 +1445,7 @@ def test_merge_compact_random_generations_match_ground_truth(spark):
 
 
 def test_compact_rewrite_roundtrip_and_digests(spark):
-    """Major compaction e2e: merge -> re-encode -> sharded sink. The
+    """Major compaction e2e: merge -> re-encode per merge range. The
     rewritten output must (a) pass the digest/TOC sweep, (b) scan back
     to exactly the merged state mapped through the documented atom
     reconstruction, and (c) retain every deletion granularity under a
@@ -1450,8 +1465,10 @@ def test_compact_rewrite_roundtrip_and_digests(spark):
     kw = dict(gc_grace_us=100 * 365 * 86400 * 1_000_000,
               now_us=1706745600 * 1_000_000)
     out = os.path.join(base, "compacted")
-    report = ss.compact_rewrite(spark, base, out, shards=3, **kw)
-    assert len(report) == 3
+    report = ss.compact_rewrite(spark, base, out, num_splits=3, **kw)
+    # one shard per merge range
+    assert len(report) == len(ss._merge_ranges(
+        ss._resolve_table_dirs(base), 3))
     checks = ss.verify_digests(spark, out).collect()
     assert checks and all(r.digest_ok and r.toc_ok for r in checks)
 
@@ -1475,6 +1492,40 @@ def test_compact_rewrite_roundtrip_and_digests(spark):
         back[(r.pk, r.cell, kind_to_status[r.kind])] = (
             r.writetime, r.value)
     assert back == merged
+    shutil.rmtree(base)
+
+
+def test_compact_rewrite_shards_are_merge_ranges(spark):
+    """Each merge range is merged and encoded by one task into its own
+    shard: one report row per range, shard key spans that do not
+    overlap, and a scan-back equal to the merged state mapped through
+    the one status->atom reconstruction."""
+    base = _tmpdir()
+    for g in range(3):
+        ss.write_sstable(
+            [(f"k{i:03d}".encode(),
+              [(b"c", 0, 0, 0, 1_000_000 * (g + 1) + i, f"v{g}".encode())])
+             for i in range(g, 60, g + 1)],
+            os.path.join(base, f"g{g}"), summary_interval=4)
+    out = os.path.join(base, "out")
+    ranges = ss._merge_ranges(ss._resolve_table_dirs(base), 4)
+    report = ss.compact_rewrite(spark, base, out, gc_grace_us=0, now_us=0,
+                                num_splits=4)
+    assert len(report) == len(ranges) > 1
+    assert sorted(r.shard for r in report) == [
+        f"shard={i:05d}" for i in range(len(ranges))]
+    spans = []
+    for r in sorted(report, key=lambda r: r.shard):
+        keys = [k for k, _ in ss.read_index(
+            os.path.join(out, r.shard, "Index.db"))]
+        assert len(keys) == r.n_partitions > 0
+        spans.append((keys[0], keys[-1]))
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+    want = sorted(
+        ss._status_to_row(*r) for r in ss.merge_compact_sorted(
+            spark, base, gc_grace_us=0, now_us=0, num_splits=4).collect())
+    got = sorted(tuple(r) for r in ss.scan_sstable(spark, out).collect())
+    assert got == want and len(got) == 60
     shutil.rmtree(base)
 
 
