@@ -4081,8 +4081,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the reference's ENTIRE job with ZERO shuffle on the FULL atom
         # surface: per-split strip-rewrite of a sorted generation
         # carrying counters, counter-updates, range tombstones, AND
-        # partition-level deletions (decode -> expiring -> normal,
-        # every other atom verbatim -- the reference's preservation
+        # partition-level deletions (expiring -> normal at the byte
+        # level, every other atom verbatim -- the reference's preservation
         # rule, Cassandra2TTLRemover.java:136-137; sidecars re-emitted)
         # -- no repartition, no sort, no network; scanning the rewritten
         # output must equal the stripped v2 oracle exactly.

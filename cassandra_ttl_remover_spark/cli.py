@@ -7,8 +7,8 @@ it in parallel in place of the reference's sequential per-file loop (§3.1
 step 5):
 
 - sstable -> sstable is the reference's own dataflow: each index-snapped
-  split of each input table is decoded, stripped and re-encoded into its
-  own output shard (``rewrite_stripped``), with no shuffle. Merging many
+  split of each input table is stripped at the byte level into its own
+  output shard (``rewrite_stripped``), with no shuffle. Merging many
   generations into non-overlapping shards is compaction
   (``compact_rewrite``), not this job.
 - sstable -> parquet and parquet -> parquet strip a cell frame and write it

@@ -46,12 +46,16 @@ reads another split's bytes, so the scan parallelizes like any columnar
 split scan and would map 1:1 onto object-store ranged GETs. Cells stream
 out as flat rows; no partition is materialized whole except the one being
 decoded (the reference's iterator does the same —
-NoTTLSSTableIdentityIterator). Every writer is per-task and shares one
-encoder (:func:`_encode_rows` over :func:`write_sstable`): the
-zero-shuffle rewrites of existing tables (strip, single-table GC, k-way
-compaction) run on one driver, :func:`_rewrite_shards`, that writes one
-shard per split or merge range; :func:`write_sstable_distributed`
-range-partitions an arbitrary cell frame into shards.
+NoTTLSSTableIdentityIterator). Every writer is per-task. The zero-shuffle
+rewrites of existing tables (strip, single-table GC, k-way compaction) run
+on one driver, :func:`_rewrite_shards`, a one-stage job that writes one
+shard per split or merge range. The strip never decodes a cell:
+:func:`_strip_split` transcodes each partition's bytes (an expiring cell
+loses its ttl and expiration, every other byte is copied) and writes the
+sidecars in the same pass. GC, compaction and
+:func:`write_sstable_distributed` (which range-partitions an arbitrary
+cell frame into shards) encode rows through the shared
+:func:`_encode_rows` over :func:`write_sstable`.
 """
 
 from __future__ import annotations
@@ -2063,7 +2067,228 @@ def _split_specs(path: str, num_splits: int) -> list[tuple]:
     ]
 
 
-_SPLIT_SPEC = "shard string, data_path string, start long, end long"
+def _split_offsets(table_dir: str, start: int, end: int) -> list[int]:
+    """Data.db offsets of the partitions that start in ``[start, end)``,
+    parsed from the Index.db window that Summary.db bounds (the whole
+    index when the table has no summary)."""
+    import contextlib
+
+    ix_lo, ix_hi = 0, None
+    try:
+        with contextlib.closing(_iter_summary(table_dir)) as samples:
+            for _, ix_off, data_off in samples:
+                if data_off <= start:
+                    ix_lo = ix_off
+                if data_off >= end:
+                    ix_hi = ix_off
+                    break
+    except FileNotFoundError:
+        pass
+    index_path = os.path.join(table_dir, "Index.db")
+    with open(index_path, "rb") as f:
+        f.seek(ix_lo)
+        buf = f.read() if ix_hi is None else f.read(ix_hi - ix_lo)
+    return [off for _, off in _parse_index_entries(
+                buf, _table_generation(table_dir), index_path,
+                base_off=ix_lo)
+            if start <= off < end]
+
+
+_U16 = struct.Struct(">H")
+_U32 = struct.Struct(">I")
+_I64 = struct.Struct(">q")
+_HEADER = struct.Struct(">iq")
+
+
+def _canonical_mask(mask: int) -> int | None:
+    """The atom a mask byte decodes as, in :func:`_decode_cell_body`'s
+    dispatch order, as its one-bit mask (``None``: not an atom)."""
+    for bit in (RANGE_TOMBSTONE_MASK, COUNTER_MASK, COUNTER_UPDATE_MASK,
+                EXPIRATION_MASK, DELETION_MASK):
+        if mask & bit:
+            return bit
+    return 0 if mask == 0 else None
+
+
+_CANONICAL_MASK = [_canonical_mask(m) for m in range(256)]
+
+
+def _mc_to_v1(buf: bytes) -> bytes:
+    """Re-frame one ``mc`` partition record as ``v1``: every vint length
+    becomes a u16 (key, cell name, range-tombstone end bound) or an i32
+    (value); all other bytes are copied."""
+    out = bytearray()
+    klen, p = _read_uvint_buf(buf, 0)
+    out += _U16.pack(klen) + buf[p:p + klen + 12]
+    p += klen + 12
+    while True:
+        nlen, p = _read_uvint_buf(buf, p)
+        out += _U16.pack(nlen)
+        if not nlen:
+            return bytes(out) + buf[p:]
+        mask = buf[p + nlen]
+        out += buf[p:p + nlen + 1]
+        p += nlen + 1
+        if mask & RANGE_TOMBSTONE_MASK:
+            elen, p = _read_uvint_buf(buf, p)
+            out += _U16.pack(elen) + buf[p:p + elen + 12]
+            p += elen + 12
+            continue
+        # fixed fields before the value: counter and expiring cells carry
+        # two, every other atom only its writetime
+        width = (16 if _CANONICAL_MASK[mask] in (COUNTER_MASK,
+                                                 EXPIRATION_MASK) else 8)
+        out += buf[p:p + width]
+        vlen, p = _read_uvint_buf(buf, p + width)
+        out += _U32.pack(vlen) + buf[p:p + vlen]
+        p += vlen
+
+
+def _strip_partition(buf: bytes, base: int) -> tuple:
+    """TTL-strip one ``v1`` partition record, the whole of ``buf``, at the
+    byte level. An expiring cell loses its i32 ttl and i32 expiration and
+    its mask becomes 0; any other atom is copied as is, with its mask
+    byte written in canonical form. ``base`` is the record's offset in
+    the output Data.db.
+
+    Returns ``(out, key, deletion_mfda | None, writetimes, blocks)``:
+    the stripped bytes, the partition key, the header's
+    markedForDeleteAt when it carries a deletion, the writetime slot of
+    every atom, and the ColumnIndex.db blocks ``(first cell name,
+    offset, open range tombstones)`` that :func:`write_sstable` would
+    write for it. Raises ``struct.error``, ``IndexError`` or
+    :class:`CorruptSSTableError` on a malformed record."""
+    (klen,) = _U16.unpack_from(buf, 0)
+    pos = 2 + klen
+    ldt, mfda = _HEADER.unpack_from(buf, pos)
+    pos += 12
+    out = bytearray()
+    run = 0  # start of the bytes not yet copied to ``out``
+    wts: list[int] = []
+    blocks: list[tuple] = []
+    open_rts: list[tuple] = []
+    while True:
+        (nlen,) = _U16.unpack_from(buf, pos)
+        if not nlen:
+            pos += 2
+            break
+        at = pos + 2 + nlen  # the mask byte
+        mask = buf[at]
+        if len(wts) % COLINDEX_EVERY == 0:
+            name = buf[pos + 2:at]
+            open_rts = [rt for rt in open_rts if rt[1] >= name]
+            blocks.append((name, base + len(out) + pos - run,
+                           list(open_rts)))
+        canon = _CANONICAL_MASK[mask]
+        if canon == RANGE_TOMBSTONE_MASK:
+            (elen,) = _U16.unpack_from(buf, at + 1)
+            p = at + 3 + elen
+            rt_ldt, wt = _HEADER.unpack_from(buf, p)
+            open_rts.append((buf[pos + 2:at], buf[at + 3:p], rt_ldt, wt))
+            pos = p + 12
+        elif canon == EXPIRATION_MASK:
+            (wt,) = _I64.unpack_from(buf, at + 9)
+            (vlen,) = _U32.unpack_from(buf, at + 17)
+            pos = at + 21 + vlen
+        elif canon is not None:
+            p = at + 9 if canon == COUNTER_MASK else at + 1
+            (wt,) = _I64.unpack_from(buf, p)
+            (vlen,) = _U32.unpack_from(buf, p + 8)
+            if canon == DELETION_MASK and vlen != 4:
+                raise CorruptSSTableError(
+                    f"cell tombstone body is {vlen} bytes, not 4")
+            pos = p + 12 + vlen
+        else:
+            raise CorruptSSTableError(
+                f"cell mask 0x{mask:02x} is not a recognized "
+                "simple/counter/range-tombstone atom")
+        wts.append(wt)
+        if canon == EXPIRATION_MASK:
+            # live from here on: mask 0, no ttl, no expiration
+            out += buf[run:at]
+            out.append(0)
+            run = at + 9
+        elif canon != mask:
+            out += buf[run:at]
+            out.append(canon)
+            run = at + 1
+    if pos != len(buf):
+        raise CorruptSSTableError(
+            f"partition ends at byte {pos} of its {len(buf)}-byte index "
+            "span")
+    out += buf[run:]
+    deleted = ldt != LIVE_LOCAL_DELETION or mfda != LIVE_MARKED_FOR_DELETE
+    return out, buf[2:2 + klen], mfda if deleted else None, wts, blocks
+
+
+def _strip_split(shard_dir: str, data_path: str, start: int,
+                 end: int) -> tuple[int, int]:
+    """The strip task: transcode the partitions that start in ``[start,
+    end)`` of ``data_path`` into one ``v1`` uncompressed table at
+    ``shard_dir``, one partition at a time at its Index.db offsets, so a
+    task holds one partition's bytes at a time (plus the sidecar
+    entries). Atoms are never decoded to text
+    (:func:`_strip_partition`); ``mc`` records are re-framed first and
+    compressed sources read through :func:`_open_data`. The same pass
+    builds Index.db, Summary.db, Filter.db, Statistics.db (no expiring
+    cells left) and ColumnIndex.db, then Digest.crc32 and TOC.txt —
+    byte-identical to :func:`_encode_rows` over the stripped
+    :func:`scan_data_range` rows when each partition's cells are in name
+    order, as every writer leaves them (a live partition with no atoms
+    is dropped there too). A record that is truncated, malformed, or
+    does not end at the next index offset raises
+    :class:`CorruptSSTableError` naming ``data_path``. Returns
+    ``(n_partitions, n_cells)``, partition deletions counted as cells
+    like the scan's rows."""
+    table_dir = os.path.dirname(data_path)
+    mc = _table_generation(table_dir) == "mc"
+    offsets = _split_offsets(table_dir, start, end) + [end]
+    os.makedirs(shard_dir, exist_ok=True)
+    keys: list[bytes] = []
+    summary: list[tuple] = []
+    colindex: list[tuple] = []
+    n_cells = n_rows = 0
+    min_wt = max_wt = None
+    with _open_data(data_path) as src, \
+            open(os.path.join(shard_dir, "Data.db"), "wb") as df, \
+            open(os.path.join(shard_dir, "Index.db"), "wb") as ix:
+        src.seek(offsets[0])
+        for lo, hi in zip(offsets, offsets[1:]):
+            buf = src.read(hi - lo)
+            try:
+                if len(buf) != hi - lo:
+                    raise CorruptSSTableError(
+                        f"truncated: {len(buf)} of {hi - lo} bytes")
+                out, key, mfda, wts, blocks = _strip_partition(
+                    _mc_to_v1(buf) if mc else buf, df.tell())
+            except (struct.error, IndexError, CorruptSSTableError) as e:
+                raise CorruptSSTableError(
+                    f"{data_path}: malformed partition at offset {lo} "
+                    f"(its index span ends at {hi}): {e}") from None
+            n_atoms = len(wts)
+            if mfda is None and not n_atoms:
+                continue  # the row path never sees a live, empty partition
+            if mfda is not None:
+                wts.append(mfda)
+            lo_wt, hi_wt = min(wts), max(wts)
+            min_wt = lo_wt if min_wt is None else min(min_wt, lo_wt)
+            max_wt = hi_wt if max_wt is None else max(max_wt, hi_wt)
+            n_cells += n_atoms
+            n_rows += n_atoms + (mfda is not None)
+            if len(keys) % SUMMARY_INTERVAL == 0:
+                summary.append((key, ix.tell(), df.tell()))
+            keys.append(key)
+            if blocks:
+                colindex.append((key, blocks))
+            ix.write(_U16.pack(len(key)) + key + _I64.pack(df.tell()))
+            df.write(out)
+    _write_column_index(shard_dir, colindex)
+    _write_filter(shard_dir, keys)
+    _write_summary(shard_dir, SUMMARY_INTERVAL, summary)
+    _write_stats(shard_dir, len(keys), n_cells, min_wt, max_wt, 0, None,
+                 None)
+    _write_digest_and_toc(shard_dir)
+    return len(keys), n_rows
 
 
 def rewrite_stripped(spark, path: str, out_dir: str,
@@ -2072,29 +2297,20 @@ def rewrite_stripped(spark, path: str, out_dir: str,
     sstable->sstable path: every generation is already sorted, and TTL
     strip is per-cell (expiring -> normal, everything else verbatim —
     NoTTLColumnSerializer's exact rule), so each index-snapped byte split
-    decodes, strips, and re-encodes ITS OWN output sstable: no
-    repartition, no sort, no network. This is the reference's 1:1
-    per-file dataflow, parallelized. Consolidating many generations into
-    non-overlapping shards is compaction (:func:`compact_rewrite`), not
-    the strip.
+    transcodes ITS OWN output sstable at the byte level
+    (:func:`_strip_split`): no decode to rows, no repartition, no sort,
+    no network. This is the reference's 1:1 per-file dataflow,
+    parallelized. Consolidating many generations into non-overlapping
+    shards is compaction (:func:`compact_rewrite`), not the strip.
 
-    Output layout: one shard per split, ``out_dir/<generation>_shard=
-    <split>`` (:func:`_rewrite_shards`), encoded by the shared
-    :func:`_encode_rows` — partition-level deletions preserved, every
-    sidecar re-emitted (outputs pass :func:`verify_digests`).
-    ``out_dir`` must be absent or empty. Returns the per-shard report
-    rows ``(shard, n_partitions, n_cells)``."""
-
-    def _strip(shard_dir, data_path, start, end):
-        return _encode_rows(
-            ((pk, cell, "normal", None, None, wt, val)
-             if kind == "expiring" else (pk, cell, kind, ttl, exp, wt, val)
-             for pk, cell, kind, ttl, exp, wt, val
-             in scan_data_range(data_path, int(start), int(end))),
-            shard_dir)
-
+    Output layout: one ``v1`` uncompressed shard per split,
+    ``out_dir/<generation>_shard=<split>`` (:func:`_rewrite_shards`) —
+    partition-level deletions preserved, every sidecar re-emitted
+    (outputs pass :func:`verify_digests`). ``out_dir`` must be absent or
+    empty. Returns the per-shard report rows ``(shard, n_partitions,
+    n_cells)``."""
     return _rewrite_shards(spark, out_dir, _split_specs(path, num_splits),
-                           _SPLIT_SPEC, _strip, ("n_partitions", "n_cells"))
+                           _strip_split, ("n_partitions", "n_cells"))
 
 
 def _resolve_atoms(rows: Iterable[tuple], threshold: int) -> list[tuple]:
@@ -2587,38 +2803,31 @@ def _claim_out_dir(out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
 
 
-def _rewrite_shards(spark, out_dir: str, specs: list[tuple],
-                    spec_schema: str, task, counts: tuple) -> list:
+def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
+                    counts: tuple) -> list:
     """The ONE zero-shuffle rewrite driver behind :func:`rewrite_stripped`,
-    :func:`gc_rewrite_single` and :func:`compact_rewrite`: task specs ->
-    :func:`~..plans.local_frame` -> ``mapInPandas`` -> one shard per spec
-    -> report rows. Each spec is ``(shard, *args)``; its task runs
-    ``task(out_dir/shard, *args)``, which writes that shard (through
-    :func:`_encode_rows`) and returns the report's ``counts``. Only the
-    spec rows are repartitioned; cell bytes never cross the network.
-    ``out_dir`` must be absent or empty (:func:`_claim_out_dir`). Returns
-    the collected ``(shard, *counts)`` rows; no specs = empty report."""
-    import pandas as pd
+    :func:`gc_rewrite_single` and :func:`compact_rewrite`: one plain RDD
+    job over the task specs, at most ``defaultParallelism`` tasks in a
+    single stage and a single wave, one shard per spec. Each spec is
+    ``(shard, *args)``; it runs as ``task(out_dir/shard, *args)``, which
+    writes that shard and returns the report's ``counts``. Only the specs
+    travel; cell bytes never cross the network. ``out_dir`` must be
+    absent or empty (:func:`_claim_out_dir`). Returns one
+    ``Row(shard, *counts)`` per spec; no specs = empty report."""
+    from pyspark.sql import Row
 
     _claim_out_dir(out_dir)
     if not specs:
         return []
-    cols = ["shard", *counts]
+    report = Row("shard", *counts)
 
-    def _run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                [(shard, *task(os.path.join(out_dir, shard), *args))
-                 for shard, *args in pdf.itertuples(index=False)],
-                columns=cols)
+    def _run(spec):
+        shard, *args = spec
+        return report(shard, *task(os.path.join(out_dir, shard), *args))
 
-    return (
-        local_frame(spark, specs, spec_schema)
-        .repartition(min(len(specs), 32))
-        .mapInPandas(_run, schema="shard string, " + ", ".join(
-            f"{c} bigint" for c in counts))
-        .collect()
-    )
+    sc = spark.sparkContext
+    return (sc.parallelize(specs, min(len(specs), sc.defaultParallelism))
+            .map(_run).collect())
 
 
 def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
@@ -3239,8 +3448,7 @@ def compact_rewrite(spark, path: str, out_dir: str, *, gc_grace_us: int,
              for r in _merge_range(dirs, ks, kp, threshold)),
             shard_dir)
 
-    return _rewrite_shards(spark, out_dir, specs,
-                           "shard string, ks string, kp string", _compact,
+    return _rewrite_shards(spark, out_dir, specs, _compact,
                            ("n_partitions", "n_cells"))
 
 
@@ -3599,7 +3807,7 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
     threshold = int(now_us) - int(gc_grace_us)
 
     def _gc(shard_dir, data_path, start, end):
-        atoms = list(scan_data_range(data_path, int(start), int(end)))
+        atoms = list(scan_data_range(data_path, start, end))
         n_parts, n_out = _encode_rows(
             (_status_to_row(*r)
              for r in _resolve_atoms(atoms, threshold)),
@@ -3607,7 +3815,7 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
         return n_parts, len(atoms), n_out
 
     return _rewrite_shards(spark, out_dir, _split_specs(path, num_splits),
-                           _SPLIT_SPEC, _gc,
+                           _gc,
                            ("n_partitions", "n_atoms_in", "n_atoms_out"))
 
 

@@ -1349,51 +1349,224 @@ def test_merge_compact_sorted_moves_no_cell_bytes(spark):
     shutil.rmtree(base)
 
 
-def test_rewrite_stripped_zero_shuffle_and_digest_clean(spark):
-    """The 1:1 strip rewrite: output scan == strip_ttl_cells of the
-    source, every output shard passes the digest sweep, partition-level
-    deletions and all atom kinds survive, and the job plan contains no
-    corpus exchange (the report frame's tiny spec repartition only)."""
-    import struct as _struct
+def _strip_reference(shard_dir, data_path, start, end):
+    """The row-level reference for one split: decode, make every expiring
+    row live, re-encode through the shared encoder."""
+    return ss._encode_rows(
+        ((pk, cell, "normal", None, None, wt, val) if kind == "expiring"
+         else (pk, cell, kind, ttl, exp, wt, val)
+         for pk, cell, kind, ttl, exp, wt, val
+         in ss.scan_data_range(data_path, start, end)),
+        shard_dir)
 
+
+def _assert_same_table(got_dir, want_dir):
+    names = sorted(os.listdir(want_dir))
+    assert sorted(os.listdir(got_dir)) == names
+    for name in names:
+        with open(os.path.join(got_dir, name), "rb") as g, \
+                open(os.path.join(want_dir, name), "rb") as w:
+            assert g.read() == w.read(), (got_dir, name)
+
+
+def _every_atom_partitions():
+    """Cells in name order covering every atom kind: expiring, normal,
+    cell tombstones, counters, counter updates and range tombstones; one
+    partition wide enough for several ColumnIndex blocks, every fifth
+    partition deleted, one live partition with no atoms, and one whose
+    mask bytes set extra bits (the decoder's dispatch order picks the
+    atom; the rewrite writes its one-bit mask)."""
+    wt = 1_700_000_000_000_000
+    parts = [(b"empty", []), (b"odd-masks", [
+        (b"a", ss.EXPIRATION_MASK | ss.DELETION_MASK, 60, 1_700_000_060,
+         wt, b"x"),
+        (b"b", ss.COUNTER_MASK | ss.EXPIRATION_MASK, 0, wt - 5, wt, b"3"),
+        (b"c", ss.COUNTER_UPDATE_MASK | ss.DELETION_MASK, 0, 0, wt,
+         b"4"),
+        (b"d", ss.RANGE_TOMBSTONE_MASK | ss.DELETION_MASK, 0,
+         1_700_000_000, wt, b"e"),
+        (b"f", ss.DELETION_MASK | 0x40, 0, 0, wt,
+         struct.pack(">i", 1_700_000_000)),
+    ])]
+    for p in range(40):
+        cells = []
+        for i in range(150 if p == 0 else 5 + p % 7):
+            name = f"{i:06d}:c".encode()
+            wt = 1_700_000_000_000_000 + p * 1000 + i
+            k = (p + i) % 6
+            if k == 0:
+                cells.append((name, ss.EXPIRATION_MASK, 600, 1_700_000_600,
+                              wt, f"v{i}".encode()))
+            elif k == 1:
+                cells.append((name, ss.DELETION_MASK, 0, 0, wt,
+                              struct.pack(">i", 1_700_000_000)))
+            elif k == 2:
+                cells.append((name, ss.COUNTER_MASK, 0, wt - 5, wt, b"42"))
+            elif k == 3:
+                cells.append((name, ss.COUNTER_UPDATE_MASK, 0, 0, wt, b"7"))
+            elif k == 4:
+                cells.append((name, ss.RANGE_TOMBSTONE_MASK, 0,
+                              1_700_000_000, wt,
+                              f"{i + 70:06d}:z".encode()))
+            else:
+                cells.append((name, 0, 0, 0, wt, f"v{i}".encode()))
+        key = f"p{p:03d}".encode()
+        if p % 5 == 0:
+            parts.append((key, cells,
+                          (1_700_000_000, 1_700_000_000_000_999 + p)))
+        else:
+            parts.append((key, cells))
+    return parts
+
+
+@pytest.mark.parametrize("generation,compressed", [
+    ("v1", False), ("mc", False), ("v1", True), ("mc", True)],
+    ids=["v1", "mc", "v1-compressed", "mc-compressed"])
+def test_rewrite_stripped_zero_shuffle_and_digest_clean(spark, generation,
+                                                        compressed):
+    """The 1:1 strip rewrite on every source framing: each split's shard
+    is, component by component, byte-identical to decoding, stripping
+    and re-encoding that split; the output scan equals strip_ttl_cells
+    of the source with every atom kind and partition deletions kept;
+    every shard passes the digest sweep."""
     base = _tmpdir()
     src = os.path.join(base, "src")
-    cells = []
-    cells.append((b"000001:rt", ss.RANGE_TOMBSTONE_MASK, 0,
-                  1_700_000_000, 1_700_000_000_000_400, b"000005:"))
-    for i in range(30):
-        name = f"{i:06d}:c".encode()
-        if i % 5 == 0:
-            cells.append((name, ss.EXPIRATION_MASK, 600, 1_700_000_600,
-                          1_700_000_000_000_000 + i, f"v{i}".encode()))
-        elif i % 7 == 0:
-            cells.append((name, ss.DELETION_MASK, 0, 0,
-                          1_700_000_000_000_000 + i,
-                          _struct.pack(">i", 1_700_000_000)))
-        else:
-            cells.append((name, 0, 0, 0, 1_700_000_000_000_000 + i,
-                          f"v{i}".encode()))
-    cells.sort(key=lambda c: c[0])
-    ss.write_sstable(
-        [(b"alive", cells),
-         (b"gone", [(b"c", 0, 0, 0, 5, b"x")],
-          (1_700_000_000, 1_700_000_000_000_999))],
-        src,
-    )
+    ss.write_sstable(_every_atom_partitions(), src, generation=generation,
+                     compressed=compressed)
     out = os.path.join(base, "out")
     report = ss.rewrite_stripped(spark, src, out, num_splits=4)
-    assert sum(r.n_cells for r in report) == 33  # 31 cells + RT + pt-del
+    specs = ss._split_specs(src, 4)
+    by_shard = {r.shard: r for r in report}
+    assert sorted(by_shard) == sorted(s[0] for s in specs)
+    for shard, *split in specs:
+        ref = os.path.join(base, "ref", shard)
+        counts = _strip_reference(ref, *split)
+        assert (by_shard[shard].n_partitions,
+                by_shard[shard].n_cells) == counts
+        _assert_same_table(os.path.join(out, shard), ref)
     want = sorted((tuple(r) for r in
                    ss.strip_ttl_cells(
                        ss.scan_sstable(spark, src)).collect()), key=repr)
     got = sorted((tuple(r) for r in
                   ss.scan_sstable(spark, out).collect()), key=repr)
     assert got == want
+    assert sum(r.n_cells for r in report) == len(want)
     assert not any(r[2] == "expiring" for r in got)
-    assert any(r[2] == "partition_tombstone" for r in got)
-    assert any(r[2] == "range_tombstone" for r in got)
+    assert {r[2] for r in got} == {
+        "normal", "tombstone", "counter", "counter_update",
+        "range_tombstone", "partition_tombstone"}
     checks = ss.verify_digests(spark, out).collect()
     assert checks and all(r.digest_ok and r.toc_ok for r in checks)
+    shutil.rmtree(base)
+
+
+def test_rewrite_stripped_keeps_binary_bytes(spark):
+    """Keys, cell names, values and range-tombstone bounds that are not
+    UTF-8 are opaque bytes to the strip: the output shard is, component
+    by component, the table write_sstable writes for the stripped
+    partitions."""
+    wt = 1_700_000_000_000_000
+    raw = b"\xff\xfe\x00\x01"
+    src_cells = [
+        (b"\x00bin", ss.EXPIRATION_MASK, 600, 1_700_000_600, wt, raw),
+        (b"c\x80", 0, 0, 0, wt + 1, raw),
+        (b"c\xff", ss.RANGE_TOMBSTONE_MASK, 0, 1_700_000_000, wt + 2,
+         b"d\xfe"),
+    ]
+    live = [(b"\xfe", ss.EXPIRATION_MASK, 60, 1_700_000_060, wt + 3,
+             b"\x80")]
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable([(b"k\xff", src_cells, (1_700_000_000, wt - 1)),
+                      (b"a\xc3", live)], src)
+    report = ss.rewrite_stripped(spark, src, os.path.join(base, "out"),
+                                 num_splits=1)
+    assert [(r.shard, r.n_partitions, r.n_cells) for r in report] == [
+        ("src_shard=00000", 2, 5)]
+
+    def strip(cells):
+        return [(n, 0, 0, 0, w, v) if m == ss.EXPIRATION_MASK
+                else (n, m, t, e, w, v) for n, m, t, e, w, v in cells]
+
+    want = os.path.join(base, "want")
+    ss.write_sstable([(b"k\xff", strip(src_cells), (1_700_000_000, wt - 1)),
+                      (b"a\xc3", strip(live))], want)
+    _assert_same_table(os.path.join(base, "out", "src_shard=00000"), want)
+    shutil.rmtree(base)
+
+
+@pytest.mark.parametrize("damage", ["truncated", "overrun"])
+def test_strip_corrupt_input_fails_loud_naming_data_file(spark, capsys,
+                                                         damage):
+    """A Data.db cut mid-partition, or a partition whose last value length
+    runs past its end marker into the next index offset, raises
+    CorruptSSTableError naming the Data.db path; the CLI exits 1 with
+    that path on stderr."""
+    import re
+
+    from cassandra_ttl_remover_spark.cli import main
+
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable(
+        [(f"k{p}".encode(),
+          [(f"c{i}".encode(), ss.EXPIRATION_MASK, 60, 1_700_000_060,
+            1_700_000_000_000_000 + i, b"value") for i in range(4)])
+         for p in range(3)], src)
+    data = os.path.join(src, "Data.db")
+    with open(data, "rb") as f:
+        raw = bytearray(f.read())
+    if damage == "truncated":
+        raw = raw[:-7]
+    else:
+        # k0's last cell: i32 value length, b"value", then the u16 end
+        # marker; growing the length swallows the marker
+        nxt = ss.read_index(os.path.join(src, "Index.db"))[1][1]
+        struct.pack_into(">i", raw, nxt - 2 - 5 - 4, 7)
+    with open(data, "wb") as f:
+        f.write(bytes(raw))
+    _, _, start, end = ss._split_specs(src, 1)[0]
+    with pytest.raises(ss.CorruptSSTableError, match=re.escape(data)):
+        ss._strip_split(os.path.join(base, "shard"), data, start, end)
+    rc = main(["--input", src, "--output-path", os.path.join(base, "out"),
+               "--input-format", "sstable", "--output-format", "sstable"])
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "CorruptSSTableError" in err and data in err
+    shutil.rmtree(base)
+
+
+def test_rewrite_driver_is_one_job_one_stage_one_wave(spark):
+    """The rewrite driver is one plain job over the specs: one stage, at
+    most defaultParallelism tasks, and still one report row and one
+    shard per spec."""
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable(
+        [(f"k{p:03d}".encode(),
+          [(b"c", ss.EXPIRATION_MASK, 60, 1_700_000_060, p, b"v"),
+           (b"d", 0, 0, 0, p, b"w")]) for p in range(64)], src)
+    assert len(ss._split_specs(src, 8)) == 8
+    sc = spark.sparkContext
+    gid = f"rewrite-shape-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "rewrite_stripped plan shape")
+    try:
+        report = ss.rewrite_stripped(spark, src, os.path.join(base, "out"),
+                                     num_splits=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(gid)
+    assert len(jobs) == 1
+    stages = st.getJobInfo(jobs[0]).stageIds
+    assert len(stages) == 1
+    tasks = st.getStageInfo(stages[0]).numCompletedTasks
+    assert 0 < tasks <= sc.defaultParallelism
+    assert sorted(r.shard for r in report) == [
+        f"src_shard={i:05d}" for i in range(8)]
+    assert all((r.n_partitions, r.n_cells) == (8, 16) for r in report)
+    assert sorted(os.listdir(os.path.join(base, "out"))) == sorted(
+        r.shard for r in report)
     shutil.rmtree(base)
 
 
