@@ -665,55 +665,12 @@ _REGRADE_FIRST = [
 
 _DRIVER_PRIORITY = [
     *_REGRADE_FIRST,
-    # --- round-13 rotation: stalest-green-first, regenerated from
-    # CORRECTNESS_r01..r12 (script pattern in ROTATION_r13_plan.md;
+    # --- round-14 rotation: stalest-green-first, regenerated from
+    # CORRECTNESS_r01..r13 (script pattern in ROTATION_r13_plan.md;
     # same green rule as tests/test_harness_contract.py). All 334
     # declared queries have at least one green row; the window is
-    # the stalest tail (round 5 onward). Full surface, no dupes. ---
-    # --- last green: round 5 (30 queries) ---
-    "q_n33_cluster_histogram",
-    "q_mm11_png_decode",
-    "q_mm12_gif_decode",
-    "q_n44_repetition_runs",
-    "q_n46_cluster_representatives",
-    "q_n8g_ann_ivfpq",
-    "q_v7_random_projection",
-    "q_a9_countmin",
-    "q_a10_join_size_estimate",
-    "q_st16_stream_countmin",
-    "q_x19_recursive_cte",
-    "q_x20_pareto_frontier",
-    "q_x21_python_udtf",
-    "q_d1_snapshot_diff",
-    "q_d2_profile_table",
-    "q_d3_table_digest",
-    "q_d4_group_outliers",
-    "q_z1_zorder_key",
-    "q_w2_compact_small_files",
-    "q_w3_partitioned_prune",
-    "q_f1_csv_roundtrip",
-    "q_f2_json_roundtrip",
-    "q_f3_orc_roundtrip",
-    "q_sk1_salted_rollup",
-    "q_rj_range_join",
-    "q_x1_set_except",
-    "q_x2_semi_anti_join",
-    "q_x6_group_median",
-    "q_p3_pivot_counts",
-    "q_x3_scalar_functions",
-    # --- last green: round 6 (42 queries) ---
-    "q_ml4_grouped_fit",
-    "q_ml5_chi2_tokens",
-    "q_ml6_ttest",
-    "q_ml7_autocorr",
-    "q_mm13_jpeg_decode",
-    "q_mm14_decode_quarantine",
-    "q_mm15_animated_frames",
-    "q_mm16_ulaw_decode",
-    "q_f8_warc_ingest",
-    "q_f9_zip_ingest",
-    "q_f10_warc_gz_ingest",
-    "q_pipe_entity_resolution",
+    # the stalest tail (round 6 onward). Full surface, no dupes. ---
+    # --- last green: round 6 (30 queries) ---
     "q_se7_scd2_build",
     "q_se8_scd2_temporal_join",
     "q_n48_prefix_filter_join",
@@ -830,7 +787,7 @@ _DRIVER_PRIORITY = [
     "q_sql_q6_forecast_revenue",
     "q_sql_q10_returned_items",
     "q_x7_window_analytics",
-    # --- last green: round 9 (40 queries) ---
+    # --- last green: round 9 (36 queries) ---
     "q_n45_bpe_train",
     "q_t9_sstable_merge_compact",
     "q_t8_sstable_compact_e2e",
@@ -867,7 +824,7 @@ _DRIVER_PRIORITY = [
     "q_st6_stream_dedup_vs_corpus",
     "q_st7_stream_file_sink",
     "q_st8_stream_upsert",
-    # --- last green: round 10 (45 queries) ---
+    # --- last green: round 10 (43 queries) ---
     "q_n61_logreg_train",
     "q_n62_classifier_auc",
     "q_n63_holdout_auc",
@@ -911,7 +868,7 @@ _DRIVER_PRIORITY = [
     "q_n8_ann_lsh",
     "q_n8b_ann_ivf",
     "q_n9_minhash_recall",
-    # --- last green: round 11 (43 queries) ---
+    # --- last green: round 11 (41 queries) ---
     "q_ml10_theil_sen",
     "q_st22_stream_lm_gate",
     "q_st23_stream_sbo_gate",
@@ -1004,6 +961,49 @@ _DRIVER_PRIORITY = [
     "q_n30_containment_pairs",
     "q_n31_bigram_quality",
     "q_n32_keyword_search",
+    # --- last green: round 13 (42 queries) ---
+    "q_n33_cluster_histogram",
+    "q_mm11_png_decode",
+    "q_mm12_gif_decode",
+    "q_n44_repetition_runs",
+    "q_n46_cluster_representatives",
+    "q_n8g_ann_ivfpq",
+    "q_v7_random_projection",
+    "q_a9_countmin",
+    "q_a10_join_size_estimate",
+    "q_st16_stream_countmin",
+    "q_x19_recursive_cte",
+    "q_x20_pareto_frontier",
+    "q_x21_python_udtf",
+    "q_d1_snapshot_diff",
+    "q_d2_profile_table",
+    "q_d3_table_digest",
+    "q_d4_group_outliers",
+    "q_z1_zorder_key",
+    "q_w2_compact_small_files",
+    "q_w3_partitioned_prune",
+    "q_f1_csv_roundtrip",
+    "q_f2_json_roundtrip",
+    "q_f3_orc_roundtrip",
+    "q_sk1_salted_rollup",
+    "q_rj_range_join",
+    "q_x1_set_except",
+    "q_x2_semi_anti_join",
+    "q_x6_group_median",
+    "q_p3_pivot_counts",
+    "q_x3_scalar_functions",
+    "q_ml4_grouped_fit",
+    "q_ml5_chi2_tokens",
+    "q_ml6_ttest",
+    "q_ml7_autocorr",
+    "q_mm13_jpeg_decode",
+    "q_mm14_decode_quarantine",
+    "q_mm15_animated_frames",
+    "q_mm16_ulaw_decode",
+    "q_f8_warc_ingest",
+    "q_f9_zip_ingest",
+    "q_f10_warc_gz_ingest",
+    "q_pipe_entity_resolution",
 ]
 
 

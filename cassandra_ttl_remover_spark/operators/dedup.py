@@ -513,20 +513,21 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     propagation is pure overhead — each round costs scheduler latency on a
     frame of a few hundred rows. Below the limit the (materialized) edges
     are collected and resolved by exact union-find (same min-id labels),
-    replacing ~diameter×2 Spark jobs with one bounded collect — the same
-    small-graph/large-graph split production graph engines make. Above it,
+    replacing ~diameter×2 Spark jobs with one bounded collect of
+    ``driver_limit + 1`` edges, which both decides the path and fetches
+    the edges — the same small-graph/large-graph split production graph
+    engines make. Above it,
     the distributed loop runs unchanged; `0` forces the distributed path.
 
     Returns ``(id_col, component)`` where component = min id reachable;
     singleton docs are their own component."""
-    # materialize the edge list once: the count probe, the driver collect
-    # OR the symmetric-closure branches all reuse the same blocks instead
-    # of re-running the (possibly expensive) pair-generation pipeline
+    # materialize the edge list once: the bounded driver collect and the
+    # symmetric-closure branches reuse the same blocks instead of
+    # re-running the (possibly expensive) pair-generation pipeline
     edges = pairs.select("a", "b").localCheckpoint(eager=False)
-    if driver_limit and edges.count() <= driver_limit:
-        labels = _driver_union_find(
-            [(r["a"], r["b"]) for r in edges.collect()]
-        )
+    rows = edges.limit(driver_limit + 1).collect() if driver_limit else []
+    if driver_limit and len(rows) <= driver_limit:
+        labels = _driver_union_find([(r["a"], r["b"]) for r in rows])
         if not labels:
             return ids.select(F.col(id_col), F.col(id_col).alias("component"))
         spark = ids.sparkSession

@@ -52,9 +52,11 @@ def _estimated_partitions(df: DataFrame) -> int:
     conversion, no file listing, no execution. The TOPMOST partition-
     determining logical node decides: an explicit Repartition/coalesce
     carries its exact count; any shuffle-producing node yields
-    shuffle.partitions; a bare scan pipeline is sized by Catalyst's
-    sizeInBytes statistic over spark.sql.files.maxPartitionBytes — the same
-    quantity Spark's own file-split planner uses."""
+    shuffle.partitions; a checkpoint (``LogicalRDD``) has its RDD's real
+    partition count, which its bytes say nothing about; a bare scan
+    pipeline is sized by Catalyst's sizeInBytes statistic over
+    spark.sql.files.maxPartitionBytes — the same quantity Spark's own
+    file-split planner uses."""
     spark = df.sparkSession
     logical = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
     size = int(logical.stats().sizeInBytes())
@@ -63,6 +65,12 @@ def _estimated_partitions(df: DataFrame) -> int:
         if m:
             return int(m.group(1))
         node = _NODE_RE.match(line)
+        if node and node.group(1) == "LogicalRDD":
+            # the first LogicalRDD line is the first such leaf in order
+            leaves = logical.collectLeaves()
+            rdd = next(leaf for leaf in map(leaves.apply, range(leaves.length()))
+                       if leaf.nodeName() == "LogicalRDD")
+            return int(rdd.rdd().getNumPartitions())
         if node and node.group(1) in _SHUFFLE_SIZED_NODES:
             n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
             # AQE coalesces post-shuffle partitions by MAP-OUTPUT size, so a

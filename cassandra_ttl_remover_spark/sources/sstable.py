@@ -1673,6 +1673,20 @@ def _exact_key(key_start: bytes | None,
     return None
 
 
+def _check_index_in_data(table_dir: str, last_offset: int,
+                         size: int) -> None:
+    """Reject an Index.db entry at or past the end of Data.db (``size``,
+    uncompressed): the data file was cut at a partition boundary, and a
+    plan would silently drop every partition from that entry on. Entries
+    are in offset order, so the last one decides."""
+    if last_offset >= size:
+        raise CorruptSSTableError(
+            f"{os.path.join(table_dir, 'Index.db')} lists a partition at "
+            f"offset {last_offset}, at or past the end of "
+            f"{os.path.join(table_dir, 'Data.db')} ({size} bytes "
+            f"uncompressed): the data file is truncated")
+
+
 def _plan_table_splits(table_dir: str, num_splits: int,
                        key_start: bytes | None = None,
                        key_stop: bytes | None = None) -> list[tuple]:
@@ -1691,6 +1705,8 @@ def _plan_table_splits(table_dir: str, num_splits: int,
     else:
         entries = read_index(os.path.join(table_dir, "Index.db"))
         size = _data_size(table_dir)
+    if entries:
+        _check_index_in_data(table_dir, entries[-1][1], size)
     lo, byte_start, byte_end = select_index_range(
         entries, size, key_start, key_stop
     )
@@ -2088,10 +2104,11 @@ def _split_offsets(table_dir: str, start: int, end: int) -> list[int]:
     with open(index_path, "rb") as f:
         f.seek(ix_lo)
         buf = f.read() if ix_hi is None else f.read(ix_hi - ix_lo)
-    return [off for _, off in _parse_index_entries(
-                buf, _table_generation(table_dir), index_path,
-                base_off=ix_lo)
-            if start <= off < end]
+    offsets = [off for _, off in _parse_index_entries(
+        buf, _table_generation(table_dir), index_path, base_off=ix_lo)]
+    if offsets:
+        _check_index_in_data(table_dir, offsets[-1], _data_size(table_dir))
+    return [off for off in offsets if start <= off < end]
 
 
 _U16 = struct.Struct(">H")

@@ -208,6 +208,28 @@ def test_connected_components_string_ids_both_paths(spark):
     assert driver == dist == expect
 
 
+def test_connected_components_driver_limit_is_inclusive(spark, monkeypatch):
+    # the one bounded collect decides the path: exactly driver_limit edges
+    # resolve on the driver, one more runs the distributed loop, and both
+    # give the labels the forced distributed path gives
+    driver_calls = []
+    union_find = dedup._driver_union_find
+    monkeypatch.setattr(dedup, "_driver_union_find",
+                        lambda e: driver_calls.append(len(e)) or union_find(e))
+    ids = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
+    for n_edges, path in ((4, [4]), (5, [])):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n_edges)], "a long, b long")
+        driver_calls.clear()
+        got = {tuple(r) for r in dedup.connected_components(
+            pairs, ids, driver_limit=4).collect()}
+        assert driver_calls == path
+        forced = {tuple(r) for r in dedup.connected_components(
+            pairs, ids, driver_limit=0).collect()}
+        assert got == forced == {
+            (i, 0 if i <= n_edges else i) for i in range(10)}
+
+
 def test_repeated_ngram_census_hand_case(spark):
     # doc 1 and 2 share one verbatim 8-token run; doc 3 is unique
     run = "a b c d e f g h"

@@ -71,6 +71,16 @@ def test_fan_out_raises_narrow_plans(spark):
     assert n == spark.sparkContext.defaultParallelism
 
 
+def test_fan_out_keeps_checkpointed_partitions(spark, documents):
+    # a localCheckpoint (curate's keep1) is a LogicalRDD: its partition
+    # count is the RDD's, not its byte size over maxPartitionBytes, so
+    # shingling it must not re-shuffle every document's text
+    n = spark.sparkContext.defaultParallelism
+    keep = documents.repartition(n, "doc_id").localCheckpoint()
+    assert keep.rdd.getNumPartitions() >= n
+    assert exchange_count(dedup.shingle_frame(keep)) == 0
+
+
 def test_minhash_signatures_reuse_fanout_partitioning(spark, documents):
     # the fan_out hash exchange on doc_id must satisfy the groupBy(doc_id)
     # requirement: exactly one exchange between scan and signature agg

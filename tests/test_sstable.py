@@ -1536,6 +1536,46 @@ def test_strip_corrupt_input_fails_loud_naming_data_file(spark, capsys,
     shutil.rmtree(base)
 
 
+def test_data_cut_at_partition_boundary_fails_loud(spark, capsys):
+    """A Data.db cut exactly where its third partition starts leaves every
+    record whole, so only the index betrays it: planning, the per-split
+    offsets, the rewrite, the scan and the CLI all raise
+    CorruptSSTableError naming both Data.db and Index.db instead of
+    returning two partitions."""
+    from cassandra_ttl_remover_spark.cli import main
+
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable(
+        [(f"k{p}".encode(),
+          [(b"c", ss.EXPIRATION_MASK, 60, 1_700_000_060,
+            1_700_000_000_000_000, b"value")]) for p in range(3)], src)
+    data, index = (os.path.join(src, c) for c in ("Data.db", "Index.db"))
+    cut = ss.read_index(index)[2][1]
+    with open(data, "r+b") as f:
+        f.truncate(cut)
+
+    def names_both(exc_text):
+        return data in exc_text and index in exc_text
+
+    with pytest.raises(ss.CorruptSSTableError) as e:
+        ss._split_specs(src, 4)
+    assert names_both(str(e.value))
+    with pytest.raises(ss.CorruptSSTableError) as e:
+        ss._split_offsets(src, 0, cut)
+    assert names_both(str(e.value))
+    with pytest.raises(ss.CorruptSSTableError) as e:
+        ss.rewrite_stripped(spark, src, os.path.join(base, "out"))
+    assert names_both(str(e.value))
+    with pytest.raises(Exception) as e:
+        ss.scan_sstable(spark, src).collect()
+    assert "CorruptSSTableError" in str(e.value) and names_both(str(e.value))
+    rc = main(["--input", src, "--output-path", os.path.join(base, "cli"),
+               "--input-format", "sstable", "--output-format", "sstable"])
+    assert rc == 1 and names_both(capsys.readouterr().err)
+    shutil.rmtree(base)
+
+
 def test_rewrite_driver_is_one_job_one_stage_one_wave(spark):
     """The rewrite driver is one plain job over the specs: one stage, at
     most defaultParallelism tasks, and still one report row and one
