@@ -8,11 +8,17 @@ step 5):
 
 - sstable -> sstable is the reference's own dataflow: each index-snapped
   split of each input table is stripped at the byte level into its own
-  output shard (``rewrite_stripped``), with no shuffle. Merging many
+  output shard (``rewrite_stripped``), with no shuffle. The splits run on
+  a local fork pool of one worker per core the local master would get,
+  and no Spark session is started: on ``local[...]`` a Spark job would use
+  the same cores and add a JVM and a per-job floor. Merging many
   generations into non-overlapping shards is compaction
   (``compact_rewrite``), not this job.
 - sstable -> parquet and parquet -> parquet strip a cell frame and write it
-  sorted and range-partitioned (``write_sorted``).
+  sorted and range-partitioned (``write_sorted``) on a Spark session.
+
+A job that fails exits 1 with ``error: <ExceptionType>: <message>`` on
+stderr.
 
 Usage:
     python -m cassandra_ttl_remover_spark.cli \
@@ -100,34 +106,37 @@ def parse_args(argv: list[str]) -> JobSpec:
 
 
 def run(spec: JobSpec) -> int:
-    from cassandra_ttl_remover_spark import get_spark, scan, write_sorted
-    from cassandra_ttl_remover_spark.schema import parse_cql_create_table
-
-    spark = get_spark("ttl-remover-cli")
+    if spec.output_format == "sstable" and spec.input_format != "sstable":
+        raise TTLRemovalError(
+            "--output-format sstable requires --input-format sstable "
+            "(the binary sink consumes the native cell schema)")
     try:
-        if spec.input_format == "sstable":
+        if spec.output_format == "sstable":
             # the reference's job verbatim on its NATIVE format: the
-            # zero-shuffle per-split rewrite (sidecars re-emitted, so
-            # outputs pass verify_digests), or scan -> strip -> sorted
-            # parquet
+            # zero-shuffle per-split rewrite on a local pool, no session
+            # (sidecars re-emitted, so outputs pass verify_digests)
             from cassandra_ttl_remover_spark.sources.sstable import (
                 rewrite_stripped,
+            )
+
+            rewrite_stripped(None, spec.input_path, spec.output_path)
+            return 0
+        from cassandra_ttl_remover_spark import get_spark, scan, write_sorted
+        from cassandra_ttl_remover_spark.schema import parse_cql_create_table
+
+        spark = get_spark("ttl-remover-cli")
+        if spec.input_format == "sstable":
+            # scan -> strip -> sorted parquet
+            from cassandra_ttl_remover_spark.sources.sstable import (
                 scan_sstable,
                 strip_ttl_cells,
             )
 
-            if spec.output_format == "sstable":
-                rewrite_stripped(spark, spec.input_path, spec.output_path)
-                return 0
             stripped = strip_ttl_cells(
                 scan_sstable(spark, spec.input_path))
             write_sorted(stripped, spec.output_path, pk="pk",
                          clustering=["cell"])
             return 0
-        if spec.output_format == "sstable":
-            raise TTLRemovalError(
-                "--output-format sstable requires --input-format sstable "
-                "(the binary sink consumes the native cell schema)")
         schema = None
         pk, clustering = spec.pk, spec.clustering
         if spec.cql:
@@ -138,10 +147,8 @@ def run(spec: JobSpec) -> int:
         stripped = get_strategy(spec.version).strip(df)
         write_sorted(stripped, spec.output_path, pk=pk, clustering=clustering)
         return 0
-    except TTLRemovalError:
-        raise
     except Exception as e:  # noqa: BLE001 — CLI boundary
-        raise TTLRemovalError(str(e)) from e
+        raise TTLRemovalError(f"{type(e).__name__}: {e}") from e
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -102,6 +102,14 @@ def _local_worker_conf() -> dict[str, str]:
     return conf
 
 
+def local_cpus() -> int:
+    """The cores a ``local[...]`` master gets: ``SPARK_GRAFT_CPUS``, else
+    the CPUs this process may run on. The native rewrite's process pool
+    (``sources/sstable.py``) uses one worker per core of this count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 def configure_builder(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine defaults to an existing builder (driver-owned sessions)."""
     for k, v in ENGINE_CONF.items():
@@ -114,16 +122,15 @@ def get_spark(app_name: str = "cassandra-ttl-remover-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    Locally runs on ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``) with
-    the engine's worker daemon and Unix-domain worker sockets (module
-    docstring); on a cluster, pass ``master=None`` with externally-provided
-    conf and only the SQL-level settings here apply.
+    Locally runs on ``local[<local_cpus()>]`` with the engine's worker
+    daemon and Unix-domain worker sockets (module docstring); on a
+    cluster, pass ``master=None`` with externally-provided conf and only
+    the SQL-level settings here apply.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
-        master = f"local[{cpus}]" if cpus else "local[*]"
+        master = f"local[{local_cpus()}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+        shuffle_partitions = local_cpus()
     builder = SparkSession.builder.appName(app_name).master(master)
     builder = configure_builder(builder)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -48,11 +48,12 @@ out as flat rows; no partition is materialized whole except the one being
 decoded (the reference's iterator does the same —
 NoTTLSSTableIdentityIterator). Every writer is per-task. The zero-shuffle
 rewrites of existing tables (strip, single-table GC, k-way compaction) run
-on one driver, :func:`_rewrite_shards`, a one-stage job that writes one
-shard per split or merge range. The strip never decodes a cell:
-:func:`_strip_split` transcodes each partition's bytes (an expiring cell
-loses its ttl and expiration, every other byte is copied) and writes the
-sidecars in the same pass. GC, compaction and
+on one driver, :func:`_rewrite_shards`, which writes one shard per split or
+merge range: a one-stage Spark job when given a session, a local fork pool
+when given ``None`` (the CLI's path, which starts no session). The strip
+never decodes a cell: :func:`_strip_split` transcodes each partition's
+bytes (an expiring cell loses its ttl and expiration, every other byte is
+copied) and writes the sidecars in the same pass. GC, compaction and
 :func:`write_sstable_distributed` (which range-partitions an arbitrary
 cell frame into shards) encode rows through the shared
 :func:`_encode_rows` over :func:`write_sstable`.
@@ -939,9 +940,10 @@ def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
             nlen = rlen("cell-name length")
             if nlen == 0:
                 break
-            name = _must_read(
-                f, nlen, data_path, "cell name").decode("utf-8")
-            row = _decode_cell_body(f, rlen, rval, key, name, data_path)
+            name = _utf8(_must_read(f, nlen, data_path, "cell name"),
+                         data_path, off, "cell name")
+            row = _decode_cell_body(f, rlen, rval, key, name, data_path,
+                                    off)
             if name >= cell_stop:
                 break
             if name >= cell_start:
@@ -1526,6 +1528,19 @@ def _framing(f, gen: str, data_path: str):
     return rlen, rval, rlen_or_eof
 
 
+def _utf8(raw: bytes, data_path: str, part_off: int, what: str) -> str:
+    """A string field of :data:`SSTABLE_SCHEMA`. Bytes that are not UTF-8
+    raise a ValueError naming the file, the partition's offset and the
+    field (the byte-level rewrites never decode, so they carry any
+    bytes)."""
+    try:
+        return raw.decode("utf-8")
+    except UnicodeDecodeError as e:
+        raise ValueError(
+            f"{data_path}: {what} of the partition at offset {part_off} "
+            f"is not UTF-8 ({e})") from None
+
+
 def scan_data_range(data_path: str, start: int, end: int) -> Iterator[tuple]:
     """Decode every partition whose record starts in ``[start, end)`` and
     yield flat cell rows (the SSTABLE_SCHEMA tuple shape). Seeks once,
@@ -1533,19 +1548,21 @@ def scan_data_range(data_path: str, start: int, end: int) -> Iterator[tuple]:
     except to finish the final partition it started. A file truncated
     mid-record fails with a descriptive CorruptSSTableError (quarantine
     the file, don't emit partial partitions) rather than a bare struct
-    error."""
+    error; a key, cell name, value or range-tombstone bound that is not
+    UTF-8 fails with a ValueError naming the file, the partition's
+    offset and the field (:func:`_utf8`)."""
     gen = _table_generation(os.path.dirname(data_path))
     with _open_data(data_path) as f:
         rlen, rval, rlen_or_eof = _framing(f, gen, data_path)
         f.seek(start)
-        while f.tell() < end:
+        while (part_off := f.tell()) < end:
             klen = rlen_or_eof()
             if klen is None:
                 return
             key = _must_read(f, klen, data_path, "partition key")
             ldt, mfda = struct.unpack(
                 ">iq", _must_read(f, 12, data_path, "partition header"))
-            pk = key.decode("utf-8")
+            pk = _utf8(key, data_path, part_off, "partition key")
             if ldt != LIVE_LOCAL_DELETION or mfda != LIVE_MARKED_FOR_DELETE:
                 # partition-level deletion: surface it as its own row and
                 # keep decoding the partition's cells — Cassandra keeps
@@ -1558,24 +1575,27 @@ def scan_data_range(data_path: str, start: int, end: int) -> Iterator[tuple]:
                 nlen = rlen("cell-name length")
                 if nlen == 0:
                     break
-                name = _must_read(f, nlen, data_path,
-                                  "cell name").decode("utf-8")
-                yield _decode_cell_body(f, rlen, rval, pk, name, data_path)
+                name = _utf8(_must_read(f, nlen, data_path, "cell name"),
+                             data_path, part_off, "cell name")
+                yield _decode_cell_body(f, rlen, rval, pk, name, data_path,
+                                        part_off)
 
 
 def _decode_cell_body(f, rlen, rval, pk: str, name: str,
-                      data_path: str) -> tuple:
+                      data_path: str, part_off: int) -> tuple:
     """Decode one cell body (mask byte onward) into its SSTABLE_SCHEMA
     row. Atom dispatch mirrors the reference's order: range tombstone
     first (NoTTLSerializer.java:31), then the cell masks
     (NoTTLColumnSerializer.java:26-49). Shared by the full scan and the
-    column-index slice reader."""
+    column-index slice reader; ``part_off`` is where the partition's
+    record (or, for the slice reader, its decode) starts, for
+    :func:`_utf8`'s error."""
     (mask,) = struct.unpack(
         ">B", _must_read(f, 1, data_path, "cell mask"))
     if mask & RANGE_TOMBSTONE_MASK:
         elen = rlen("RT end length")
-        rt_end = _must_read(f, elen, data_path,
-                            "RT end bound").decode("utf-8")
+        rt_end = _utf8(_must_read(f, elen, data_path, "RT end bound"),
+                       data_path, part_off, "RT end bound")
         ldt, mfda = struct.unpack(
             ">iq", _must_read(f, 12, data_path, "RT deletion"))
         return (pk, name, "range_tombstone", None, int(ldt), mfda, rt_end)
@@ -1584,20 +1604,22 @@ def _decode_cell_body(f, rlen, rval, pk: str, name: str,
             ">qq", _must_read(f, 16, data_path, "counter-cell body"))
         vlen = rval("value length")
         value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "counter", None, tsd, wt, value.decode("utf-8"))
+        return (pk, name, "counter", None, tsd, wt,
+                _utf8(value, data_path, part_off, "cell value"))
     elif mask & COUNTER_UPDATE_MASK:
         (wt,) = struct.unpack(
             ">q", _must_read(f, 8, data_path, "counter-update body"))
         vlen = rval("value length")
         value = _must_read(f, vlen, data_path, "cell value")
         return (pk, name, "counter_update", None, None, wt,
-                value.decode("utf-8"))
+                _utf8(value, data_path, part_off, "cell value"))
     elif mask & EXPIRATION_MASK:
         ttl, exp, wt = struct.unpack(
             ">iiq", _must_read(f, 16, data_path, "expiring-cell body"))
         vlen = rval("value length")
         value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "expiring", ttl, exp, wt, value.decode("utf-8"))
+        return (pk, name, "expiring", ttl, exp, wt,
+                _utf8(value, data_path, part_off, "cell value"))
     elif mask & DELETION_MASK:
         (wt,) = struct.unpack(
             ">q", _must_read(f, 8, data_path, "tombstone writetime"))
@@ -1610,7 +1632,8 @@ def _decode_cell_body(f, rlen, rval, pk: str, name: str,
             ">q", _must_read(f, 8, data_path, "cell writetime"))
         vlen = rval("value length")
         value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "normal", None, None, wt, value.decode("utf-8"))
+        return (pk, name, "normal", None, None, wt,
+                _utf8(value, data_path, part_off, "cell value"))
     else:
         raise ValueError(
             f"cell mask 0x{mask:02x} is not a recognized "
@@ -2317,8 +2340,11 @@ def rewrite_stripped(spark, path: str, out_dir: str,
     transcodes ITS OWN output sstable at the byte level
     (:func:`_strip_split`): no decode to rows, no repartition, no sort,
     no network. This is the reference's 1:1 per-file dataflow,
-    parallelized. Consolidating many generations into non-overlapping
-    shards is compaction (:func:`compact_rewrite`), not the strip.
+    parallelized: on ``spark``'s executors as one Spark job, or, with
+    ``spark=None``, on a local process pool that starts no session (the
+    CLI's path; :func:`_rewrite_shards`). Consolidating many generations
+    into non-overlapping shards is compaction (:func:`compact_rewrite`),
+    not the strip.
 
     Output layout: one ``v1`` uncompressed shard per split,
     ``out_dir/<generation>_shard=<split>`` (:func:`_rewrite_shards`) —
@@ -2823,14 +2849,25 @@ def _claim_out_dir(out_dir: str) -> None:
 def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
                     counts: tuple) -> list:
     """The ONE zero-shuffle rewrite driver behind :func:`rewrite_stripped`,
-    :func:`gc_rewrite_single` and :func:`compact_rewrite`: one plain RDD
-    job over the task specs, at most ``defaultParallelism`` tasks in a
-    single stage and a single wave, one shard per spec. Each spec is
-    ``(shard, *args)``; it runs as ``task(out_dir/shard, *args)``, which
-    writes that shard and returns the report's ``counts``. Only the specs
-    travel; cell bytes never cross the network. ``out_dir`` must be
-    absent or empty (:func:`_claim_out_dir`). Returns one
-    ``Row(shard, *counts)`` per spec; no specs = empty report."""
+    :func:`gc_rewrite_single` and :func:`compact_rewrite`, one shard per
+    spec. Each spec is ``(shard, *args)``; it runs as
+    ``task(out_dir/shard, *args)``, which writes that shard and returns
+    the report's ``counts``. Only specs and report rows cross a process
+    boundary; cell bytes never do. The scheduler is the one variable:
+
+    - with a session, one plain RDD job over the specs, at most
+      ``defaultParallelism`` tasks in a single stage and a single wave
+      (the scale path);
+    - with ``spark=None``, a fork-started process pool of one worker per
+      local core (:func:`~..session.local_cpus`), created and shut down
+      inside the call, so no session is started and no process outlives
+      it (the CLI's path). A task's exception reaches the caller with
+      its type; a worker that dies raises ``BrokenProcessPool`` naming
+      the specs it left unfinished.
+
+    ``out_dir`` must be absent or empty (:func:`_claim_out_dir`). Returns
+    one ``Row(shard, *counts)`` per spec, in spec order; no specs = empty
+    report."""
     from pyspark.sql import Row
 
     _claim_out_dir(out_dir)
@@ -2842,9 +2879,57 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
         shard, *args = spec
         return report(shard, *task(os.path.join(out_dir, shard), *args))
 
+    if spark is None:
+        return _run_on_pool(_run, specs)
     sc = spark.sparkContext
     return (sc.parallelize(specs, min(len(specs), sc.defaultParallelism))
             .map(_run).collect())
+
+
+#: the spec runner of the pool this worker was forked for; set only in a
+#: pool worker, by :func:`_pool_init`
+_pool_run = None
+
+
+def _pool_init(run) -> None:
+    global _pool_run
+    _pool_run = run
+
+
+def _pool_call(spec):
+    return _pool_run(spec)
+
+
+def _run_on_pool(run, specs: list[tuple]) -> list:
+    """``[run(spec) for spec in specs]`` on a fork-started process pool.
+    Fork (not spawn, nor Python 3.14's forkserver default) hands ``run``,
+    a closure that does not pickle, to the workers through
+    ``initializer`` without pickling it, re-imports nothing and starts no
+    server process. The workers run only the codec: they take no lock a
+    thread of the parent (py4j's, in a process holding a session) may
+    hold, and exit without running the parent's ``atexit`` handlers."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+    from concurrent.futures.process import BrokenProcessPool
+
+    from cassandra_ttl_remover_spark.session import local_cpus
+
+    pool = ProcessPoolExecutor(
+        min(len(specs), local_cpus()),
+        mp_context=multiprocessing.get_context("fork"),
+        initializer=_pool_init, initargs=(run,))
+    futures = []
+    try:
+        for spec in specs:
+            futures.append(pool.submit(_pool_call, spec))
+        return [f.result() for f in futures]
+    except BrokenProcessPool as e:
+        lost = [spec for spec, f in zip(specs, futures)
+                if isinstance(f.exception(), BrokenProcessPool)]
+        lost += specs[len(futures):]
+        raise BrokenProcessPool(f"{e} Unfinished specs: {lost}") from e
+    finally:
+        pool.shutdown(cancel_futures=True)
 
 
 def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
@@ -3448,6 +3533,8 @@ def compact_rewrite(spark, path: str, out_dir: str, *, gc_grace_us: int,
     N overlapping generations in, one sorted non-overlapping shard per
     merge range out (``out_dir/shard=NNNNN``, at most ``num_splits``),
     deletes preserved until gc_grace ("deletes are data", SURVEY §1.2).
+    The merge ranges run as one Spark job on ``spark``, or on a local
+    process pool when ``spark`` is ``None`` (:func:`_rewrite_shards`).
 
     Atoms re-encode through :func:`_status_to_row`, the documented
     lossy-where-compaction-is reconstruction. Scale: no cell byte
@@ -3809,8 +3896,9 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
     move when one table is bloated with expired deletes but a full
     cross-generation compaction is too expensive. It runs on the same
     zero-shuffle driver as :func:`rewrite_stripped`
-    (:func:`_rewrite_shards`): each index-snapped split resolves and
-    re-encodes its own partitions (splits are partition-granular, so
+    (:func:`_rewrite_shards`: one Spark job on ``spark``, a local process
+    pool when ``spark`` is ``None``): each index-snapped split resolves
+    and re-encodes its own partitions (splits are partition-granular, so
     every deletion atom is task-local to the partitions it shadows),
     with the SAME :func:`_resolve_atoms` and :func:`_status_to_row` as
     :func:`compact_rewrite` — one semantics, one encoder.

@@ -156,3 +156,53 @@ def test_cli_sstable_rewrite_refuses_non_empty_output(spark, capsys):
                                          str(out))
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+def test_cli_sstable_rewrite_starts_no_jvm_and_leaves_no_process():
+    """The CLI's sstable -> sstable path runs on a local pool: no Spark
+    context exists after ``run``, this process has no child left, and
+    once the CLI process exits nothing of its session is still
+    running."""
+    import subprocess
+    import sys
+    import textwrap
+
+    from cassandra_ttl_remover_spark.sources import sstable as ss
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    work = Path(tempfile.mkdtemp(prefix="ctrs_clip_"))
+    try:
+        src = str(work / "src")
+        ss.write_sstable(
+            [(f"k{p:03d}".encode(),
+              [(b"c", ss.EXPIRATION_MASK, 60, 1_700_000_060, p, b"v")])
+             for p in range(40)], src)
+        script = textwrap.dedent(f"""
+            import glob
+            from pyspark import SparkContext
+            from cassandra_ttl_remover_spark import cli
+            cli.run(cli.parse_args([
+                "--input", {src!r}, "--output-path", {str(work / "out")!r},
+                "--input-format", "sstable", "--output-format", "sstable"]))
+            assert SparkContext._active_spark_context is None
+            kids = [pid for path in glob.glob("/proc/self/task/*/children")
+                    for pid in open(path).read().split()]
+            assert not kids, kids
+        """)
+        proc = subprocess.Popen(
+            [sys.executable, "-c", script], cwd=str(work),
+            env={**os.environ, "PYTHONPATH": repo}, stdout=subprocess.PIPE,
+            stderr=subprocess.PIPE, text=True, start_new_session=True)
+        _, err = proc.communicate(timeout=300)
+        assert proc.returncode == 0, err[-3000:]
+        assert len(os.listdir(work / "out")) == len(ss._split_specs(src, 8))
+        left = []
+        for stat in Path("/proc").glob("[0-9]*/stat"):
+            try:
+                fields = stat.read_text().rsplit(")", 1)[1].split()
+            except OSError:
+                continue  # exited while listed
+            if int(fields[3]) == proc.pid:  # the CLI's session id
+                left.append(stat.parent.name)
+        assert not left, left
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -1419,22 +1419,27 @@ def _every_atom_partitions():
     return parts
 
 
-@pytest.mark.parametrize("generation,compressed", [
-    ("v1", False), ("mc", False), ("v1", True), ("mc", True)],
-    ids=["v1", "mc", "v1-compressed", "mc-compressed"])
+@pytest.mark.parametrize("generation,compressed,scheduler", [
+    (g, c, sch) for sch in ("spark", "pool")
+    for g, c in (("v1", False), ("mc", False), ("v1", True), ("mc", True))],
+    ids=[f"{g}{sfx}" for sfx in ("", "-pool")
+         for g in ("v1", "mc", "v1-compressed", "mc-compressed")])
 def test_rewrite_stripped_zero_shuffle_and_digest_clean(spark, generation,
-                                                        compressed):
-    """The 1:1 strip rewrite on every source framing: each split's shard
-    is, component by component, byte-identical to decoding, stripping
-    and re-encoding that split; the output scan equals strip_ttl_cells
-    of the source with every atom kind and partition deletions kept;
-    every shard passes the digest sweep."""
+                                                        compressed,
+                                                        scheduler):
+    """The 1:1 strip rewrite on every source framing and on both
+    schedulers (a Spark job, the local pool): each split's shard is,
+    component by component, byte-identical to decoding, stripping and
+    re-encoding that split; the output scan equals strip_ttl_cells of
+    the source with every atom kind and partition deletions kept; every
+    shard passes the digest sweep."""
     base = _tmpdir()
     src = os.path.join(base, "src")
     ss.write_sstable(_every_atom_partitions(), src, generation=generation,
                      compressed=compressed)
     out = os.path.join(base, "out")
-    report = ss.rewrite_stripped(spark, src, out, num_splits=4)
+    report = ss.rewrite_stripped(spark if scheduler == "spark" else None,
+                                 src, out, num_splits=4)
     specs = ss._split_specs(src, 4)
     by_shard = {r.shard: r for r in report}
     assert sorted(by_shard) == sorted(s[0] for s in specs)
@@ -1462,9 +1467,9 @@ def test_rewrite_stripped_zero_shuffle_and_digest_clean(spark, generation,
 
 def test_rewrite_stripped_keeps_binary_bytes(spark):
     """Keys, cell names, values and range-tombstone bounds that are not
-    UTF-8 are opaque bytes to the strip: the output shard is, component
-    by component, the table write_sstable writes for the stripped
-    partitions."""
+    UTF-8 are opaque bytes to the strip, on both schedulers: the output
+    shard is, component by component, the table write_sstable writes for
+    the stripped partitions."""
     wt = 1_700_000_000_000_000
     raw = b"\xff\xfe\x00\x01"
     src_cells = [
@@ -1479,10 +1484,6 @@ def test_rewrite_stripped_keeps_binary_bytes(spark):
     src = os.path.join(base, "src")
     ss.write_sstable([(b"k\xff", src_cells, (1_700_000_000, wt - 1)),
                       (b"a\xc3", live)], src)
-    report = ss.rewrite_stripped(spark, src, os.path.join(base, "out"),
-                                 num_splits=1)
-    assert [(r.shard, r.n_partitions, r.n_cells) for r in report] == [
-        ("src_shard=00000", 2, 5)]
 
     def strip(cells):
         return [(n, 0, 0, 0, w, v) if m == ss.EXPIRATION_MASK
@@ -1491,7 +1492,12 @@ def test_rewrite_stripped_keeps_binary_bytes(spark):
     want = os.path.join(base, "want")
     ss.write_sstable([(b"k\xff", strip(src_cells), (1_700_000_000, wt - 1)),
                       (b"a\xc3", strip(live))], want)
-    _assert_same_table(os.path.join(base, "out", "src_shard=00000"), want)
+    for scheduler, session in (("spark", spark), ("pool", None)):
+        out = os.path.join(base, scheduler)
+        report = ss.rewrite_stripped(session, src, out, num_splits=1)
+        assert [(r.shard, r.n_partitions, r.n_cells) for r in report] == [
+            ("src_shard=00000", 2, 5)]
+        _assert_same_table(os.path.join(out, "src_shard=00000"), want)
     shutil.rmtree(base)
 
 
@@ -1607,6 +1613,170 @@ def test_rewrite_driver_is_one_job_one_stage_one_wave(spark):
     assert all((r.n_partitions, r.n_cells) == (8, 16) for r in report)
     assert sorted(os.listdir(os.path.join(base, "out"))) == sorted(
         r.shard for r in report)
+    shutil.rmtree(base)
+
+
+def _assert_same_shards(got_dir, want_dir):
+    assert sorted(os.listdir(got_dir)) == sorted(os.listdir(want_dir))
+    for shard in os.listdir(want_dir):
+        _assert_same_table(os.path.join(got_dir, shard),
+                           os.path.join(want_dir, shard))
+
+
+def test_gc_and_compact_rewrite_same_bytes_on_both_schedulers(spark):
+    """GC and compaction write the same report and, in every file of
+    every shard, the same bytes on the local pool as in a Spark job."""
+    base = _tmpdir()
+    gens = os.path.join(base, "gens")
+    ss.write_sstable(_every_atom_partitions(), os.path.join(gens, "gen1"),
+                     summary_interval=4)
+    wt = 1_700_000_000_000_500
+    ss.write_sstable(
+        [(f"p{p:03d}".encode(),
+          [(b"000001:c", 0, 0, 0, wt, b"new"),
+           (b"000002:c", ss.DELETION_MASK, 0, 0, wt,
+            struct.pack(">i", 1_700_000_100))],
+          *([(1_700_000_000, wt - 1)] if p % 9 == 0 else []))
+         for p in range(0, 40, 3)],
+        os.path.join(gens, "gen2"), summary_interval=4)
+    kw = dict(gc_grace_us=300 * 1_000_000,
+              now_us=1_700_000_000_000_000 + 400 * 1_000_000)
+    for name, rewrite, src in (
+            ("gc", ss.gc_rewrite_single, os.path.join(gens, "gen1")),
+            ("compact", ss.compact_rewrite, gens)):
+        on_spark, on_pool = (os.path.join(base, f"{name}-{s}")
+                             for s in ("spark", "pool"))
+        want = rewrite(spark, src, on_spark, num_splits=4, **kw)
+        got = rewrite(None, src, on_pool, num_splits=4, **kw)
+        assert len(want) == 4, name
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], name
+        _assert_same_shards(on_pool, on_spark)
+    shutil.rmtree(base)
+
+
+def _child_pids() -> set[str]:
+    """Live child pids of this process, across all of its threads."""
+    import glob
+
+    pids: set[str] = set()
+    for path in glob.glob("/proc/self/task/*/children"):
+        with open(path) as f:
+            pids.update(f.read().split())
+    return pids
+
+
+@pytest.mark.parametrize("outcome", ["ok", "raises", "killed"])
+def test_rewrite_pool_leaves_no_process(outcome):
+    """The local pool is created and shut down inside the call: after a
+    successful call, a task that raises (its exception keeps its type),
+    and a worker killed mid-task (BrokenProcessPool naming the specs it
+    left unfinished), no child process of this one is left."""
+    import multiprocessing
+    import signal
+    from concurrent.futures.process import BrokenProcessPool
+
+    base = _tmpdir()
+    specs = [(f"shard={i:05d}", f"/data/t{i}/Data.db", i) for i in range(6)]
+
+    def task(shard_dir, data_path, i):
+        if i == 3 and outcome == "raises":
+            raise ss.CorruptSSTableError(f"{data_path}: malformed")
+        if i == 3 and outcome == "killed":
+            os.kill(os.getpid(), signal.SIGKILL)
+        os.makedirs(shard_dir)
+        return (i * 10,)
+
+    before = _child_pids()
+    if outcome == "ok":
+        report = ss._rewrite_shards(None, base, specs, task, ("n",))
+        assert [(r.shard, r.n) for r in report] == [
+            (f"shard={i:05d}", i * 10) for i in range(6)]
+    elif outcome == "raises":
+        with pytest.raises(ss.CorruptSSTableError,
+                           match="/data/t3/Data.db: malformed"):
+            ss._rewrite_shards(None, base, specs, task, ("n",))
+    else:
+        with pytest.raises(BrokenProcessPool, match="/data/t3/Data.db"):
+            ss._rewrite_shards(None, base, specs, task, ("n",))
+    assert not multiprocessing.active_children()
+    assert _child_pids() <= before
+    shutil.rmtree(base)
+
+
+def test_cli_exits_1_naming_data_file_when_a_worker_dies(monkeypatch,
+                                                        capsys):
+    """A strip worker that dies mid-split makes the CLI exit 1 with the
+    exception type and the split's Data.db on stderr, and leaves no
+    child process behind."""
+    import signal
+
+    from cassandra_ttl_remover_spark.cli import main
+
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable([(b"k", [(b"c", ss.EXPIRATION_MASK, 60, 1_700_000_060,
+                               1_700_000_000_000_000, b"v")])], src)
+
+    def die(*_):
+        os.kill(os.getpid(), signal.SIGKILL)
+
+    monkeypatch.setattr(ss, "_strip_split", die)
+    before = _child_pids()
+    rc = main(["--input", src, "--output-path", os.path.join(base, "out"),
+               "--input-format", "sstable", "--output-format", "sstable"])
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "error: BrokenProcessPool: " in err
+    assert os.path.join(src, "Data.db") in err
+    assert _child_pids() <= before
+    shutil.rmtree(base)
+
+
+@pytest.mark.parametrize("field", [
+    "partition key", "cell name", "cell value", "RT end bound"])
+def test_non_utf8_field_raises_error_naming_file_offset_and_field(spark,
+                                                                  field):
+    """The DataFrame scan's string columns take UTF-8 only: a key, cell
+    name, value or range-tombstone bound that is not UTF-8 raises a
+    ValueError naming the Data.db, the partition's offset and the
+    field, through scan_data_range, _merge_range and gc_rewrite_single
+    (a Spark job and the local pool), not a bare UnicodeDecodeError."""
+    import re
+
+    bad = b"\xff\xfe\x00\x01"
+    wt = 1_700_000_000_000_000
+    key, name, value, end = b"k1", b"c", b"v", b"d"
+    if field == "partition key":
+        key = bad
+    elif field == "cell name":
+        name = bad
+    elif field == "cell value":
+        value = bad
+    else:
+        end = bad
+    mask = ss.RANGE_TOMBSTONE_MASK if field == "RT end bound" else 0
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable(
+        [(b"a0", [(b"c", 0, 0, 0, wt, b"ok")]),
+         (key, [(name, mask, 0, 1_700_000_000 if mask else 0, wt,
+                 end if mask else value)])], src)
+    data = os.path.join(src, "Data.db")
+    (off,) = [o for k, o in ss.read_index(os.path.join(src, "Index.db"))
+              if k == key]
+    assert off > 0
+    msg = re.escape(f"{data}: {field} of the partition at offset {off} "
+                    "is not UTF-8")
+    with pytest.raises(ValueError, match=msg):
+        list(ss.scan_data_range(data, 0, os.path.getsize(data)))
+    with pytest.raises(ValueError, match=msg):
+        ss._merge_range([src], None, None, 0)
+    kw = dict(gc_grace_us=0, now_us=wt, num_splits=1)
+    with pytest.raises(ValueError, match=msg):
+        ss.gc_rewrite_single(None, src, os.path.join(base, "pool"), **kw)
+    with pytest.raises(Exception) as e:
+        ss.gc_rewrite_single(spark, src, os.path.join(base, "spark"), **kw)
+    assert re.search(msg, str(e.value))
     shutil.rmtree(base)
 
 
