@@ -46,21 +46,28 @@ reads another split's bytes, so the scan parallelizes like any columnar
 split scan and would map 1:1 onto object-store ranged GETs. Cells stream
 out as flat rows; no partition is materialized whole except the one being
 decoded (the reference's iterator does the same —
-NoTTLSSTableIdentityIterator). Every writer is per-task. The zero-shuffle
-rewrites of existing tables (strip, single-table GC, k-way compaction) run
-on one driver, :func:`_rewrite_shards`, which writes one shard per split or
-merge range: a one-stage Spark job when given a session, a local fork pool
-when given ``None`` (the CLI's path, which starts no session). The strip
-never decodes a cell: :func:`_strip_split` transcodes each partition's
-bytes (an expiring cell loses its ttl and expiration, every other byte is
-copied) and writes the sidecars in the same pass. GC, compaction and
-:func:`write_sstable_distributed` (which range-partitions an arbitrary
-cell frame into shards) encode rows through the shared
-:func:`_encode_rows` over :func:`write_sstable`.
+NoTTLSSTableIdentityIterator).
+
+Writers: :class:`_TableWriter` alone writes a table's files, from one
+encoded partition at a time in increasing key byte order. Every writer is
+per-task and feeds it partition by partition: :func:`write_sstable`
+(:func:`_encode_partition`), the strip (:func:`_strip_split`, a byte
+transcoder that never decodes a cell: an expiring cell loses its ttl and
+expiration, every other byte is copied), single-table GC
+(:func:`_gc_split`) and compaction (:func:`_compact_range`, a streaming
+k-way merge, :func:`_merge_range`), so a rewrite task holds one partition
+(one per generation when merging) whatever its split's size. The
+rewrites run on one driver, :func:`_rewrite_shards`: one shard per split
+or merge range, renamed into place once complete, by a one-stage Spark
+job given a session or a local fork pool given ``None`` (the CLI's path).
+:func:`write_sstable_distributed` shards an arbitrary cell frame through
+:func:`_encode_rows`.
 """
 
 from __future__ import annotations
 
+import heapq
+import itertools
 import os
 import struct
 from typing import Iterable, Iterator
@@ -345,8 +352,8 @@ def _bloom_positions(key: bytes, m_bits: int, k: int) -> list[int]:
     return [(h1 + i * h2) % m_bits for i in range(k)]
 
 
-def _write_filter(out_dir: str, keys: list[bytes]) -> None:
-    m = max(64, ((BLOOM_BITS_PER_KEY * len(keys) + 63) // 64) * 64)
+def _write_filter(out_dir: str, n_keys: int, keys: Iterable[bytes]) -> None:
+    m = max(64, ((BLOOM_BITS_PER_KEY * n_keys + 63) // 64) * 64)
     bits = bytearray(m // 8)
     for key in keys:
         for p in _bloom_positions(key, m, BLOOM_K):
@@ -592,15 +599,16 @@ def _summary_meta(table_dir: str) -> tuple[int, int] | None:
     return interval, n
 
 
-def _iter_index_with_offsets(table_dir: str):
-    """Streaming Index.db walk yielding ``(key, index byte offset,
-    Data.db offset)`` — exactly the triple a Summary.db entry stores.
-    This is the REBUILD path's input (the reference walks the whole
-    primary index the same way — buildSummaryAtLevel,
-    NoTTLReader.java:1117-1140)."""
+def _iter_index_with_offsets(table_dir: str, ix_start: int = 0):
+    """Streaming Index.db walk from the entry at byte ``ix_start``
+    yielding ``(key, index byte offset, Data.db offset)`` — exactly the
+    triple a Summary.db entry stores. This is the REBUILD path's input
+    (the reference walks the whole primary index the same way —
+    buildSummaryAtLevel, NoTTLReader.java:1117-1140)."""
     index_path = os.path.join(table_dir, "Index.db")
     gen = _table_generation(table_dir)
     with open(index_path, "rb") as f:
+        f.seek(ix_start)
         while True:
             ix_off = f.tell()
             if gen == "mc":
@@ -790,24 +798,23 @@ def _read_index_window(table_dir: str,
 COLINDEX_EVERY = 64
 
 
-def _write_column_index(
-        out_dir: str,
-        entries: list[tuple[bytes, list[tuple]]]) -> None:
+def _write_column_index(f, key: bytes, blocks: list[tuple],
+                        base: int) -> None:
+    """Append one partition's ColumnIndex.db entry to ``f``; ``base`` is
+    the partition's Data.db offset, block offsets are relative to it."""
     # per block: name, offset, then the OPEN-RT markers (range
     # tombstones from earlier blocks still covering this block's first
     # cell — Cassandra 3.x stores the same as IndexInfo.endOpenMarker)
-    with open(os.path.join(out_dir, "ColumnIndex.db"), "wb") as f:
-        for key, blocks in entries:
-            f.write(struct.pack(">H", len(key)) + key)
-            f.write(struct.pack(">I", len(blocks)))
-            for name, off, open_rts in blocks:
-                f.write(struct.pack(">H", len(name)) + name)
-                f.write(struct.pack(">q", off))
-                f.write(struct.pack(">H", len(open_rts)))
-                for s, e, ldt, mfda in open_rts:
-                    f.write(struct.pack(">H", len(s)) + s)
-                    f.write(struct.pack(">H", len(e)) + e)
-                    f.write(struct.pack(">iq", ldt, mfda))
+    f.write(struct.pack(">H", len(key)) + key)
+    f.write(struct.pack(">I", len(blocks)))
+    for name, off, open_rts in blocks:
+        f.write(struct.pack(">H", len(name)) + name)
+        f.write(struct.pack(">q", base + off))
+        f.write(struct.pack(">H", len(open_rts)))
+        for s, e, ldt, mfda in open_rts:
+            f.write(struct.pack(">H", len(s)) + s)
+            f.write(struct.pack(">H", len(e)) + e)
+            f.write(struct.pack(">iq", ldt, mfda))
 
 
 def _read_column_index(table_dir: str) -> dict[bytes, list[tuple]] | None:
@@ -1271,135 +1278,185 @@ def scrub_tables(spark, path: str, deep: bool = False):
 
 
 # ---------------------------------------------------------------------------
-# writer (fixture generator)
+# writers: one table writer under every SSTable writer
 # ---------------------------------------------------------------------------
+
+_U16 = struct.Struct(">H")
+_U32 = struct.Struct(">I")
+_I64 = struct.Struct(">q")
+_HEADER = struct.Struct(">iq")
+
+
+class _TableWriter:
+    """The ONE code that writes an SSTable's components, one encoded
+    partition at a time: :meth:`add` appends to Data.db, Index.db and
+    ColumnIndex.db and keeps the Summary.db samples and Statistics.db
+    counts; :meth:`close` writes Filter.db (keys read back from Index.db),
+    Summary.db, Statistics.db, compresses Data.db if asked, then writes
+    Digest.crc32 and TOC.txt. Keys must arrive in strictly increasing
+    byte order. It holds the record being added plus one sample per
+    ``summary_interval`` partitions. As a context manager, a body that
+    raises closes the files and writes no other sidecar."""
+
+    def __init__(self, out_dir: str, generation: str = "v1",
+                 compressed: bool = False,
+                 summary_interval: int = SUMMARY_INTERVAL,
+                 colindex: bool = True):
+        if generation not in SSTABLE_GENERATIONS:
+            raise ValueError(f"unknown generation {generation!r}")
+        os.makedirs(out_dir, exist_ok=True)
+        if generation != "v1":
+            with open(os.path.join(out_dir, "Version.txt"), "w") as vf:
+                vf.write(generation)
+        self.out_dir = out_dir
+        self._wlen = _uvint_bytes if generation == "mc" else _U16.pack
+        self._compressed = compressed
+        self._interval = summary_interval
+        names = ["Data.db", "Index.db"] + (["ColumnIndex.db"] if colindex
+                                            else [])
+        self._files = [open(os.path.join(out_dir, n), "wb") for n in names]
+        self.n_partitions = self._n_cells = self._n_expiring = 0
+        self._last_key = None
+        self._summary: list[tuple] = []
+        self._wt: list[int] = []  # [min, max] writetime slot, once known
+        self._ttl: list[int] = []  # [min, max] ttl of an expiring cell
+
+    def add(self, key: bytes, data: bytes, n_cells: int, wts: list,
+            blocks: list = (), ttls: list = ()) -> None:
+        """Append one partition: ``data`` is its whole record in the
+        table's framing, ``wts`` the writetime slot of each atom plus the
+        header's markedForDeleteAt if it carries a deletion, ``blocks``
+        its ColumnIndex.db blocks (offsets relative to the record),
+        ``ttls`` the ttl of each expiring cell. A key that does not sort
+        after the previous one raises :class:`CorruptSSTableError`."""
+        if self._last_key is not None and key <= self._last_key:
+            raise CorruptSSTableError(
+                f"{self.out_dir}: partition key {key!r} does not sort "
+                f"after the previous key {self._last_key!r}")
+        df, ix, *ci = self._files
+        offset = df.tell()
+        if self.n_partitions % self._interval == 0:
+            self._summary.append((key, ix.tell(), offset))
+        self.n_partitions += 1
+        self._last_key = key
+        ix.write(self._wlen(len(key)) + key + _I64.pack(offset))
+        df.write(data)
+        if blocks and ci:
+            _write_column_index(ci[0], key, blocks, offset)
+        self._n_cells += n_cells
+        self._n_expiring += len(ttls)
+        for span, values in ((self._wt, wts), (self._ttl, ttls)):
+            if values:
+                lo, hi = min(values), max(values)
+                span[:] = [min(lo, span[0]), max(hi, span[1])] if span \
+                    else [lo, hi]
+
+    def close(self) -> None:
+        for f in self._files:
+            f.close()
+        d = self.out_dir
+        _write_filter(d, self.n_partitions,
+                      (key for key, _, _ in _iter_index_with_offsets(d)))
+        _write_summary(d, self._interval, self._summary)
+        _write_stats(d, self.n_partitions, self._n_cells,
+                     *(self._wt or (None, None)), self._n_expiring,
+                     *(self._ttl or (None, None)))
+        if self._compressed:
+            _compress_data_file(d)
+        _write_digest_and_toc(d)
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, exc_type, *_):
+        if exc_type is None:
+            self.close()
+        else:
+            for f in self._files:
+                f.close()
+
+
+def _encode_partition(key: bytes, cells: Iterable[tuple],
+                      deletion: tuple | None = None, mc: bool = False,
+                      colindex_every: int = COLINDEX_EVERY) -> tuple:
+    """One partition in :func:`write_sstable`'s cell form (cells in the
+    order given, ``deletion`` the header's ``(ldt, mfda)`` or ``None``) as
+    :meth:`_TableWriter.add`'s arguments after the key: ``(record,
+    n_cells, wts, blocks, ttls)``, the record in ``v1`` or ``mc`` framing."""
+    wlen, wval = ((_uvint_bytes, _uvint_bytes) if mc
+                  else (_U16.pack, _U32.pack))
+    ldt, mfda = deletion or (LIVE_LOCAL_DELETION, LIVE_MARKED_FOR_DELETE)
+    out = bytearray(wlen(len(key)) + key + _HEADER.pack(int(ldt), int(mfda)))
+    wts: list[int] = []
+    ttls: list[int] = []
+    blocks: list[tuple] = []
+    open_rts: list[tuple[bytes, bytes, int, int]] = []
+    for i_cell, (name, mask, ttl, expiration, writetime,
+                 value) in enumerate(cells):
+        if colindex_every and i_cell % colindex_every == 0:
+            # open-RT markers: every range tombstone written earlier in
+            # this partition still covering this block's first cell
+            # (Cassandra's endOpenMarker analog) — a slice landing here
+            # must re-emit them or deletions silently vanish from it
+            open_rts = [rt for rt in open_rts if rt[1] >= name]
+            blocks.append((name, len(out), list(open_rts)))
+        wt = int(writetime)
+        wts.append(wt)
+        if mask & EXPIRATION_MASK:
+            ttls.append(int(ttl))
+        out += wlen(len(name)) + name + bytes((mask,))
+        if mask & RANGE_TOMBSTONE_MASK:
+            # name = start bound; body = end bound, then the DeletionTime
+            # (i32 ldt from the expiration slot, i64 mfda from writetime):
+            # the C* 2.x RangeTombstone.Serializer body shape
+            open_rts.append((name, value, int(expiration), wt))
+            out += wlen(len(value)) + value + _HEADER.pack(int(expiration),
+                                                            wt)
+            continue
+        if mask & COUNTER_MASK:
+            # i64 timestampOfLastDelete (tuple's expiration slot —
+            # counters cannot expire) + i64 writetime + value
+            out += struct.pack(">qq", int(expiration), wt)
+        elif mask & EXPIRATION_MASK:
+            out += struct.pack(">iiq", int(ttl), int(expiration), wt)
+        else:
+            # normal / deleted / counter-update all carry only the i64
+            # writetime before the value (reference else-branch)
+            out += _I64.pack(wt)
+        out += wval(len(value)) + value
+    out += wlen(0)
+    n_cells = len(wts)
+    if int(ldt) != LIVE_LOCAL_DELETION or int(mfda) != LIVE_MARKED_FOR_DELETE:
+        # a partition-level deletion emits a row carrying mfda in the
+        # writetime slot: fold it into the stats bounds so timestamp skip
+        # can never drop a deletion row
+        wts.append(int(mfda))
+    return bytes(out), n_cells, wts, blocks, ttls
+
 
 def write_sstable(partitions: Iterable[tuple], out_dir: str,
                   generation: str = "v1", compressed: bool = False,
                   summary_interval: int = SUMMARY_INTERVAL,
                   colindex_every: int = COLINDEX_EVERY) -> None:
-    """Write ``Data.db`` + ``Index.db`` for ``partitions`` — an iterable of
-    ``(key_bytes, cells)`` where each cell is
+    """Write one table at ``out_dir`` for ``partitions``: ``(key_bytes,
+    cells)`` or ``(key_bytes, cells, (ldt, mfda))`` (a partition-level
+    deletion in the header; its cells still follow), each cell
     ``(name_bytes, mask, ttl, expiration, writetime, value_bytes)``
     (ttl/expiration ignored unless EXPIRATION_MASK; value_bytes holds the
     4-byte localDeletionTime for DELETION_MASK). Partitions are sorted by
-    key BYTES before writing — the sorted-table invariant every SSTable
-    carries. ``generation`` selects the length framing ("v1" fixed-width,
-    "mc" unsigned-vint — see :data:`SSTABLE_GENERATIONS`); the cell
-    bodies and atom semantics are identical. ``compressed=True``
+    key BYTES (keys must be distinct) for this function's callers, the
+    fixtures and generators; each is encoded by :func:`_encode_partition`
+    and added to a :class:`_TableWriter`, which writes every sidecar.
+    ``generation`` selects the length framing ("v1" fixed-width, "mc"
+    unsigned-vint — :data:`SSTABLE_GENERATIONS`). ``compressed=True``
     rewrites Data.db as zlib chunks behind a CompressionInfo.db offsets
-    map (the reference reads exactly this component —
-    NoTTLReader.java:342-345); Index.db offsets stay in uncompressed
-    coordinates, so planning is unchanged."""
-    if generation not in SSTABLE_GENERATIONS:
-        raise ValueError(f"unknown generation {generation!r}")
-    os.makedirs(out_dir, exist_ok=True)
-    if generation != "v1":
-        with open(os.path.join(out_dir, "Version.txt"), "w") as vf:
-            vf.write(generation)
-    if generation == "mc":
-        def wlen(n):  # key/name/end-bound AND value lengths: one vint form
-            return _uvint_bytes(n)
-        wval = wlen
-    else:
-        def wlen(n):
-            return struct.pack(">H", n)
-
-        def wval(n):
-            return struct.pack(">i", n)
-    data_path = os.path.join(out_dir, "Data.db")
-    index_path = os.path.join(out_dir, "Index.db")
-    written_keys: list[bytes] = []
-    summary: list[tuple[bytes, int, int]] = []
-    colindex: list[tuple[bytes, list[tuple[bytes, int]]]] = []
-    n_cells = n_expiring = 0
-    min_wt = max_wt = min_ttl = max_ttl = None
-    with open(data_path, "wb") as df, open(index_path, "wb") as ix:
-        for part in sorted(partitions, key=lambda p: p[0]):
-            # (key, cells) = live partition; (key, cells, (ldt, mfda)) =
-            # partition-level deletion in the header (cells still follow,
-            # per Cassandra semantics)
-            key, cells = part[0], part[1]
-            ldt, mfda = (part[2] if len(part) > 2
-                         else (LIVE_LOCAL_DELETION,
-                               LIVE_MARKED_FOR_DELETE))
-            offset = df.tell()
-            if len(written_keys) % summary_interval == 0:
-                summary.append((key, ix.tell(), offset))
-            written_keys.append(key)
-            if (int(ldt) != LIVE_LOCAL_DELETION
-                    or int(mfda) != LIVE_MARKED_FOR_DELETE):
-                # partition-level deletion emits a row carrying mfda in
-                # the writetime slot — fold it into the stats bounds so
-                # timestamp skip can never drop a deletion row
-                m = int(mfda)
-                min_wt = m if min_wt is None else min(min_wt, m)
-                max_wt = m if max_wt is None else max(max_wt, m)
-            ix.write(wlen(len(key)) + key)
-            ix.write(struct.pack(">q", offset))
-            df.write(wlen(len(key)) + key)
-            df.write(struct.pack(">iq", int(ldt), int(mfda)))
-            blocks: list[tuple] = []
-            open_rts: list[tuple[bytes, bytes, int, int]] = []
-            for i_cell, (name, mask, ttl, expiration, writetime,
-                         value) in enumerate(cells):
-                if colindex_every and i_cell % colindex_every == 0:
-                    # open-RT markers: every range tombstone written
-                    # earlier in this partition still covering this
-                    # block's first cell (Cassandra's endOpenMarker
-                    # analog) — a slice landing here must re-emit them
-                    # or deletions silently vanish from the slice
-                    open_rts = [rt for rt in open_rts if rt[1] >= name]
-                    blocks.append((name, df.tell(), list(open_rts)))
-                if mask & RANGE_TOMBSTONE_MASK:
-                    open_rts.append(
-                        (name, value, int(expiration), int(writetime)))
-                n_cells += 1
-                wt = int(writetime)
-                min_wt = wt if min_wt is None else min(min_wt, wt)
-                max_wt = wt if max_wt is None else max(max_wt, wt)
-                if mask & EXPIRATION_MASK:
-                    n_expiring += 1
-                    t = int(ttl)
-                    min_ttl = t if min_ttl is None else min(min_ttl, t)
-                    max_ttl = t if max_ttl is None else max(max_ttl, t)
-                df.write(wlen(len(name)) + name)
-                df.write(struct.pack(">B", mask))
-                if mask & RANGE_TOMBSTONE_MASK:
-                    # name = start bound; body = end bound then DeletionTime
-                    # (i32 localDeletionTime + i64 markedForDeleteAt), the
-                    # C* 2.x RangeTombstone.Serializer body shape. Tuple
-                    # slots: expiration=localDeletionTime,
-                    # writetime=markedForDeleteAt, value=end-bound bytes.
-                    df.write(wlen(len(value)) + value)
-                    df.write(struct.pack(">iq", int(expiration),
-                                         int(writetime)))
-                    continue
-                if mask & COUNTER_MASK:
-                    # i64 timestampOfLastDelete (tuple's expiration slot —
-                    # counters cannot expire) + i64 writetime + value
-                    df.write(struct.pack(">qq", int(expiration),
-                                         int(writetime)))
-                elif mask & EXPIRATION_MASK:
-                    df.write(struct.pack(">iiq", int(ttl), int(expiration),
-                                         int(writetime)))
-                else:
-                    # normal / deleted / counter-update all carry only the
-                    # i64 writetime before the value (reference else-branch)
-                    df.write(struct.pack(">q", int(writetime)))
-                df.write(wval(len(value)) + value)
-            df.write(wlen(0))
-            if blocks:
-                colindex.append((key, blocks))
-    if colindex_every:
-        _write_column_index(out_dir, colindex)
-    _write_filter(out_dir, written_keys)
-    _write_summary(out_dir, summary_interval, summary)
-    _write_stats(out_dir, len(written_keys), n_cells, min_wt, max_wt,
-                 n_expiring, min_ttl, max_ttl)
-    if compressed:
-        _compress_data_file(out_dir)
-    _write_digest_and_toc(out_dir)
+    map (NoTTLReader.java:342-345); Index.db offsets stay uncompressed."""
+    with _TableWriter(out_dir, generation, compressed, summary_interval,
+                      bool(colindex_every)) as w:
+        for key, cells, *deletion in sorted(partitions, key=lambda p: p[0]):
+            w.add(key, *_encode_partition(
+                key, cells, deletion[0] if deletion else None,
+                generation == "mc", colindex_every))
 
 
 # ---------------------------------------------------------------------------
@@ -1649,21 +1706,27 @@ def _resolve_table_dirs(path: str) -> list[str]:
     """The ONE layout convention: ``path`` is either a single sstable
     (``Data.db`` directly inside) or a directory of shard/generation
     sstables (every writer's output layout == a Cassandra data
-    directory). Shared by the batch reader and the stats census so a
-    future layout change cannot make them disagree on what a directory
-    contains."""
+    directory). Shared by the batch reader and the stats census (the
+    streaming readers list :func:`_table_subdirs`) so a layout change
+    cannot make them disagree on what a directory contains."""
     if os.path.exists(os.path.join(path, "Data.db")):
         return [path]
-    subs = sorted(
-        os.path.join(path, d)
-        for d in os.listdir(path)
-        if os.path.exists(os.path.join(path, d, "Data.db"))
-    )
+    subs = [os.path.join(path, d) for d in _table_subdirs(path)]
     if not subs:
         raise ValueError(
             f"no Data.db under {path} or its subdirectories"
         )
     return subs
+
+
+def _table_subdirs(path: str) -> list[str]:
+    """Sorted names of ``path``'s subdirectories holding a ``Data.db``,
+    except dot-prefixed ones (unfinished shards, :func:`_rewrite_shards`)."""
+    return sorted(
+        d for d in os.listdir(path)
+        if not d.startswith(".")
+        and os.path.exists(os.path.join(path, d, "Data.db"))
+    )
 
 
 def _stats_may_match(table_dir: str, lo: int | None,
@@ -1917,17 +1980,11 @@ def _make_datasource_cls():
             self.key_start = ks.encode("utf-8") if ks is not None else None
             self.key_stop = kp.encode("utf-8") if kp is not None else None
 
-        def _shards(self) -> list[str]:
-            return sorted(
-                d for d in os.listdir(self.path)
-                if os.path.exists(os.path.join(self.path, d, "Data.db"))
-            )
-
         def initialOffset(self):
             return {"shards": []}
 
         def latestOffset(self):
-            return {"shards": self._shards()}
+            return {"shards": _table_subdirs(self.path)}
 
         def partitions(self, start, end):
             # same index key pruning as the batch planner, per new shard
@@ -1989,17 +2046,11 @@ def _make_datasource_cls():
             if not self.path:
                 raise ValueError("sstable_digest requires option 'path'")
 
-        def _shards(self) -> list[str]:
-            return sorted(
-                d for d in os.listdir(self.path)
-                if os.path.exists(os.path.join(self.path, d, "Data.db"))
-            )
-
         def initialOffset(self):
             return {"shards": []}
 
         def latestOffset(self):
-            return {"shards": self._shards()}
+            return {"shards": _table_subdirs(self.path)}
 
         def partitions(self, start, end):
             new = sorted(set(end["shards"]) - set(start["shards"]))
@@ -2134,12 +2185,6 @@ def _split_offsets(table_dir: str, start: int, end: int) -> list[int]:
     return [off for off in offsets if start <= off < end]
 
 
-_U16 = struct.Struct(">H")
-_U32 = struct.Struct(">I")
-_I64 = struct.Struct(">q")
-_HEADER = struct.Struct(">iq")
-
-
 def _canonical_mask(mask: int) -> int | None:
     """The atom a mask byte decodes as, in :func:`_decode_cell_body`'s
     dispatch order, as its one-bit mask (``None``: not an atom)."""
@@ -2184,19 +2229,18 @@ def _mc_to_v1(buf: bytes) -> bytes:
         p += vlen
 
 
-def _strip_partition(buf: bytes, base: int) -> tuple:
+def _strip_partition(buf: bytes) -> tuple:
     """TTL-strip one ``v1`` partition record, the whole of ``buf``, at the
     byte level. An expiring cell loses its i32 ttl and i32 expiration and
     its mask becomes 0; any other atom is copied as is, with its mask
-    byte written in canonical form. ``base`` is the record's offset in
-    the output Data.db.
+    byte written in canonical form.
 
     Returns ``(out, key, deletion_mfda | None, writetimes, blocks)``:
     the stripped bytes, the partition key, the header's
     markedForDeleteAt when it carries a deletion, the writetime slot of
-    every atom, and the ColumnIndex.db blocks ``(first cell name,
-    offset, open range tombstones)`` that :func:`write_sstable` would
-    write for it. Raises ``struct.error``, ``IndexError`` or
+    every atom, and the ColumnIndex.db blocks ``(first cell name, offset
+    in ``out``, open range tombstones)`` that :func:`_encode_partition`
+    would build for it. Raises ``struct.error``, ``IndexError`` or
     :class:`CorruptSSTableError` on a malformed record."""
     (klen,) = _U16.unpack_from(buf, 0)
     pos = 2 + klen
@@ -2217,7 +2261,7 @@ def _strip_partition(buf: bytes, base: int) -> tuple:
         if len(wts) % COLINDEX_EVERY == 0:
             name = buf[pos + 2:at]
             open_rts = [rt for rt in open_rts if rt[1] >= name]
-            blocks.append((name, base + len(out) + pos - run,
+            blocks.append((name, len(out) + pos - run,
                            list(open_rts)))
         canon = _CANONICAL_MASK[mask]
         if canon == RANGE_TOMBSTONE_MASK:
@@ -2264,34 +2308,24 @@ def _strip_partition(buf: bytes, base: int) -> tuple:
 def _strip_split(shard_dir: str, data_path: str, start: int,
                  end: int) -> tuple[int, int]:
     """The strip task: transcode the partitions that start in ``[start,
-    end)`` of ``data_path`` into one ``v1`` uncompressed table at
-    ``shard_dir``, one partition at a time at its Index.db offsets, so a
-    task holds one partition's bytes at a time (plus the sidecar
-    entries). Atoms are never decoded to text
+    end)`` of ``data_path``, one at a time at its Index.db offsets, and
+    add each to a :class:`_TableWriter` at ``shard_dir`` (``v1``,
+    uncompressed). Atoms are never decoded to text
     (:func:`_strip_partition`); ``mc`` records are re-framed first and
-    compressed sources read through :func:`_open_data`. The same pass
-    builds Index.db, Summary.db, Filter.db, Statistics.db (no expiring
-    cells left) and ColumnIndex.db, then Digest.crc32 and TOC.txt —
+    compressed sources read through :func:`_open_data`. Output is
     byte-identical to :func:`_encode_rows` over the stripped
     :func:`scan_data_range` rows when each partition's cells are in name
     order, as every writer leaves them (a live partition with no atoms
-    is dropped there too). A record that is truncated, malformed, or
-    does not end at the next index offset raises
-    :class:`CorruptSSTableError` naming ``data_path``. Returns
-    ``(n_partitions, n_cells)``, partition deletions counted as cells
-    like the scan's rows."""
+    is dropped there too). A record that is truncated, malformed, does
+    not end at the next index offset, or whose key does not sort after
+    the one before raises :class:`CorruptSSTableError` naming
+    ``data_path`` and its offset. Returns ``(n_partitions, n_cells)``,
+    partition deletions counted as cells like the scan's rows."""
     table_dir = os.path.dirname(data_path)
     mc = _table_generation(table_dir) == "mc"
     offsets = _split_offsets(table_dir, start, end) + [end]
-    os.makedirs(shard_dir, exist_ok=True)
-    keys: list[bytes] = []
-    summary: list[tuple] = []
-    colindex: list[tuple] = []
-    n_cells = n_rows = 0
-    min_wt = max_wt = None
-    with _open_data(data_path) as src, \
-            open(os.path.join(shard_dir, "Data.db"), "wb") as df, \
-            open(os.path.join(shard_dir, "Index.db"), "wb") as ix:
+    n_rows = 0
+    with _open_data(data_path) as src, _TableWriter(shard_dir) as w:
         src.seek(offsets[0])
         for lo, hi in zip(offsets, offsets[1:]):
             buf = src.read(hi - lo)
@@ -2300,35 +2334,19 @@ def _strip_split(shard_dir: str, data_path: str, start: int,
                     raise CorruptSSTableError(
                         f"truncated: {len(buf)} of {hi - lo} bytes")
                 out, key, mfda, wts, blocks = _strip_partition(
-                    _mc_to_v1(buf) if mc else buf, df.tell())
+                    _mc_to_v1(buf) if mc else buf)
+                n_atoms = len(wts)
+                if mfda is None and not n_atoms:
+                    continue  # the row path never sees a live, empty one
+                if mfda is not None:
+                    wts.append(mfda)
+                w.add(key, out, n_atoms, wts, blocks)
             except (struct.error, IndexError, CorruptSSTableError) as e:
                 raise CorruptSSTableError(
                     f"{data_path}: malformed partition at offset {lo} "
                     f"(its index span ends at {hi}): {e}") from None
-            n_atoms = len(wts)
-            if mfda is None and not n_atoms:
-                continue  # the row path never sees a live, empty partition
-            if mfda is not None:
-                wts.append(mfda)
-            lo_wt, hi_wt = min(wts), max(wts)
-            min_wt = lo_wt if min_wt is None else min(min_wt, lo_wt)
-            max_wt = hi_wt if max_wt is None else max(max_wt, hi_wt)
-            n_cells += n_atoms
             n_rows += n_atoms + (mfda is not None)
-            if len(keys) % SUMMARY_INTERVAL == 0:
-                summary.append((key, ix.tell(), df.tell()))
-            keys.append(key)
-            if blocks:
-                colindex.append((key, blocks))
-            ix.write(_U16.pack(len(key)) + key + _I64.pack(df.tell()))
-            df.write(out)
-    _write_column_index(shard_dir, colindex)
-    _write_filter(shard_dir, keys)
-    _write_summary(shard_dir, SUMMARY_INTERVAL, summary)
-    _write_stats(shard_dir, len(keys), n_cells, min_wt, max_wt, 0, None,
-                 None)
-    _write_digest_and_toc(shard_dir)
-    return len(keys), n_rows
+    return w.n_partitions, n_rows
 
 
 def rewrite_stripped(spark, path: str, out_dir: str,
@@ -2440,17 +2458,15 @@ def _resolve_atoms(rows: Iterable[tuple], threshold: int) -> list[tuple]:
 
 def _iter_planner_keys(d: str):
     """Sorted partition-key stream for the merge PLANNER — Summary.db when
-    present (one sampled key per interval), else the full Index.db. The
-    summary path reads INCREMENTALLY (a generator over the open file, one
-    entry at a time) so the planner never holds a whole generation's key
-    list: its memory is the decimation buffer, not the key count. The
-    index fallback only exists for pre-summary fixtures (small by
-    construction) and may materialize."""
+    present (one sampled key per interval), else the full Index.db. Both
+    read INCREMENTALLY (a generator over the open file, one entry at a
+    time) so the planner never holds a whole generation's key list: its
+    memory is the decimation buffer, not the key count."""
     try:
         for k, _, _ in _iter_summary(d):
             yield k
     except FileNotFoundError:
-        for k, _ in read_index(os.path.join(d, "Index.db")):
+        for k, _, _ in _iter_index_with_offsets(d):
             yield k
 
 
@@ -2466,9 +2482,6 @@ def _plan_merge_cuts(dirs: list[str], num_splits: int,
     planner — is the one place this job could OOM the driver). Cuts are
     deterministic for a given input; ANY cuts are CORRECT (tasks
     partition the key space), sampling only affects balance."""
-    import heapq
-    import itertools
-
     merged = heapq.merge(*(_iter_planner_keys(d) for d in dirs))
     deduped = (k for k, _ in itertools.groupby(merged))
     buf: list[bytes] = []
@@ -2497,40 +2510,51 @@ def _merge_ranges(dirs: list[str], num_splits: int,
     return list(zip(bounds, bounds[1:]))
 
 
+def _scan_partitions(data_path: str, start: int,
+                     end: int) -> Iterator[tuple[bytes, list]]:
+    """:func:`scan_data_range` one partition at a time: ``(key bytes, the
+    partition's rows)``."""
+    for pk, rows in itertools.groupby(scan_data_range(data_path, start, end),
+                                      key=lambda r: r[0]):
+        yield pk.encode(), list(rows)
+
+
+def _key_byte_range(table_dir: str, key_start: bytes | None,
+                    key_stop: bytes | None) -> tuple[int, int]:
+    """Data.db byte range of the partitions with ``key_start <= key <
+    key_stop`` (``None`` = open; ``(0, 0)``: none), walking the Index.db
+    window that Summary.db bounds one entry at a time."""
+    import contextlib
+
+    win = _summary_window(table_dir, key_start, key_stop)
+    bs = None
+    with contextlib.closing(_iter_index_with_offsets(
+            table_dir, win[0] if win else 0)) as entries:
+        for key, _, off in entries:
+            if key_stop is not None and key >= key_stop:
+                return (0, 0) if bs is None else (bs, off)
+            if bs is None and (key_start is None or key >= key_start):
+                bs = off
+    return (0, 0) if bs is None else (bs, _data_size(table_dir))
+
+
 def _merge_range(dirs: list[str], ks: str | None, kp: str | None,
-                 threshold: int) -> list[tuple]:
-    """One merge task: seek the hex key range ``[ks, kp)`` in EVERY
-    generation (a summary-window index read, then one Data.db byte run
-    each) and resolve the atoms found there with :func:`_resolve_atoms`.
-    Returns resolved ``(pk, cell, writetime, value, status)`` rows."""
+                 threshold: int) -> Iterator[tuple[bytes, list]]:
+    """One merge task as a streaming k-way merge: the hex key range
+    ``[ks, kp)``'s partitions from EVERY generation (:func:`_key_byte_range`)
+    merged on key bytes by ``heapq.merge`` (stable: a key's rows arrive in
+    generation order), each key's rows resolved by :func:`_resolve_atoms`.
+    Yields ``(key, resolved (pk, cell, writetime, value, status) rows)``
+    in key order, holding one partition per generation at a time."""
     start = bytes.fromhex(ks) if ks is not None else None
     stop = bytes.fromhex(kp) if kp is not None else None
 
-    def _rows(d):
-        win = _summary_window(d, start, stop)
-        index_path = os.path.join(d, "Index.db")
-        if win is not None:
-            ix_start, ix_end, win_end = win
-            with open(index_path, "rb") as ixf:
-                ixf.seek(ix_start)
-                buf = (ixf.read(ix_end - ix_start)
-                       if ix_end is not None else ixf.read())
-            entries = _parse_index_entries(
-                buf, _table_generation(d), index_path, base_off=ix_start)
-            end_data = win_end if win_end is not None else _data_size(d)
-        else:
-            entries = read_index(index_path)
-            end_data = _data_size(d)
-        _, bs, be = select_index_range(entries, end_data, start, stop)
-        if bs >= be:
-            return
-        for r in scan_data_range(os.path.join(d, "Data.db"), bs, be):
-            pk_b = r[0].encode()
-            if ((start is None or pk_b >= start)
-                    and (stop is None or pk_b < stop)):
-                yield r
-
-    return _resolve_atoms((r for d in dirs for r in _rows(d)), threshold)
+    merged = heapq.merge(*(_scan_partitions(os.path.join(d, "Data.db"),
+                                            *_key_byte_range(d, start, stop))
+                           for d in dirs), key=lambda p: p[0])
+    for key, group in itertools.groupby(merged, key=lambda p: p[0]):
+        yield key, _resolve_atoms((r for _, rows in group for r in rows),
+                                  threshold)
 
 
 def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
@@ -2539,9 +2563,9 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     """Compaction the way Cassandra ACTUALLY runs it — a k-way merge of
     sorted runs with NO shuffle: every generation is sorted by partition
     key (writer invariant), so the planner cuts ONE set of key ranges
-    from the merged summaries and each task seeks its range in EVERY
-    generation, merging atoms in-memory with EXACTLY
-    :func:`~..operators.compact.compact_atoms` semantics — the one
+    from the merged summaries and each task streams its range from EVERY
+    generation (:func:`_merge_range`), resolving one key at a time with
+    EXACTLY :func:`~..operators.compact.compact_atoms` semantics — the one
     shadowing rule over all three deletion granularities (partition
     deletes, range tombstones, cell tombstones — "deletes are data",
     SURVEY §1.2, Cassandra3TTLRemover.java:124-136), LWW with
@@ -2549,7 +2573,8 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     gc_grace retain/purge threshold. The cell data never crosses the
     network — the alternative (q_t8's arg-max exchange) shuffles every
     cell once; this plan moves ZERO cell bytes between tasks, which at
-    100 TB is the whole cost of compaction.
+    100 TB is the whole cost of compaction. The ranges run as one stage
+    with no exchange, at most ``defaultParallelism`` tasks.
 
     Emits ``(pk, cell, writetime, value, status)`` — byte-identical to
     ``compact_atoms`` over the same generations (the cross-plan
@@ -2560,37 +2585,31 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     is the index-resolved run for that key range), and every deletion
     atom travels WITH its partition in every generation — the partition
     header row, its range tombstones, and its cells all decode from the
-    same partition records the task already reads, so task-local
+    same partition records the task already reads, so key-local
     shadowing sees the complete deletion picture. Planner memory is
     bounded by ``max_planner_keys`` (see :func:`_plan_merge_cuts`);
-    per-task working state is one key range's atoms (``num_splits``
-    controls it) plus ONE O(1)-memory summary-window boundary pass per
-    generation (:func:`_summary_window` — tasks never materialize a
-    generation's sample list)."""
+    per-task working state is one partition per generation, whatever
+    the range's size (:func:`_merge_range`)."""
     dirs = _resolve_table_dirs(path)
     ranges = _merge_ranges(dirs, num_splits, max_planner_keys)
     threshold = int(now_us) - int(gc_grace_us)
+    # a task holds one Arrow batch of rows (the session's batch size)
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def _merge(batches):
         import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for ks, kp in zip(pdf["ks"], pdf["kp"]):
-                rows.extend(_merge_range(dirs, ks, kp, threshold))
-            yield pd.DataFrame(
-                rows, columns=["pk", "cell", "writetime", "value",
-                               "status"])
+        rows = (row for pdf in batches for ks, kp in zip(pdf["ks"], pdf["kp"])
+                for _, resolved in _merge_range(dirs, ks, kp, threshold)
+                for row in resolved)
+        while chunk := list(itertools.islice(rows, batch if batch > 0
+                                             else None)):
+            yield pd.DataFrame(chunk, columns=["pk", "cell", "writetime",
+                                               "value", "status"])
 
-    return (
-        local_frame(spark, ranges, "ks string, kp string")
-        .repartition(len(ranges))
-        .mapInPandas(
-            _merge,
-            schema=("pk string, cell string, writetime bigint, "
-                    "value string, status string"),
-        )
-    )
+    return local_frame(spark, ranges, "ks string, kp string").mapInPandas(
+        _merge, schema=("pk string, cell string, writetime bigint, "
+                        "value string, status string"))
 
 
 def stream_digests(spark, path: str):
@@ -2744,7 +2763,7 @@ def stats_census(spark, path: str):
 
 
 # ---------------------------------------------------------------------------
-# writers: one encoder, one rewrite driver, one sink for cell frames
+# row writers: GC, compaction, one rewrite driver, one sink for cell frames
 # ---------------------------------------------------------------------------
 
 def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
@@ -2805,33 +2824,72 @@ def _status_to_row(pk, cell, wt, val, status) -> tuple:
     return (pk, cell, kind, None, exp, wt, val)
 
 
-def _encode_rows(rows: Iterable[tuple], out_dir: str,
-                 **write_kw) -> tuple[int, int]:
-    """The ONE encoder behind every per-task SSTable writer:
-    :data:`SSTABLE_SCHEMA` rows -> partitions (cells sorted by name, a
-    ``partition_tombstone`` row attached as its partition's header
-    deletion) -> one :func:`write_sstable` table at ``out_dir``.
-    ``write_kw`` passes through (generation, compression). Returns
-    ``(n_partitions, n_rows)``."""
-    parts: dict[bytes, list] = {}
-    deletions: dict[bytes, tuple] = {}
-    n = 0
-    for pk, cell, kind, ttl, exp, wt, val in rows:
-        n += 1
-        key = str(pk).encode()
-        cells = parts.setdefault(key, [])
+def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
+    """One partition's :data:`SSTABLE_SCHEMA` rows in :func:`write_sstable`'s
+    form: ``(cells sorted by name, header deletion | None)``, a
+    ``partition_tombstone`` row becoming the header's deletion."""
+    cells, deletion = [], None
+    for _, cell, kind, ttl, exp, wt, val in rows:
         if kind == "partition_tombstone":
             # the header's localDeletionTime is an int32 like a cell's
-            deletions[key] = (_ldt_s(exp), int(wt))
+            deletion = (_ldt_s(exp), int(wt))
         else:
             cells.append(_row_to_cell(cell, kind, ttl, exp, wt, val))
-    for cells in parts.values():
-        cells.sort(key=lambda c: c[0])
-    write_sstable(
-        ((k, cs, deletions[k]) if k in deletions else (k, cs)
-         for k, cs in parts.items()),
-        out_dir, **write_kw)
+    cells.sort(key=lambda c: c[0])
+    return cells, deletion
+
+
+def _add_resolved(w: _TableWriter, key: bytes, resolved: list) -> int:
+    """Re-encode one key's resolved rows (:func:`_status_to_row`) and add
+    the partition to ``w`` (none: no partition). Returns the row count."""
+    rows = [_status_to_row(*r) for r in resolved]
+    if rows:
+        w.add(key, *_encode_partition(key, *_partition_cells(rows)))
+    return len(rows)
+
+
+def _encode_rows(rows: Iterable[tuple], out_dir: str,
+                 **write_kw) -> tuple[int, int]:
+    """:data:`SSTABLE_SCHEMA` rows in any order, all held, -> one
+    :func:`write_sstable` table at ``out_dir``: the sink of
+    :func:`write_sstable_distributed` and the tests' row-level reference
+    for the streaming rewrites. ``write_kw`` passes through (generation,
+    compression). Returns ``(n_partitions, n_rows)``."""
+    parts: dict[bytes, list] = {}
+    n = 0
+    for row in rows:
+        n += 1
+        parts.setdefault(str(row[0]).encode(), []).append(row)
+    write_sstable(((k, *_partition_cells(rs)) for k, rs in parts.items()),
+                  out_dir, **write_kw)
     return len(parts), n
+
+
+def _gc_split(shard_dir: str, data_path: str, start: int, end: int,
+              threshold: int) -> tuple[int, int, int]:
+    """The GC task: each partition that starts in ``[start, end)`` of
+    ``data_path``, one at a time, resolved on its own
+    (:func:`_resolve_atoms`) and added to one table at ``shard_dir``.
+    Returns ``(n_partitions, n_atoms_in, n_atoms_out)``."""
+    n_in = n_out = 0
+    with _TableWriter(shard_dir) as w:
+        for key, rows in _scan_partitions(data_path, start, end):
+            n_in += len(rows)
+            n_out += _add_resolved(w, key, _resolve_atoms(rows, threshold))
+    return w.n_partitions, n_in, n_out
+
+
+def _compact_range(shard_dir: str, dirs: list[str], ks: str | None,
+                   kp: str | None, threshold: int) -> tuple[int, int]:
+    """The compaction task: each key of the streaming merge of ``[ks,
+    kp)`` over ``dirs`` (:func:`_merge_range`) added to one table at
+    ``shard_dir`` as the merge resolves it. Returns ``(n_partitions,
+    n_cells)``."""
+    n = 0
+    with _TableWriter(shard_dir) as w:
+        for key, resolved in _merge_range(dirs, ks, kp, threshold):
+            n += _add_resolved(w, key, resolved)
+    return w.n_partitions, n
 
 
 def _claim_out_dir(out_dir: str) -> None:
@@ -2851,9 +2909,12 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
     """The ONE zero-shuffle rewrite driver behind :func:`rewrite_stripped`,
     :func:`gc_rewrite_single` and :func:`compact_rewrite`, one shard per
     spec. Each spec is ``(shard, *args)``; it runs as
-    ``task(out_dir/shard, *args)``, which writes that shard and returns
-    the report's ``counts``. Only specs and report rows cross a process
-    boundary; cell bytes never do. The scheduler is the one variable:
+    ``task(out_dir/.tmp-<shard>, *args)`` (an earlier attempt's copy
+    removed first), which writes the shard and returns the report's
+    ``counts``; then the shard is renamed to ``out_dir/<shard>``. Readers
+    skip dot-prefixed directories, so a failed task leaves nothing they
+    accept. Only specs and report rows cross a process boundary; cell
+    bytes never do. The scheduler is the one variable:
 
     - with a session, one plain RDD job over the specs, at most
       ``defaultParallelism`` tasks in a single stage and a single wave
@@ -2868,6 +2929,8 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
     ``out_dir`` must be absent or empty (:func:`_claim_out_dir`). Returns
     one ``Row(shard, *counts)`` per spec, in spec order; no specs = empty
     report."""
+    import shutil
+
     from pyspark.sql import Row
 
     _claim_out_dir(out_dir)
@@ -2877,7 +2940,11 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
 
     def _run(spec):
         shard, *args = spec
-        return report(shard, *task(os.path.join(out_dir, shard), *args))
+        tmp = os.path.join(out_dir, f".tmp-{shard}")
+        shutil.rmtree(tmp, ignore_errors=True)  # left by a failed attempt
+        counts = task(tmp, *args)
+        os.rename(tmp, os.path.join(out_dir, shard))
+        return report(shard, *counts)
 
     if spark is None:
         return _run_on_pool(_run, specs)
@@ -2948,8 +3015,6 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
 
     Eagerly executes and returns the shard report rows
     ``(shard, n_partitions, n_cells)`` (bounded: one per shard)."""
-    import itertools
-
     import pandas as pd
 
     _claim_out_dir(out_dir)
@@ -3273,59 +3338,6 @@ FROM e WHERE event_id % 13 = 0
 """
 
 
-def events_sstable_update_fixture(spark, sf_dir: str, out_dir: str) -> None:
-    """A SECOND SSTable generation over the same events — the overlap
-    compaction exists to resolve (q_t8): every ``event_id % 5 == 0``
-    event's etype cell is REWRITTEN one second later (normal cell — the
-    post-migration write carries no TTL) with value ``U:<etype>``, and
-    every ``event_id % 19 == 0`` event's props cell is DELETED two
-    seconds later. Deterministic, so the merged LWW state is ANSI-SQL
-    recomputable."""
-    import duckdb
-
-    rows = duckdb.sql(
-        f"""
-        SELECT user_id, event_id, event_type,
-               epoch_us(ts) AS wt,
-               epoch_us(ts) // 1000000 AS ts_s
-        FROM read_parquet('{sf_dir}/events.parquet')
-        WHERE event_id % 5 = 0 OR event_id % 19 = 0
-        ORDER BY user_id, event_id
-        """
-    ).fetchall()
-    parts: dict[bytes, list] = {}
-    for user_id, event_id, etype, wt, ts_s in rows:
-        key = str(user_id).encode()
-        cells = parts.setdefault(key, [])
-        base = f"{event_id:012d}:"
-        if event_id % 5 == 0:
-            cells.append((f"{base}etype".encode(), 0, 0, 0,
-                          wt + 1_000_000, f"U:{etype}".encode()))
-        if event_id % 19 == 0:
-            cells.append((f"{base}props".encode(), DELETION_MASK, 0, 0,
-                          wt + 2_000_000, struct.pack(">i", int(ts_s) + 2)))
-    write_sstable(parts.items(), out_dir)
-
-
-def sstable_compact_cells_oracle_sql(table: str = "events") -> str:
-    """The UNION of both generations' cells as the compaction input frame
-    ``(pk, cell, writetime, is_tombstone)`` — base generation from
-    :func:`sstable_scan_oracle_sql`'s rules, update generation from
-    :func:`events_sstable_update_fixture`'s."""
-    return f"""
-SELECT pk, cell, writetime, kind = 'tombstone' AS is_tombstone
-FROM ({sstable_scan_oracle_sql(table)})
-UNION ALL
-SELECT user_id::VARCHAR, printf('%012d', event_id) || ':etype',
-       epoch_us(ts) + 1000000, FALSE
-FROM {table} WHERE event_id % 5 = 0
-UNION ALL
-SELECT user_id::VARCHAR, printf('%012d', event_id) || ':props',
-       epoch_us(ts) + 2000000, TRUE
-FROM {table} WHERE event_id % 19 = 0
-"""
-
-
 def events_sstable_update_fixture_v2(spark, sf_dir: str,
                                      out_dir: str) -> None:
     """Generation 2 over :func:`events_sstable_fixture_v2`'s table — the
@@ -3524,17 +3536,18 @@ FROM e WHERE user_id % 23 = 0 GROUP BY pk
 
 def compact_rewrite(spark, path: str, out_dir: str, *, gc_grace_us: int,
                     now_us: int, num_splits: int = 8) -> list:
-    """MAJOR COMPACTION, end to end on the native format: the k-way
-    zero-shuffle merge of :func:`merge_compact_sorted` (full
-    deletion-atom semantics), with each key range's surviving atoms
-    re-encoded in the task that merged them (:func:`_rewrite_shards`,
-    sidecars included). This is the operation a user of the reference
-    eventually runs AFTER the TTL strip, and the one that consolidates:
-    N overlapping generations in, one sorted non-overlapping shard per
-    merge range out (``out_dir/shard=NNNNN``, at most ``num_splits``),
-    deletes preserved until gc_grace ("deletes are data", SURVEY §1.2).
-    The merge ranges run as one Spark job on ``spark``, or on a local
-    process pool when ``spark`` is ``None`` (:func:`_rewrite_shards`).
+    """MAJOR COMPACTION, end to end on the native format: the streaming
+    k-way merge of :func:`merge_compact_sorted` (full deletion-atom
+    semantics), each key's survivors added to the merging task's shard
+    as soon as the key is resolved (:func:`_compact_range`), so a task
+    holds one partition per generation, not its key range. The operation
+    a user of the reference runs AFTER the TTL strip, and the one that
+    consolidates: N overlapping generations in, one sorted
+    non-overlapping shard per merge range out (``out_dir/shard=NNNNN``,
+    at most ``num_splits``), deletes preserved until gc_grace ("deletes
+    are data", SURVEY §1.2). The ranges run as one Spark job on
+    ``spark``, or on a local process pool when ``spark`` is ``None``
+    (:func:`_rewrite_shards`).
 
     Atoms re-encode through :func:`_status_to_row`, the documented
     lossy-where-compaction-is reconstruction. Scale: no cell byte
@@ -3543,16 +3556,9 @@ def compact_rewrite(spark, path: str, out_dir: str, *, gc_grace_us: int,
     ``(shard, n_partitions, n_cells)`` per merge range."""
     dirs = _resolve_table_dirs(path)
     threshold = int(now_us) - int(gc_grace_us)
-    specs = [(f"shard={i:05d}", ks, kp) for i, (ks, kp)
+    specs = [(f"shard={i:05d}", dirs, ks, kp, threshold) for i, (ks, kp)
              in enumerate(_merge_ranges(dirs, num_splits))]
-
-    def _compact(shard_dir, ks, kp):
-        return _encode_rows(
-            (_status_to_row(*r)
-             for r in _merge_range(dirs, ks, kp, threshold)),
-            shard_dir)
-
-    return _rewrite_shards(spark, out_dir, specs, _compact,
+    return _rewrite_shards(spark, out_dir, specs, _compact_range,
                            ("n_partitions", "n_cells"))
 
 
@@ -3898,10 +3904,10 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
     zero-shuffle driver as :func:`rewrite_stripped`
     (:func:`_rewrite_shards`: one Spark job on ``spark``, a local process
     pool when ``spark`` is ``None``): each index-snapped split resolves
-    and re-encodes its own partitions (splits are partition-granular, so
-    every deletion atom is task-local to the partitions it shadows),
-    with the SAME :func:`_resolve_atoms` and :func:`_status_to_row` as
-    :func:`compact_rewrite` — one semantics, one encoder.
+    and re-encodes its partitions one at a time, so a task holds one
+    partition (:func:`_gc_split`; a deletion atom lives in the partition
+    it shadows), with the SAME :func:`_resolve_atoms` and
+    :func:`_status_to_row` as :func:`compact_rewrite`.
 
     Output layout is rewrite_stripped's (``out_dir/<generation>_shard=
     <split>``, all sidecars, digest-clean); a fully-purged split still
@@ -3910,18 +3916,10 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
     or empty. Returns the per-shard report rows ``(shard, n_partitions,
     n_atoms_in, n_atoms_out)``."""
     threshold = int(now_us) - int(gc_grace_us)
-
-    def _gc(shard_dir, data_path, start, end):
-        atoms = list(scan_data_range(data_path, start, end))
-        n_parts, n_out = _encode_rows(
-            (_status_to_row(*r)
-             for r in _resolve_atoms(atoms, threshold)),
-            shard_dir)
-        return n_parts, len(atoms), n_out
-
-    return _rewrite_shards(spark, out_dir, _split_specs(path, num_splits),
-                           _gc,
-                           ("n_partitions", "n_atoms_in", "n_atoms_out"))
+    return _rewrite_shards(
+        spark, out_dir,
+        [(*spec, threshold) for spec in _split_specs(path, num_splits)],
+        _gc_split, ("n_partitions", "n_atoms_in", "n_atoms_out"))
 
 
 def sstable_v2_gen1_atoms_sql(table: str = "events") -> str:

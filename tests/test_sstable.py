@@ -1349,6 +1349,32 @@ def test_merge_compact_sorted_moves_no_cell_bytes(spark):
     shutil.rmtree(base)
 
 
+def test_merge_compact_sorted_is_one_job_one_stage(spark):
+    """The merge runs its key ranges as one job of one stage, with no
+    exchange: one task per range, at most defaultParallelism."""
+    base = _tmpdir()
+    for g in range(2):
+        ss.write_sstable(
+            [(f"k{i:03d}".encode(), [(b"c", 0, 0, 0, g, b"v")])
+             for i in range(g, 40, g + 1)],
+            os.path.join(base, f"g{g}"), summary_interval=4)
+    sc = spark.sparkContext
+    gid = f"merge-shape-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "merge_compact_sorted plan shape")
+    try:
+        rows = ss.merge_compact_sorted(spark, base, gc_grace_us=0, now_us=0,
+                                       num_splits=4).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 40
+    st = sc.statusTracker()
+    (job,) = st.getJobIdsForGroup(gid)
+    (stage,) = st.getJobInfo(job).stageIds
+    assert st.getStageInfo(stage).numTasks == min(sc.defaultParallelism, len(
+        ss._merge_ranges(ss._resolve_table_dirs(base), 4)))
+    shutil.rmtree(base)
+
+
 def _strip_reference(shard_dir, data_path, start, end):
     """The row-level reference for one split: decode, make every expiring
     row live, re-encode through the shared encoder."""
@@ -1654,6 +1680,55 @@ def test_gc_and_compact_rewrite_same_bytes_on_both_schedulers(spark):
     shutil.rmtree(base)
 
 
+def _traced_peak(fn) -> int:
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        fn()
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_gc_and_compaction_task_memory_does_not_grow_with_split():
+    """A GC task holds one partition at a time and a compaction task one
+    partition per generation: with partitions of the same size, 4x more
+    partitions per split leave each task's traced peak within 64 KiB
+    (about 31 bytes per extra partition; a task that buffers its split
+    grows by megabytes). Both inputs' Data.db exceed the 1 MiB digest
+    read buffer, so that fixed buffer is the same in every run."""
+    wt = 1_700_000_000_000_000
+    tomb = struct.pack(">i", 1_700_000_000)
+    base = _tmpdir()
+    peaks = []
+    for n in (700, 4 * 700):
+        gens = [os.path.join(base, f"n{n}", f"g{g}") for g in range(2)]
+        for g, d in enumerate(gens):
+            ss.write_sstable(
+                [(f"p{p:06d}".encode(),
+                  [(f"{i:06d}:c".encode(), ss.DELETION_MASK, 0, 0, wt + g,
+                    tomb) if i == 3 else
+                   (f"{i:06d}:c".encode(), 0, 0, 0, wt + 10 * g + i,
+                    bytes(200)) for i in range(8)]) for p in range(n)], d)
+        data = os.path.join(gens[0], "Data.db")
+        size = os.path.getsize(data)
+        assert size > 1 << 20
+        out = os.path.join(base, f"n{n}")
+        peaks.append((
+            _traced_peak(lambda: ss._gc_split(
+                os.path.join(out, "gc"), data, 0, size, wt + 5)),
+            _traced_peak(lambda: ss._compact_range(
+                os.path.join(out, "compact"), gens, None, None, wt + 5))))
+        assert ss.read_stats(os.path.join(out, "gc"))["n_partitions"] == n
+        assert ss.read_stats(
+            os.path.join(out, "compact"))["n_cells"] == 7 * n
+    (gc1, cp1), (gc4, cp4) = peaks
+    assert gc4 - gc1 < 64 << 10, peaks
+    assert cp4 - cp1 < 64 << 10, peaks
+    shutil.rmtree(base)
+
+
 def _child_pids() -> set[str]:
     """Live child pids of this process, across all of its threads."""
     import glob
@@ -1700,6 +1775,102 @@ def test_rewrite_pool_leaves_no_process(outcome):
             ss._rewrite_shards(None, base, specs, task, ("n",))
     assert not multiprocessing.active_children()
     assert _child_pids() <= before
+    shutil.rmtree(base)
+
+
+@pytest.mark.parametrize("scheduler", ["spark", "pool"])
+def test_rewrite_task_that_fails_leaves_no_readable_shard(spark, scheduler):
+    """A shard is committed only when its task returns: a task that
+    raises after writing its Data.db leaves a dot-prefixed temp
+    directory that the readers skip, so neither _resolve_table_dirs nor
+    scan_sstable accepts anything under the output directory."""
+    base = _tmpdir()
+    out = os.path.join(base, "out")
+
+    def task(shard_dir, i):
+        ss.write_sstable([(b"k", [(b"c", 0, 0, 0, i, b"v")])], shard_dir)
+        raise ss.CorruptSSTableError(f"task {i} failed after Data.db")
+
+    with pytest.raises(Exception, match="task 7 failed after Data.db"):
+        ss._rewrite_shards(spark if scheduler == "spark" else None, out,
+                           [("shard=00000", 7)], task, ("n",))
+    assert os.listdir(out) == [".tmp-shard=00000"]
+    assert os.path.exists(os.path.join(out, ".tmp-shard=00000", "Data.db"))
+    with pytest.raises(ValueError, match="no Data.db"):
+        ss._resolve_table_dirs(out)
+    with pytest.raises(Exception, match="no Data.db"):
+        ss.scan_sstable(spark, out).collect()
+    shutil.rmtree(base)
+
+
+def test_rewrite_task_replaces_a_stale_temp_shard(monkeypatch):
+    """A retried task first removes what an earlier attempt left in its
+    temp directory, so the committed shard holds only this attempt's
+    files."""
+    base = _tmpdir()
+    stale = os.path.join(base, ".tmp-shard=00000")
+    os.makedirs(stale)
+    for name in ("Data.db", "Stale.db"):
+        with open(os.path.join(stale, name), "wb") as f:
+            f.write(b"from an earlier attempt")
+    # the stale copy stands for an earlier attempt of this same run
+    monkeypatch.setattr(ss, "_claim_out_dir", lambda out_dir: None)
+
+    def task(shard_dir, i):
+        ss.write_sstable([(b"k", [(b"c", 0, 0, 0, i, b"v")])], shard_dir)
+        return (1,)
+
+    ss._rewrite_shards(None, base, [("shard=00000", 7)], task, ("n",))
+    want = os.path.join(base, "want")
+    ss.write_sstable([(b"k", [(b"c", 0, 0, 0, 7, b"v")])], want)
+    assert sorted(os.listdir(base)) == ["shard=00000", "want"]
+    _assert_same_table(os.path.join(base, "shard=00000"), want)
+    shutil.rmtree(base)
+
+
+def test_strip_of_keys_out_of_order_fails_loud(capsys):
+    """A table whose first two partitions, and Index.db entries, are out
+    of key byte order is not copied into an unsorted output: the strip
+    raises CorruptSSTableError naming its Data.db and the offset of the
+    first partition out of order, and the CLI (8 splits of 2 partitions)
+    exits 1 with that path."""
+    import re
+
+    from cassandra_ttl_remover_spark.cli import main
+
+    base = _tmpdir()
+    ordered = os.path.join(base, "ordered")
+    keys = [f"k{p:02d}".encode() for p in range(16)]
+    ss.write_sstable(
+        [(k, [(b"c", ss.EXPIRATION_MASK, 60, 1_700_000_060,
+               1_700_000_000_000_000, b"value")])
+         for k in keys], ordered)
+    with open(os.path.join(ordered, "Data.db"), "rb") as f:
+        raw = f.read()
+    entries = ss.read_index(os.path.join(ordered, "Index.db"))
+    ends = [off for _, off in entries[1:]] + [len(raw)]
+    record = {k: raw[off:end] for (k, off), end in zip(entries, ends)}
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    data, index = b"", b""
+    for k in [keys[1], keys[0], *keys[2:]]:
+        index += struct.pack(">H", len(k)) + k + struct.pack(">q", len(data))
+        data += record[k]
+    data_path = os.path.join(src, "Data.db")
+    with open(data_path, "wb") as f:
+        f.write(data)
+    with open(os.path.join(src, "Index.db"), "wb") as f:
+        f.write(index)
+    _, _, start, end = ss._split_specs(src, 1)[0]
+    msg = re.escape(f"{data_path}: malformed partition at offset "
+                    f"{len(record[keys[1]])} ")
+    with pytest.raises(ss.CorruptSSTableError, match=msg + ".*does not sort"):
+        ss._strip_split(os.path.join(base, "shard"), data_path, start, end)
+    rc = main(["--input", src, "--output-path", os.path.join(base, "out"),
+               "--input-format", "sstable", "--output-format", "sstable"])
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "CorruptSSTableError" in err and data_path in err
     shutil.rmtree(base)
 
 
@@ -1770,7 +1941,7 @@ def test_non_utf8_field_raises_error_naming_file_offset_and_field(spark,
     with pytest.raises(ValueError, match=msg):
         list(ss.scan_data_range(data, 0, os.path.getsize(data)))
     with pytest.raises(ValueError, match=msg):
-        ss._merge_range([src], None, None, 0)
+        list(ss._merge_range([src], None, None, 0))
     kw = dict(gc_grace_us=0, now_us=wt, num_splits=1)
     with pytest.raises(ValueError, match=msg):
         ss.gc_rewrite_single(None, src, os.path.join(base, "pool"), **kw)
