@@ -1050,22 +1050,6 @@ SELECT {id_col}, m AS margin FROM mf
 WHERE m >= (SELECT t FROM thr) ORDER BY {id_col}""")
 
 
-def score_documents_oracle_sql(label_expr: str = "lang = 'en'",
-                               dim: int = 64, iters: int = 2,
-                               threshold: int = 0,
-                               table: str = "documents",
-                               id_col: str = "doc_id") -> str:
-    """Oracle for train-then-gate: the unrolled training CTEs feed an
-    explode-form margin over the same corpus (the explode form equals
-    the serving HOF form — identical per-bucket quantization), filtered
-    at ``threshold``."""
-    ctes, final = _lr_duck_ctes(label_expr, dim, iters, table, id_col)
-    ctes.append(_mf_duck_cte(final, id_col))
-    return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT {id_col}, m AS margin FROM mf"
-            f" WHERE m >= {threshold} ORDER BY {id_col}")
-
-
 def margin_threshold_frame(scored: DataFrame, keep_frac: float,
                            margin_col: str = "m") -> DataFrame:
     """1-row ``(thr)`` frame: the k-th largest margin (k =

@@ -611,30 +611,6 @@ def cusum_drift(daily: DataFrame, k: int, h: int,
     )
 
 
-def cusum_drift_oracle_sql(k: int, h: int, daily_sql: str,
-                           day_col: str = "day",
-                           value_col: str = "x") -> str:
-    """DuckDB mirror: identical prefix-sum / running-min closed form;
-    window sums cast to BIGINT (HUGEINT would reach pandas as float64)."""
-    return f"""
-WITH daily AS ({daily_sql}),
-p AS (
-  SELECT {day_col}, {value_col},
-         CAST(sum({value_col} - {k}) OVER w AS BIGINT) AS pp
-  FROM daily
-  WINDOW w AS (ORDER BY {day_col}
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT {day_col}, {value_col},
-       CAST(pp - least(0, min(pp) OVER w2) AS BIGINT) AS cusum,
-       (pp - least(0, min(pp) OVER w2)) > {h} AS alarm
-FROM p
-WINDOW w2 AS (ORDER BY {day_col}
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-ORDER BY {day_col}
-"""
-
-
 def mannwhitney_u(docs: DataFrame, positive: str = "en",
                   label_col: str = "lang",
                   text_col: str = "text") -> DataFrame:

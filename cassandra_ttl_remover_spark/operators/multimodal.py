@@ -27,7 +27,7 @@ import pandas as pd
 from struct import error as struct_error
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from cassandra_ttl_remover_spark.plans import fan_out
@@ -52,18 +52,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("meta", MEDIA_META),
     ]
 )
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Ingest raw media files: Spark's binaryFile source — one row per file
-    with (path, modificationTime, length, content). Parallelism = files;
-    no decode on read."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
 
 
 def documents_as_media(docs: DataFrame, text_col: str = "text",

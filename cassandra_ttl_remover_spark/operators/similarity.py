@@ -1326,33 +1326,6 @@ SELECT i, vs::BIGINT AS v FROM v{iters} ORDER BY i
 """
 
 
-def gram_power_iteration_oracle_sql(table: str = "embeddings",
-                                    rescale: int = 1000) -> str:
-    gram = gram_matrix_oracle_sql(table)
-    return f"""
-WITH g AS ({gram}),
-full_g AS (
-  SELECT i, j, g FROM g
-  UNION ALL
-  SELECT j AS i, i AS j, g FROM g WHERE i <> j
-),
-v1 AS (SELECT i, sum(g)::HUGEINT AS v1 FROM full_g GROUP BY i),
-s1 AS (SELECT greatest(max(abs(v1)), 1) AS s FROM v1),
--- sign-split truncation: Spark's div truncates toward zero while
--- DuckDB's // floors, and row sums CAN be negative
-v1s AS (SELECT i,
-               (CASE WHEN v1 >= 0 THEN (v1 * {rescale}) // s
-                     ELSE -((-v1 * {rescale}) // s) END)::BIGINT AS vs
-        FROM v1, s1),
-v2 AS (
-  SELECT full_g.i, sum(full_g.g * v1s.vs)::BIGINT AS v
-  FROM full_g JOIN v1s ON v1s.i = full_g.j
-  GROUP BY full_g.i
-)
-SELECT i, v FROM v2 ORDER BY i
-"""
-
-
 def _PQ_L2(a: str, b: str) -> str:
     """Exact int64 squared L2 between two quantized component arrays."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"

@@ -44,14 +44,6 @@ SHINGLES_EXPR = (
 )
 
 
-def with_words(df: DataFrame, text_col: str = "text", out: str = "ws") -> DataFrame:
-    return df.withColumn(out, F.expr(WORDS_EXPR.format(col=text_col)))
-
-
-def with_shingles(df: DataFrame, words_col: str = "ws", out: str = "shingles") -> DataFrame:
-    return df.withColumn(out, F.expr(SHINGLES_EXPR.format(ws=words_col)))
-
-
 # ---------------------------------------------------------------------------
 # Language identification (stopword-hit heuristic)
 # ---------------------------------------------------------------------------
@@ -66,13 +58,6 @@ LANG_PROFILES: list[tuple[str, int, list[str]]] = [
     ("fr", 3, ["le", "la", "et", "est", "un", "une", "dans", "pour", "que"]),
     ("it", 4, ["il", "la", "di", "e", "che", "un", "una", "per", "con"]),
 ]
-
-
-def stopword_frame(spark: SparkSession) -> DataFrame:
-    rows = [
-        (lang, prio, w) for lang, prio, words in LANG_PROFILES for w in words
-    ]
-    return local_frame(spark, rows, "lang string, prio int, word string")
 
 
 def lang_id(spark: SparkSession, docs: DataFrame, text_col: str = "text",

@@ -32,15 +32,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def sort_within_partitions(df: DataFrame, pk: str, *clustering: str) -> DataFrame:
-    """T5 — clustering-sorted rows per partition-key partition, after a hash
-    repartition on pk (the reference's per-partition BTree sort,
-    Cassandra3TTLRemover.java:171-172)."""
-    return df.repartition(F.col(pk)).sortWithinPartitions(
-        F.col(pk), *[F.col(c) for c in clustering]
-    )
-
-
 def write_sorted(
     df: DataFrame,
     out: str,

@@ -41,12 +41,19 @@ covering Index.db window instead of the whole index).
 
 Scale design: the PLANNER reads only ``Index.db`` (one small sequential
 pass) and cuts the key space into contiguous ``Data.db`` byte ranges; each
-Spark task seeks to its range start and decodes forward — no task ever
+Spark task seeks to its range start and reads forward — no task ever
 reads another split's bytes, so the scan parallelizes like any columnar
-split scan and would map 1:1 onto object-store ranged GETs. Cells stream
-out as flat rows; no partition is materialized whole except the one being
-decoded (the reference's iterator does the same —
-NoTTLSSTableIdentityIterator).
+split scan and would map 1:1 onto object-store ranged GETs. No partition
+is materialized whole except the one being read (the reference's iterator
+does the same — NoTTLSSTableIdentityIterator).
+
+Readers: :func:`_partition_records` reads each partition at its
+Index.db span, ``mc`` re-framed as ``v1`` (:func:`_mc_to_v1`); a record
+that does not fill its span fails the read. The strip transcodes it
+(:func:`_strip_partition`); every other reader — the scan, the slice
+reader, GC, compaction, the deep scrub, the census — parses it into byte
+atoms (:func:`_parse_partition`). Only :func:`scan_data_range` decodes
+atoms to strings, at its edge, so GC and compaction carry any bytes.
 
 Writers: :class:`_TableWriter` alone writes a table's files, from one
 encoded partition at a time in increasing key byte order. Every writer is
@@ -68,6 +75,7 @@ from __future__ import annotations
 
 import heapq
 import itertools
+import operator
 import os
 import struct
 from typing import Iterable, Iterator
@@ -142,18 +150,6 @@ def _uvint_bytes(n: int) -> bytes:
         else:
             out.append(b)
             return bytes(out)
-
-
-def _read_uvint(f, path: str, what: str) -> int:
-    val = shift = 0
-    while True:
-        c = _must_read(f, 1, path, what)[0]
-        val |= (c & 0x7F) << shift
-        if not (c & 0x80):
-            return val
-        shift += 7
-        if shift > 63:
-            raise CorruptSSTableError(f"{path}: runaway vint in {what}")
 
 
 def _read_uvint_buf(buf: bytes, pos: int) -> tuple[int, int]:
@@ -232,11 +228,10 @@ def _compress_data_file(table_dir: str,
 
 class _CompressedDataReader:
     """Random-access file-like view over a chunk-compressed Data.db:
-    ``seek``/``tell``/``read`` operate in UNCOMPRESSED coordinates, so the
-    decode loop is byte-for-byte the plain-file code path. Inflates only
-    the chunks a read touches and caches the last chunk (decode reads are
-    sequential within a split, so the cache hit rate is ~chunk_size /
-    field_size)."""
+    ``seek``/``read`` operate in UNCOMPRESSED coordinates, so the read
+    loop is the plain-file code path. Inflates only the chunks a read
+    touches and caches the last chunk (reads are sequential within a
+    split, one partition span at a time)."""
 
     def __init__(self, data_path: str, info_path: str):
         self._f = open(data_path, "rb")
@@ -254,9 +249,6 @@ class _CompressedDataReader:
     def __exit__(self, *exc):
         self._f.close()
         return False
-
-    def tell(self) -> int:
-        return self._pos
 
     def seek(self, pos: int) -> None:
         self._pos = pos
@@ -602,34 +594,24 @@ def _summary_meta(table_dir: str) -> tuple[int, int] | None:
 def _iter_index_with_offsets(table_dir: str, ix_start: int = 0):
     """Streaming Index.db walk from the entry at byte ``ix_start``
     yielding ``(key, index byte offset, Data.db offset)`` — exactly the
-    triple a Summary.db entry stores. This is the REBUILD path's input
-    (the reference walks the whole primary index the same way —
-    buildSummaryAtLevel, NoTTLReader.java:1117-1140)."""
+    triple a Summary.db entry stores — parsed from 64 KiB reads. This is
+    the REBUILD path's input (the reference walks the whole primary index
+    the same way — buildSummaryAtLevel, NoTTLReader.java:1117-1140)."""
     index_path = os.path.join(table_dir, "Index.db")
-    gen = _table_generation(table_dir)
+    mc = _table_generation(table_dir) == "mc"
+    buf, base = b"", ix_start
     with open(index_path, "rb") as f:
         f.seek(ix_start)
-        while True:
-            ix_off = f.tell()
-            if gen == "mc":
-                head = f.read(1)
-                if not head:
-                    return
-                # re-read the uvint from its first byte
-                f.seek(ix_off)
-                klen = _read_uvint(f, index_path, "index key length")
-            else:
-                head = f.read(2)
-                if not head:
-                    return
-                if len(head) != 2:
-                    raise CorruptSSTableError(
-                        f"{index_path}: truncated index entry at {ix_off}")
-                (klen,) = struct.unpack(">H", head)
-            key = _must_read(f, klen, index_path, "index key")
-            (data_off,) = struct.unpack(
-                ">q", _must_read(f, 8, index_path, "index offset"))
-            yield key, ix_off, data_off
+        while chunk := f.read(1 << 16):
+            buf += chunk
+            start = 0
+            for key, off, end in _index_entries(buf, mc):
+                yield key, base + start, off
+                start = end
+            buf, base = buf[start:], base + start
+    if buf:
+        raise CorruptSSTableError(
+            f"{index_path}: truncated index entry at {base}")
 
 
 def resample_summary_dir(table_dir: str, *, min_index_interval: int,
@@ -921,45 +903,57 @@ def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
     :func:`scan_partition_slice`, a GENERATOR: rows stream out one at a
     time so per-task memory is the consumer's batch size, not the slice
     width (a pathological wide partition cannot OOM a task). ``markers``
-    is the planned block's open-RT list as
-    ``[start, end, ldt, mfda]`` items."""
+    is the planned block's open-RT list as ``[start, end, ldt, mfda]``
+    items. From ``off`` on, the partition is parsed one ColumnIndex.db
+    block span at a time, framed as a record, up to the first atom at or
+    past ``cell_stop`` (without the sidecar: all of it at once)."""
     for s, e, ldt, mfda in markers:
         s = s.decode("utf-8") if isinstance(s, bytes) else s
         e = e.decode("utf-8") if isinstance(e, bytes) else e
         if e >= cell_start and s < cell_stop:
             yield (key, s, "range_tombstone", None,
                    int(ldt), int(mfda), e)
-    kb = key.encode()
+    kb, start, stop = (x.encode() for x in (key, cell_start, cell_stop))
     data_path = os.path.join(d, "Data.db")
-    gen = _table_generation(d)
+    head, end = _key_byte_range(d, kb, kb + b"\x00")
+    if head == end or not (at_cell and head < off < end or off == head):
+        raise CorruptSSTableError(
+            f"{data_path}: index offset {off} does not start partition "
+            f"{key!r}")
+    mc = _table_generation(d) == "mc"
+    # a span inside the partition is framed as a live partition's record
+    wlen = _uvint_bytes if mc else _U16.pack
+    header = wlen(len(kb)) + kb + _HEADER.pack(LIVE_LOCAL_DELETION,
+                                               LIVE_MARKED_FOR_DELETE)
+    blocks = (_read_column_index(d) or {}).get(kb, [])
+    cuts = [o for _, o, _ in blocks if off < o < end] + [end]
     with _open_data(data_path) as f:
-        rlen, rval, _ = _framing(f, gen, data_path)
         f.seek(off)
-        if not at_cell:
-            klen = rlen("partition-key length")
-            k = _must_read(f, klen, data_path, "partition key")
-            if k != kb:
-                raise CorruptSSTableError(
-                    f"{data_path}: index offset {off} does not start "
-                    f"partition {key!r}")
-            _must_read(f, 12, data_path, "partition header")
-        while True:
-            nlen = rlen("cell-name length")
-            if nlen == 0:
-                break
-            name = _utf8(_must_read(f, nlen, data_path, "cell name"),
-                         data_path, off, "cell name")
-            row = _decode_cell_body(f, rlen, rval, key, name, data_path,
-                                    off)
-            if name >= cell_stop:
-                break
-            if name >= cell_start:
-                yield row
-            elif (row[2] == "range_tombstone"
-                  and row[6] >= cell_start):
-                # RT opening inside the covering block but before the
-                # slice, still covering it
-                yield row
+        lo = off
+        for hi in cuts:
+            buf = f.read(hi - lo)
+            try:
+                if len(buf) != hi - lo:
+                    raise CorruptSSTableError(
+                        f"truncated: {len(buf)} of {hi - lo} bytes")
+                record = ((header if lo != head else b"") + buf
+                          + (wlen(0) if hi != end else b""))
+                k, _, cells = _parse_partition(
+                    _mc_to_v1(record) if mc else record)
+                if k != kb:
+                    raise CorruptSSTableError(f"its key is not {key!r}")
+            except (struct.error, IndexError, CorruptSSTableError) as e:
+                raise _malformed(data_path, lo, hi, e) from None
+            for cell in cells:
+                name = cell[0]
+                if name >= stop:
+                    return
+                if name >= start or (cell[1] == RANGE_TOMBSTONE_MASK
+                                     and cell[5] >= start):
+                    # a range tombstone opening before the slice still
+                    # covers it when its end bound reaches the start
+                    yield _cell_row(key, cell, data_path, off)
+            lo = hi
 
 
 def scan_partition_slice(spark, path: str, key: str, cell_start: str,
@@ -1154,8 +1148,6 @@ def _scrub_one_dir(d: str, deep: bool) -> dict:
     """Scrub one table: every check independent, exceptions demote the
     check to False instead of failing the sweep (scrub REPORTS, the
     quarantine decision is the caller's)."""
-    import zlib  # noqa: F401 — via _crc32_file
-
     crc, _ = _crc32_file(os.path.join(d, "Data.db"))  # only the CRC
     # is consumed here; the deep pass sizes the file via _data_size
     digest_ok = toc_ok = False
@@ -1211,19 +1203,12 @@ def _scrub_one_dir(d: str, deep: bool) -> dict:
     n_cells = st["n_cells"] if st else None
     if deep:
         try:
-            rows = list(scan_data_range(
-                os.path.join(d, "Data.db"), 0, _data_size(d)))
-            decoded_parts = {r[0] for r in rows}
-            decoded_cells = sum(
-                1 for r in rows if r[2] != "partition_tombstone")
-            stats_ok = (stats_ok and st is not None
-                        and st["n_cells"] == decoded_cells)
-            # the deep decode covers the WHOLE Data.db, so the cross-check
-            # is set equality: an Index.db with phantom extra entries (or
-            # a Data.db with unindexed partitions) must flip index_ok
-            index_ok = index_ok and (
-                decoded_parts == {k.decode("utf-8") for k, _ in entries})
-            n_cells = decoded_cells
+            cells = {key: len(c) for key, _, c in _table_partitions(d)}
+            n_cells = sum(cells.values())
+            stats_ok = stats_ok and st is not None and st["n_cells"] == n_cells
+            # every indexed span must parse to its own key (unindexed
+            # bytes fail the parse)
+            index_ok = index_ok and cells.keys() == {k for k, _ in entries}
         except (OSError, CorruptSSTableError, ValueError):
             # a deep pass that DIES mid-decode proved neither count nor
             # index/data agreement — demote both verdicts so a failed
@@ -1283,8 +1268,13 @@ def scrub_tables(spark, path: str, deep: bool = False):
 
 _U16 = struct.Struct(">H")
 _U32 = struct.Struct(">I")
+_I32 = struct.Struct(">i")
 _I64 = struct.Struct(">q")
 _HEADER = struct.Struct(">iq")
+#: ``v1`` cell bodies after the mask byte, through the value length
+_EXPIRING_BODY = struct.Struct(">iiqI")
+_COUNTER_BODY = struct.Struct(">qqI")
+_CELL_BODY = struct.Struct(">qI")
 
 
 class _TableWriter:
@@ -1470,15 +1460,6 @@ class CorruptSSTableError(ValueError):
     emit partial partitions."""
 
 
-def _must_read(f, n: int, path: str, what: str) -> bytes:
-    b = f.read(n)
-    if len(b) != n:
-        raise CorruptSSTableError(
-            f"{path}: truncated while reading {what} at offset "
-            f"{f.tell() - len(b)} (wanted {n} bytes, got {len(b)})"
-        )
-    return b
-
 def select_index_range(
     entries: list[tuple[bytes, int]],
     data_size: int,
@@ -1506,33 +1487,43 @@ def select_index_range(
     return (lo, byte_start, byte_end)
 
 
+def _index_entries(buf: bytes, mc: bool) -> Iterator[tuple]:
+    """``(key, Data.db offset, entry end in buf)`` for each whole Index.db
+    entry at the head of ``buf``, up to the first one it cuts short."""
+    pos, n = 0, len(buf)
+    while pos < n:
+        if mc:
+            try:
+                klen, p = _read_uvint_buf(buf, pos)
+            except CorruptSSTableError:
+                if n - pos < 10:  # a vint cut short
+                    return
+                raise
+        elif pos + 2 <= n:
+            (klen,) = _U16.unpack_from(buf, pos)
+            p = pos + 2
+        else:
+            return
+        pos = p + klen + 8
+        if pos > n:
+            return
+        yield buf[p:p + klen], _I64.unpack_from(buf, pos - 8)[0], pos
+
+
 def _parse_index_entries(buf: bytes, gen: str, path: str,
                          base_off: int = 0) -> list[tuple[bytes, int]]:
-    """The ONE index-record parser (generation-dispatched framing),
-    shared by the full read and the summary-bounded window read so the
-    two planners can never disagree on the same bytes. Truncated
-    records raise :class:`CorruptSSTableError` naming the byte span."""
-    entries: list[tuple[bytes, int]] = []
-    pos = 0
-    try:
-        while pos < len(buf):
-            if gen == "mc":
-                klen, pos = _read_uvint_buf(buf, pos)
-            else:
-                (klen,) = struct.unpack_from(">H", buf, pos)
-                pos += 2
-            key = buf[pos:pos + klen]
-            if len(key) != klen:
-                raise struct.error("truncated key")
-            pos += klen
-            (off,) = struct.unpack_from(">q", buf, pos)
-            pos += 8
-            entries.append((key, off))
-    except struct.error as e:
+    """The ONE index-record parser (:func:`_index_entries`), shared by
+    the full read and the summary-bounded window read so the two planners
+    can never disagree on the same bytes. Truncated records raise
+    :class:`CorruptSSTableError` naming the byte span."""
+    entries, end = [], 0
+    for key, off, end in _index_entries(buf, gen == "mc"):
+        entries.append((key, off))
+    if end != len(buf):
         raise CorruptSSTableError(
             f"{path}: malformed index bytes [{base_off}, "
-            f"{base_off + len(buf)}) ({e})"
-        ) from None
+            f"{base_off + len(buf)}) (the entry at {base_off + end} is "
+            "cut short)")
     return entries
 
 
@@ -1546,50 +1537,10 @@ def read_index(index_path: str) -> list[tuple[bytes, int]]:
     return _parse_index_entries(buf, gen, index_path)
 
 
-def _framing(f, gen: str, data_path: str):
-    """Per-generation length/value readers over an open data stream —
-    ``(rlen, rval, rlen_or_eof)`` — shared by the full-range scan and the
-    column-index slice reader so the two decode paths cannot drift."""
-    if gen == "mc":
-        def rlen(what):
-            return _read_uvint(f, data_path, what)
-        rval = rlen
-
-        def rlen_or_eof():
-            b0 = f.read(1)
-            if not b0:
-                return None
-            val, shift, c = b0[0] & 0x7F, 7, b0[0]
-            while c & 0x80:
-                c = _must_read(f, 1, data_path, "partition-key vint")[0]
-                val |= (c & 0x7F) << shift
-                shift += 7
-                if shift > 63:
-                    raise CorruptSSTableError(
-                        f"{data_path}: runaway partition-key vint")
-            return val
-    else:
-        def rlen(what):
-            return struct.unpack(
-                ">H", _must_read(f, 2, data_path, what))[0]
-
-        def rval(what):
-            return struct.unpack(
-                ">i", _must_read(f, 4, data_path, what))[0]
-
-        def rlen_or_eof():
-            hdr = f.read(2)
-            if len(hdr) < 2:
-                return None
-            return struct.unpack(">H", hdr)[0]
-    return rlen, rval, rlen_or_eof
-
-
 def _utf8(raw: bytes, data_path: str, part_off: int, what: str) -> str:
     """A string field of :data:`SSTABLE_SCHEMA`. Bytes that are not UTF-8
     raise a ValueError naming the file, the partition's offset and the
-    field (the byte-level rewrites never decode, so they carry any
-    bytes)."""
+    field (the rewrites never decode, so they carry any bytes)."""
     try:
         return raw.decode("utf-8")
     except UnicodeDecodeError as e:
@@ -1600,102 +1551,42 @@ def _utf8(raw: bytes, data_path: str, part_off: int, what: str) -> str:
 
 def scan_data_range(data_path: str, start: int, end: int) -> Iterator[tuple]:
     """Decode every partition whose record starts in ``[start, end)`` and
-    yield flat cell rows (the SSTABLE_SCHEMA tuple shape). Seeks once,
-    then reads forward — a task never touches bytes outside its split
-    except to finish the final partition it started. A file truncated
-    mid-record fails with a descriptive CorruptSSTableError (quarantine
-    the file, don't emit partial partitions) rather than a bare struct
-    error; a key, cell name, value or range-tombstone bound that is not
-    UTF-8 fails with a ValueError naming the file, the partition's
-    offset and the field (:func:`_utf8`)."""
-    gen = _table_generation(os.path.dirname(data_path))
-    with _open_data(data_path) as f:
-        rlen, rval, rlen_or_eof = _framing(f, gen, data_path)
-        f.seek(start)
-        while (part_off := f.tell()) < end:
-            klen = rlen_or_eof()
-            if klen is None:
-                return
-            key = _must_read(f, klen, data_path, "partition key")
-            ldt, mfda = struct.unpack(
-                ">iq", _must_read(f, 12, data_path, "partition header"))
-            pk = _utf8(key, data_path, part_off, "partition key")
-            if ldt != LIVE_LOCAL_DELETION or mfda != LIVE_MARKED_FOR_DELETE:
-                # partition-level deletion: surface it as its own row and
-                # keep decoding the partition's cells — Cassandra keeps
-                # both (cells newer than markedForDeleteAt stay live); the
-                # TTL remover PRESERVES deletions verbatim, purging is the
-                # compactor's job (operators/compact.py)
-                yield (pk, None, "partition_tombstone", None, int(ldt),
-                       mfda, None)
-            while True:
-                nlen = rlen("cell-name length")
-                if nlen == 0:
-                    break
-                name = _utf8(_must_read(f, nlen, data_path, "cell name"),
-                             data_path, part_off, "cell name")
-                yield _decode_cell_body(f, rlen, rval, pk, name, data_path,
-                                        part_off)
+    yield flat cell rows (the SSTABLE_SCHEMA tuple shape) in file order:
+    byte atoms (:func:`_partition_records`, :func:`_parse_partition`)
+    decoded to strings at this edge (:func:`_cell_row`). A record that is
+    truncated, malformed or does not fill its index span fails with a
+    CorruptSSTableError naming the file and the partition's offset
+    (quarantine the file, don't emit partial partitions); a key, cell
+    name, value or range-tombstone bound that is not UTF-8 fails with a
+    ValueError naming the file, the offset and the field (:func:`_utf8`)."""
+    for off, _, (key, deletion, cells) in _partition_records(
+            data_path, start, end, _parse_partition):
+        pk = _utf8(key, data_path, off, "partition key")
+        if deletion is not None:
+            # a partition deletion is its own row, before the cells it
+            # does not shadow: the TTL remover preserves it verbatim
+            yield (pk, None, "partition_tombstone", None, *deletion, None)
+        for cell in cells:
+            yield _cell_row(pk, cell, data_path, off)
 
 
-def _decode_cell_body(f, rlen, rval, pk: str, name: str,
-                      data_path: str, part_off: int) -> tuple:
-    """Decode one cell body (mask byte onward) into its SSTABLE_SCHEMA
-    row. Atom dispatch mirrors the reference's order: range tombstone
-    first (NoTTLSerializer.java:31), then the cell masks
-    (NoTTLColumnSerializer.java:26-49). Shared by the full scan and the
-    column-index slice reader; ``part_off`` is where the partition's
-    record (or, for the slice reader, its decode) starts, for
-    :func:`_utf8`'s error."""
-    (mask,) = struct.unpack(
-        ">B", _must_read(f, 1, data_path, "cell mask"))
-    if mask & RANGE_TOMBSTONE_MASK:
-        elen = rlen("RT end length")
-        rt_end = _utf8(_must_read(f, elen, data_path, "RT end bound"),
-                       data_path, part_off, "RT end bound")
-        ldt, mfda = struct.unpack(
-            ">iq", _must_read(f, 12, data_path, "RT deletion"))
-        return (pk, name, "range_tombstone", None, int(ldt), mfda, rt_end)
-    elif mask & COUNTER_MASK:
-        tsd, wt = struct.unpack(
-            ">qq", _must_read(f, 16, data_path, "counter-cell body"))
-        vlen = rval("value length")
-        value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "counter", None, tsd, wt,
-                _utf8(value, data_path, part_off, "cell value"))
-    elif mask & COUNTER_UPDATE_MASK:
-        (wt,) = struct.unpack(
-            ">q", _must_read(f, 8, data_path, "counter-update body"))
-        vlen = rval("value length")
-        value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "counter_update", None, None, wt,
-                _utf8(value, data_path, part_off, "cell value"))
-    elif mask & EXPIRATION_MASK:
-        ttl, exp, wt = struct.unpack(
-            ">iiq", _must_read(f, 16, data_path, "expiring-cell body"))
-        vlen = rval("value length")
-        value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "expiring", ttl, exp, wt,
-                _utf8(value, data_path, part_off, "cell value"))
-    elif mask & DELETION_MASK:
-        (wt,) = struct.unpack(
-            ">q", _must_read(f, 8, data_path, "tombstone writetime"))
-        vlen = rval("value length")
-        (cell_ldt,) = struct.unpack(
-            ">i", _must_read(f, vlen, data_path, "tombstone body"))
-        return (pk, name, "tombstone", None, int(cell_ldt), wt, None)
-    elif mask == 0:
-        (wt,) = struct.unpack(
-            ">q", _must_read(f, 8, data_path, "cell writetime"))
-        vlen = rval("value length")
-        value = _must_read(f, vlen, data_path, "cell value")
-        return (pk, name, "normal", None, None, wt,
-                _utf8(value, data_path, part_off, "cell value"))
-    else:
-        raise ValueError(
-            f"cell mask 0x{mask:02x} is not a recognized "
-            "simple/counter/range-tombstone atom"
-        )
+def _cell_row(pk: str, cell: tuple, data_path: str, off: int) -> tuple:
+    """One parsed cell as its SSTABLE_SCHEMA row, its byte fields decoded
+    by :func:`_utf8` (``off``: the offset its error names)."""
+    name, mask, ttl, exp, wt, val = cell
+    name = _utf8(name, data_path, off, "cell name")
+    if mask == RANGE_TOMBSTONE_MASK:
+        return (pk, name, "range_tombstone", None, exp, wt,
+                _utf8(val, data_path, off, "RT end bound"))
+    if mask == DELETION_MASK:
+        return (pk, name, "tombstone", None, _I32.unpack(val)[0], wt, None)
+    val = _utf8(val, data_path, off, "cell value")
+    if mask == EXPIRATION_MASK:
+        return (pk, name, "expiring", ttl, exp, wt, val)
+    if mask == COUNTER_MASK:
+        return (pk, name, "counter", None, exp, wt, val)
+    return (pk, name, "counter_update" if mask else "normal", None, None,
+            wt, val)
 
 
 # ---------------------------------------------------------------------------
@@ -2157,37 +2048,43 @@ def _split_specs(path: str, num_splits: int) -> list[tuple]:
     ]
 
 
-def _split_offsets(table_dir: str, start: int, end: int) -> list[int]:
-    """Data.db offsets of the partitions that start in ``[start, end)``,
-    parsed from the Index.db window that Summary.db bounds (the whole
-    index when the table has no summary)."""
+def _split_offsets(table_dir: str, start: int, end: int) -> Iterator[int]:
+    """The Data.db offsets of the partitions that start in ``[start,
+    end)``, then where the last one ends (the next entry's offset, else
+    the data size), walking Index.db from the Summary.db sample at or
+    before ``start`` in bounded memory. An entry at or past the end of
+    Data.db raises (:func:`_check_index_in_data`)."""
     import contextlib
 
-    ix_lo, ix_hi = 0, None
+    ix_lo = 0
     try:
         with contextlib.closing(_iter_summary(table_dir)) as samples:
             for _, ix_off, data_off in samples:
-                if data_off <= start:
-                    ix_lo = ix_off
-                if data_off >= end:
-                    ix_hi = ix_off
+                if data_off > start:
                     break
+                ix_lo = ix_off
     except FileNotFoundError:
         pass
-    index_path = os.path.join(table_dir, "Index.db")
-    with open(index_path, "rb") as f:
-        f.seek(ix_lo)
-        buf = f.read() if ix_hi is None else f.read(ix_hi - ix_lo)
-    offsets = [off for _, off in _parse_index_entries(
-        buf, _table_generation(table_dir), index_path, base_off=ix_lo)]
-    if offsets:
-        _check_index_in_data(table_dir, offsets[-1], _data_size(table_dir))
-    return [off for off in offsets if start <= off < end]
+    size = _data_size(table_dir)
+    inside = False
+    for _, _, off in _iter_index_with_offsets(table_dir, ix_lo):
+        _check_index_in_data(table_dir, off, size)
+        if off >= end:
+            if inside:
+                yield off
+            return
+        if off >= start:
+            inside = True
+            yield off
+    if inside:
+        yield size
 
 
 def _canonical_mask(mask: int) -> int | None:
-    """The atom a mask byte decodes as, in :func:`_decode_cell_body`'s
-    dispatch order, as its one-bit mask (``None``: not an atom)."""
+    """The atom a mask byte decodes as, in :func:`_parse_partition`'s
+    dispatch order (the reference's: range tombstone, counter, counter
+    update, expiring, deleted), as its one-bit mask (``None``: not an
+    atom)."""
     for bit in (RANGE_TOMBSTONE_MASK, COUNTER_MASK, COUNTER_UPDATE_MASK,
                 EXPIRATION_MASK, DELETION_MASK):
         if mask & bit:
@@ -2227,6 +2124,111 @@ def _mc_to_v1(buf: bytes) -> bytes:
         vlen, p = _read_uvint_buf(buf, p + width)
         out += _U32.pack(vlen) + buf[p:p + vlen]
         p += vlen
+
+
+def _parse_partition(buf: bytes) -> tuple:
+    """Parse one ``v1`` partition record, the whole of ``buf``, into byte
+    atoms ``(key, (ldt, mfda) | None, cells)``, each cell in
+    :func:`write_sstable`'s form with a canonical mask (a range tombstone
+    ``(start, mask, 0, ldt, mfda, end)``, unused slots 0), so
+    :func:`_encode_partition` of it gives ``buf`` back. Raises as
+    :func:`_strip_partition` does: :class:`CorruptSSTableError` on an
+    unknown mask, a tombstone body that is not 4 bytes or a record that
+    does not end at the end of ``buf``, ``struct.error`` on one cut
+    short."""
+    unpack_u16 = _U16.unpack_from
+    (klen,) = unpack_u16(buf, 0)
+    pos = 2 + klen
+    ldt, mfda = _HEADER.unpack_from(buf, pos)
+    pos += 12
+    cells: list[tuple] = []
+    add = cells.append
+    while True:
+        (nlen,) = unpack_u16(buf, pos)
+        if not nlen:
+            pos += 2
+            break
+        at = pos + 2 + nlen  # the mask byte
+        name = buf[pos + 2:at]
+        canon = _CANONICAL_MASK[buf[at]]
+        if canon == EXPIRATION_MASK:
+            ttl, exp, wt, vlen = _EXPIRING_BODY.unpack_from(buf, at + 1)
+            pos = at + 21
+        elif canon == RANGE_TOMBSTONE_MASK:
+            (elen,) = unpack_u16(buf, at + 1)
+            pos = at + 3 + elen
+            exp, wt = _HEADER.unpack_from(buf, pos)
+            add((name, canon, 0, exp, wt, buf[at + 3:pos]))
+            pos += 12
+            continue
+        elif canon == COUNTER_MASK:
+            exp, wt, vlen = _COUNTER_BODY.unpack_from(buf, at + 1)
+            ttl = 0
+            pos = at + 21
+        elif canon is None:
+            raise CorruptSSTableError(
+                f"cell mask 0x{buf[at]:02x} is not a recognized "
+                "simple/counter/range-tombstone atom")
+        else:
+            wt, vlen = _CELL_BODY.unpack_from(buf, at + 1)
+            if canon == DELETION_MASK and vlen != 4:
+                raise CorruptSSTableError(
+                    f"cell tombstone body is {vlen} bytes, not 4")
+            ttl = exp = 0
+            pos = at + 13
+        add((name, canon, ttl, exp, wt, buf[pos:pos + vlen]))
+        pos += vlen
+    if pos != len(buf):
+        raise CorruptSSTableError(
+            f"partition ends at byte {pos} of its {len(buf)}-byte index "
+            "span")
+    deleted = ldt != LIVE_LOCAL_DELETION or mfda != LIVE_MARKED_FOR_DELETE
+    return buf[2:2 + klen], (ldt, mfda) if deleted else None, cells
+
+
+def _malformed(data_path: str, lo: int, hi: int,
+               e: Exception) -> CorruptSSTableError:
+    """The error for the partition at ``lo`` whose span ends at ``hi``."""
+    if isinstance(e, (struct.error, IndexError)):
+        e = f"the record runs past its span, truncated ({e})"
+    return CorruptSSTableError(
+        f"{data_path}: malformed partition at offset {lo} (its index span "
+        f"ends at {hi}): {e}")
+
+
+def _partition_records(data_path: str, start: int, end: int, parse):
+    """``(offset, span end, parse(record))`` for each partition that
+    starts in ``[start, end)`` of ``data_path``, in file order, each read
+    at its Index.db span (:func:`_split_offsets`, :func:`_open_data`) and
+    parsed in ``v1`` framing (``mc`` re-framed by :func:`_mc_to_v1`). A
+    span cut short or a record ``parse`` rejects raises
+    :class:`CorruptSSTableError` naming ``data_path`` and the offset."""
+    table_dir = os.path.dirname(data_path)
+    mc = _table_generation(table_dir) == "mc"
+    offsets = _split_offsets(table_dir, start, end)
+    lo = next(offsets, None)
+    if lo is None:
+        return
+    with _open_data(data_path) as src:
+        src.seek(lo)
+        for hi in offsets:
+            buf = src.read(hi - lo)
+            try:
+                if len(buf) != hi - lo:
+                    raise CorruptSSTableError(
+                        f"truncated: {len(buf)} of {hi - lo} bytes")
+                parsed = parse(_mc_to_v1(buf) if mc else buf)
+            except (struct.error, IndexError, CorruptSSTableError) as e:
+                raise _malformed(data_path, lo, hi, e) from None
+            yield lo, hi, parsed
+            lo = hi
+
+
+def _table_partitions(table_dir: str) -> Iterator[tuple]:
+    """Every partition of one table, parsed (:func:`_parse_partition`)."""
+    return (part for _, _, part in _partition_records(
+        os.path.join(table_dir, "Data.db"), 0, _data_size(table_dir),
+        _parse_partition))
 
 
 def _strip_partition(buf: bytes) -> tuple:
@@ -2307,44 +2309,28 @@ def _strip_partition(buf: bytes) -> tuple:
 
 def _strip_split(shard_dir: str, data_path: str, start: int,
                  end: int) -> tuple[int, int]:
-    """The strip task: transcode the partitions that start in ``[start,
-    end)`` of ``data_path``, one at a time at its Index.db offsets, and
-    add each to a :class:`_TableWriter` at ``shard_dir`` (``v1``,
-    uncompressed). Atoms are never decoded to text
-    (:func:`_strip_partition`); ``mc`` records are re-framed first and
-    compressed sources read through :func:`_open_data`. Output is
-    byte-identical to :func:`_encode_rows` over the stripped
-    :func:`scan_data_range` rows when each partition's cells are in name
-    order, as every writer leaves them (a live partition with no atoms
-    is dropped there too). A record that is truncated, malformed, does
-    not end at the next index offset, or whose key does not sort after
-    the one before raises :class:`CorruptSSTableError` naming
+    """The strip task: transcode (:func:`_strip_partition`, no atom is
+    decoded) each partition that starts in ``[start, end)`` of
+    ``data_path`` as :func:`_partition_records` reads it, into a ``v1``
+    table at ``shard_dir``: byte-identical to :func:`_encode_rows` over
+    the stripped scan rows when cells are in name order, as every writer
+    leaves them. A malformed record, or a key that does not sort after
+    the one before, raises :class:`CorruptSSTableError` naming
     ``data_path`` and its offset. Returns ``(n_partitions, n_cells)``,
     partition deletions counted as cells like the scan's rows."""
-    table_dir = os.path.dirname(data_path)
-    mc = _table_generation(table_dir) == "mc"
-    offsets = _split_offsets(table_dir, start, end) + [end]
     n_rows = 0
-    with _open_data(data_path) as src, _TableWriter(shard_dir) as w:
-        src.seek(offsets[0])
-        for lo, hi in zip(offsets, offsets[1:]):
-            buf = src.read(hi - lo)
+    with _TableWriter(shard_dir) as w:
+        for lo, hi, (out, key, mfda, wts, blocks) in _partition_records(
+                data_path, start, end, _strip_partition):
+            n_atoms = len(wts)
+            if mfda is None and not n_atoms:
+                continue  # the row path never sees a live, empty one
+            if mfda is not None:
+                wts.append(mfda)
             try:
-                if len(buf) != hi - lo:
-                    raise CorruptSSTableError(
-                        f"truncated: {len(buf)} of {hi - lo} bytes")
-                out, key, mfda, wts, blocks = _strip_partition(
-                    _mc_to_v1(buf) if mc else buf)
-                n_atoms = len(wts)
-                if mfda is None and not n_atoms:
-                    continue  # the row path never sees a live, empty one
-                if mfda is not None:
-                    wts.append(mfda)
                 w.add(key, out, n_atoms, wts, blocks)
-            except (struct.error, IndexError, CorruptSSTableError) as e:
-                raise CorruptSSTableError(
-                    f"{data_path}: malformed partition at offset {lo} "
-                    f"(its index span ends at {hi}): {e}") from None
+            except CorruptSSTableError as e:
+                raise _malformed(data_path, lo, hi, e) from None
             n_rows += n_atoms + (mfda is not None)
     return w.n_partitions, n_rows
 
@@ -2374,51 +2360,48 @@ def rewrite_stripped(spark, path: str, out_dir: str,
                            _strip_split, ("n_partitions", "n_cells"))
 
 
-def _resolve_atoms(rows: Iterable[tuple], threshold: int) -> list[tuple]:
-    """Task-local application of compact_atoms' ONE shadowing rule —
-    the single Python implementation shared by the k-way merge and the
+def _resolve_atoms(parts: Iterable[tuple], threshold: int) -> list[tuple]:
+    """Task-local application of compact_atoms' ONE shadowing rule — the
+    single Python implementation shared by the k-way merge and the
     single-table GC rewrite so the two cannot drift from each other (or
     from the DataFrame plan: cross-plan equality is pinned in
     tests/test_sstable.py and the spec-model property tests).
 
-    ``rows`` are decoded :data:`SSTABLE_SCHEMA` rows; they are grouped
-    into ``pd_wt[pk] -> max partition-delete writetime``,
-    ``rts[pk][(start, end)] -> max range-tombstone writetime`` and
-    ``atoms[(pk, cell)] -> [(writetime, kind, value), …]``. Returns
-    resolved ``(pk, cell, writetime, value, status)`` rows."""
-    pd_wt: dict[str, int] = {}
-    rts: dict[str, dict[tuple, int]] = {}
-    atoms: dict[tuple, list] = {}
-    for pk, cell, kind, _, _, wt, val in rows:
-        wt = int(wt)
-        if kind == "partition_tombstone":
-            pd_wt[pk] = max(pd_wt.get(pk, wt), wt)
-        elif kind == "range_tombstone":
-            d_rt = rts.setdefault(pk, {})
-            d_rt[(cell, val)] = max(d_rt.get((cell, val), wt), wt)
-        else:
-            atoms.setdefault((pk, cell), []).append((wt, kind, val))
+    ``parts`` are one key's parsed partitions (:func:`_parse_partition`),
+    one per generation in generation order. Atoms stay bytes: UTF-8 byte
+    order is code-point order, so range coverage and the arg-max
+    tie-break match the string rule on UTF-8. Returns resolved ``(cell,
+    writetime, value, status)`` rows."""
+    pd_wt = None
+    rts: dict[tuple, int] = {}
+    atoms: dict[bytes, list] = {}
+    for _, deletion, cells in parts:
+        if deletion is not None:
+            pd_wt = deletion[1] if pd_wt is None else max(pd_wt, deletion[1])
+        for name, mask, _, _, wt, val in cells:
+            if mask == RANGE_TOMBSTONE_MASK:
+                rts[(name, val)] = max(rts.get((name, val), wt), wt)
+            else:
+                atoms.setdefault(name, []).append((wt, mask, val))
     out: list[tuple] = []
-    for (pk, cell), versions in atoms.items():
-        pw = pd_wt.get(pk)
-        covering = [
-            m for (s, e), m in rts.get(pk, {}).items()
-            if s <= cell <= e
-        ]
-        surv = [
-            (wt, kind, val) for wt, kind, val in versions
-            if (pw is None or wt > pw)
-            and not any(wt <= m for m in covering)
-        ]
+    for cell, versions in atoms.items():
+        # a version survives when it is newer than the partition delete
+        # and every range tombstone covering its cell
+        floor = max((m for (s, e), m in rts.items() if s <= cell <= e),
+                    default=pd_wt)
+        if pd_wt is not None and floor < pd_wt:
+            floor = pd_wt
+        surv = (versions if floor is None
+                else [v for v in versions if v[0] > floor])
         if not surv:
             continue
         shards = [
-            (wt, int(val)) for wt, kind, val in surv
-            if kind in ("counter", "counter_update")
+            (wt, int(val)) for wt, mask, val in surv
+            if mask in (COUNTER_MASK, COUNTER_UPDATE_MASK)
         ]
         tomb_wt = max(
-            (wt for wt, kind, _ in surv
-             if kind == "tombstone"), default=None)
+            (wt for wt, mask, _ in surv if mask == DELETION_MASK),
+            default=None)
         if shards:
             live = [
                 (wt, v) for wt, v in shards
@@ -2426,33 +2409,25 @@ def _resolve_atoms(rows: Iterable[tuple], threshold: int) -> list[tuple]:
             ]
             if live:
                 out.append((
-                    pk, cell, max(wt for wt, _ in live),
-                    str(sum(v for _, v in live)),
+                    cell, max(wt for wt, _ in live),
+                    str(sum(v for _, v in live)).encode(),
                     "counter_live"))
             elif tomb_wt > threshold:
-                out.append((pk, cell, tomb_wt, None,
-                            "tombstone_retained"))
+                out.append((cell, tomb_wt, None, "tombstone_retained"))
             continue
-        wt, kind, val = max(
-            surv,
-            key=lambda a: (a[0], a[1] == "tombstone",
-                           a[2] if a[2] is not None else ""))
-        if kind == "tombstone":
+        # LWW; a tombstone wins a writetime tie, then the larger value
+        wt, mask, val = surv[0] if len(surv) == 1 else max(
+            surv, key=lambda a: (a[0], a[1] == DELETION_MASK, a[2]))
+        if mask == DELETION_MASK:
             if wt > threshold:
-                out.append((pk, cell, wt, None,
-                            "tombstone_retained"))
+                out.append((cell, wt, None, "tombstone_retained"))
         else:
-            out.append((pk, cell, wt, val, "live"))
-    for pk, spans in rts.items():
-        pw = pd_wt.get(pk)
-        for (s, e), m in spans.items():
-            if (pw is None or m > pw) and m > threshold:
-                out.append((pk, s, m, e,
-                            "range_tombstone_retained"))
-    for pk, pwt in pd_wt.items():
-        if pwt > threshold:
-            out.append((pk, None, pwt, None,
-                        "partition_tombstone_retained"))
+            out.append((cell, wt, val, "live"))
+    for (s, e), m in rts.items():
+        if (pd_wt is None or m > pd_wt) and m > threshold:
+            out.append((s, m, e, "range_tombstone_retained"))
+    if pd_wt is not None and pd_wt > threshold:
+        out.append((None, pd_wt, None, "partition_tombstone_retained"))
     return out
 
 
@@ -2510,15 +2485,6 @@ def _merge_ranges(dirs: list[str], num_splits: int,
     return list(zip(bounds, bounds[1:]))
 
 
-def _scan_partitions(data_path: str, start: int,
-                     end: int) -> Iterator[tuple[bytes, list]]:
-    """:func:`scan_data_range` one partition at a time: ``(key bytes, the
-    partition's rows)``."""
-    for pk, rows in itertools.groupby(scan_data_range(data_path, start, end),
-                                      key=lambda r: r[0]):
-        yield pk.encode(), list(rows)
-
-
 def _key_byte_range(table_dir: str, key_start: bytes | None,
                     key_stop: bytes | None) -> tuple[int, int]:
     """Data.db byte range of the partitions with ``key_start <= key <
@@ -2541,20 +2507,39 @@ def _key_byte_range(table_dir: str, key_start: bytes | None,
 def _merge_range(dirs: list[str], ks: str | None, kp: str | None,
                  threshold: int) -> Iterator[tuple[bytes, list]]:
     """One merge task as a streaming k-way merge: the hex key range
-    ``[ks, kp)``'s partitions from EVERY generation (:func:`_key_byte_range`)
-    merged on key bytes by ``heapq.merge`` (stable: a key's rows arrive in
-    generation order), each key's rows resolved by :func:`_resolve_atoms`.
-    Yields ``(key, resolved (pk, cell, writetime, value, status) rows)``
-    in key order, holding one partition per generation at a time."""
+    ``[ks, kp)``'s parsed partitions from EVERY generation
+    (:func:`_key_byte_range`) merged on key bytes by ``heapq.merge``
+    (stable: a key's partitions arrive in generation order), each key
+    resolved by :func:`_resolve_atoms`. Yields ``(key, resolved rows)`` in
+    key order, holding one partition per generation at a time."""
     start = bytes.fromhex(ks) if ks is not None else None
     stop = bytes.fromhex(kp) if kp is not None else None
+    key = operator.itemgetter(0)
+    merged = heapq.merge(*(
+        (part for _, _, part in _partition_records(
+            os.path.join(d, "Data.db"), *_key_byte_range(d, start, stop),
+            _parse_partition))
+        for d in dirs), key=key)
+    for k, group in itertools.groupby(merged, key=key):
+        yield k, _resolve_atoms(group, threshold)
 
-    merged = heapq.merge(*(_scan_partitions(os.path.join(d, "Data.db"),
-                                            *_key_byte_range(d, start, stop))
-                           for d in dirs), key=lambda p: p[0])
-    for key, group in itertools.groupby(merged, key=lambda p: p[0]):
-        yield key, _resolve_atoms((r for _, rows in group for r in rows),
-                                  threshold)
+
+def _merged_row(key: bytes, cell, wt: int, val, status: str) -> tuple:
+    """One resolved row in :func:`merge_compact_sorted`'s string columns;
+    a field that is not UTF-8 raises a ValueError naming key and field."""
+    what = "partition key"
+    try:
+        pk = key.decode("utf-8")
+        what = "cell name"
+        cell = None if cell is None else cell.decode("utf-8")
+        what = ("RT end bound" if status == "range_tombstone_retained"
+                else "cell value")
+        val = None if val is None else val.decode("utf-8")
+    except UnicodeDecodeError as e:
+        raise ValueError(
+            f"merged partition with key 0x{key.hex()}: {what} is not "
+            f"UTF-8 ({e})") from None
+    return pk, cell, wt, val, status
 
 
 def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
@@ -2599,8 +2584,9 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     def _merge(batches):
         import pandas as pd
 
-        rows = (row for pdf in batches for ks, kp in zip(pdf["ks"], pdf["kp"])
-                for _, resolved in _merge_range(dirs, ks, kp, threshold)
+        rows = (_merged_row(key, *row)
+                for pdf in batches for ks, kp in zip(pdf["ks"], pdf["kp"])
+                for key, resolved in _merge_range(dirs, ks, kp, threshold)
                 for row in resolved)
         while chunk := list(itertools.islice(rows, batch if batch > 0
                                              else None)):
@@ -2796,34 +2782,6 @@ def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
     raise ValueError(f"cell kind {kind!r} is not a recognized atom kind")
 
 
-#: merge status -> the atom kind it re-encodes as
-_STATUS_KIND = {
-    "live": "normal",
-    "counter_live": "counter",
-    "tombstone_retained": "tombstone",
-    "range_tombstone_retained": "range_tombstone",
-    "partition_tombstone_retained": "partition_tombstone",
-}
-
-
-def _status_to_row(pk, cell, wt, val, status) -> tuple:
-    """SSTABLE_SCHEMA row for one resolved merge row — the ONE atom
-    reconstruction behind :func:`compact_rewrite` and
-    :func:`gc_rewrite_single` (its DuckDB mirror is
-    :func:`compact_rewrite_oracle_sql`). Deterministic and LOSSY EXACTLY
-    WHERE COMPACTION IS: surviving live cells re-encode as ``normal``
-    (this engine compacts post-strip corpora), counters with
-    ``timestampOfLastDelete = 0`` (shard history is consumed by the
-    additive merge), and retained deletion atoms re-derive their
-    localDeletionTime second from their own writetime."""
-    kind = _STATUS_KIND.get(status)
-    if kind is None:
-        raise ValueError(f"unexpected resolved status {status!r}")
-    exp = (None if kind == "normal" else 0 if kind == "counter"
-           else int(wt) // 1_000_000)
-    return (pk, cell, kind, None, exp, wt, val)
-
-
 def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
     """One partition's :data:`SSTABLE_SCHEMA` rows in :func:`write_sstable`'s
     form: ``(cells sorted by name, header deletion | None)``, a
@@ -2839,13 +2797,42 @@ def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
     return cells, deletion
 
 
+def _resolved_partition(resolved: Iterable[tuple]) -> tuple[list,
+                                                            tuple | None]:
+    """One key's resolved rows (:func:`_resolve_atoms`) in
+    :func:`write_sstable`'s form, ``(cells sorted by name, deletion |
+    None)`` — the ONE atom reconstruction behind the GC and compaction
+    rewrites (DuckDB mirror: :func:`compact_rewrite_oracle_sql`). LOSSY
+    EXACTLY WHERE COMPACTION IS: live cells re-encode as normal cells,
+    counters with ``timestampOfLastDelete = 0``, and retained deletions
+    take their writetime's second, saturated (:func:`_ldt_s`), as
+    localDeletionTime."""
+    cells, deletion = [], None
+    for cell, wt, val, status in resolved:
+        if status == "live":
+            cells.append((cell, 0, 0, 0, wt, val))
+        elif status == "counter_live":
+            cells.append((cell, COUNTER_MASK, 0, 0, wt, val))
+        elif status == "tombstone_retained":
+            cells.append((cell, DELETION_MASK, 0, 0, wt,
+                          _I32.pack(_ldt_s(wt // 1_000_000))))
+        elif status == "range_tombstone_retained":
+            cells.append((cell, RANGE_TOMBSTONE_MASK, 0,
+                          _ldt_s(wt // 1_000_000), wt, val))
+        elif status == "partition_tombstone_retained":
+            deletion = (_ldt_s(wt // 1_000_000), wt)
+        else:
+            raise ValueError(f"unexpected resolved status {status!r}")
+    cells.sort(key=lambda c: c[0])
+    return cells, deletion
+
+
 def _add_resolved(w: _TableWriter, key: bytes, resolved: list) -> int:
-    """Re-encode one key's resolved rows (:func:`_status_to_row`) and add
-    the partition to ``w`` (none: no partition). Returns the row count."""
-    rows = [_status_to_row(*r) for r in resolved]
-    if rows:
-        w.add(key, *_encode_partition(key, *_partition_cells(rows)))
-    return len(rows)
+    """Add one key's resolved rows to ``w`` as a partition (none: no
+    partition). Returns the row count."""
+    if resolved:
+        w.add(key, *_encode_partition(key, *_resolved_partition(resolved)))
+    return len(resolved)
 
 
 def _encode_rows(rows: Iterable[tuple], out_dir: str,
@@ -2868,14 +2855,17 @@ def _encode_rows(rows: Iterable[tuple], out_dir: str,
 def _gc_split(shard_dir: str, data_path: str, start: int, end: int,
               threshold: int) -> tuple[int, int, int]:
     """The GC task: each partition that starts in ``[start, end)`` of
-    ``data_path``, one at a time, resolved on its own
+    ``data_path``, parsed one at a time, resolved on its own
     (:func:`_resolve_atoms`) and added to one table at ``shard_dir``.
     Returns ``(n_partitions, n_atoms_in, n_atoms_out)``."""
     n_in = n_out = 0
     with _TableWriter(shard_dir) as w:
-        for key, rows in _scan_partitions(data_path, start, end):
-            n_in += len(rows)
-            n_out += _add_resolved(w, key, _resolve_atoms(rows, threshold))
+        for _, _, part in _partition_records(data_path, start, end,
+                                             _parse_partition):
+            key, deletion, cells = part
+            n_in += len(cells) + (deletion is not None)
+            n_out += _add_resolved(w, key, _resolve_atoms((part,),
+                                                          threshold))
     return w.n_partitions, n_in, n_out
 
 
@@ -3549,8 +3539,10 @@ def compact_rewrite(spark, path: str, out_dir: str, *, gc_grace_us: int,
     ``spark``, or on a local process pool when ``spark`` is ``None``
     (:func:`_rewrite_shards`).
 
-    Atoms re-encode through :func:`_status_to_row`, the documented
-    lossy-where-compaction-is reconstruction. Scale: no cell byte
+    Atoms stay bytes from parse to encode, so any key, name or value
+    bytes carry through; they re-encode through
+    :func:`_resolved_partition`, the documented lossy-where-compaction-is
+    reconstruction. Scale: no cell byte
     crosses the network — the merge and the encode share one task.
     ``out_dir`` must be absent or empty. Returns one report row
     ``(shard, n_partitions, n_cells)`` per merge range."""
@@ -3566,7 +3558,9 @@ def compact_rewrite_oracle_sql(atoms_sql: str, *, gc_grace_us: int,
                                now_us: int) -> str:
     """DuckDB mirror of scanning :func:`compact_rewrite`'s output: the
     :func:`~..operators.compact.compact_atoms_oracle_sql` state mapped
-    through the same deterministic atom reconstruction."""
+    through the same deterministic atom reconstruction as
+    :func:`_resolved_partition` (status -> kind; retained deletions take
+    their writetime's second as localDeletionTime)."""
     from cassandra_ttl_remover_spark.operators.compact import (
         compact_atoms_oracle_sql,
     )
@@ -3768,7 +3762,8 @@ def droppable_census(spark, path: str, *, gc_grace_us: int,
     candidate selection (a table whose deletes are past gc_grace is
     pure reclaimable space; Cassandra picks single-table GC targets by
     exactly this ratio). Exact counts, not estimates, since this
-    engine's scan decodes the real atoms:
+    engine parses the real atoms (:func:`_parse_partition`; keys, names
+    and values of any bytes count):
 
     - ``n_atoms``: every decoded atom (cells + deletion atoms);
     - ``n_deletes``: deletion atoms of all three granularities;
@@ -3792,17 +3787,17 @@ def droppable_census(spark, path: str, *, gc_grace_us: int,
             rows = []
             for d in pdf["dir"]:
                 n = dels = drop = exp = 0
-                for r in scan_data_range(
-                        os.path.join(d, "Data.db"), 0, _data_size(d)):
-                    n += 1
-                    kind, expiration, wt = r[2], r[4], r[5]
-                    if kind in ("tombstone", "range_tombstone",
-                                "partition_tombstone"):
-                        dels += 1
-                        if int(wt) <= thr_us:
-                            drop += 1
-                    elif kind == "expiring" and int(expiration) <= thr_s:
-                        exp += 1
+                for _, deletion, cells in _table_partitions(d):
+                    if deletion is not None:  # a deletion atom too
+                        cells = [(0, DELETION_MASK, 0, 0, deletion[1], 0),
+                                 *cells]
+                    n += len(cells)
+                    for _, mask, _, expiration, wt, _ in cells:
+                        if mask in (DELETION_MASK, RANGE_TOMBSTONE_MASK):
+                            dels += 1
+                            drop += wt <= thr_us
+                        elif mask == EXPIRATION_MASK and expiration <= thr_s:
+                            exp += 1
                 rows.append((os.path.basename(d), n, dels, drop, exp))
             yield pd.DataFrame(
                 rows, columns=["generation", "n_atoms", "n_deletes",
@@ -3907,7 +3902,8 @@ def gc_rewrite_single(spark, path: str, out_dir: str, *,
     and re-encodes its partitions one at a time, so a task holds one
     partition (:func:`_gc_split`; a deletion atom lives in the partition
     it shadows), with the SAME :func:`_resolve_atoms` and
-    :func:`_status_to_row` as :func:`compact_rewrite`.
+    :func:`_resolved_partition` as :func:`compact_rewrite`, on byte atoms
+    (any key, name or value bytes carry through).
 
     Output layout is rewrite_stripped's (``out_dir/<generation>_shard=
     <split>``, all sidecars, digest-clean); a fully-purged split still

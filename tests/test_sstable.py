@@ -3,6 +3,7 @@ split planning, decode-subset enforcement, and the TTL-strip transform on
 the native format (the reference's core e2e —
 cassandra-2/.../NoTTLColumnSerializer.java:24-51 decode dispatch)."""
 
+import itertools
 import os
 import shutil
 import struct
@@ -746,8 +747,9 @@ def test_post_2038_deletion_seconds_saturate_not_crash(spark):
     wt_2100 = 4_102_444_800 * 1_000_000  # year 2100, epoch µs
 
     def status_cell(cell, val, status):
-        row = ss._status_to_row("k1", cell, wt_2100, val, status)
-        return ss._row_to_cell(*row[1:])
+        [cell], _ = ss._resolved_partition(
+            [(cell.encode(), wt_2100, val and val.encode(), status)])
+        return cell
 
     name, mask, ttl, exp, wt, val = status_cell(
         "c1", None, "tombstone_retained")
@@ -1594,7 +1596,7 @@ def test_data_cut_at_partition_boundary_fails_loud(spark, capsys):
         ss._split_specs(src, 4)
     assert names_both(str(e.value))
     with pytest.raises(ss.CorruptSSTableError) as e:
-        ss._split_offsets(src, 0, cut)
+        list(ss._split_offsets(src, 0, cut))
     assert names_both(str(e.value))
     with pytest.raises(ss.CorruptSSTableError) as e:
         ss.rewrite_stripped(spark, src, os.path.join(base, "out"))
@@ -1909,9 +1911,12 @@ def test_non_utf8_field_raises_error_naming_file_offset_and_field(spark,
                                                                   field):
     """The DataFrame scan's string columns take UTF-8 only: a key, cell
     name, value or range-tombstone bound that is not UTF-8 raises a
-    ValueError naming the Data.db, the partition's offset and the
-    field, through scan_data_range, _merge_range and gc_rewrite_single
-    (a Spark job and the local pool), not a bare UnicodeDecodeError."""
+    ValueError naming the Data.db, the partition's offset and the field
+    through scan_data_range, not a bare UnicodeDecodeError. GC and
+    compaction carry the bytes (a Spark job and the local pool: with
+    nothing to purge, every output file equals the input's), and
+    merge_compact_sorted, whose columns are strings, raises a ValueError
+    naming the partition key in hex and the field."""
     import re
 
     bad = b"\xff\xfe\x00\x01"
@@ -1940,15 +1945,280 @@ def test_non_utf8_field_raises_error_naming_file_offset_and_field(spark,
                     "is not UTF-8")
     with pytest.raises(ValueError, match=msg):
         list(ss.scan_data_range(data, 0, os.path.getsize(data)))
-    with pytest.raises(ValueError, match=msg):
-        list(ss._merge_range([src], None, None, 0))
-    kw = dict(gc_grace_us=0, now_us=wt, num_splits=1)
-    with pytest.raises(ValueError, match=msg):
-        ss.gc_rewrite_single(None, src, os.path.join(base, "pool"), **kw)
+    kw = dict(gc_grace_us=0, now_us=0, num_splits=1)
+    for out, rewrite in (("gc-pool", ss.gc_rewrite_single),
+                         ("compact-pool", ss.compact_rewrite),
+                         ("gc-spark", ss.gc_rewrite_single)):
+        out = os.path.join(base, out)
+        rewrite(spark if out.endswith("spark") else None, src, out, **kw)
+        [shard] = os.listdir(out)
+        for f in os.listdir(src):
+            with open(os.path.join(src, f), "rb") as a, \
+                    open(os.path.join(out, shard, f), "rb") as b:
+                assert a.read() == b.read(), (out, f)
     with pytest.raises(Exception) as e:
-        ss.gc_rewrite_single(spark, src, os.path.join(base, "spark"), **kw)
-    assert re.search(msg, str(e.value))
+        ss.merge_compact_sorted(spark, src, **kw).collect()
+    assert re.search(
+        re.escape(f"ValueError: merged partition with key 0x{key.hex()}: "
+                  f"{field} is not UTF-8"), str(e.value)), str(e.value)
     shutil.rmtree(base)
+
+
+def _splice_unindexed_partition(src: str) -> int:
+    """Splice a well-formed partition that Index.db does not list into
+    ``src``'s Data.db, after its second indexed partition, and shift the
+    later index offsets to match. Returns the offset of the indexed
+    partition whose span now holds the unindexed bytes."""
+    extra = src + "-extra"
+    ss.write_sstable([(b"k2", [(b"c", 0, 0, 0, 2, b"phantom")])], extra)
+    with open(os.path.join(extra, "Data.db"), "rb") as f:
+        record = f.read()
+    shutil.rmtree(extra)
+    data_path = os.path.join(src, "Data.db")
+    with open(data_path, "rb") as f:
+        data = f.read()
+    entries = ss.read_index(os.path.join(src, "Index.db"))
+    at = entries[2][1]
+    with open(data_path, "wb") as f:
+        f.write(data[:at] + record + data[at:])
+    with open(os.path.join(src, "Index.db"), "wb") as f:
+        for k, off in entries:
+            off += len(record) if off >= at else 0
+            f.write(struct.pack(">H", len(k)) + k + struct.pack(">q", off))
+    return entries[1][1]
+
+
+def test_unindexed_partition_fails_the_scan_naming_file_and_offset(spark):
+    """Bytes that Index.db does not list fail the scan as they fail the
+    strip: a well-formed partition spliced between two indexed ones
+    makes scan_data_range, scan_sstable and the strip raise
+    CorruptSSTableError naming the Data.db and the offset of the indexed
+    partition whose span holds it, instead of returning its rows."""
+    import re
+
+    base = _tmpdir()
+    src = os.path.join(base, "src")
+    ss.write_sstable(
+        [(k, [(b"c", 0, 0, 0, 1, b"v")]) for k in (b"k0", b"k1", b"k3")],
+        src)
+    off = _splice_unindexed_partition(src)
+    assert off > 0
+    data = os.path.join(src, "Data.db")
+    msg = re.escape(f"{data}: malformed partition at offset {off} ")
+    with pytest.raises(ss.CorruptSSTableError, match=msg):
+        list(ss.scan_data_range(data, 0, os.path.getsize(data)))
+    with pytest.raises(Exception) as e:
+        ss.scan_sstable(spark, src, num_splits=1).collect()
+    assert "CorruptSSTableError" in str(e.value)
+    assert re.search(msg, str(e.value))
+    _, _, start, end = ss._split_specs(src, 1)[0]
+    with pytest.raises(ss.CorruptSSTableError, match=msg):
+        ss._strip_split(os.path.join(base, "shard"), data, start, end)
+    shutil.rmtree(base)
+
+
+def test_deep_scrub_and_droppable_census_read_byte_atoms(spark):
+    """A valid table whose partition key is not UTF-8: the deep scrub
+    parses byte atoms, so index_ok and stats_ok hold and the cells are
+    counted, and droppable_census returns its counts."""
+    wt = 1_700_000_000_000_000
+    base = _tmpdir()
+    ss.write_sstable(
+        [(b"a0", [(b"c", 0, 0, 0, wt, b"v")]),
+         (b"\xff\xfe\x00", [
+             (b"a", ss.RANGE_TOMBSTONE_MASK, 0, 1_700_000_000, wt, b"b"),
+             (b"c", ss.DELETION_MASK, 0, 0, wt + 1,
+              struct.pack(">i", 1_700_000_000)),
+             (b"d", ss.EXPIRATION_MASK, 60, 1_699_999_999, wt, b"x")],
+          (1_700_000_000, wt - 1))],
+        os.path.join(base, "g1"))
+    [r] = ss.scrub_tables(spark, base, deep=True).collect()
+    assert r.index_ok and r.stats_ok
+    assert (r.n_partitions, r.n_cells) == (2, 4)
+    rows = ss.droppable_census(spark, base, gc_grace_us=0,
+                               now_us=wt).collect()
+    assert [tuple(r) for r in rows] == [("g1", 5, 3, 2, 1)]
+    shutil.rmtree(base)
+
+
+try:
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    _bname = st.binary(min_size=1, max_size=3)
+    _bwt = st.integers(1, 6).map(lambda s: s * 1_000_000)
+    _int32 = st.integers(-2**31, 2**31 - 1)
+
+    @st.composite
+    def _byte_generations(draw):
+        """1-3 generations ``{key: (cells, deletion | None)}`` whose keys,
+        cell names, values and range-tombstone bounds are arbitrary
+        bytes. A range tombstone's end is fixed by its start, so two
+        never share a start; cells are in name order, a cell before a
+        range tombstone of the same name."""
+        rt_end = draw(st.dictionaries(_bname, st.binary(max_size=3),
+                                      max_size=3))
+        gens = []
+        for _ in range(draw(st.integers(1, 3))):
+            parts = {}
+            keys = draw(st.lists(st.binary(min_size=1, max_size=4),
+                                 max_size=5, unique=True))
+            for key in keys:
+                cells = []
+                for name in draw(st.lists(_bname, max_size=4, unique=True)):
+                    kind = draw(st.sampled_from([
+                        0, ss.EXPIRATION_MASK, ss.DELETION_MASK,
+                        ss.COUNTER_MASK, ss.COUNTER_UPDATE_MASK]))
+                    wt = draw(_bwt)
+                    if kind == ss.DELETION_MASK:
+                        cells.append((name, kind, 0, 0, wt,
+                                      struct.pack(">i", draw(_int32))))
+                    elif kind in (ss.COUNTER_MASK, ss.COUNTER_UPDATE_MASK):
+                        tsd = draw(_int32) if kind == ss.COUNTER_MASK else 0
+                        cells.append((name, kind, 0, tsd, wt, str(
+                            draw(st.integers(-9, 99))).encode()))
+                    else:
+                        ttl, exp = ((draw(_int32), draw(_int32)) if kind
+                                    else (0, 0))
+                        cells.append((name, kind, ttl, exp, wt,
+                                      draw(st.binary(max_size=4))))
+                cells += [(s, ss.RANGE_TOMBSTONE_MASK, 0, draw(_int32),
+                           draw(_bwt), e)
+                          for s, e in rt_end.items() if draw(st.booleans())]
+                cells.sort(key=lambda c: (c[0],
+                                          c[1] == ss.RANGE_TOMBSTONE_MASK))
+                deletion = draw(st.none() | st.tuples(
+                    st.integers(0, 2**31 - 1), _bwt))
+                parts[key] = (cells, deletion)
+            gens.append(parts)
+        return gens
+
+    def _model_resolve(parts, thr):
+        """The shadowing rule written from compact_atoms' spec over one
+        key's ``(cells, deletion)`` partitions, straight to the cells and
+        header deletion the rewrite writes (live -> normal, counters with
+        timestampOfLastDelete 0, retained deletions with their
+        writetime's second as localDeletionTime)."""
+        def ldt(wt):
+            return min(wt // 1_000_000, ss.INT32_MAX)
+
+        pd = max((d[1] for _, d in parts if d is not None), default=None)
+        rts, versions = {}, {}
+        for cells, _ in parts:
+            for name, mask, _, _, wt, val in cells:
+                if mask == ss.RANGE_TOMBSTONE_MASK:
+                    rts[(name, val)] = max(rts.get((name, val), wt), wt)
+                else:
+                    versions.setdefault(name, []).append((wt, mask, val))
+        out = []
+        for name, vs in versions.items():
+            shadows = [m for (s, e), m in rts.items() if s <= name <= e]
+            shadows += [] if pd is None else [pd]
+            surv = [v for v in vs if all(v[0] > m for m in shadows)]
+            counters = [(wt, int(val)) for wt, mask, val in surv
+                        if mask in (ss.COUNTER_MASK, ss.COUNTER_UPDATE_MASK)]
+            tombs = [wt for wt, mask, _ in surv if mask == ss.DELETION_MASK]
+            if counters:
+                live = [(wt, v) for wt, v in counters
+                        if not tombs or wt > max(tombs)]
+                if live:
+                    out.append((name, ss.COUNTER_MASK, 0, 0,
+                                max(wt for wt, _ in live),
+                                str(sum(v for _, v in live)).encode()))
+                    continue
+                surv = [(max(tombs), ss.DELETION_MASK, b"")]
+            if not surv:
+                continue
+            wt, mask, val = max(surv, key=lambda v: (
+                v[0], v[1] == ss.DELETION_MASK,
+                b"" if v[1] == ss.DELETION_MASK else v[2]))
+            if mask != ss.DELETION_MASK:
+                out.append((name, 0, 0, 0, wt, val))
+            elif wt > thr:
+                out.append((name, ss.DELETION_MASK, 0, 0, wt,
+                            struct.pack(">i", ldt(wt))))
+        out += [(s, ss.RANGE_TOMBSTONE_MASK, 0, ldt(m), m, e)
+                for (s, e), m in rts.items()
+                if (pd is None or m > pd) and m > thr]
+        out.sort(key=lambda c: (c[0], c[1] == ss.RANGE_TOMBSTONE_MASK))
+        deletion = (ldt(pd), pd) if pd is not None and pd > thr else None
+        return out, deletion
+
+    def _assert_tables_equal(got: str, want: str) -> None:
+        assert sorted(os.listdir(got)) == sorted(os.listdir(want))
+        for f in os.listdir(want):
+            with open(os.path.join(got, f), "rb") as a, \
+                    open(os.path.join(want, f), "rb") as b:
+                assert a.read() == b.read(), (got, f)
+
+    @pytest.mark.parametrize("rewrite", ["strip", "gc", "compact"])
+    @given(gens=_byte_generations(), thr=st.integers(0, 7_000_000),
+           splits=st.integers(1, 3))
+    @settings(max_examples=20, deadline=None)
+    def test_property_rewrites_carry_arbitrary_bytes(rewrite, gens, thr,
+                                                     splits):
+        """Tables whose keys, cell names, values and range-tombstone
+        bounds are arbitrary bytes (not UTF-8 in general) go through the
+        strip, GC and compaction on the local pool: every file of every
+        shard equals write_sstable of the partitions an independent model
+        expects (the strip turns expiring cells into normal ones; GC
+        resolves each partition alone and compaction each key across the
+        generations, by the one shadowing rule)."""
+        base = _tmpdir()
+        try:
+            src = os.path.join(base, "src")
+            for g, parts in enumerate(gens):
+                ss.write_sstable([(k, c, d) for k, (c, d) in parts.items()],
+                                 os.path.join(src, f"g{g}"))
+            out = os.path.join(base, "out")
+            dirs = ss._resolve_table_dirs(src)
+            if rewrite == "compact":
+                ss.compact_rewrite(None, src, out, gc_grace_us=0,
+                                   now_us=thr, num_splits=splits)
+                specs = [(f"shard={i:05d}",
+                          *(b if b is None else bytes.fromhex(b)
+                            for b in rng))
+                         for i, rng in enumerate(ss._merge_ranges(dirs,
+                                                                  splits))]
+                keys = sorted({k for parts in gens for k in parts})
+                expect = {shard: [
+                    (k, *_model_resolve(
+                        [p[k] for p in gens if k in p], thr))
+                    for k in keys if (lo is None or k >= lo)
+                    and (hi is None or k < hi)] for shard, lo, hi in specs}
+            else:
+                if rewrite == "strip":
+                    ss.rewrite_stripped(None, src, out, num_splits=splits)
+                else:
+                    ss.gc_rewrite_single(None, src, out, gc_grace_us=0,
+                                         now_us=thr, num_splits=splits)
+                expect = {}
+                for shard, data, start, end in ss._split_specs(src, splits):
+                    parts = gens[int(shard.split("_")[0][1:])]
+                    expect[shard] = []
+                    for k, off in ss.read_index(os.path.join(
+                            os.path.dirname(data), "Index.db")):
+                        if not start <= off < end:
+                            continue
+                        cells, deletion = parts[k]
+                        if rewrite == "gc":
+                            cells, deletion = _model_resolve([parts[k]],
+                                                             thr)
+                        else:
+                            cells = [(n, 0, 0, 0, wt, v)
+                                     if m == ss.EXPIRATION_MASK
+                                     else (n, m, t, e, wt, v)
+                                     for n, m, t, e, wt, v in cells]
+                        expect[shard].append((k, cells, deletion))
+            assert sorted(os.listdir(out)) == sorted(expect)
+            for shard, parts in expect.items():
+                want = os.path.join(base, "want", shard)
+                ss.write_sstable([p for p in parts if p[1] or p[2]], want)
+                _assert_tables_equal(os.path.join(out, shard), want)
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+except ImportError:  # pragma: no cover - hypothesis always present in CI
+    pass
 
 
 def test_merge_compact_random_generations_match_ground_truth(spark):
@@ -2075,9 +2345,17 @@ def test_compact_rewrite_shards_are_merge_ranges(spark):
         assert len(keys) == r.n_partitions > 0
         spans.append((keys[0], keys[-1]))
     assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
-    want = sorted(
-        ss._status_to_row(*r) for r in ss.merge_compact_sorted(
-            spark, base, gc_grace_us=0, now_us=0, num_splits=4).collect())
+    merged = sorted(ss.merge_compact_sorted(
+        spark, base, gc_grace_us=0, now_us=0, num_splits=4).collect(),
+        key=lambda r: r.pk)
+    ref = os.path.join(base, "ref")
+    ss.write_sstable(
+        [(pk.encode(), *ss._resolved_partition(
+            (r.cell and r.cell.encode(), r.writetime,
+             r.value and r.value.encode(), r.status) for r in rows))
+         for pk, rows in itertools.groupby(merged, key=lambda r: r.pk)],
+        ref)
+    want = sorted(tuple(r) for r in ss.scan_sstable(spark, ref).collect())
     got = sorted(tuple(r) for r in ss.scan_sstable(spark, out).collect())
     assert got == want and len(got) == 60
     shutil.rmtree(base)
