@@ -39,7 +39,9 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, *,
                   text_col: str = "text") -> DataFrame:
     """The curated corpus: documents that pass quality and language gates,
     survive exact dedup (min-id representative per content hash), and are
-    their near-dup component's representative.
+    their near-dup component's representative (the min id of their
+    :func:`dedup.component_labels` component; one left-anti join drops
+    every other labelled id).
 
     ``max_df`` caps the shingle document frequency in the fuzzy-dedup stage
     (stop-shingle removal — dedup.ngram_jaccard_pairs): without it one hot
@@ -66,10 +68,9 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, *,
         pairs = dedup.ngram_jaccard_pairs(
             keep1, jaccard_threshold, text_col, id_col, max_df=max_df
         ).select("a", "b")
-    decisions = dedup.neardup_dedup(keep1.select(id_col), pairs, id_col)
-    kept = keep1.join(
-        decisions.filter("is_kept").select(id_col), id_col, "left_semi"
-    )
+    drop = dedup.component_labels(pairs).filter(
+        F.col("component") != F.col("_cc_node"))
+    kept = keep1.join(drop, keep1[id_col] == drop["_cc_node"], "left_anti")
     return kept.select(id_col, "pred_lang", "quality")
 
 
@@ -126,10 +127,10 @@ def gated_exact_dedup(spark: SparkSession, docs: DataFrame, *,
     # Generate cannot sink, so the battery is computed once, above it.
     keep0 = (
         scored.select(id_col, text_col, "pred_lang", "quality")
-        .withColumn("_g", F.explode(F.expr(
-            f"CASE WHEN quality >= {min_quality} AND pred_lang IN "
-            f"({', '.join(repr(lang) for lang in langs)}) "
-            "THEN array(1) ELSE array() END")))
+        .withColumn("_g", F.explode(F.when(
+            (F.col("quality") >= float(min_quality))
+            & F.col("pred_lang").isin(*langs),
+            F.array(F.lit(1))).otherwise(F.array())))
         .drop("_g")
     )
     # Stage boundary: materialize the exact-deduped survivors once.
@@ -167,9 +168,10 @@ def curate_lsh_invariants(spark: SparkSession, docs: DataFrame, *,
       (minhash_lsh_pairs at the pipeline's own threshold) captures
       >= ``recall_gate`` of the exact pairs. Oracle emits TRUE; an LSH
       regression flips it false.
-    - ``kept_lsh_ok`` — the end-to-end LSH pipeline output is non-empty
-      and no larger than the gate survivors (components only ever remove
-      docs). Oracle emits TRUE.
+    - ``kept_lsh_ok`` — the end-to-end LSH pipeline output is non-empty:
+      ``n_gate`` minus the non-representatives of the LSH components (the
+      ids ``curate_corpus`` anti-joins away) is positive. Oracle emits
+      TRUE.
 
     The full curated-corpus row set stays available via
     :func:`curate_corpus`; the exact path's output is value-matched by
@@ -186,15 +188,16 @@ def curate_lsh_invariants(spark: SparkSession, docs: DataFrame, *,
     cand = dedup.minhash_lsh_pairs(
         keep1, threshold=jaccard_threshold, text_col=text_col, id_col=id_col
     ).select("a", "b")
-    decisions = dedup.neardup_dedup(keep1.select(id_col), cand, id_col)
+    drop = dedup.component_labels(cand).filter(
+        F.col("component") != F.col("_cc_node"))
     n_gate = keep1.agg(F.count("*").cast("long").alias("n_gate"))
     n_exact = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
     n_hit = exact.join(cand, ["a", "b"], "left_semi").agg(
         F.count("*").alias("_n_hit")
     )
-    n_kept = decisions.filter("is_kept").agg(F.count("*").alias("_n_kept"))
+    n_drop = drop.agg(F.count("*").alias("_n_drop"))
     return (
-        n_gate.crossJoin(n_exact).crossJoin(n_hit).crossJoin(n_kept)
+        n_gate.crossJoin(n_exact).crossJoin(n_hit).crossJoin(n_drop)
         .select(
             "n_gate",
             "n_exact_pairs",
@@ -202,9 +205,7 @@ def curate_lsh_invariants(spark: SparkSession, docs: DataFrame, *,
                 (F.col("n_exact_pairs") == 0)
                 | (F.col("_n_hit") >= recall_gate * F.col("n_exact_pairs"))
             ).alias("recall_ok"),
-            (
-                (F.col("_n_kept") > 0) & (F.col("_n_kept") <= F.col("n_gate"))
-            ).alias("kept_lsh_ok"),
+            (F.col("n_gate") - F.col("_n_drop") > 0).alias("kept_lsh_ok"),
         )
     )
 
@@ -961,11 +962,7 @@ def cluster_safe_split(docs: DataFrame, pairs: DataFrame,
     Scale: components as in dedup.connected_components (driver union-find
     under the edge bound, HashMin above); the split label is then the same
     zero-shuffle hash projection as hash_split, keyed on the component."""
-    from cassandra_ttl_remover_spark.operators.dedup import (
-        connected_components,
-    )
-
-    cc = connected_components(pairs, docs.select(id_col), id_col)
+    cc = dedup.connected_components(pairs, docs.select(id_col), id_col)
     labeled = hash_split(cc, train_pct, valid_pct, id_col="component")
     return labeled.select(id_col, "component", "split")
 
@@ -974,14 +971,11 @@ def cluster_safe_split_oracle_sql(pairs_sql: str, train_pct: int = 80,
                                   valid_pct: int = 10,
                                   table: str = "documents",
                                   id_col: str = "doc_id") -> str:
-    from cassandra_ttl_remover_spark.operators.dedup import (
-        connected_components_oracle_sql,
-    )
     from cassandra_ttl_remover_spark.operators.lookups import (
         murmur3_hash_oracle_expr,
     )
 
-    cc = connected_components_oracle_sql(pairs_sql, table, id_col)
+    cc = dedup.connected_components_oracle_sql(pairs_sql, table, id_col)
     pct = f"(({murmur3_hash_oracle_expr('component')} & 2147483647) % 100)"
     return f"""
 WITH cc AS ({cc})

@@ -27,9 +27,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql import types as T
 
 from cassandra_ttl_remover_spark.operators.text import SHINGLES_EXPR, WORDS_EXPR
-from cassandra_ttl_remover_spark.plans import fan_out
+from cassandra_ttl_remover_spark.plans import fan_out, local_frame
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -483,82 +484,61 @@ def _driver_union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-def connected_components(pairs: DataFrame, ids: DataFrame,
-                         id_col: str = "doc_id", max_iter: int = 20,
-                         driver_limit: int = 100_000) -> DataFrame:
-    """Connected components over a near-dup pair frame via iterative
-    min-label propagation (the standard distributed "HashMin" algorithm):
-    every node starts labeled with itself; each round a node adopts the
-    minimum label among itself and its neighbors; converged when no label
-    changes. Rounds needed = graph diameter — near-dup clusters are shallow
-    (a handful of hops), so this terminates in a few rounds. If ``max_iter``
-    is exhausted before convergence the labels may be WRONG (split
-    components), so that case raises rather than silently returning.
-
-    Scale: the iteration runs over edge-INCIDENT nodes only — at 100 TB the
-    near-dup graph touches a small fraction of the corpus, and shuffling a
-    billion singleton labels through every round would dominate the job;
-    singletons are unioned back (label = self) at the end without ever
-    entering the loop. Each round is then one join on the (tiny) edge set +
-    a groupBy on node — no driver-side graph. Convergence detection rides on
-    monotonicity: labels only ever decrease, so the decimal-summed label
-    total strictly decreases iff any label changed — ONE map-side-combined
-    aggregate per round instead of an old-vs-new shuffle join.
-    ``localCheckpoint`` truncates the growing lineage per round, keeping the
-    plan O(1) instead of O(iterations) (the classic iterative-Spark pitfall).
+def component_labels(pairs: DataFrame, max_iter: int = 20,
+                     driver_limit: int = 100_000) -> DataFrame:
+    """Connected-component labels of the near-dup pair graph: one
+    ``(_cc_node, component)`` row per id incident to an edge of ``pairs``
+    (columns ``a``, ``b``, any orderable id type), where component = the
+    minimum id reachable. Ids with no edge have no row; an empty graph
+    gives an empty frame. The key name is reserved so that no caller's id
+    column collides with it in a join.
 
     ``driver_limit`` is the scale-adaptive cutover: a near-dup EDGE set is
     tiny relative to the corpus (it is the duplicate graph, not the data),
     and when it fits comfortably on the driver, iterative distributed label
     propagation is pure overhead — each round costs scheduler latency on a
-    frame of a few hundred rows. Below the limit the (materialized) edges
-    are collected and resolved by exact union-find (same min-id labels),
-    replacing ~diameter×2 Spark jobs with one bounded collect of
-    ``driver_limit + 1`` edges, which both decides the path and fetches
-    the edges — the same small-graph/large-graph split production graph
-    engines make. Above it,
-    the distributed loop runs unchanged; `0` forces the distributed path.
+    frame of a few hundred rows. Up to the limit the (materialized) edges
+    are collected and resolved by exact union-find, and the labels come
+    back as a ``local_frame``; one bounded collect of ``driver_limit + 1``
+    edges both decides the path and fetches the edges — the same
+    small-graph/large-graph split production graph engines make. Above
+    it, labels come from distributed min-label propagation (the standard
+    "HashMin" algorithm); ``0`` forces that path. Both give the same
+    labels.
 
-    Returns ``(id_col, component)`` where component = min id reachable;
-    singleton docs are their own component."""
+    HashMin: every node starts labeled with itself; each round a node
+    adopts the minimum label among itself and its neighbors; converged
+    when no label changes. Rounds needed = graph diameter — near-dup
+    clusters are shallow (a handful of hops), so this terminates in a few
+    rounds. If ``max_iter`` is exhausted before convergence the labels may
+    be WRONG (split components), so that case raises rather than silently
+    returning. The iteration runs over edge-INCIDENT nodes only — at
+    100 TB the near-dup graph touches a small fraction of the corpus. Each
+    round is one join on the (tiny) edge set + a groupBy on node — no
+    driver-side graph. Convergence detection rides on monotonicity: labels
+    only ever decrease, so the decimal-summed label total strictly
+    decreases iff any label changed — ONE map-side-combined aggregate per
+    round instead of an old-vs-new shuffle join. ``localCheckpoint``
+    truncates the growing lineage per round, keeping the plan O(1) instead
+    of O(iterations) (the classic iterative-Spark pitfall)."""
     # materialize the edge list once: the bounded driver collect and the
     # symmetric-closure branches reuse the same blocks instead of
     # re-running the (possibly expensive) pair-generation pipeline
     edges = pairs.select("a", "b").localCheckpoint(eager=False)
+    # the label schema derives from the edge frame's id type, so either
+    # path handles any orderable id (string doc ids included) — a
+    # hardcoded long would make behavior depend on edge COUNT
+    id_type = edges.schema["a"].dataType
     rows = edges.limit(driver_limit + 1).collect() if driver_limit else []
     if driver_limit and len(rows) <= driver_limit:
         labels = _driver_union_find([(r["a"], r["b"]) for r in rows])
-        if not labels:
-            return ids.select(F.col(id_col), F.col(id_col).alias("component"))
-        spark = ids.sparkSession
-        # stitch-back schema derives from the edge frame's id type: the
-        # distributed HashMin path below handles any orderable id (string
-        # doc ids included), so the driver fast path must too — a
-        # hardcoded long would make behavior depend on edge COUNT
-        from pyspark.sql import types as T
-
-        id_type = edges.schema["a"].dataType
-        # reserved key name: a caller whose id_col is literally "node"
-        # (e.g. a generic graph frame) must not collide with the label
-        # frame's join key
-        from cassandra_ttl_remover_spark.plans import local_frame
-        lab = local_frame(
-            spark,
+        return local_frame(
+            pairs.sparkSession,
             list(labels.items()),
             T.StructType([
                 T.StructField("_cc_node", id_type),
                 T.StructField("component", id_type),
             ]),
-        )
-        # labels are bounded by 2*driver_limit rows — broadcast, so the
-        # corpus-sized ids frame never shuffles for the stitch-back
-        return (
-            ids.select(F.col(id_col))
-            .join(F.broadcast(lab), ids[id_col] == lab["_cc_node"], "left")
-            .select(
-                F.col(id_col),
-                F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            )
         )
     # symmetric closure PLUS self-loops (v, v): with the self-edge in place a
     # node's own label flows through the same neighbor-min as everyone
@@ -574,13 +554,10 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     sym = sym.unionByName(sym.select("a", F.col("a").alias("b"))).localCheckpoint(
         eager=False
     )
-    if sym.isEmpty():
-        return ids.select(
-            F.col(id_col), F.col(id_col).alias("component")
-        )
     # round 0 fused into initialization: label = min(self, neighbors)
     # straight off the (self-looped) edge list — one aggregation, no join
-    labels = sym.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("label"))
+    labels = sym.groupBy(F.col("a").alias("_cc_node")).agg(
+        F.min("b").alias("component"))
     # Convergence probe, type-aware so non-numeric ids (string doc ids)
     # work in BOTH execution paths:
     #   * numeric ids — sum the labels as decimal(38,0): exact far beyond
@@ -590,19 +567,16 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     #   * any other type — sum xxhash64(label) as decimal(38,0): an
     #     unchanged total implies convergence up to a ~2^-64-per-round hash
     #     collision (any label change perturbs the sum otherwise).
-    from pyspark.sql import types as T
-
-    if isinstance(edges.schema["a"].dataType, T.NumericType):
-        probe = F.col("label").cast("decimal(38,0)")
+    if isinstance(id_type, T.NumericType):
+        probe = F.col("component").cast("decimal(38,0)")
     else:
-        probe = F.xxhash64(F.col("label")).cast("decimal(38,0)")
+        probe = F.xxhash64(F.col("component")).cast("decimal(38,0)")
     total = None
     for it in range(max_iter):
         new = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("label").alias("label"))
-            .withColumnRenamed("a", "node")
+            sym.join(labels, sym["b"] == labels["_cc_node"])
+            .groupBy(F.col("a").alias("_cc_node"))
+            .agg(F.min("component").alias("component"))
             # lazy: the convergence aggregate below is the materializing
             # action, so each round runs ONE job, and later rounds read the
             # checkpointed blocks
@@ -613,30 +587,46 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
         ).collect()[0]["t"]
         labels = new
         if total is not None and new_total == total:
-            # singletons (no incident edge) label themselves; the converged
-            # edge-incident labels override via the left join
-            return (
-                ids.select(F.col(id_col))
-                .join(labels, ids[id_col] == labels["node"], "left")
-                .select(
-                    F.col(id_col),
-                    F.coalesce(F.col("label"), F.col(id_col)).alias("component"),
-                )
-            )
+            return labels
         total = new_total
     raise RuntimeError(
-        f"connected_components did not converge in max_iter={max_iter} rounds; "
+        f"component_labels did not converge in max_iter={max_iter} rounds; "
         "labels would be wrong (components split). Raise max_iter — rounds "
         "needed equals the near-dup graph diameter."
+    )
+
+
+def connected_components(pairs: DataFrame, ids: DataFrame,
+                         id_col: str = "doc_id", max_iter: int = 20,
+                         driver_limit: int = 100_000) -> DataFrame:
+    """Connected components over a near-dup pair frame: the
+    :func:`component_labels` of ``pairs`` (driver union-find up to
+    ``driver_limit`` edges, HashMin above; ``0`` forces HashMin) stitched
+    back onto every id of ``ids`` with one left join. Ids with no edge
+    never enter the label computation and label themselves here. The join
+    carries no hint: the driver labels are a local relation whose size the
+    planner knows exactly (so it broadcasts them), and AQE sizes the
+    checkpointed HashMin labels.
+
+    Returns ``(id_col, component)`` where component = min id reachable;
+    singleton docs are their own component."""
+    ids = ids.select(id_col)
+    labels = component_labels(pairs, max_iter, driver_limit)
+    return ids.join(labels, ids[id_col] == labels["_cc_node"], "left").select(
+        F.col(id_col),
+        F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
     )
 
 
 def neardup_dedup(docs: DataFrame, pairs: DataFrame,
                   id_col: str = "doc_id") -> DataFrame:
     """End-to-end fuzzy-dedup decision: resolve near-dup pairs into
-    components and keep the minimum id per component (the deterministic
-    representative, matching exact_dedup's keep rule). Returns
-    ``(id_col, component, is_kept)`` for every document."""
+    components (:func:`connected_components`) and keep the minimum id per
+    component (the deterministic representative, matching exact_dedup's
+    keep rule). Returns ``(id_col, component, is_kept)`` for every
+    document; a pipeline that needs only the kept rows can instead
+    anti-join the non-representatives of :func:`component_labels`, as
+    ``curate_corpus`` does."""
     cc = connected_components(pairs, docs.select(id_col), id_col)
     return cc.withColumn("is_kept", F.col("component") == F.col(id_col))
 

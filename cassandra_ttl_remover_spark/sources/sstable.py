@@ -799,56 +799,52 @@ def _write_column_index(f, key: bytes, blocks: list[tuple],
             f.write(struct.pack(">iq", ldt, mfda))
 
 
-def _read_column_index(table_dir: str) -> dict[bytes, list[tuple]] | None:
-    """``{partition key: [(block-start cell name, Data.db offset,
-    [(rt start, rt end, ldt, mfda), …]), …]}`` or ``None`` when the
-    table predates the sidecar (slices fall back to decoding from the
-    partition head — never wrong, just unpruned). Malformed sidecars
-    raise (quarantine convention)."""
+def _column_index_blocks(table_dir: str, key: bytes) -> Iterator[tuple]:
+    """Partition ``key``'s ColumnIndex.db blocks, one at a time:
+    ``(block-start cell name, Data.db offset, [(rt start, rt end, ldt,
+    mfda), …])``. Nothing when the partition has no entry or the table
+    predates the sidecar (slices fall back to decoding from the partition
+    head — never wrong, just unpruned). Entries are in key byte order, so
+    the walk reads up to ``key``'s entry and stops: it holds one block,
+    whatever the table's size. Malformed entries on the way raise
+    (quarantine convention)."""
     path = os.path.join(table_dir, "ColumnIndex.db")
     try:
-        with open(path, "rb") as f:
-            buf = f.read()
+        f = open(path, "rb")
     except FileNotFoundError:
-        return None
-    out: dict[bytes, list[tuple]] = {}
-    pos = 0
+        return
 
     def take(n: int, what: str) -> bytes:
-        nonlocal pos
-        b = buf[pos:pos + n]
+        b = f.read(n)
         if len(b) != n:
             raise struct.error(f"truncated {what}")
-        pos += n
         return b
 
-    try:
-        while pos < len(buf):
-            (klen,) = struct.unpack(">H", take(2, "key length"))
-            key = take(klen, "key")
-            (nblocks,) = struct.unpack(">I", take(4, "block count"))
-            blocks = []
-            for _ in range(nblocks):
-                (nlen,) = struct.unpack(">H", take(2, "name length"))
-                name = take(nlen, "block name")
-                (off,) = struct.unpack(">q", take(8, "block offset"))
-                (nrt,) = struct.unpack(">H", take(2, "open-RT count"))
-                rts = []
-                for _ in range(nrt):
-                    (slen,) = struct.unpack(">H", take(2, "RT start len"))
-                    s = take(slen, "RT start")
-                    (elen,) = struct.unpack(">H", take(2, "RT end len"))
-                    e = take(elen, "RT end")
-                    ldt, mfda = struct.unpack(
-                        ">iq", take(12, "RT deletion"))
-                    rts.append((s, e, ldt, mfda))
-                blocks.append((name, off, rts))
-            out[key] = blocks
-    except struct.error as e:
-        raise CorruptSSTableError(
-            f"{path}: malformed ColumnIndex.db ({e})"
-        ) from None
-    return out
+    def field(what: str) -> bytes:
+        return take(_U16.unpack(take(2, f"{what} length"))[0], what)
+
+    with f:
+        try:
+            while f.peek(1):
+                k = field("key")
+                if k > key:
+                    return
+                (nblocks,) = _U32.unpack(take(4, "block count"))
+                for _ in range(nblocks):
+                    name = field("block name")
+                    (off,) = _I64.unpack(take(8, "block offset"))
+                    (nrt,) = _U16.unpack(take(2, "open-RT count"))
+                    rts = [(field("RT start"), field("RT end"),
+                            *struct.unpack(">iq", take(12, "RT deletion")))
+                           for _ in range(nrt)]
+                    if k == key:
+                        yield name, off, rts
+                if k == key:
+                    return
+        except struct.error as e:
+            raise CorruptSSTableError(
+                f"{path}: malformed ColumnIndex.db ({e})"
+            ) from None
 
 
 def plan_partition_slice(
@@ -863,8 +859,6 @@ def plan_partition_slice(
     decoded stream). ``None`` when the table's bloom filter or index
     excludes the key — the probe order is the reference's (filter ->
     summary/index -> data; NoTTLReader.java:1502-1665)."""
-    import bisect
-
     if not bloom_might_contain(table_dir, key):
         return None
     samples = _read_summary(table_dir)
@@ -876,13 +870,14 @@ def plan_partition_slice(
     offs = [off for k, off in entries if k == key]
     if not offs:
         return None
-    ci = _read_column_index(table_dir)
-    blocks = (ci or {}).get(key)
-    if blocks:
-        names = [b[0] for b in blocks]
-        i = bisect.bisect_right(names, cell_start) - 1
-        if i >= 0:
-            return blocks[i][1], True, blocks[i][2]
+    # the covering block: the last one whose first name is <= cell_start
+    covering = None
+    for block in _column_index_blocks(table_dir, key):
+        if block[0] > cell_start:
+            break
+        covering = block
+    if covering:
+        return covering[1], True, covering[2]
     return offs[0], False, []
 
 
@@ -925,8 +920,8 @@ def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
     wlen = _uvint_bytes if mc else _U16.pack
     header = wlen(len(kb)) + kb + _HEADER.pack(LIVE_LOCAL_DELETION,
                                                LIVE_MARKED_FOR_DELETE)
-    blocks = (_read_column_index(d) or {}).get(kb, [])
-    cuts = [o for _, o, _ in blocks if off < o < end] + [end]
+    cuts = itertools.chain((o for _, o, _ in _column_index_blocks(d, kb)
+                            if off < o < end), [end])
     with _open_data(data_path) as f:
         f.seek(off)
         lo = off

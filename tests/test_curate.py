@@ -34,6 +34,42 @@ def test_curate_lsh_path_runs_and_filters(spark, documents):
     assert kept.filter(F.col("quality") < 0.5).count() == 0
 
 
+def test_curate_drops_non_representatives_with_one_anti_join(spark, documents):
+    # the fuzzy stage removes the component labels' non-representatives
+    # from the gate survivors with one left-anti join; the kept set is
+    # the survivors that neardup_dedup marks kept
+    kept = curate.curate_corpus(spark, documents)
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LeftAnti") == 1, plan
+    assert "LeftSemi" not in plan and "LeftOuter" not in plan, plan
+    keep1 = curate.gated_exact_dedup(spark, documents)
+    pairs = dedup.ngram_jaccard_pairs(keep1, 0.5, max_df=1000)
+    want = {r.doc_id for r in dedup.neardup_dedup(
+        keep1.select("doc_id"), pairs).filter("is_kept").collect()}
+    got = {r.doc_id for r in kept.collect()}
+    assert got == want and len(got) < keep1.count()
+
+
+def test_gate_matches_langs_and_quality_as_given(spark, documents,
+                                                 monkeypatch):
+    # the gate is built from Columns, not SQL text: a language code with
+    # a control character is matched exactly like any other, and an
+    # infinite quality floor keeps nothing instead of failing to parse
+    real_lang_id = text.lang_id
+
+    def gated(lang):
+        monkeypatch.setattr(text, "lang_id", lambda *a, **k: real_lang_id(
+            *a, **k).withColumn("pred_lang", F.lit(lang)))
+        return {r.doc_id for r in curate.gated_exact_dedup(
+            spark, documents, langs=(lang,)).collect()}
+
+    odd = gated("e\x01n")
+    assert odd and odd == gated("en")
+    monkeypatch.setattr(text, "lang_id", real_lang_id)
+    assert curate.gated_exact_dedup(
+        spark, documents, min_quality=float("inf")).count() == 0
+
+
 def test_decontaminate_flags_overlap(spark, documents):
     bench = documents.filter(F.col("doc_id") % 50 == 0)
     out = curate.decontaminate(documents, bench).cache()

@@ -177,35 +177,39 @@ def test_connected_components_nonconvergence_raises(spark):
 
 
 def test_connected_components_driver_and_distributed_agree(spark):
-    # two components + singletons, resolved through both execution paths
-    ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    # two components + singletons, resolved through both execution paths;
+    # the labels' join key is reserved, so an id column named "node" (a
+    # generic graph frame) stitches too
     pairs = spark.createDataFrame(
         [(1, 2), (0, 1), (3, 4), (4, 6)], "a long, b long"
     )
-    driver = {(r.doc_id, r.component) for r in
-              dedup.connected_components(pairs, ids).collect()}
-    dist = {(r.doc_id, r.component) for r in
-            dedup.connected_components(pairs, ids, driver_limit=0).collect()}
-    assert driver == dist == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 3),
-                              (5, 5), (6, 3), (7, 7)}
+    for id_col in ("doc_id", "node"):
+        ids = spark.createDataFrame([(i,) for i in range(8)], f"{id_col} long")
+        driver = {tuple(r) for r in
+                  dedup.connected_components(pairs, ids, id_col).collect()}
+        dist = {tuple(r) for r in dedup.connected_components(
+            pairs, ids, id_col, driver_limit=0).collect()}
+        assert driver == dist == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 3),
+                                  (5, 5), (6, 3), (7, 7)}, id_col
 
 
 def test_connected_components_string_ids_both_paths(spark):
     # the driver fast path must handle any orderable id type, same as the
     # distributed HashMin loop — behavior must not depend on edge count
-    ids = spark.createDataFrame(
-        [(s,) for s in "abcdef"], "doc_id string"
-    )
     pairs = spark.createDataFrame(
         [("b", "c"), ("a", "b"), ("d", "e")], "a string, b string"
     )
     expect = {("a", "a"), ("b", "a"), ("c", "a"),
               ("d", "d"), ("e", "d"), ("f", "f")}
-    driver = {(r.doc_id, r.component) for r in
-              dedup.connected_components(pairs, ids).collect()}
-    dist = {(r.doc_id, r.component) for r in
-            dedup.connected_components(pairs, ids, driver_limit=0).collect()}
-    assert driver == dist == expect
+    for id_col in ("doc_id", "node"):
+        ids = spark.createDataFrame(
+            [(s,) for s in "abcdef"], f"{id_col} string"
+        )
+        driver = {tuple(r) for r in
+                  dedup.connected_components(pairs, ids, id_col).collect()}
+        dist = {tuple(r) for r in dedup.connected_components(
+            pairs, ids, id_col, driver_limit=0).collect()}
+        assert driver == dist == expect, id_col
 
 
 def test_connected_components_driver_limit_is_inclusive(spark, monkeypatch):
@@ -228,6 +232,32 @@ def test_connected_components_driver_limit_is_inclusive(spark, monkeypatch):
             pairs, ids, driver_limit=0).collect()}
         assert got == forced == {
             (i, 0 if i <= n_edges else i) for i in range(10)}
+
+
+def test_component_labels_both_paths_agree(spark):
+    # labels cover edge-incident ids only; the driver union-find and
+    # HashMin give the same rows, for long and string ids and for an
+    # empty graph (which labels nothing, so every id stitches to itself)
+    cases = [
+        ("long", [(1, 2), (0, 1), (3, 4), (4, 6)],
+         {(0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (6, 3)}),
+        ("string", [("b", "c"), ("a", "b"), ("d", "e")],
+         {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d")}),
+        ("long", [], set()),
+        ("string", [], set()),
+    ]
+    for typ, edges, want in cases:
+        pairs = spark.createDataFrame(edges, f"a {typ}, b {typ}")
+        vals = range(8) if typ == "long" else "abcdefgh"
+        ids = spark.createDataFrame([(v,) for v in vals], f"doc_id {typ}")
+        for limit in (100, 0):
+            labels = dedup.component_labels(pairs, driver_limit=limit)
+            assert labels.columns == ["_cc_node", "component"]
+            assert {tuple(r) for r in labels.collect()} == want, (
+                typ, edges, limit)
+            cc = dedup.connected_components(pairs, ids, driver_limit=limit)
+            assert {tuple(r) for r in cc.collect()} == {
+                (v, dict(want).get(v, v)) for v in vals}, (typ, edges, limit)
 
 
 def test_repeated_ngram_census_hand_case(spark):

@@ -1212,8 +1212,33 @@ def test_corrupt_column_index_fails_loud():
     with open(p, "r+b") as f:
         f.truncate(os.path.getsize(p) - 3)
     with pytest.raises(ss.CorruptSSTableError, match="ColumnIndex"):
-        ss._read_column_index(out)
+        ss.plan_partition_slice(out, b"wide", b"000035:")
     shutil.rmtree(out)
+
+
+def test_column_index_plan_memory_does_not_grow_with_partitions():
+    """The slice planner walks ColumnIndex.db by key and holds one block:
+    with 4x the partitions (each several blocks wide), planning a slice
+    of the last partition peaks within 32 KiB of the smaller table
+    (Summary.db samples and the bloom filter grow by a few bytes per
+    partition; a planner that loads the whole sidecar grows by about
+    1 KiB per partition)."""
+    base = _tmpdir()
+    peaks = []
+    for n in (600, 4 * 600):
+        out = os.path.join(base, f"n{n}")
+        ss.write_sstable(
+            [(f"p{p:06d}".encode(),
+              [(f"{i:06d}:c".encode(), 0, 0, 0, 1_700_000_000_000_000 + i,
+                b"v") for i in range(16)]) for p in range(n)],
+            out, colindex_every=4)
+        last = f"p{n - 1:06d}".encode()
+        plan = []
+        peaks.append(_traced_peak(lambda: plan.append(
+            ss.plan_partition_slice(out, last, b"000009:"))))
+        assert plan[0][1] is True and plan[0][2] == []
+    assert peaks[1] - peaks[0] < 32 << 10, peaks
+    shutil.rmtree(base)
 
 
 def test_slice_reemits_open_range_tombstones(spark):
