@@ -237,6 +237,11 @@ def text_knn(docs: DataFrame, query_id, k: int = 20, dim: int = 1024,
     q_rows = w.filter(F.col(id_col) == F.lit(query_id)) \
         .select("bucket", "w").collect()
     qn2 = sum(int(r["w"]) ** 2 for r in q_rows)
+    if qn2 >= 1 << 63:
+        raise ValueError(
+            f"text_knn: query_id {query_id!r} has squared norm {qn2}, "
+            "past int64; the corpus is beyond the int64 envelope of "
+            "hashed_tfidf")
     types = {f.name: f.dataType.simpleString() for f in w.schema.fields}
     qv = F.broadcast(local_frame(
         docs.sparkSession,

@@ -274,12 +274,14 @@ def kcore(edges: DataFrame, k: int = 12, rounds: int = 2, *,
     the integer pagerank above: a bounded, deterministic computation that
     an unrolled-CTE oracle recomputes exactly. At 100 TB you run the same
     loop to convergence with an emptiness check on the peeled frontier.
-    Each round is one partial-aggregated degree count (the only exchange,
-    carrying <= |V| combined rows) plus two BROADCAST semi-joins — the
-    survivor set is <= |V| node ids, the same bound pagerank's rank
-    broadcast already rides, so the edge list itself NEVER shuffles
+    Each round is one partial-aggregated degree count (carrying <= |V|
+    combined rows) plus two survivor semi-joins. From round 2 on they are
+    BROADCAST — the peeled survivor set is the same bound pagerank's rank
+    broadcast already rides, so the edge list does not shuffle for them
     (r13: the unhinted joins planned as sort-merge, exchanging the whole
-    edge list twice per round on src then dst). Each round ends with a
+    edge list twice per round on src then dst). Round 1's survivor set is
+    still about |V|, so it carries no hint and AQE picks its join
+    strategy from the measured size. Each round ends with a
     ``localCheckpoint(eager=False)`` — exactly pagerank's lineage stance
     above — so the plan stays O(1) deep however many rounds run, instead
     of nesting the whole previous peel under two fresh semi-joins per
@@ -287,17 +289,18 @@ def kcore(edges: DataFrame, k: int = 12, rounds: int = 2, *,
     inspection/tests only).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    for _ in range(rounds):
+    for r in range(rounds):
         keep = (
             e.groupBy("src").agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .select("src")
         )
+        a, b = (keep.withColumnRenamed("src", c) for c in ("_a", "_b"))
+        if r:
+            a, b = F.broadcast(a), F.broadcast(b)
         e = (
-            e.join(F.broadcast(keep.withColumnRenamed("src", "_a")),
-                   F.col("src") == F.col("_a"), "left_semi")
-            .join(F.broadcast(keep.withColumnRenamed("src", "_b")),
-                  F.col("dst") == F.col("_b"), "left_semi")
+            e.join(a, F.col("src") == F.col("_a"), "left_semi")
+            .join(b, F.col("dst") == F.col("_b"), "left_semi")
         )
         if checkpoint:
             e = e.localCheckpoint(eager=False)

@@ -65,10 +65,13 @@ expiration, every other byte is copied), single-table GC
 k-way merge, :func:`_merge_range`), so a rewrite task holds one partition
 (one per generation when merging) whatever its split's size. The
 rewrites run on one driver, :func:`_rewrite_shards`: one shard per split
-or merge range, renamed into place once complete, by a one-stage Spark
-job given a session or a local fork pool given ``None`` (the CLI's path).
-:func:`write_sstable_distributed` shards an arbitrary cell frame through
-:func:`_encode_rows`.
+or merge range, by a one-stage Spark job given a session or a local fork
+pool given ``None`` (the CLI's path). :func:`write_sstable_distributed`
+shards an arbitrary cell frame by key range and streams each range's
+sorted rows into one table (:func:`_write_rows`). Every writer commits
+the same way (:func:`_commit_table`): it writes a dot-prefixed temp
+directory, which readers skip, and renames it into place once TOC.txt is
+written.
 """
 
 from __future__ import annotations
@@ -77,6 +80,7 @@ import heapq
 import itertools
 import operator
 import os
+import shutil
 import struct
 from typing import Iterable, Iterator
 
@@ -698,29 +702,31 @@ def resample_summaries(spark, path: str, *, min_index_interval: int,
     zero Data.db bytes move. Range-scan results are
     interval-independent by construction (q_s16's contract), so
     resampling is always safe to run online."""
+    return _per_table(
+        spark, path, lambda d: resample_summary_dir(
+            d, min_index_interval=min_index_interval,
+            max_index_interval=max_index_interval,
+            summary_budget_bytes=summary_budget_bytes),
+        "generation string, action string, interval_before bigint, "
+        "entries_before bigint, interval_after bigint, entries_after bigint")
+
+
+def _per_table(spark, path: str, one, schema: str):
+    """The fleet sweeps' fan-out: one row ``one(table_dir)`` (a dict
+    keyed by ``schema``'s columns) per table under ``path``
+    (:func:`_resolve_table_dirs`), one executor task per table up to 32,
+    zero shuffle."""
     import pandas as pd
 
     dirs = _resolve_table_dirs(path)
 
     def _run(batches):
         for pdf in batches:
-            rows = [resample_summary_dir(
-                        d, min_index_interval=min_index_interval,
-                        max_index_interval=max_index_interval,
-                        summary_budget_bytes=summary_budget_bytes)
-                    for d in pdf["dir"]]
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame([one(d) for d in pdf["dir"]])
 
-    return (
-        local_frame(spark, [(d,) for d in dirs], "dir string")
-        .repartition(min(len(dirs), 32))
-        .mapInPandas(
-            _run,
-            schema=("generation string, action string, "
-                    "interval_before bigint, entries_before bigint, "
-                    "interval_after bigint, entries_after bigint"),
-        )
-    )
+    return (local_frame(spark, [(d,) for d in dirs], "dir string")
+            .repartition(min(len(dirs), 32))
+            .mapInPandas(_run, schema=schema))
 
 
 def _read_index_window(table_dir: str,
@@ -1062,18 +1068,40 @@ def _crc32_file(path: str) -> tuple[int, int]:
     return crc & 0xFFFFFFFF, n
 
 
+def _components(d: str) -> list[str]:
+    """Sorted names of the files in table directory ``d``."""
+    return sorted(n for n in os.listdir(d)
+                  if os.path.isfile(os.path.join(d, n)))
+
+
 def _write_digest_and_toc(out_dir: str) -> None:
     crc, _ = _crc32_file(os.path.join(out_dir, "Data.db"))
     with open(os.path.join(out_dir, "Digest.crc32"), "w") as f:
         f.write(f"{crc}\n")
-    components = sorted(
-        name for name in os.listdir(out_dir)
-        if os.path.isfile(os.path.join(out_dir, name))
-        and name != "TOC.txt"
-    )
+    components = [n for n in _components(out_dir) if n != "TOC.txt"]
     with open(os.path.join(out_dir, "TOC.txt"), "w") as f:
         for name in components + ["TOC.txt"]:
             f.write(name + "\n")
+
+
+def _digest_ok(d: str, crc: int) -> bool:
+    """Whether ``d``'s Digest.crc32 states ``crc``; a missing or
+    unreadable sidecar fails (quarantine convention)."""
+    try:
+        with open(os.path.join(d, "Digest.crc32")) as f:
+            return int(f.read().strip()) == crc
+    except (OSError, ValueError):
+        return False
+
+
+def _toc_ok(d: str) -> bool:
+    """Whether ``d``'s TOC.txt names exactly the component files present."""
+    try:
+        with open(os.path.join(d, "TOC.txt")) as f:
+            named = sorted(ln.strip() for ln in f if ln.strip())
+    except OSError:
+        return False
+    return named == _components(d)
 
 
 def verify_digests(spark, path: str):
@@ -1092,74 +1120,22 @@ def verify_digests(spark, path: str):
     its Data.db once through a rolling CRC in constant memory — at
     100 TB this is an embarrassingly parallel single read pass, the
     cheapest full-bytes audit that exists."""
-    import pandas as pd
+    def _check(d):
+        crc, n = _crc32_file(os.path.join(d, "Data.db"))
+        return {"generation": os.path.basename(d), "data_length": n,
+                "digest_ok": _digest_ok(d, crc), "toc_ok": _toc_ok(d)}
 
-    dirs = _resolve_table_dirs(path)
-
-    def _check(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["dir"]:
-                crc, n = _crc32_file(os.path.join(d, "Data.db"))
-                digest_ok = False
-                try:
-                    with open(os.path.join(d, "Digest.crc32")) as f:
-                        digest_ok = int(f.read().strip()) == crc
-                except (FileNotFoundError, ValueError):
-                    digest_ok = False
-                toc_ok = False
-                try:
-                    with open(os.path.join(d, "TOC.txt")) as f:
-                        named = sorted(
-                            ln.strip() for ln in f if ln.strip()
-                        )
-                    present = sorted(
-                        name for name in os.listdir(d)
-                        if os.path.isfile(os.path.join(d, name))
-                    )
-                    toc_ok = named == present
-                except FileNotFoundError:
-                    toc_ok = False
-                rows.append({
-                    "generation": os.path.basename(d),
-                    "data_length": n,
-                    "digest_ok": digest_ok,
-                    "toc_ok": toc_ok,
-                })
-            yield pd.DataFrame(rows)
-
-    return (
-        local_frame(spark, [(d,) for d in dirs], "dir string")
-        .repartition(min(len(dirs), 32))
-        .mapInPandas(
-            _check,
-            schema=("generation string, data_length bigint, "
-                    "digest_ok boolean, toc_ok boolean"),
-        )
-    )
+    return _per_table(spark, path, _check,
+                      "generation string, data_length bigint, "
+                      "digest_ok boolean, toc_ok boolean")
 
 
 def _scrub_one_dir(d: str, deep: bool) -> dict:
     """Scrub one table: every check independent, exceptions demote the
     check to False instead of failing the sweep (scrub REPORTS, the
     quarantine decision is the caller's)."""
-    crc, _ = _crc32_file(os.path.join(d, "Data.db"))  # only the CRC
-    # is consumed here; the deep pass sizes the file via _data_size
-    digest_ok = toc_ok = False
-    try:
-        with open(os.path.join(d, "Digest.crc32")) as f:
-            digest_ok = int(f.read().strip()) == crc
-    except (OSError, ValueError):
-        pass
-    try:
-        with open(os.path.join(d, "TOC.txt")) as f:
-            named = sorted(ln.strip() for ln in f if ln.strip())
-        present = sorted(
-            nm for nm in os.listdir(d)
-            if os.path.isfile(os.path.join(d, nm)))
-        toc_ok = named == present
-    except OSError:
-        pass
+    crc, _ = _crc32_file(os.path.join(d, "Data.db"))
+    digest_ok, toc_ok = _digest_ok(d, crc), _toc_ok(d)
     index_ok = summary_ok = bloom_ok = stats_ok = False
     entries: list[tuple[bytes, int]] = []
     try:
@@ -1234,27 +1210,11 @@ def scrub_tables(spark, path: str, deep: bool = False):
     Scale: one task per table (dir fan-out as in :func:`stats_census`);
     shallow scrub reads sidecars + one streamed CRC pass, deep scrub one
     decode pass — both constant-memory, embarrassingly parallel."""
-    import pandas as pd
-
-    dirs = _resolve_table_dirs(path)
-
-    def _run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_scrub_one_dir(d, deep) for d in pdf["dir"]])
-
-    return (
-        local_frame(spark, [(d,) for d in dirs], "dir string")
-        .repartition(min(len(dirs), 32))
-        .mapInPandas(
-            _run,
-            schema=("generation string, digest_ok boolean, "
-                    "toc_ok boolean, index_ok boolean, "
-                    "summary_ok boolean, bloom_ok boolean, "
-                    "stats_ok boolean, n_partitions bigint, "
-                    "n_cells bigint"),
-        )
-    )
+    return _per_table(
+        spark, path, lambda d: _scrub_one_dir(d, deep),
+        "generation string, digest_ok boolean, toc_ok boolean, "
+        "index_ok boolean, summary_ok boolean, bloom_ok boolean, "
+        "stats_ok boolean, n_partitions bigint, n_cells bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -1431,17 +1391,42 @@ def write_sstable(partitions: Iterable[tuple], out_dir: str,
     4-byte localDeletionTime for DELETION_MASK). Partitions are sorted by
     key BYTES (keys must be distinct) for this function's callers, the
     fixtures and generators; each is encoded by :func:`_encode_partition`
-    and added to a :class:`_TableWriter`, which writes every sidecar.
+    and added to a :class:`_TableWriter`, which writes every sidecar into
+    a temp sibling that is renamed onto ``out_dir`` (:func:`_commit_table`;
+    ``out_dir`` must be absent, empty or a table, which is replaced).
     ``generation`` selects the length framing ("v1" fixed-width, "mc"
     unsigned-vint — :data:`SSTABLE_GENERATIONS`). ``compressed=True``
     rewrites Data.db as zlib chunks behind a CompressionInfo.db offsets
     map (NoTTLReader.java:342-345); Index.db offsets stay uncompressed."""
-    with _TableWriter(out_dir, generation, compressed, summary_interval,
-                      bool(colindex_every)) as w:
-        for key, cells, *deletion in sorted(partitions, key=lambda p: p[0]):
-            w.add(key, *_encode_partition(
-                key, cells, deletion[0] if deletion else None,
-                generation == "mc", colindex_every))
+    def write(tmp):
+        with _TableWriter(tmp, generation, compressed, summary_interval,
+                          bool(colindex_every)) as w:
+            for key, cells, *deletion in sorted(partitions,
+                                                key=lambda p: p[0]):
+                w.add(key, *_encode_partition(
+                    key, cells, deletion[0] if deletion else None,
+                    generation == "mc", colindex_every))
+
+    final = os.path.abspath(out_dir)
+    head, name = os.path.split(final)
+    _commit_table(os.path.join(head, f".tmp-{name}"), final, write)
+
+
+def _commit_table(tmp: str, final: str, write):
+    """The ONE commit of every table writer: ``write(tmp)`` writes the
+    table, then ``tmp`` is renamed to ``final``. ``tmp`` is a dot-prefixed
+    sibling of ``final``, which readers skip (:func:`_table_subdirs`), so
+    no reader lists a table before its TOC.txt exists and a writer that
+    raises leaves only ``tmp``. What an earlier attempt left at ``tmp`` is
+    removed first, and a table it committed at ``final`` (one with a
+    TOC.txt) is replaced; ``final`` must otherwise be absent or empty.
+    Returns what ``write`` returns."""
+    shutil.rmtree(tmp, ignore_errors=True)
+    result = write(tmp)
+    if os.path.exists(os.path.join(final, "TOC.txt")):
+        shutil.rmtree(final)
+    os.rename(tmp, final)
+    return result
 
 
 # ---------------------------------------------------------------------------
@@ -1945,13 +1930,7 @@ def _make_datasource_cls():
         def read(self, partition):
             d = partition.shard_dir
             crc, n = _crc32_file(os.path.join(d, "Data.db"))
-            ok = False
-            try:
-                with open(os.path.join(d, "Digest.crc32")) as f:
-                    ok = int(f.read().strip()) == crc
-            except (OSError, ValueError):
-                ok = False
-            yield (os.path.basename(d), n, ok)
+            yield (os.path.basename(d), n, _digest_ok(d, crc))
 
         def commit(self, end):
             pass
@@ -2307,7 +2286,7 @@ def _strip_split(shard_dir: str, data_path: str, start: int,
     """The strip task: transcode (:func:`_strip_partition`, no atom is
     decoded) each partition that starts in ``[start, end)`` of
     ``data_path`` as :func:`_partition_records` reads it, into a ``v1``
-    table at ``shard_dir``: byte-identical to :func:`_encode_rows` over
+    table at ``shard_dir``: byte-identical to :func:`write_sstable` over
     the stripped scan rows when cells are in name order, as every writer
     leaves them. A malformed record, or a key that does not sort after
     the one before, raises :class:`CorruptSSTableError` naming
@@ -2661,33 +2640,17 @@ def first_key_beyond(spark, path: str, key: str):
     summary probe order. The directory-level successor is
     ``min(next_key)`` over the rows (the multi-generation read path's
     merge step, done declaratively)."""
-    import pandas as pd
-
     probe = key.encode()
-    dirs = _resolve_table_dirs(path)
 
-    def _read(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["dir"]:
-                nxt, parsed, total = _successor_in_dir(d, probe)
-                rows.append({
-                    "generation": os.path.basename(d),
-                    "next_key": None if nxt is None else nxt.decode(),
-                    "index_bytes_parsed": parsed,
-                    "index_bytes_total": total,
-                })
-            yield pd.DataFrame(rows)
+    def _read(d):
+        nxt, parsed, total = _successor_in_dir(d, probe)
+        return {"generation": os.path.basename(d),
+                "next_key": None if nxt is None else nxt.decode(),
+                "index_bytes_parsed": parsed, "index_bytes_total": total}
 
-    return (
-        local_frame(spark, [(d,) for d in dirs], "dir string")
-        .repartition(min(len(dirs), 32))
-        .mapInPandas(
-            _read,
-            schema=("generation string, next_key string, "
-                    "index_bytes_parsed bigint, index_bytes_total bigint"),
-        )
-    )
+    return _per_table(spark, path, _read,
+                      "generation string, next_key string, "
+                      "index_bytes_parsed bigint, index_bytes_total bigint")
 
 
 def stats_census(spark, path: str):
@@ -2700,47 +2663,27 @@ def stats_census(spark, path: str):
     (empty table) and zero-expiring ttl bounds surface as NULLs. Tables
     without the sidecar raise — censusing unstated tables would
     silently under-report TTL debt (quarantine convention)."""
-    import pandas as pd
+    def _read(d):
+        st = read_stats(d)
+        if st is None:
+            raise CorruptSSTableError(
+                f"{d}: no Statistics.db — cannot census")
+        empty = st["min_writetime"] > st["max_writetime"]
+        return {
+            "generation": os.path.basename(d),
+            "n_partitions": st["n_partitions"], "n_cells": st["n_cells"],
+            "n_expiring": st["n_expiring"],
+            "min_writetime": None if empty else st["min_writetime"],
+            "max_writetime": None if empty else st["max_writetime"],
+            "min_ttl": st["min_ttl"] if st["n_expiring"] else None,
+            "max_ttl": st["max_ttl"] if st["n_expiring"] else None,
+        }
 
-    dirs = _resolve_table_dirs(path)
-
-    def _read(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["dir"]:
-                st = read_stats(d)
-                if st is None:
-                    raise CorruptSSTableError(
-                        f"{d}: no Statistics.db — cannot census"
-                    )
-                empty = st["min_writetime"] > st["max_writetime"]
-                rows.append({
-                    "generation": os.path.basename(d),
-                    "n_partitions": st["n_partitions"],
-                    "n_cells": st["n_cells"],
-                    "n_expiring": st["n_expiring"],
-                    "min_writetime":
-                        None if empty else st["min_writetime"],
-                    "max_writetime":
-                        None if empty else st["max_writetime"],
-                    "min_ttl": (st["min_ttl"]
-                                if st["n_expiring"] else None),
-                    "max_ttl": (st["max_ttl"]
-                                if st["n_expiring"] else None),
-                })
-            yield pd.DataFrame(rows)
-
-    return (
-        local_frame(spark, [(d,) for d in dirs], "dir string")
-        .repartition(min(len(dirs), 32))
-        .mapInPandas(
-            _read,
-            schema=("generation string, n_partitions bigint, "
-                    "n_cells bigint, n_expiring bigint, "
-                    "min_writetime bigint, max_writetime bigint, "
-                    "min_ttl bigint, max_ttl bigint"),
-        )
-    )
+    return _per_table(spark, path, _read,
+                      "generation string, n_partitions bigint, "
+                      "n_cells bigint, n_expiring bigint, "
+                      "min_writetime bigint, max_writetime bigint, "
+                      "min_ttl bigint, max_ttl bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -2749,7 +2692,7 @@ def stats_census(spark, path: str):
 
 def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
     """Inverse of the scan's row decode: one SSTABLE_SCHEMA row back to
-    its writer cell tuple (the cell half of :func:`_encode_rows`)."""
+    its writer cell tuple (the cell half of :func:`_partition_cells`)."""
     name = str(cell).encode()
     if kind == "expiring":
         # expiration is an on-disk int32 of seconds — saturate like the
@@ -2778,9 +2721,9 @@ def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
 
 
 def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
-    """One partition's :data:`SSTABLE_SCHEMA` rows in :func:`write_sstable`'s
-    form: ``(cells sorted by name, header deletion | None)``, a
-    ``partition_tombstone`` row becoming the header's deletion."""
+    """One partition's :data:`SSTABLE_SCHEMA` rows, cells in name order,
+    in :func:`write_sstable`'s form: ``(cells, header deletion | None)``,
+    a ``partition_tombstone`` row becoming the header's deletion."""
     cells, deletion = [], None
     for _, cell, kind, ttl, exp, wt, val in rows:
         if kind == "partition_tombstone":
@@ -2788,7 +2731,6 @@ def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
             deletion = (_ldt_s(exp), int(wt))
         else:
             cells.append(_row_to_cell(cell, kind, ttl, exp, wt, val))
-    cells.sort(key=lambda c: c[0])
     return cells, deletion
 
 
@@ -2828,23 +2770,6 @@ def _add_resolved(w: _TableWriter, key: bytes, resolved: list) -> int:
     if resolved:
         w.add(key, *_encode_partition(key, *_resolved_partition(resolved)))
     return len(resolved)
-
-
-def _encode_rows(rows: Iterable[tuple], out_dir: str,
-                 **write_kw) -> tuple[int, int]:
-    """:data:`SSTABLE_SCHEMA` rows in any order, all held, -> one
-    :func:`write_sstable` table at ``out_dir``: the sink of
-    :func:`write_sstable_distributed` and the tests' row-level reference
-    for the streaming rewrites. ``write_kw`` passes through (generation,
-    compression). Returns ``(n_partitions, n_rows)``."""
-    parts: dict[bytes, list] = {}
-    n = 0
-    for row in rows:
-        n += 1
-        parts.setdefault(str(row[0]).encode(), []).append(row)
-    write_sstable(((k, *_partition_cells(rs)) for k, rs in parts.items()),
-                  out_dir, **write_kw)
-    return len(parts), n
 
 
 def _gc_split(shard_dir: str, data_path: str, start: int, end: int,
@@ -2894,12 +2819,10 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
     """The ONE zero-shuffle rewrite driver behind :func:`rewrite_stripped`,
     :func:`gc_rewrite_single` and :func:`compact_rewrite`, one shard per
     spec. Each spec is ``(shard, *args)``; it runs as
-    ``task(out_dir/.tmp-<shard>, *args)`` (an earlier attempt's copy
-    removed first), which writes the shard and returns the report's
-    ``counts``; then the shard is renamed to ``out_dir/<shard>``. Readers
-    skip dot-prefixed directories, so a failed task leaves nothing they
-    accept. Only specs and report rows cross a process boundary; cell
-    bytes never do. The scheduler is the one variable:
+    ``task(out_dir/.tmp-<shard>, *args)``, which writes the shard and
+    returns the report's ``counts``, committed to ``out_dir/<shard>`` by
+    :func:`_commit_table`. Only specs and report rows cross a process
+    boundary; cell bytes never do. The scheduler is the one variable:
 
     - with a session, one plain RDD job over the specs, at most
       ``defaultParallelism`` tasks in a single stage and a single wave
@@ -2914,8 +2837,6 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
     ``out_dir`` must be absent or empty (:func:`_claim_out_dir`). Returns
     one ``Row(shard, *counts)`` per spec, in spec order; no specs = empty
     report."""
-    import shutil
-
     from pyspark.sql import Row
 
     _claim_out_dir(out_dir)
@@ -2925,11 +2846,9 @@ def _rewrite_shards(spark, out_dir: str, specs: list[tuple], task,
 
     def _run(spec):
         shard, *args = spec
-        tmp = os.path.join(out_dir, f".tmp-{shard}")
-        shutil.rmtree(tmp, ignore_errors=True)  # left by a failed attempt
-        counts = task(tmp, *args)
-        os.rename(tmp, os.path.join(out_dir, shard))
-        return report(shard, *counts)
+        return report(shard, *_commit_table(
+            os.path.join(out_dir, f".tmp-{shard}"),
+            os.path.join(out_dir, shard), lambda tmp: task(tmp, *args)))
 
     if spark is None:
         return _run_on_pool(_run, specs)
@@ -2984,6 +2903,25 @@ def _run_on_pool(run, specs: list[tuple]) -> list:
         pool.shutdown(cancel_futures=True)
 
 
+def _write_rows(shard_dir: str, rows: Iterable[tuple],
+                generation: str = "v1",
+                compressed: bool = False) -> tuple[int, int]:
+    """The :func:`write_sstable_distributed` task: :data:`SSTABLE_SCHEMA`
+    rows in the order a table stores them, each run of one ``pk`` encoded
+    as one partition (:func:`_partition_cells`) and added to one table at
+    ``shard_dir``, so the task holds one partition's rows whatever its
+    shard's size. Returns ``(n_partitions, n_rows)``."""
+    n = 0
+    with _TableWriter(shard_dir, generation, compressed) as w:
+        for pk, part in itertools.groupby(rows, operator.itemgetter(0)):
+            part = list(part)
+            n += len(part)
+            key = str(pk).encode()
+            w.add(key, *_encode_partition(key, *_partition_cells(part),
+                                          mc=generation == "mc"))
+    return w.n_partitions, n
+
+
 def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
                               generation: str = "v1",
                               compressed: bool = False):
@@ -2992,8 +2930,10 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
     rewrites of existing tables use the zero-shuffle
     :func:`_rewrite_shards` instead). The frame range-partitions on
     ``pk`` — every cell of a partition lands in ONE shard and shard key
-    ranges don't overlap — and each task encodes ONE sstable through the
-    shared :func:`_encode_rows` under ``out_dir/shard=NNNNN``. Exactly
+    ranges don't overlap — and is sorted within each range, so each task
+    streams ONE sstable, a partition at a time (:func:`_write_rows`),
+    committed to ``out_dir/shard=NNNNN`` by :func:`_commit_table` (a
+    retried attempt replaces a shard an earlier one committed). Exactly
     one shuffle; the encode is the byte-level inverse of
     :func:`scan_data_range`, so write->scan roundtrips bit-faithfully.
     ``out_dir`` must be absent or empty.
@@ -3001,21 +2941,25 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
     Eagerly executes and returns the shard report rows
     ``(shard, n_partitions, n_cells)`` (bounded: one per shard)."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
     _claim_out_dir(out_dir)
+    cols = ["pk", "cell", "kind", "ttl", "expiration", "writetime", "value"]
 
     def _encode(batches):
         from pyspark import TaskContext
 
-        shard = f"shard={TaskContext.get().partitionId():05d}"
-        rows = (r for pdf in batches for r in pdf[
-            ["pk", "cell", "kind", "ttl", "expiration", "writetime",
-             "value"]].itertuples(index=False))
+        ctx = TaskContext.get()
+        shard = f"shard={ctx.partitionId():05d}"
+        rows = (r for pdf in batches
+                for r in pdf[cols].itertuples(index=False, name=None))
         first = next(rows, None)
         if first is not None:  # an empty range writes no shard
-            n_parts, n = _encode_rows(
-                itertools.chain([first], rows), os.path.join(out_dir, shard),
-                generation=generation, compressed=compressed)
+            n_parts, n = _commit_table(
+                os.path.join(out_dir, f".tmp-{shard}.{ctx.attemptNumber()}"),
+                os.path.join(out_dir, shard),
+                lambda tmp: _write_rows(tmp, itertools.chain([first], rows),
+                                        generation, compressed))
             yield pd.DataFrame({"shard": [shard],
                                 "n_partitions": [n_parts],
                                 "n_cells": [n]})
@@ -3030,9 +2974,17 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
     # At 100 TB this is the standard stage boundary between transform
     # and sink — one materialization of the cells instead of two decode
     # passes over the source.
+    # The sort gives each range the order a table stores: keys, then the
+    # partition tombstone (NULL cell), then atoms by name (Spark's string
+    # order is UTF-8 byte order, the writer's key order); on a name tie a
+    # range tombstone first (Cassandra's on-disk atom order), then the
+    # other columns, so tied rows always encode the same way.
     report = (
         cells.localCheckpoint(eager=False)
         .repartitionByRange(shards, "pk")
+        .sortWithinPartitions("pk", "cell",
+                              F.col("kind") != "range_tombstone", "value",
+                              "writetime", "kind", "ttl", "expiration")
         .mapInPandas(
             _encode,
             schema="shard string, n_partitions bigint, n_cells bigint",
@@ -3771,43 +3723,29 @@ def droppable_census(spark, path: str, *, gc_grace_us: int,
 
     One task per table (the scrub/census fan-out), zero shuffle, one
     result row per generation."""
-    import pandas as pd
-
-    dirs = _resolve_table_dirs(path)
     thr_us = int(now_us) - int(gc_grace_us)
     thr_s = thr_us // 1_000_000
 
-    def _count(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["dir"]:
-                n = dels = drop = exp = 0
-                for _, deletion, cells in _table_partitions(d):
-                    if deletion is not None:  # a deletion atom too
-                        cells = [(0, DELETION_MASK, 0, 0, deletion[1], 0),
-                                 *cells]
-                    n += len(cells)
-                    for _, mask, _, expiration, wt, _ in cells:
-                        if mask in (DELETION_MASK, RANGE_TOMBSTONE_MASK):
-                            dels += 1
-                            drop += wt <= thr_us
-                        elif mask == EXPIRATION_MASK and expiration <= thr_s:
-                            exp += 1
-                rows.append((os.path.basename(d), n, dels, drop, exp))
-            yield pd.DataFrame(
-                rows, columns=["generation", "n_atoms", "n_deletes",
-                               "n_droppable_deletes", "n_expired"])
+    def _count(d):
+        n = dels = drop = exp = 0
+        for _, deletion, cells in _table_partitions(d):
+            if deletion is not None:  # a deletion atom too
+                cells = [(0, DELETION_MASK, 0, 0, deletion[1], 0), *cells]
+            n += len(cells)
+            for _, mask, _, expiration, wt, _ in cells:
+                if mask in (DELETION_MASK, RANGE_TOMBSTONE_MASK):
+                    dels += 1
+                    drop += wt <= thr_us
+                elif mask == EXPIRATION_MASK and expiration <= thr_s:
+                    exp += 1
+        return {"generation": os.path.basename(d), "n_atoms": n,
+                "n_deletes": dels, "n_droppable_deletes": drop,
+                "n_expired": exp}
 
-    return (
-        local_frame(spark, [(d,) for d in dirs], "dir string")
-        .repartition(min(len(dirs), 32))
-        .mapInPandas(
-            _count,
-            schema=("generation string, n_atoms bigint, n_deletes bigint,"
-                    " n_droppable_deletes bigint, n_expired bigint"),
-        )
-        .orderBy("generation")
-    )
+    return _per_table(spark, path, _count,
+                      "generation string, n_atoms bigint, n_deletes bigint,"
+                      " n_droppable_deletes bigint, n_expired bigint"
+                      ).orderBy("generation")
 
 
 def droppable_census_oracle_sql(*, gc_grace_us: int, now_us: int,

@@ -90,6 +90,25 @@ def test_text_knn_self_is_rank_one_and_duplicates_tie(spark):
     assert all(r.doc_id != 4 for r in rows)  # no shared bucket -> no row
 
 
+def test_text_knn_query_norm_past_int64_raises_naming_query(spark,
+                                                            monkeypatch):
+    """The query's squared norm is an exact Python sum folded into the
+    plan as a long literal: one past int64 fails with a ValueError that
+    names the query instead of reaching the cast, and one just under it
+    still runs."""
+    def weights(w):
+        return lambda docs, dim, text_col, id_col: docs.sparkSession \
+            .createDataFrame([(7, 1, w)], f"{id_col} long, bucket int, w long")
+
+    docs = _toy_docs(spark, [(7, "x", "en")])
+    monkeypatch.setattr(C, "hashed_tfidf", weights(3_037_000_500))
+    with pytest.raises(ValueError, match="query_id 7 .*past int64"):
+        C.text_knn(docs, 7)
+    monkeypatch.setattr(C, "hashed_tfidf", weights(3_037_000_499))
+    [row] = C.text_knn(docs, 7).collect()
+    assert row.doc_id == 7 and row.dot == 3_037_000_499 ** 2
+
+
 def test_text_knn_plan_broadcasts_query_and_stats(spark, documents):
     df = C.text_knn(documents, 0, k=10, dim=512)
     plan = formatted_plan(df)

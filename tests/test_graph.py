@@ -135,6 +135,27 @@ def test_kcore_cascade_on_chain(spark):
     assert kcore(edges, k=2, rounds=3).count() == 0
 
 
+def test_kcore_broadcasts_survivors_from_round_two_only(spark):
+    """Round 1's survivor set is about |V|, so its two semi-joins carry no
+    broadcast hint and AQE sizes them; every later round broadcasts its
+    peeled survivors. In the nested (checkpoint=False) plan round 2 adds
+    its 2 hints; round 3 adds 2 more over three copies of round 2's edge
+    set (its input and both survivor sides)."""
+    from cassandra_ttl_remover_spark.operators.graph import kcore
+
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(4) if a != b],
+        "src long, dst long")
+
+    def hints(rounds):
+        return (kcore(edges, k=2, rounds=rounds, checkpoint=False)
+                ._jdf.queryExecution().analyzed().toString()
+                .count("ResolvedHint (strategy=broadcast)"))
+
+    assert hints(1) == 0 and hints(2) == 2
+    assert hints(3) == 2 + 3 * hints(2)
+
+
 def test_kcore_stable_core_survives(spark):
     """A 4-clique is its own 3-core: peeling at k=3 must leave it intact
     with degrees unchanged at any round count."""

@@ -31,9 +31,10 @@ _STRIP_TINY_TABLE = """
 """
 
 
-def _run_script(cwd: str, env: dict, *bodies: str) -> None:
+def _run_script(cwd: str, env: dict, *bodies: str) -> str:
     """Run ``bodies`` in a fresh interpreter that finds the package only
-    through its own ``sys.path`` insert, never through cwd or PYTHONPATH."""
+    through its own ``sys.path`` insert, never through cwd or PYTHONPATH.
+    Returns its stderr."""
     script = "\n".join([
         "import os, sys", f"sys.path.insert(0, {REPO!r})", f"work = {cwd!r}",
         *map(textwrap.dedent, bodies)])
@@ -44,6 +45,7 @@ def _run_script(cwd: str, env: dict, *bodies: str) -> None:
     proc = subprocess.run([sys.executable, "-c", script], cwd=cwd, env=env,
                           capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
+    return proc.stderr
 
 
 @pytest.fixture
@@ -209,3 +211,43 @@ def test_no_socket_file_left_after_cli_run(short_tmp):
                for f in os.listdir(os.path.join(work, "out")))
     assert not _socket_files(work)
     assert not glob.glob(os.path.join(work, "ctrs-*"))
+
+
+def test_worker_hangup_prints_no_flush_traceback_but_errors_show(short_tmp):
+    """A stopping session closes its idle workers' sockets, and the
+    daemon's last flush to such a socket printed a BrokenPipeError
+    traceback. With the engine daemon it prints none, while a UDF that
+    raises still fails its job with its error, and a flush that fails any
+    other way is still reported."""
+    work = short_tmp
+    err = _run_script(work, {"TMPDIR": work}, """
+        import socket
+        from cassandra_ttl_remover_spark import _daemon, get_spark
+        spark = get_spark("worker-hangup")
+        sc = spark.sparkContext
+        assert sc.parallelize(range(8), 4).map(lambda x: x).sum() == 28
+        def boom(x):
+            raise RuntimeError(f"udf-boom-{x}")
+        try:
+            sc.parallelize([7], 1).map(boom).collect()
+            raise AssertionError("the failing UDF did not fail its job")
+        except Exception as e:
+            assert "udf-boom-7" in str(e), e
+        spark.stop()
+        # the hang-up itself, as the daemon's forked worker meets it
+        daemon = _daemon.install()
+        hung, jvm = socket.socketpair()
+        jvm.close()
+        assert daemon.worker(hung, True) == -1
+        print("-- other failure --", file=sys.stderr, flush=True)
+        def bad_fd(infile, outfile):
+            outfile.write(b"x")
+            os.close(outfile.fileno())
+        daemon.worker_main = _daemon.quiet_hangup(bad_fd)
+        a, b = socket.socketpair()
+        daemon.worker(a, True)
+    """)
+    quiet, other = err.split("-- other failure --")
+    assert "failed to flush" not in quiet, quiet[-3000:]
+    assert "BrokenPipeError" not in quiet, quiet[-3000:]
+    assert "failed to flush" in other and "Bad file descriptor" in other

@@ -1404,13 +1404,16 @@ def test_merge_compact_sorted_is_one_job_one_stage(spark):
 
 def _strip_reference(shard_dir, data_path, start, end):
     """The row-level reference for one split: decode, make every expiring
-    row live, re-encode through the shared encoder."""
-    return ss._encode_rows(
-        ((pk, cell, "normal", None, None, wt, val) if kind == "expiring"
-         else (pk, cell, kind, ttl, exp, wt, val)
-         for pk, cell, kind, ttl, exp, wt, val
-         in ss.scan_data_range(data_path, start, end)),
-        shard_dir)
+    row live, re-encode each partition through write_sstable. Returns
+    ``(n_partitions, n_rows)``."""
+    rows = [(pk, cell, "normal", None, None, wt, val) if kind == "expiring"
+            else (pk, cell, kind, ttl, exp, wt, val)
+            for pk, cell, kind, ttl, exp, wt, val
+            in ss.scan_data_range(data_path, start, end)]
+    parts = [(pk.encode(), *ss._partition_cells(rs))
+             for pk, rs in itertools.groupby(rows, lambda r: r[0])]
+    ss.write_sstable(parts, shard_dir)
+    return len(parts), len(rows)
 
 
 def _assert_same_table(got_dir, want_dir):
@@ -1852,6 +1855,154 @@ def test_rewrite_task_replaces_a_stale_temp_shard(monkeypatch):
     ss.write_sstable([(b"k", [(b"c", 0, 0, 0, 7, b"v")])], want)
     assert sorted(os.listdir(base)) == ["shard=00000", "want"]
     _assert_same_table(os.path.join(base, "shard=00000"), want)
+    shutil.rmtree(base)
+
+
+def test_commit_replaces_a_committed_table_and_nothing_else():
+    """A retried task replaces the table an earlier attempt committed
+    under the same name; a directory that holds other files is never
+    replaced: the rename fails and leaves it as it was."""
+    base = _tmpdir()
+    final = os.path.join(base, "shard=00000")
+    ss.write_sstable([(b"old", [(b"c", 0, 0, 0, 1, b"v")])], final)
+    rows = [("new", "c", "normal", None, None, 2, "v")]
+    assert ss._commit_table(
+        os.path.join(base, ".tmp-shard=00000.1"), final,
+        lambda tmp: ss._write_rows(tmp, iter(rows))) == (1, 1)
+    assert os.listdir(base) == ["shard=00000"]
+    assert [k for k, _ in ss.read_index(
+        os.path.join(final, "Index.db"))] == [b"new"]
+    other = os.path.join(base, "notes")
+    os.makedirs(other)
+    with open(os.path.join(other, "keep.txt"), "w") as f:
+        f.write("not a table")
+    with pytest.raises(OSError):
+        ss.write_sstable([(b"k", [(b"c", 0, 0, 0, 1, b"v")])], other)
+    assert os.listdir(other) == ["keep.txt"]
+    shutil.rmtree(base)
+
+
+def test_write_sstable_that_fails_leaves_no_readable_table(spark):
+    """write_sstable commits like every writer: a call that raises after
+    its first partition reached Data.db (the second has no value bytes)
+    leaves only the dot-prefixed sibling, which no reader accepts."""
+    base = _tmpdir()
+    out = os.path.join(base, "t")
+    with pytest.raises(TypeError):
+        ss.write_sstable([(b"k1", [(b"c", 0, 0, 0, 1, b"v")]),
+                          (b"k2", [(b"c", 0, 0, 0, 2, None)])], out)
+    assert os.listdir(base) == [".tmp-t"]
+    assert os.path.getsize(os.path.join(base, ".tmp-t", "Data.db")) > 0
+    assert ss._table_subdirs(base) == []
+    with pytest.raises(ValueError, match="no Data.db"):
+        ss._resolve_table_dirs(base)
+    with pytest.raises(FileNotFoundError):
+        ss._resolve_table_dirs(out)
+    with pytest.raises(Exception, match="no Data.db"):
+        ss.scan_sstable(spark, base).collect()
+    shutil.rmtree(base)
+
+
+def test_distributed_write_task_that_fails_leaves_no_readable_shard(spark):
+    """A write_sstable_distributed task that raises after adding a
+    partition to its Data.db (the shard's second partition has an
+    unknown atom kind) leaves only its dot-prefixed temp directory:
+    nothing under the output directory is listed, resolved or scanned."""
+    base = _tmpdir()
+    out = os.path.join(base, "out")
+    cells = spark.createDataFrame(
+        [("k1", "c", "normal", None, None, 1, "v"),
+         ("k2", "c", "bogus", None, None, 2, "v")], ss.SSTABLE_SCHEMA)
+    with pytest.raises(Exception, match="'bogus' is not a recognized"):
+        ss.write_sstable_distributed(cells, out, shards=1)
+    left = os.listdir(out)
+    assert left and all(d.startswith(".tmp-shard=00000.") for d in left)
+    assert os.path.getsize(os.path.join(out, left[0], "Data.db")) > 0
+    assert ss._table_subdirs(out) == []
+    with pytest.raises(ValueError, match="no Data.db"):
+        ss._resolve_table_dirs(out)
+    with pytest.raises(Exception, match="no Data.db"):
+        ss.scan_sstable(spark, out).collect()
+    shutil.rmtree(base)
+
+
+def test_stream_never_plans_a_shard_without_toc(monkeypatch):
+    """Polled while a distributed write's task adds each partition (its
+    shard's Data.db open and growing), the stream source lists and plans
+    only committed shards, each with its TOC.txt; the new shard appears
+    once committed."""
+    base = _tmpdir()
+    ss.write_sstable([(b"a", [(b"c", 0, 0, 0, 1, b"v")])],
+                     os.path.join(base, "shard=00000"))
+    reader = ss._make_datasource_cls()({"path": base}).streamReader(None)
+    listed = []
+    add = ss._TableWriter.add
+
+    def polling_add(self, *args):
+        add(self, *args)
+        end = reader.latestOffset()
+        listed.append(end["shards"])
+        for split in reader.partitions({"shards": []}, end):
+            assert os.path.exists(os.path.join(
+                os.path.dirname(split.data_path), "TOC.txt")), split.data_path
+
+    monkeypatch.setattr(ss._TableWriter, "add", polling_add)
+    rows = [(f"k{p}", "c", "normal", None, None, p, "v") for p in range(5)]
+    ss._commit_table(os.path.join(base, ".tmp-shard=00001.0"),
+                     os.path.join(base, "shard=00001"),
+                     lambda tmp: ss._write_rows(tmp, iter(rows)))
+    monkeypatch.undo()
+    assert listed == [["shard=00000"]] * 5
+    assert reader.latestOffset() == {"shards": ["shard=00000", "shard=00001"]}
+    shutil.rmtree(base)
+
+
+def test_distributed_write_orders_name_ties_range_tombstone_first(spark):
+    """Two atoms with one name (a range-tombstone start equal to a cell
+    name) are written in one order whatever order they arrive in: the
+    range tombstone first, Cassandra's on-disk atom order, then the
+    cell."""
+    rt = ("k", "c1", "range_tombstone", None, 1_700_000_000, 10, "c5")
+    cell = ("k", "c1", "normal", None, None, 20, "v")
+    first = ("k", "c0", "normal", None, None, 5, "w")
+    outs = []
+    for rows in ([cell, first, rt], [rt, cell, first]):
+        out = _tmpdir()
+        ss.write_sstable_distributed(
+            spark.createDataFrame(rows, ss.SSTABLE_SCHEMA).coalesce(1), out,
+            shards=1)
+        assert list(ss.scan_data_range(
+            os.path.join(out, "shard=00000", "Data.db"), 0, 1 << 40)) == [
+                first, rt, cell]
+        outs.append(out)
+    _assert_same_shards(*outs)
+    for out in outs:
+        shutil.rmtree(out)
+
+
+def test_distributed_write_task_memory_does_not_grow_with_shard():
+    """A write_sstable_distributed task (_write_rows over its sorted
+    rows) holds one partition's rows: with partitions of the same size,
+    4x more partitions per shard leave its traced peak within 64 KiB (a
+    task that holds its shard grows by megabytes). Both Data.db exceed
+    the 1 MiB digest read buffer, so that buffer is the same in both."""
+    wt = 1_700_000_000_000_000
+    base = _tmpdir()
+    peaks = []
+    for n in (700, 4 * 700):
+        def rows():
+            for p in range(n):
+                yield (f"p{p:06d}", None, "partition_tombstone", None,
+                       1_700_000_000, wt, None)
+                for i in range(8):
+                    yield (f"p{p:06d}", f"{i:06d}:c", "normal", None, None,
+                           wt + i, "v" * 200)
+
+        out = os.path.join(base, f"n{n}")
+        peaks.append(_traced_peak(lambda: ss._write_rows(out, rows())))
+        assert os.path.getsize(os.path.join(out, "Data.db")) > 1 << 20
+        assert ss.read_stats(out)["n_partitions"] == n
+    assert peaks[1] - peaks[0] < 64 << 10, peaks
     shutil.rmtree(base)
 
 
