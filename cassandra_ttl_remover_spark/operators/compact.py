@@ -326,153 +326,43 @@ def compact_atoms(atoms: DataFrame, *, gc_grace_us: int,
     ``range_tombstone_retained`` (cell = start bound, value = end bound)
     / ``partition_tombstone_retained`` (cell and value NULL).
 
-    Scale shape: deletion atoms are assumed SMALL relative to cells
-    (deletes are rare events; a corpus where they are not has bigger
-    problems), so the partition-delete and range-tombstone frames are
-    broadcast — the cell stream takes exactly ONE shuffle (the
-    ``(pk, cell)`` arg-max/sum aggregate, map-side combined; the
-    ``collect_list`` of counter shards is bounded by the generation
-    count per key), and the corpus is scanned exactly TWICE (cells +
-    one deletion-extraction pass whose small result persists for all
-    five deletion consumers — plan-asserted in tests/test_plans.py).
-    The RT shadow is a broadcast LEFT ANTI range join; if deletion
-    metadata ever outgrew broadcast, dropping the hint degrades both
-    joins to pk-co-partitioned shuffles without touching semantics.
-    Counter math runs in JVM higher-order functions — no Python in the
-    hot path."""
+    Scale shape: the atoms take ONE exchange, a hash partitioning on
+    ``pk``, and each key's atoms are resolved by one grouped map
+    (``applyInPandas``) running the same rule as the k-way merge and the
+    GC rewrite (:func:`~..sources.sstable._compact_key` over
+    :func:`~..sources.sstable._resolve_atoms`), so engine code states
+    the rule once; :func:`compact_atoms_oracle_sql` is its independent
+    DuckDB mirror. The corpus is scanned once and nothing is cached or
+    broadcast.
+
+    Memory: a task holds one partition key's atoms at a time, as the
+    merge task (:func:`~..sources.sstable._merge_range`) does, so one
+    wide partition must fit in a Python worker (the ``(pk, cell)``
+    aggregate this replaced had no per-key bound either).
+
+    Input checks: a row the native format cannot hold raises a
+    ValueError naming its pk: an unknown ``kind``, a NULL pk, or a NULL
+    cell name or value on a kind that has one (a tombstone's value and a
+    partition tombstone's cell are NULL). ``ttl`` and ``expiration``
+    take no part in the rule."""
+    from cassandra_ttl_remover_spark.sources.sstable import (
+        MERGED_SCHEMA,
+        _compact_key,
+    )
+
     threshold = int(now_us) - int(gc_grace_us)
-    kind = F.col("kind")
-
-    # ONE pass extracts every deletion atom; the result (one row per
-    # distinct deletion, small by the rare-deletes assumption) is
-    # persisted so its five consumers (both shadow joins + the three
-    # retained-atom emissions) never rescan the corpus — without this
-    # the planner recomputes the full atom scan per consumer. The
-    # frame's lifecycle is the RETURNED PLAN's lifecycle: the plan holds
-    # the only reference, and Spark's ContextCleaner unpersists the
-    # cached blocks when the plan is garbage-collected — so interleaved
-    # or concurrent compactions each keep exactly their own bounded
-    # deletion frame alive, with no shared slot to race on or to
-    # invalidate a not-yet-evaluated sibling's two-scan guarantee.
-    dels = (
-        atoms.filter(kind.isin("partition_tombstone", "range_tombstone"))
-        .groupBy(
-            "pk", "kind",
-            F.col("cell").alias("rt_start"),
-            F.col("value").alias("rt_end"),
-        )
-        .agg(F.max("writetime").alias("wt"))
-        .persist()
+    return (
+        atoms.select(
+            "pk", "cell", "kind",
+            # 0 fills the integer slots _row_to_cell reads for a row that
+            # has none, and keeps the pandas columns int64
+            F.coalesce("ttl", F.lit(0)).alias("ttl"),
+            F.coalesce("expiration", F.lit(0)).alias("expiration"),
+            "writetime", "value")
+        .groupBy("pk")
+        .applyInPandas(lambda pdf: _compact_key(pdf, threshold),
+                       schema=MERGED_SCHEMA)
     )
-    pd_df = (
-        dels.filter(kind == "partition_tombstone")
-        .groupBy("pk").agg(F.max("wt").alias("pd_wt"))
-    )
-    rt_df = dels.filter(kind == "range_tombstone").select(
-        "pk", "rt_start", "rt_end", F.col("wt").alias("mfda"))
-    cells = atoms.filter(
-        ~kind.isin("partition_tombstone", "range_tombstone"))
-
-    # partition-delete shadow, then range-tombstone shadow (per-atom:
-    # required for counter sums, equivalent for LWW since shadowing is
-    # monotone in writetime)
-    c1 = (
-        cells.join(F.broadcast(pd_df), "pk", "left")
-        .filter(F.col("pd_wt").isNull()
-                | (F.col("writetime") > F.col("pd_wt")))
-        .drop("pd_wt")
-        .alias("c")
-    )
-    r = rt_df.alias("r")
-    c2 = c1.join(
-        F.broadcast(r),
-        (F.col("c.pk") == F.col("r.pk"))
-        & (F.col("c.cell") >= F.col("r.rt_start"))
-        & (F.col("c.cell") <= F.col("r.rt_end"))
-        & (F.col("c.writetime") <= F.col("r.mfda")),
-        "left_anti",
-    )
-
-    is_shard = F.col("kind").isin("counter", "counter_update")
-    g = c2.groupBy("pk", "cell").agg(
-        F.max(
-            F.struct(
-                F.col("writetime").alias("wt"),
-                (F.col("kind") == "tombstone").cast("int").alias("tomb"),
-                F.col("value").alias("val"),
-            )
-        ).alias("_w"),
-        F.max(F.when(F.col("kind") == "tombstone",
-                     F.col("writetime"))).alias("_tomb_wt"),
-        F.collect_list(
-            F.when(
-                is_shard,
-                F.struct(
-                    F.col("writetime").alias("wt"),
-                    F.col("value").cast("long").alias("val"),
-                ),
-            )
-        ).alias("_shards"),
-    ).withColumn(
-        "_live_shards",
-        F.filter(
-            "_shards",
-            lambda s: F.col("_tomb_wt").isNull()
-            | (s["wt"] > F.col("_tomb_wt")),
-        ),
-    )
-
-    is_counter = F.size("_shards") > 0
-    has_live = F.size("_live_shards") > 0
-    cnt_sum = F.aggregate(
-        "_live_shards", F.lit(0).cast("long"), lambda a, s: a + s["val"])
-    cnt_wt = F.array_max(F.transform("_live_shards", lambda s: s["wt"]))
-    null_s = F.lit(None).cast("string")
-    merged = g.select(
-        "pk", "cell",
-        F.when(is_counter & has_live, cnt_wt)
-        .when(is_counter, F.col("_tomb_wt"))
-        .otherwise(F.col("_w.wt")).alias("writetime"),
-        F.when(is_counter & has_live, cnt_sum.cast("string"))
-        .when(is_counter, null_s)
-        .when(F.col("_w.tomb") == 1, null_s)
-        .otherwise(F.col("_w.val")).alias("value"),
-        F.when(is_counter & has_live, F.lit("counter_live"))
-        .when(is_counter, F.lit("tombstone_retained"))
-        .when(F.col("_w.tomb") == 1, F.lit("tombstone_retained"))
-        .otherwise(F.lit("live")).alias("status"),
-    ).filter(
-        (F.col("status") != "tombstone_retained")
-        | (F.col("writetime") > F.lit(threshold))
-    )
-
-    rt_out = (
-        rt_df.alias("r")
-        .join(F.broadcast(pd_df).alias("p"),
-              F.col("r.pk") == F.col("p.pk"), "left")
-        .filter(
-            (F.col("pd_wt").isNull() | (F.col("mfda") > F.col("pd_wt")))
-            & (F.col("mfda") > F.lit(threshold))
-        )
-        .select(
-            F.col("r.pk").alias("pk"),
-            F.col("rt_start").alias("cell"),
-            F.col("mfda").alias("writetime"),
-            F.col("rt_end").alias("value"),
-            F.lit("range_tombstone_retained").alias("status"),
-        )
-    )
-    pd_out = (
-        pd_df.filter(F.col("pd_wt") > F.lit(threshold))
-        .select(
-            "pk",
-            F.lit(None).cast("string").alias("cell"),
-            F.col("pd_wt").alias("writetime"),
-            F.lit(None).cast("string").alias("value"),
-            F.lit("partition_tombstone_retained").alias("status"),
-        )
-    )
-    return merged.unionByName(rt_out).unionByName(pd_out)
 
 
 def compact_atoms_oracle_sql(atoms_sql: str, *, gc_grace_us: int,

@@ -1582,7 +1582,8 @@ def _resolve_table_dirs(path: str) -> list[str]:
     cannot make them disagree on what a directory contains."""
     if os.path.exists(os.path.join(path, "Data.db")):
         return [path]
-    subs = [os.path.join(path, d) for d in _table_subdirs(path)]
+    subs = ([os.path.join(path, d) for d in _table_subdirs(path)]
+            if os.path.isdir(path) else [])
     if not subs:
         raise ValueError(
             f"no Data.db under {path} or its subdirectories"
@@ -2336,10 +2337,12 @@ def rewrite_stripped(spark, path: str, out_dir: str,
 
 def _resolve_atoms(parts: Iterable[tuple], threshold: int) -> list[tuple]:
     """Task-local application of compact_atoms' ONE shadowing rule — the
-    single Python implementation shared by the k-way merge and the
-    single-table GC rewrite so the two cannot drift from each other (or
-    from the DataFrame plan: cross-plan equality is pinned in
-    tests/test_sstable.py and the spec-model property tests).
+    single implementation in engine code, run by the k-way merge
+    (:func:`_merge_range`), the single-table GC rewrite (:func:`_gc_split`)
+    and ``compact_atoms``' grouped map (:func:`_compact_key`). Tests hold
+    it to the DuckDB mirror ``compact_atoms_oracle_sql`` and to
+    spec-written models (tests/test_sstable.py, the spec-model property
+    tests).
 
     ``parts`` are one key's parsed partitions (:func:`_parse_partition`),
     one per generation in generation order. Atoms stay bytes: UTF-8 byte
@@ -2498,6 +2501,38 @@ def _merge_range(dirs: list[str], ks: str | None, kp: str | None,
         yield k, _resolve_atoms(group, threshold)
 
 
+#: the resolved rows of both compaction plans, ``compact_atoms`` and
+#: :func:`merge_compact_sorted`
+MERGED_SCHEMA = ("pk string, cell string, writetime bigint, value string, "
+                 "status string")
+_MERGED_COLUMNS = ["pk", "cell", "writetime", "value", "status"]
+
+
+def _compact_key(pdf, threshold: int):
+    """``compact_atoms``' group function: one ``pk``'s
+    :data:`SSTABLE_SCHEMA` rows (a pandas frame) in parsed-partition
+    form, resolved by :func:`_resolve_atoms` and decoded at the edge
+    (:func:`_merged_row`). The cells are one part (:func:`_row_to_cell`)
+    and each partition tombstone is a part of its own, because a header
+    holds one deletion and the resolver takes the newest across parts.
+    Holds one key's atoms; returns a frame of :data:`MERGED_SCHEMA`."""
+    import pandas as pd
+
+    pk = pdf["pk"].iat[0]
+    key = _text(pk, pk, "partition key")
+    parts, cells = [], []
+    for _, cell, kind, ttl, exp, wt, val in pdf.itertuples(index=False,
+                                                           name=None):
+        if kind == "partition_tombstone":
+            parts.append((key, (_ldt_s(exp), int(wt)), []))
+        else:
+            cells.append(_row_to_cell(cell, kind, ttl, exp, wt, val, pk=pk))
+    parts.append((key, None, cells))
+    return pd.DataFrame([_merged_row(key, *row)
+                         for row in _resolve_atoms(parts, threshold)],
+                        columns=_MERGED_COLUMNS)
+
+
 def _merged_row(key: bytes, cell, wt: int, val, status: str) -> tuple:
     """One resolved row in :func:`merge_compact_sorted`'s string columns;
     a field that is not UTF-8 raises a ValueError naming key and field."""
@@ -2530,14 +2565,15 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     SURVEY §1.2, Cassandra3TTLRemover.java:124-136), LWW with
     tombstones-win-ties, additive counter-shard merge, and the uniform
     gc_grace retain/purge threshold. The cell data never crosses the
-    network — the alternative (q_t8's arg-max exchange) shuffles every
-    cell once; this plan moves ZERO cell bytes between tasks, which at
-    100 TB is the whole cost of compaction. The ranges run as one stage
-    with no exchange, at most ``defaultParallelism`` tasks.
+    network — the alternative (q_t8's ``compact_atoms``, a ``pk``
+    exchange into the same resolver) shuffles every cell once; this plan
+    moves ZERO cell bytes between tasks, which at 100 TB is the whole
+    cost of compaction. The ranges run as one stage with no exchange, at
+    most ``defaultParallelism`` tasks.
 
     Emits ``(pk, cell, writetime, value, status)`` — byte-identical to
-    ``compact_atoms`` over the same generations (the cross-plan
-    equality q_t8/q_t9 prove under one oracle).
+    ``compact_atoms`` over the same generations (q_t8/q_t9 hold both to
+    one DuckDB oracle).
 
     Correctness of the range partitioning: a pk lives in exactly ONE
     task (ranges cut on partition keys; every generation's byte window
@@ -2564,12 +2600,10 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
                 for row in resolved)
         while chunk := list(itertools.islice(rows, batch if batch > 0
                                              else None)):
-            yield pd.DataFrame(chunk, columns=["pk", "cell", "writetime",
-                                               "value", "status"])
+            yield pd.DataFrame(chunk, columns=_MERGED_COLUMNS)
 
     return local_frame(spark, ranges, "ks string, kp string").mapInPandas(
-        _merge, schema=("pk string, cell string, writetime bigint, "
-                        "value string, status string"))
+        _merge, schema=MERGED_SCHEMA)
 
 
 def stream_digests(spark, path: str):
@@ -2690,34 +2724,47 @@ def stats_census(spark, path: str):
 # row writers: GC, compaction, one rewrite driver, one sink for cell frames
 # ---------------------------------------------------------------------------
 
-def _row_to_cell(cell, kind, ttl, exp, wt, val) -> tuple:
+#: the writer mask of each cell kind of :data:`SSTABLE_SCHEMA`
+_KIND_MASK = {"normal": 0, "expiring": EXPIRATION_MASK,
+              "tombstone": DELETION_MASK, "counter": COUNTER_MASK,
+              "counter_update": COUNTER_UPDATE_MASK,
+              "range_tombstone": RANGE_TOMBSTONE_MASK}
+
+
+def _text(x, pk, field: str) -> bytes:
+    """A string field of an :data:`SSTABLE_SCHEMA` row as writer bytes.
+    The native format has no NULL name or value, so a NULL raises a
+    ValueError naming the row's ``pk`` and the field."""
+    if x is None:
+        raise ValueError(f"partition {pk!r}: {field} is NULL")
+    return str(x).encode()
+
+
+def _row_to_cell(cell, kind, ttl, exp, wt, val, pk=None) -> tuple:
     """Inverse of the scan's row decode: one SSTABLE_SCHEMA row back to
-    its writer cell tuple (the cell half of :func:`_partition_cells`)."""
-    name = str(cell).encode()
-    if kind == "expiring":
+    its writer cell tuple (the cell half of :func:`_partition_cells`). An
+    unknown kind, a NULL cell name, or a NULL value on any kind but a
+    tombstone raises a ValueError (:func:`_text`; ``pk`` names the row)."""
+    mask = _KIND_MASK.get(kind)
+    if mask is None:
+        raise ValueError(f"cell kind {kind!r} is not a recognized atom kind")
+    name = _text(cell, pk, f"{kind} cell name")
+    if mask == DELETION_MASK:
+        return (name, mask, 0, 0, int(wt), struct.pack(">i", _ldt_s(exp)))
+    # a range tombstone's value is its end bound
+    val = _text(val, pk, f"{kind} value")
+    if mask == EXPIRATION_MASK:
         # expiration is an on-disk int32 of seconds — saturate like the
         # deletion branches (Cassandra's overflow-policy CAP stance)
-        return (name, EXPIRATION_MASK, int(ttl), _ldt_s(exp), int(wt),
-                str(val).encode())
-    if kind == "tombstone":
-        return (name, DELETION_MASK, 0, 0, int(wt),
-                struct.pack(">i", _ldt_s(exp)))
-    if kind == "normal":
-        return (name, 0, 0, 0, int(wt), str(val).encode())
-    if kind == "counter":
+        return (name, mask, int(ttl), _ldt_s(exp), int(wt), val)
+    if mask == COUNTER_MASK:
         # expiration slot = timestampOfLastDelete (see SSTABLE_SCHEMA
         # column-reuse note)
-        return (name, COUNTER_MASK, 0, int(exp), int(wt),
-                str(val).encode())
-    if kind == "counter_update":
-        return (name, COUNTER_UPDATE_MASK, 0, 0, int(wt),
-                str(val).encode())
-    if kind == "range_tombstone":
-        # cell = start bound, value = end bound,
+        return (name, mask, 0, int(exp), int(wt), val)
+    if mask == RANGE_TOMBSTONE_MASK:
         # expiration = localDeletionTime, wt = markedForDeleteAt
-        return (name, RANGE_TOMBSTONE_MASK, 0, _ldt_s(exp), int(wt),
-                str(val).encode())
-    raise ValueError(f"cell kind {kind!r} is not a recognized atom kind")
+        return (name, mask, 0, _ldt_s(exp), int(wt), val)
+    return (name, mask, 0, 0, int(wt), val)
 
 
 def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
@@ -2725,12 +2772,12 @@ def _partition_cells(rows: Iterable[tuple]) -> tuple[list, tuple | None]:
     in :func:`write_sstable`'s form: ``(cells, header deletion | None)``,
     a ``partition_tombstone`` row becoming the header's deletion."""
     cells, deletion = [], None
-    for _, cell, kind, ttl, exp, wt, val in rows:
+    for pk, cell, kind, ttl, exp, wt, val in rows:
         if kind == "partition_tombstone":
             # the header's localDeletionTime is an int32 like a cell's
             deletion = (_ldt_s(exp), int(wt))
         else:
-            cells.append(_row_to_cell(cell, kind, ttl, exp, wt, val))
+            cells.append(_row_to_cell(cell, kind, ttl, exp, wt, val, pk=pk))
     return cells, deletion
 
 
@@ -2916,7 +2963,7 @@ def _write_rows(shard_dir: str, rows: Iterable[tuple],
         for pk, part in itertools.groupby(rows, operator.itemgetter(0)):
             part = list(part)
             n += len(part)
-            key = str(pk).encode()
+            key = _text(pk, pk, "partition key")
             w.add(key, *_encode_partition(key, *_partition_cells(part),
                                           mc=generation == "mc"))
     return w.n_partitions, n
@@ -2936,7 +2983,8 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
     retried attempt replaces a shard an earlier one committed). Exactly
     one shuffle; the encode is the byte-level inverse of
     :func:`scan_data_range`, so write->scan roundtrips bit-faithfully.
-    ``out_dir`` must be absent or empty.
+    ``out_dir`` must be absent or empty. Once the job has committed every
+    shard, the temp directories of failed or killed attempts are removed.
 
     Eagerly executes and returns the shard report rows
     ``(shard, n_partitions, n_cells)`` (bounded: one per shard)."""
@@ -2989,8 +3037,11 @@ def write_sstable_distributed(cells, out_dir: str, shards: int = 4,
             _encode,
             schema="shard string, n_partitions bigint, n_cells bigint",
         )
-    )
-    return report.collect()
+    ).collect()
+    for d in os.listdir(out_dir):
+        if d.startswith(".tmp-"):
+            shutil.rmtree(os.path.join(out_dir, d))
+    return report
 
 
 # ---------------------------------------------------------------------------

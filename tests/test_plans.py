@@ -529,13 +529,10 @@ def test_bm25_plan_is_takeordered_over_broadcast_stats(spark, documents):
     assert "Exchange hashpartitioning" not in plan
 
 
-def test_compact_atoms_interleaved_frames_keep_their_persisted_dels(spark):
+def test_compact_atoms_interleaved_frames_evaluate_independently(spark):
     """ADVICE r8 regression: constructing a SECOND compaction must not
-    invalidate the FIRST's not-yet-evaluated persisted deletion frame
-    (the old module-level LRU-1 slot unpersisted it, silently degrading
-    the two-scan guarantee to five corpus rescans). Both interleaved
-    plans must still read their deletion consumers from InMemoryTableScan
-    and produce the right rows."""
+    change the FIRST's not-yet-evaluated result; each plan gives its own
+    rows."""
     from cassandra_ttl_remover_spark.operators.compact import compact_atoms
 
     rows = [
@@ -552,8 +549,6 @@ def test_compact_atoms_interleaved_frames_keep_their_persisted_dels(spark):
     # evaluate out1 AFTER out2 was constructed
     assert {r.status for r in out1.collect()} == {
         "live", "partition_tombstone_retained", "range_tombstone_retained"}
-    plan1 = out1._jdf.queryExecution().executedPlan().toString()
-    assert plan1.count("InMemoryTableScan") >= 4
     assert [r.status for r in out2.collect()] == ["live"]
 
 
@@ -583,11 +578,8 @@ def test_kcore_peel_loop_has_constant_plan_depth(spark):
 
 
 def test_compact_atoms_plan_shape(spark):
-    """The 100 TB claims, plan-asserted: the corpus feeds exactly TWO
-    scans (the cell stream + one deletion-extraction pass; the small
-    deletion frame persists for its other consumers), the cell stream
-    shuffles exactly ONCE (the (pk, cell) arg-max aggregate), and both
-    deletion shadows are broadcast joins."""
+    """The corpus is scanned ONCE and shuffled ONCE, on ``pk``, into one
+    grouped map that resolves each key; nothing is cached or broadcast."""
     import re
 
     from cassandra_ttl_remover_spark.operators.compact import (
@@ -605,17 +597,13 @@ def test_compact_atoms_plan_shape(spark):
               "expiration bigint, writetime bigint, value string")
     out = compact_atoms(df, gc_grace_us=0, now_us=50)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # exactly one (pk, cell) shuffle: the arg-max exchange
-    assert len(re.findall(
-        r"Exchange hashpartitioning\(pk#\d+, cell#\d+", plan)) == 1
-    # the RT shadow is a broadcast LEFT ANTI join (and no shuffle join
-    # anywhere: every join in the plan is broadcast)
-    assert len(re.findall(r"BroadcastHashJoin .* LeftAnti", plan)) == 1
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    # the deletion consumers read the persisted small frame, not the
-    # corpus: >= 4 InMemoryTableScans (pd shadow, rt shadow via pd_df/
-    # rt_df, rt_out, pd_out)
-    assert plan.count("InMemoryTableScan") >= 4
+    assert plan.count("Scan ExistingRDD") == 1
+    assert len(re.findall(r"Exchange hashpartitioning\(pk#\d+, \d+\)",
+                          plan)) == 1
+    assert plan.count("Exchange") == 1
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "InMemoryTableScan" not in plan and "Broadcast" not in plan
+    assert len(out.collect()) == 4
 
 
 def test_checkpoint_partitioned_preserves_hash_partitioning(spark):

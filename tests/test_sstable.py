@@ -1327,12 +1327,36 @@ def test_scrub_healthy_and_each_corruption_isolated(spark):
     shutil.rmtree(base)
 
 
+def _oracle_compact(rows, **kw) -> list[tuple]:
+    """compact_atoms_oracle_sql in DuckDB over collected SSTABLE_SCHEMA
+    rows: the reference independent of the resolver both Spark plans
+    run."""
+    import duckdb
+    import pyarrow as pa
+
+    from cassandra_ttl_remover_spark.operators.compact import (
+        compact_atoms_oracle_sql,
+    )
+
+    str_, int_ = pa.string(), pa.int64()
+    types = [str_, str_, str_, int_, int_, int_, str_]
+    atoms = pa.table([pa.array(col, t) for col, t in zip(zip(*rows), types)],
+                     names=["pk", "cell", "kind", "ttl", "expiration",
+                            "writetime", "value"])
+    con = duckdb.connect()
+    con.register("scanned", atoms)
+    return con.execute(compact_atoms_oracle_sql(
+        "SELECT * FROM scanned", **kw)).fetchall()
+
+
 def test_merge_compact_sorted_equals_argmax_form(spark):
     """Cross-plan equivalence on the FULL atom surface (counters, range
     tombstones, partition deletes across three generations): the
     zero-shuffle k-way sorted merge must produce exactly compact_atoms'
     rows, for any split count (1, 3, 8 — boundary partitions must not
-    drop/duplicate, and deletion atoms must travel with their pk)."""
+    drop/duplicate, and deletion atoms must travel with their pk). Both
+    run one resolver, so compact_atoms is first held to the DuckDB
+    oracle over the same atoms."""
     from cassandra_ttl_remover_spark.operators.compact import (
         compact_atoms,
     )
@@ -1351,6 +1375,8 @@ def test_merge_compact_sorted_equals_argmax_form(spark):
         ss.scan_sstable(spark, base, num_splits=8), **kw).collect())
     assert {r[4] for r in want} >= {"live", "counter_live",
                                     "range_tombstone_retained"}
+    atoms = ss.scan_sstable(spark, base).collect()
+    assert sorted(_oracle_compact(atoms, **kw)) == want
     for n in (1, 3, 8):
         got = sorted(tuple(r) for r in ss.merge_compact_sorted(
             spark, base, num_splits=n, **kw).collect())
@@ -1759,6 +1785,25 @@ def test_gc_and_compaction_task_memory_does_not_grow_with_split():
     shutil.rmtree(base)
 
 
+def test_compact_group_memory_is_one_key():
+    """compact_atoms' group function holds one key's atoms: over one key
+    of 200k atoms (100k cells, two versions each) its traced peak stays
+    under 128 MiB, about 670 bytes an atom (measured: 77 MiB)."""
+    import pandas as pd
+
+    n, wt = 200_000, 1_700_000_000_000_000
+    pdf = pd.DataFrame({
+        "pk": ["p"] * n, "cell": [f"c{i // 2:07d}" for i in range(n)],
+        "kind": ["normal"] * n, "ttl": [0] * n, "expiration": [0] * n,
+        "writetime": [wt + i for i in range(n)], "value": ["v" * 20] * n})
+    out = []
+    peak = _traced_peak(lambda: out.append(ss._compact_key(pdf, 0)))
+    assert len(out[0]) == n // 2
+    assert list(out[0].iloc[0]) == ["p", "c0000000", wt + 1, "v" * 20,
+                                    "live"]
+    assert peak < 128 << 20, peak
+
+
 def _child_pids() -> set[str]:
     """Live child pids of this process, across all of its threads."""
     import glob
@@ -1896,7 +1941,7 @@ def test_write_sstable_that_fails_leaves_no_readable_table(spark):
     assert ss._table_subdirs(base) == []
     with pytest.raises(ValueError, match="no Data.db"):
         ss._resolve_table_dirs(base)
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(ValueError, match="no Data.db"):
         ss._resolve_table_dirs(out)
     with pytest.raises(Exception, match="no Data.db"):
         ss.scan_sstable(spark, base).collect()
@@ -1924,6 +1969,102 @@ def test_distributed_write_task_that_fails_leaves_no_readable_shard(spark):
     with pytest.raises(Exception, match="no Data.db"):
         ss.scan_sstable(spark, out).collect()
     shutil.rmtree(base)
+
+
+def test_missing_path_resolves_to_the_no_data_error(spark):
+    """A path that does not exist is reported as one that holds no table,
+    by the same ValueError, not by the listing's FileNotFoundError."""
+    missing = os.path.join(_tmpdir(), "absent")
+    with pytest.raises(ValueError, match=f"no Data.db under {missing}"):
+        ss._resolve_table_dirs(missing)
+    with pytest.raises(Exception, match="no Data.db"):
+        ss.scan_sstable(spark, missing).collect()
+
+
+_NULL_FIELD_ROWS = [
+    (("k", "c", "normal", None, None, 1, None), "'k': normal value is NULL"),
+    (("k", None, "expiring", 60, 9, 1, "v"),
+     "'k': expiring cell name is NULL"),
+    (("k", "c", "counter", None, 0, 1, None), "'k': counter value is NULL"),
+    (("k", "a", "range_tombstone", None, 9, 1, None),
+     "'k': range_tombstone value is NULL"),
+    ((None, "c", "normal", None, None, 1, "v"),
+     "None: partition key is NULL"),
+    (("k", "c", "bogus", None, None, 1, "v"),
+     "'bogus' is not a recognized"),
+]
+
+
+@pytest.mark.parametrize("row, match", _NULL_FIELD_ROWS)
+def test_rows_the_format_cannot_hold_fail_loud(spark, row, match):
+    """The native format has no NULL pk, cell name or value: such a row,
+    or one of an unknown kind, fails the distributed write and
+    compact_atoms with a ValueError naming the pk and the field (it is
+    never written as the bytes b"None"). The rows beside it hold the
+    NULLs the format defines: a tombstone's value and a partition
+    tombstone's cell."""
+    from cassandra_ttl_remover_spark.operators.compact import compact_atoms
+
+    ok = [("k", None, "partition_tombstone", None, 9, 1, None),
+          ("k", "t", "tombstone", None, 9, 2, None)]
+    cells = spark.createDataFrame([*ok, row], ss.SSTABLE_SCHEMA)
+    base = _tmpdir()
+    with pytest.raises(Exception, match=match):
+        ss.write_sstable_distributed(cells, os.path.join(base, "out"),
+                                     shards=1)
+    with pytest.raises(Exception, match=match):
+        compact_atoms(cells, gc_grace_us=0, now_us=0).collect()
+    shutil.rmtree(base)
+
+
+def test_distributed_write_removes_failed_attempts_temp_dirs(tmp_path):
+    """With task retries, an attempt that raises after writing its
+    shard's Data.db leaves a temp directory; once the retry commits and
+    the job succeeds, the write removes it, so out_dir holds the shards
+    alone. Runs in its own session: ``local[2,2]`` lets a task retry."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "out")
+    script = textwrap.dedent(f"""
+        import os, sys
+        sys.path.insert(0, {repo!r})
+        from cassandra_ttl_remover_spark import get_spark
+        from cassandra_ttl_remover_spark.sources import sstable as ss
+
+        write_rows = ss._write_rows
+
+        def fails_once(shard_dir, *args):
+            from pyspark import TaskContext
+
+            n = write_rows(shard_dir, *args)
+            ctx = TaskContext.get()
+            if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+                assert os.path.getsize(f"{{shard_dir}}/Data.db") > 0
+                raise RuntimeError("attempt 0 fails after its Data.db")
+            return n
+
+        # the task closure picks the patched writer up when it is pickled
+        ss._write_rows = fails_once
+        spark = get_spark("retried-shard", master="local[2,2]")
+        cells = spark.createDataFrame(
+            [(f"k{{i:03d}}", "c", "normal", None, None, i, "v")
+             for i in range(100)], ss.SSTABLE_SCHEMA)
+        report = ss.write_sstable_distributed(cells, {out!r}, shards=2)
+        print(sorted(r.shard for r in report))
+        print(sorted(os.listdir({out!r})))
+        print(ss.scan_sstable(spark, {out!r}).count())
+        spark.stop()
+    """)
+    proc = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path),
+                          env={**os.environ, "PYTHONPATH": ""},
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "attempt 0 fails after its Data.db" in proc.stderr
+    shards = ["shard=00000", "shard=00001"]
+    assert proc.stdout.splitlines() == [str(shards), str(shards), "100"]
 
 
 def test_stream_never_plans_a_shard_without_toc(monkeypatch):
@@ -2478,6 +2619,11 @@ def test_compact_rewrite_roundtrip_and_digests(spark):
               for r in compact_atoms(
                   ss.scan_sstable(spark, base, num_splits=4),
                   **kw).collect()}
+    # compact_atoms and the rewrite run one resolver: hold it to the
+    # DuckDB oracle over the same atoms
+    oracle = _oracle_compact(ss.scan_sstable(spark, base).collect(), **kw)
+    assert len(oracle) == len(merged)
+    assert {(pk, c, st): (wt, v) for pk, c, wt, v, st in oracle} == merged
     # wide grace: every deletion granularity survives the merge
     assert {s for _, _, s in merged} == {
         "live", "counter_live", "tombstone_retained",
