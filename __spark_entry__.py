@@ -3683,8 +3683,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # index-driven key-range scan on the BINARY format (S3 semantics
         # on the reference's own surface), driven through CATALYST filter
         # pushdown: the df.filter range predicate reaches the Python
-        # DataSource (pushFilters), the planner binary-searches Index.db
-        # for the ['1','2') key-byte run, and tasks read only that
+        # DataSource (pushFilters), the planner walks Index.db to the
+        # ['1','2') key-byte run, and tasks read only that
         # contiguous Data.db window — the reference scanner's
         # seek-to-partition path (NoTTLScanner.java:47-64) generalized to
         # a range. Keys are decimal user ids, so the range selects every
@@ -3827,8 +3827,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # summary-assisted range plan: the fixture writes a Summary.db
         # (every 64th index entry — Cassandra's IndexSummary, the
         # reference's probe order at NoTTLReader.java:766-814), so the
-        # planner binary-searches the SAMPLE and parses only the
-        # covering Index.db window instead of the whole index — at
+        # planner streams the SAMPLE to the last entry at or before the
+        # range start and walks Index.db from there, stopping at the
+        # range end, instead of parsing the whole index — at
         # billions of partitions the difference between a sub-second
         # plan and gigabytes of planner I/O. A small summary_interval
         # makes the window genuinely partial even at sf0.001. Rows are

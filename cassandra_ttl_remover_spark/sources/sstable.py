@@ -481,8 +481,9 @@ def read_stats(table_dir: str) -> dict | None:
 #: reference's path: summary search at NoTTLReader.java:766-814, then
 #: the bounded index scan at 1571-1659). Mirrored here as ``Summary.db``:
 #: u32 interval, u32 n_samples, then per sample u16 keylen + key +
-#: i64 Index.db offset + i64 Data.db offset. The planner binary-searches
-#: the samples and parses only the covering Index.db byte window.
+#: i64 Index.db offset + i64 Data.db offset. The planner streams the
+#: samples to the last one at or before the range start and walks
+#: Index.db from there (:func:`_summary_window`, :func:`_key_run`).
 #:
 #: Scale note (100 TB): Index.db holds one entry per partition — at
 #: billions of partitions that is gigabytes the PLANNER would otherwise
@@ -503,12 +504,12 @@ def _write_summary(out_dir: str, interval: int,
 
 def _iter_summary(table_dir: str):
     """Streaming Summary.db parse — the ONE place the sidecar's byte
-    layout is decoded (``_read_summary``, the merge planner, and the
-    executor window reads all consume this iterator, so the format
-    cannot drift between them). Yields ``(key, Index.db offset,
-    Data.db offset)`` one entry at a time in O(1) memory; raises
-    FileNotFoundError when the table has no Summary.db and
-    :class:`CorruptSSTableError` on malformation (quarantine
+    layout is decoded (the key-range window, the split-offset walk, the
+    merge planner, the resampler and the scrub all consume this
+    iterator, so the format cannot drift between them). Yields ``(key,
+    Index.db offset, Data.db offset)`` one entry at a time in O(1)
+    memory; raises FileNotFoundError when the table has no Summary.db
+    and :class:`CorruptSSTableError` on malformation (quarantine
     convention)."""
     path = os.path.join(table_dir, "Summary.db")
     with open(path, "rb") as f:
@@ -528,54 +529,34 @@ def _iter_summary(table_dir: str):
             ) from None
 
 
-def _read_summary(table_dir: str) -> list[tuple[bytes, int, int]] | None:
-    """``[(key, Index.db offset, Data.db offset), …]`` or ``None`` when
-    the table has no Summary.db (pre-summary fixtures read the full
-    index — never wrong, just unpruned). List form of
-    :func:`_iter_summary` for callers that binary-search."""
-    try:
-        return list(_iter_summary(table_dir))
-    except FileNotFoundError:
-        return None
-
-
 def _summary_window(table_dir: str, key_start: bytes | None,
-                    key_stop: bytes | None) -> tuple[int, int | None,
-                                                     int | None] | None:
-    """Streaming equivalent of the :func:`_read_index_window` bisect —
-    ONE O(1)-memory pass over Summary.db resolving the Index.db byte
-    window covering ``[key_start, key_stop)`` plus one sample block
-    beyond. Returns ``(ix_start, ix_end | None, end_data | None)``
-    (``None`` ends = read to EOF / use file size), or ``None`` when the
-    table has no Summary.db. This is what executor tasks use: a k-way
-    merge task's summary cost is the window boundaries, never the whole
-    sample list (the planner's decimation fix, applied executor-side)."""
+                    key_stop: bytes | None) -> tuple[int, int | None]:
+    """The Index.db byte window ``[ix_start, ix_end)`` holding every entry
+    with ``key_start <= key < key_stop`` (``None`` = open) plus one sample
+    block beyond, resolved in ONE O(1)-memory pass over Summary.db:
+    ``ix_start`` is the last sample at or before ``key_start``, ``ix_end``
+    the sample after the first one at or past ``key_stop`` (``None`` =
+    Index.db EOF). A table without Summary.db gets the whole index."""
     import contextlib
 
-    ix_start = 0
-    stop_seen = False
-    ix_end = end_data = None
-    any_row = False
+    ix_start, stop_seen = 0, False
     try:
-        # the early `break` abandons the generator mid-file: closing()
-        # guarantees the Summary.db handle is released deterministically
-        # (long-lived executors / non-refcounting runtimes would otherwise
-        # accumulate open descriptors — ADVICE r8)
+        # an early exit abandons the generator mid-file: closing()
+        # releases the Summary.db handle deterministically (long-lived
+        # executors would otherwise accumulate open descriptors)
         with contextlib.closing(_iter_summary(table_dir)) as entries:
-            for key, ix_off, data_off in entries:
-                any_row = True
+            for key, ix_off, _ in entries:
                 if key_start is not None and key <= key_start:
                     ix_start = ix_off
+                elif key_stop is None:
+                    break  # past key_start, open end: neither end moves
                 if stop_seen:
-                    ix_end, end_data = ix_off, data_off
-                    break
+                    return ix_start, ix_off
                 if key_stop is not None and key >= key_stop:
                     stop_seen = True  # include one sample block beyond
     except FileNotFoundError:
-        return None
-    if not any_row:
-        return None
-    return ix_start, ix_end, end_data
+        pass
+    return ix_start, None
 
 
 def _summary_meta(table_dir: str) -> tuple[int, int] | None:
@@ -595,18 +576,23 @@ def _summary_meta(table_dir: str) -> tuple[int, int] | None:
     return interval, n
 
 
-def _iter_index_with_offsets(table_dir: str, ix_start: int = 0):
-    """Streaming Index.db walk from the entry at byte ``ix_start``
-    yielding ``(key, index byte offset, Data.db offset)`` — exactly the
-    triple a Summary.db entry stores — parsed from 64 KiB reads. This is
-    the REBUILD path's input (the reference walks the whole primary index
-    the same way — buildSummaryAtLevel, NoTTLReader.java:1117-1140)."""
+def _iter_index_with_offsets(table_dir: str, ix_start: int = 0,
+                             ix_end: int | None = None):
+    """Streaming Index.db walk over the entries in bytes ``[ix_start,
+    ix_end)`` (``None`` = to EOF), yielding ``(key, index byte offset,
+    Data.db offset)`` — exactly the triple a Summary.db entry stores —
+    parsed from 64 KiB reads. The ONE place Index.db bytes are parsed:
+    every plan, :func:`read_index` and the summary rebuild (the
+    reference walks the primary index the same way — buildSummaryAtLevel,
+    NoTTLReader.java:1117-1140) consume it. An entry cut short raises."""
     index_path = os.path.join(table_dir, "Index.db")
     mc = _table_generation(table_dir) == "mc"
-    buf, base = b"", ix_start
+    buf, base, pos = b"", ix_start, ix_start
+    stop = os.path.getsize(index_path) if ix_end is None else ix_end
     with open(index_path, "rb") as f:
         f.seek(ix_start)
-        while chunk := f.read(1 << 16):
+        while pos < stop and (chunk := f.read(min(1 << 16, stop - pos))):
+            pos += len(chunk)
             buf += chunk
             start = 0
             for key, off, end in _index_entries(buf, mc):
@@ -729,42 +715,6 @@ def _per_table(spark, path: str, one, schema: str):
             .mapInPandas(_run, schema=schema))
 
 
-def _read_index_window(table_dir: str,
-                       samples: list[tuple[bytes, int, int]],
-                       key_start: bytes | None,
-                       key_stop: bytes | None) -> tuple[list, int]:
-    """Summary-bounded index read: parse only the Index.db byte window
-    that can contain ``[key_start, key_stop)`` plus one sample block
-    beyond (so the first entry PAST the run is present and the caller's
-    byte_end never falls back to file-end prematurely). Returns
-    ``(entries, end_data_offset)`` where ``end_data_offset`` plays the
-    ``data_size`` role for :func:`select_index_range` — the Data.db
-    coordinate of the first entry after the window (file size when the
-    window reaches index EOF)."""
-    import bisect
-
-    index_path = os.path.join(table_dir, "Index.db")
-    sample_keys = [k for k, _, _ in samples]
-    lo_i = (0 if key_start is None
-            else max(0, bisect.bisect_right(sample_keys, key_start) - 1))
-    hi_i = (len(samples) if key_stop is None
-            else min(len(samples), bisect.bisect_left(sample_keys,
-                                                      key_stop) + 1))
-    ix_start = samples[lo_i][1] if samples else 0
-    with open(index_path, "rb") as f:
-        f.seek(ix_start)
-        if hi_i < len(samples):
-            buf = f.read(samples[hi_i][1] - ix_start)
-            end_data = samples[hi_i][2]
-        else:
-            buf = f.read()
-            end_data = _data_size(table_dir)
-    entries = _parse_index_entries(
-        buf, _table_generation(table_dir), index_path, base_off=ix_start
-    )
-    return entries, end_data
-
-
 # ---------------------------------------------------------------------------
 # ColumnIndex.db — promoted per-partition cell index
 # ---------------------------------------------------------------------------
@@ -867,14 +817,8 @@ def plan_partition_slice(
     summary/index -> data; NoTTLReader.java:1502-1665)."""
     if not bloom_might_contain(table_dir, key):
         return None
-    samples = _read_summary(table_dir)
-    if samples:
-        entries, _ = _read_index_window(table_dir, samples, key,
-                                        key + b"\x00")
-    else:
-        entries = read_index(os.path.join(table_dir, "Index.db"))
-    offs = [off for k, off in entries if k == key]
-    if not offs:
+    head, end = _key_byte_range(table_dir, key, key + b"\x00")
+    if head == end:
         return None
     # the covering block: the last one whose first name is <= cell_start
     covering = None
@@ -884,18 +828,7 @@ def plan_partition_slice(
         covering = block
     if covering:
         return covering[1], True, covering[2]
-    return offs[0], False, []
-
-
-def _slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
-                   key: str, cell_start: str,
-                   cell_stop: str) -> list[tuple]:
-    """List form of :func:`_iter_slice_one_dir` — the property-test
-    surface (pure, no Spark session). Production tasks consume the
-    ITERATOR so a wide slice never materializes whole (see
-    ``scan_partition_slice``'s ``max_cells_per_batch``)."""
-    return list(_iter_slice_one_dir(
-        d, off, at_cell, markers, key, cell_start, cell_stop))
+    return head, False, []
 
 
 def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
@@ -1148,16 +1081,11 @@ def _scrub_one_dir(d: str, deep: bool) -> dict:
     except (OSError, CorruptSSTableError):
         pass
     try:
-        samples = _read_summary(d)
-        if samples is None:
-            summary_ok = False
-        else:
-            # every sample must name a real index entry at its recorded
-            # Data.db offset — a drifted sample silently misplans reads
-            by_off = dict(
-                zip((o for _, o in entries), (k for k, _ in entries)))
-            summary_ok = all(
-                by_off.get(data_off) == k for k, _, data_off in samples)
+        # every sample must name a real index entry at its recorded
+        # Data.db offset — a drifted sample silently misplans reads
+        by_off = dict(zip((o for _, o in entries), (k for k, _ in entries)))
+        summary_ok = all(by_off.get(data_off) == k
+                         for k, _, data_off in _iter_summary(d))
     except (OSError, CorruptSSTableError):
         pass
     try:
@@ -1446,14 +1374,12 @@ def select_index_range(
     key_start: bytes | None = None,
     key_stop: bytes | None = None,
 ) -> tuple[int, int, int]:
-    """Index-driven key-range pruning — the planner-side analog of the
-    reference scanner's seek-to-partition path (NoTTLScanner.java:47-64
-    positions the data file at an index-resolved offset instead of
-    scanning from byte 0). Entries are in key-BYTE order (writer
-    invariant), so the partitions with ``key_start <= key < key_stop``
-    form one contiguous run: binary-search both bounds and return
-    ``(lo_entry, byte_start, byte_end)``. A point lookup is the
-    degenerate run of one; bytes outside the run are never read."""
+    """Key-range pruning over a WHOLE index held as a list
+    (:func:`read_index`): the reference answer the planner's streaming
+    walk (:func:`_key_run`) is checked against. Entries are in key-BYTE
+    order (writer invariant), so the partitions with ``key_start <= key
+    < key_stop`` form one contiguous run: binary-search both bounds and
+    return ``(lo_entry, byte_start, byte_end)`` (``(lo, 0, 0)``: empty)."""
     import bisect
 
     keys = [k for k, _ in entries]
@@ -1490,31 +1416,13 @@ def _index_entries(buf: bytes, mc: bool) -> Iterator[tuple]:
         yield buf[p:p + klen], _I64.unpack_from(buf, pos - 8)[0], pos
 
 
-def _parse_index_entries(buf: bytes, gen: str, path: str,
-                         base_off: int = 0) -> list[tuple[bytes, int]]:
-    """The ONE index-record parser (:func:`_index_entries`), shared by
-    the full read and the summary-bounded window read so the two planners
-    can never disagree on the same bytes. Truncated records raise
-    :class:`CorruptSSTableError` naming the byte span."""
-    entries, end = [], 0
-    for key, off, end in _index_entries(buf, gen == "mc"):
-        entries.append((key, off))
-    if end != len(buf):
-        raise CorruptSSTableError(
-            f"{path}: malformed index bytes [{base_off}, "
-            f"{base_off + len(buf)}) (the entry at {base_off + end} is "
-            "cut short)")
-    return entries
-
-
 def read_index(index_path: str) -> list[tuple[bytes, int]]:
-    """The planner's only I/O: ``[(key, Data.db offset), …]`` in file
-    order (== key-byte order, by the writer invariant). Framing follows
-    the table's generation (Version.txt dispatch)."""
-    gen = _table_generation(os.path.dirname(index_path))
-    with open(index_path, "rb") as f:
-        buf = f.read()
-    return _parse_index_entries(buf, gen, index_path)
+    """The whole index as ``[(key, Data.db offset), …]`` in file order
+    (== key-byte order, by the writer invariant), read by
+    :func:`_iter_index_with_offsets`. Framing follows the table's
+    generation (Version.txt dispatch)."""
+    return [(key, off) for key, _, off in
+            _iter_index_with_offsets(os.path.dirname(index_path))]
 
 
 def _utf8(raw: bytes, data_path: str, part_off: int, what: str) -> str:
@@ -1648,41 +1556,19 @@ def _check_index_in_data(table_dir: str, last_offset: int,
 def _plan_table_splits(table_dir: str, num_splits: int,
                        key_start: bytes | None = None,
                        key_stop: bytes | None = None) -> list[tuple]:
-    """Shared split planner: contiguous index-snapped byte ranges of one
-    sstable directory as ``(data_path, start, end)`` triples — used by
-    both the batch reader and the per-shard streaming micro-batches.
-    A KEYED plan on a table with a Summary.db parses only the covering
-    index window (the reference's summary-then-index probe order); full
-    scans and summary-less tables read the whole index."""
+    """Shared split planner: the partitions with ``key_start <= key <
+    key_stop`` (:func:`_key_run`) cut into at most ``num_splits``
+    contiguous runs of equal partition count, as ``(data_path, start,
+    end)`` byte ranges — used by the batch reader, the per-shard
+    streaming micro-batches and the rewrite's split specs."""
     data_path = os.path.join(table_dir, "Data.db")
-    samples = (_read_summary(table_dir)
-               if key_start is not None or key_stop is not None else None)
-    if samples:
-        entries, size = _read_index_window(table_dir, samples,
-                                           key_start, key_stop)
-    else:
-        entries = read_index(os.path.join(table_dir, "Index.db"))
-        size = _data_size(table_dir)
-    if entries:
-        _check_index_in_data(table_dir, entries[-1][1], size)
-    lo, byte_start, byte_end = select_index_range(
-        entries, size, key_start, key_stop
-    )
-    if byte_start >= byte_end:
+    run = list(_key_run(table_dir, key_start, key_stop))
+    n = len(run) - 1  # partitions; the last value is where they end
+    if n <= 0:
         return []
-    hi = lo + 1
-    while hi < len(entries) and entries[hi][1] < byte_end:
-        hi += 1
-    selected = entries[lo:hi]
-    n = min(num_splits, len(selected))
-    per = (len(selected) + n - 1) // n
-    out = []
-    for s in range(0, len(selected), per):
-        start = selected[s][1]
-        end = (selected[s + per][1] if s + per < len(selected)
-               else byte_end)
-        out.append((data_path, start, end))
-    return out
+    per = -(-n // min(num_splits, n))
+    return [(data_path, run[s], run[min(s + per, n)])
+            for s in range(0, n, per)]
 
 
 def _make_datasource_cls():
@@ -2462,23 +2348,45 @@ def _merge_ranges(dirs: list[str], num_splits: int,
     return list(zip(bounds, bounds[1:]))
 
 
+def _key_run(table_dir: str, key_start: bytes | None,
+             key_stop: bytes | None) -> Iterator[int]:
+    """The Data.db offsets of the partitions with ``key_start <= key <
+    key_stop`` (``None`` = open) in key order, then where the last one
+    ends (the next entry's offset, else the data size); nothing when no
+    key is in range. Walks Index.db from the Summary.db sample at or
+    before ``key_start`` (:func:`_summary_window`) one entry at a time;
+    an entry at or past the end of Data.db raises
+    (:func:`_check_index_in_data`)."""
+    import contextlib
+
+    size = _data_size(table_dir)
+    end, inside = size, False
+    # the walk stops at key_stop itself: only the window start is used
+    ix_start, _ = _summary_window(table_dir, key_start, None)
+    with contextlib.closing(
+            _iter_index_with_offsets(table_dir, ix_start)) as entries:
+        for key, _, off in entries:
+            _check_index_in_data(table_dir, off, size)
+            if key_stop is not None and key >= key_stop:
+                end = off
+                break
+            if key_start is None or key >= key_start:
+                inside = True
+                yield off
+    if inside:
+        yield end
+
+
 def _key_byte_range(table_dir: str, key_start: bytes | None,
                     key_stop: bytes | None) -> tuple[int, int]:
     """Data.db byte range of the partitions with ``key_start <= key <
-    key_stop`` (``None`` = open; ``(0, 0)``: none), walking the Index.db
-    window that Summary.db bounds one entry at a time."""
-    import contextlib
-
-    win = _summary_window(table_dir, key_start, key_stop)
-    bs = None
-    with contextlib.closing(_iter_index_with_offsets(
-            table_dir, win[0] if win else 0)) as entries:
-        for key, _, off in entries:
-            if key_stop is not None and key >= key_stop:
-                return (0, 0) if bs is None else (bs, off)
-            if bs is None and (key_start is None or key >= key_start):
-                bs = off
-    return (0, 0) if bs is None else (bs, _data_size(table_dir))
+    key_stop`` (``None`` = open; ``(0, 0)``: none): the first and last
+    value of :func:`_key_run`."""
+    run = _key_run(table_dir, key_start, key_stop)
+    first = last = next(run, 0)
+    for last in run:
+        pass
+    return first, last
 
 
 def _merge_range(dirs: list[str], ks: str | None, kp: str | None,
@@ -2632,34 +2540,22 @@ def _successor_in_dir(d: str, probe: bytes) -> tuple:
     the reference's successor lookup (firstKeyBeyond,
     NoTTLReader.java:1680-1715) — plus ``(index_bytes_parsed,
     index_bytes_total)`` diagnostics proving the bounded read. Probe
-    order mirrors the range planner (q_s16 path): Summary.db resolves
-    the covering Index.db byte window (last sample <= probe through one
-    sample block past the first sample >= probe — the successor entry
-    can never sit beyond it), and ONLY that window is parsed; Data.db
-    is never opened. Tables without Summary.db parse the full index
-    (pre-summary convention — never wrong, just unpruned). Returns
-    ``(key bytes | None, bytes_parsed, bytes_total)``."""
-    import bisect
+    order mirrors the range planner: Summary.db resolves the Index.db
+    window from the last sample <= probe through one sample block past
+    the first sample > probe (the successor can never sit beyond it),
+    and ONLY that window is walked; Data.db is never opened. Tables
+    without Summary.db walk the full index (never wrong, just
+    unpruned). Returns ``(key bytes | None, bytes_parsed,
+    bytes_total)``."""
+    import contextlib
 
-    index_path = os.path.join(d, "Index.db")
-    total = os.path.getsize(index_path)
-    win = _summary_window(d, probe, probe)
-    if win is None:
-        entries = read_index(index_path)
-        parsed = total
-    else:
-        ix_start, ix_end, _ = win
-        with open(index_path, "rb") as f:
-            f.seek(ix_start)
-            buf = (f.read() if ix_end is None
-                   else f.read(ix_end - ix_start))
-        parsed = len(buf)
-        entries = _parse_index_entries(
-            buf, _table_generation(d), index_path, base_off=ix_start
-        )
-    keys = [k for k, _ in entries]
-    i = bisect.bisect_right(keys, probe)
-    return (keys[i] if i < len(keys) else None), parsed, total
+    total = os.path.getsize(os.path.join(d, "Index.db"))
+    ix_start, ix_end = _summary_window(d, probe, probe + b"\x00")
+    parsed = (total if ix_end is None else ix_end) - ix_start
+    with contextlib.closing(
+            _iter_index_with_offsets(d, ix_start, ix_end)) as entries:
+        nxt = next((key for key, _, _ in entries if key > probe), None)
+    return nxt, parsed, total
 
 
 def first_key_beyond(spark, path: str, key: str):

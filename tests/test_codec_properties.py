@@ -293,9 +293,9 @@ _keysets = st.lists(
 @settings(max_examples=25, deadline=None)
 def test_sidecar_properties_roundtrip(keys, data):
     """For ANY key set and ANY probe: (1) the bloom never false-negates
-    a written key; (2) the summary-windowed index read selects exactly
-    the byte run the full read selects; (3) Statistics.db bounds equal
-    the true min/max of the written writetimes."""
+    a written key; (2) the planner's summary-windowed index walk selects
+    exactly the byte run the whole-index read selects; (3) Statistics.db
+    bounds equal the true min/max of the written writetimes."""
     import os
     import shutil
     import tempfile
@@ -316,16 +316,16 @@ def test_sidecar_properties_roundtrip(keys, data):
 
         full = ss.read_index(os.path.join(out, "Index.db"))
         size = ss._data_size(out)
-        samples = ss._read_summary(out)
         probe = data.draw(st.sampled_from(sorted(keys)))
         lo_choices = [None, probe, probe + b"\x00", probe[:1]]
         hi_choices = [None, probe, probe + b"\x00", probe[:1] + b"\xff"]
         ks = data.draw(st.sampled_from(lo_choices))
         kp = data.draw(st.sampled_from(hi_choices))
-        win, wsize = ss._read_index_window(out, samples, ks, kp)
-        got = ss.select_index_range(win, wsize, ks, kp)
-        want = ss.select_index_range(full, size, ks, kp)
-        assert got[1:] == want[1:], (interval, ks, kp)
+        _, bs, be = ss.select_index_range(full, size, ks, kp)
+        assert ss._key_byte_range(out, ks, kp) == (bs, be), (interval, ks, kp)
+        splits = ss._plan_table_splits(out, 3, ks, kp)
+        assert ((splits[0][1], splits[-1][2]) if splits else (0, 0)) == (
+            bs, be), (interval, ks, kp)
 
         stc = ss.read_stats(out)
         assert stc["n_partitions"] == len(keys)
@@ -340,7 +340,7 @@ def test_sidecar_properties_roundtrip(keys, data):
 def test_column_index_slice_equals_filter_property(data):
     """Slice == filter for ARBITRARY partitions, cell kinds, range
     tombstones, block densities, and slice bounds — pure-Python path
-    (plan_partition_slice + _slice_one_dir), no Spark session. Expected
+    (plan_partition_slice + _iter_slice_one_dir), no Spark session. Expected
     set: cell atoms in [a, b) plus every RT whose range intersects
     [a, b)."""
     import os
@@ -387,7 +387,7 @@ def test_column_index_slice_equals_filter_property(data):
         )
         plan = ss.plan_partition_slice(out, b"p", a.encode())
         assert plan is not None
-        got = sorted(ss._slice_one_dir(
+        got = sorted(ss._iter_slice_one_dir(
             out, plan[0], plan[1], plan[2], "p", a, b))
         assert got == want, (every, lo, hi)
     finally:

@@ -686,15 +686,13 @@ def test_sidecar_planning_bytes_at_60k_partitions(tmp_path):
     sm_size = os.path.getsize(os.path.join(out, "Summary.db"))
     assert sm_size < ix_size // 30  # ~1/64 plus per-sample overhead
 
-    samples = ss._read_summary(out)
-    win, wsize = ss._read_index_window(
-        out, samples, b"p031415", b"p031415\x00")
+    win = list(ss._iter_index_with_offsets(
+        out, *ss._summary_window(out, b"p031415", b"p031415\x00")))
     assert 0 < len(win) <= 2 * ss.SUMMARY_INTERVAL
     full = ss.read_index(os.path.join(out, "Index.db"))
-    got = ss.select_index_range(win, wsize, b"p031415", b"p031415\x00")
     want = ss.select_index_range(
         full, ss._data_size(out), b"p031415", b"p031415\x00")
-    assert got[1:] == want[1:]
+    assert ss._key_byte_range(out, b"p031415", b"p031415\x00") == want[1:]
 
     # bloom: every present key passes; absent keys overwhelmingly pruned
     assert ss.bloom_might_contain(out, b"p031415")
@@ -735,8 +733,8 @@ def test_column_index_slice_at_200k_cell_partition(tmp_path):
     assert plan is not None and plan[1] is True
     # the seek offset is ~3/4 into the file — blocks really skipped
     assert plan[0] > size // 2
-    rows = ss._slice_one_dir(out, plan[0], plan[1], plan[2], "hot",
-                             f"{lo:07d}:", f"{hi:07d}:")
+    rows = list(ss._iter_slice_one_dir(out, plan[0], plan[1], plan[2],
+                                       "hot", f"{lo:07d}:", f"{hi:07d}:"))
     assert len(rows) == 100
     assert rows[0][1] == f"{lo:07d}:c" and rows[-1][1] == f"{hi - 1:07d}:c"
     # decoded byte span: from the covering block to the stop cell is

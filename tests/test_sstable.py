@@ -691,20 +691,35 @@ def test_corrupt_filter_sidecar_fails_loud():
     shutil.rmtree(out)
 
 
+def _whole_index_splits(table_dir, num_splits, ks, kp):
+    """The planner's answer computed from the whole index as a list
+    (read_index + select_index_range), cut by the same equal-count
+    rule."""
+    full = ss.read_index(os.path.join(table_dir, "Index.db"))
+    lo, bs, be = ss.select_index_range(full, ss._data_size(table_dir), ks, kp)
+    offs = [off for _, off in full[lo:] if off < be]
+    if not offs:
+        return []
+    per = -(-len(offs) // min(num_splits, len(offs)))
+    bounds = offs[::per] + [be]
+    return [(os.path.join(table_dir, "Data.db"), a, b)
+            for a, b in zip(bounds, bounds[1:])]
+
+
 def test_summary_windowed_index_read_matches_full(spark):
-    """Summary-assisted planning: for every probed range the windowed
-    index read yields exactly the splits (and rows) the full index read
-    yields, while parsing a strictly smaller index window for narrow
-    ranges — both framings, including ranges straddling sample
-    boundaries, before the first key, and past the last."""
+    """Summary-assisted planning: for every probed range the walk from
+    the summary window yields exactly the splits, byte range (and rows)
+    the whole-index reference yields, while the window is strictly
+    smaller than the index for narrow ranges — both framings, including
+    ranges straddling sample boundaries, before the first key, and past
+    the last."""
     for gen in ("v1", "mc"):
         out = _tmpdir()
         parts = [(f"k{i:04d}".encode(),
                   [(b"c", 0, 0, 0, i, str(i).encode())])
                  for i in range(300)]
         ss.write_sstable(parts, out, generation=gen, summary_interval=8)
-        samples = ss._read_summary(out)
-        assert samples is not None and len(samples) == (300 + 7) // 8
+        assert len(list(ss._iter_summary(out))) == (300 + 7) // 8
         full = ss.read_index(os.path.join(out, "Index.db"))
         size = ss._data_size(out)
         probes = [(b"k0000", b"k0000\x00"), (b"k0007", b"k0009"),
@@ -712,12 +727,14 @@ def test_summary_windowed_index_read_matches_full(spark):
                   (b"k0290", b"zzz"), (None, b"k0004"), (b"k0299", None),
                   (b"nope", b"nope\x00")]
         for ks, kp in probes:
-            win, wsize = ss._read_index_window(out, samples, ks, kp)
-            got = ss.select_index_range(win, wsize, ks, kp)
             want = ss.select_index_range(full, size, ks, kp)
-            # same byte run (entry index differs by the window offset)
-            assert got[1:] == want[1:], (gen, ks, kp)
+            assert ss._key_byte_range(out, ks, kp) == want[1:], (gen, ks, kp)
+            for n in (1, 4):
+                assert (ss._plan_table_splits(out, n, ks, kp)
+                        == _whole_index_splits(out, n, ks, kp)), (gen, ks, kp)
             if ks is not None and kp is not None and kp != b"zzz":
+                win = list(ss._iter_index_with_offsets(
+                    out, *ss._summary_window(out, ks, kp)))
                 assert len(win) < len(full), (gen, ks, kp)
         # end-to-end: a pushed range scan returns identical rows with
         # and without the summary sidecar
@@ -735,6 +752,26 @@ def test_summary_windowed_index_read_matches_full(spark):
         assert rows == rows2
         assert len(rows) == 100
         shutil.rmtree(out)
+
+
+def test_inverted_key_range_scans_empty(spark):
+    """A key range whose start sorts after its stop selects no partition,
+    with or without Summary.db, whether it comes as scan options or as a
+    filter pushed to the planner: the index walk meets the stop bound
+    before any key reaches the start bound."""
+    out = _tmpdir()
+    ss.write_sstable([(f"k{i:04d}".encode(), [(b"c", 0, 0, 0, i, b"v")])
+                      for i in range(300)], out, summary_interval=8)
+    for has_summary in (True, False):
+        assert ss.scan_sstable(spark, out, key_start="k0200",
+                               key_stop="k0100").count() == 0, has_summary
+        assert ss.scan_sstable(spark, out).filter(
+            "pk >= 'k0200' AND pk < 'k0100'").count() == 0, has_summary
+        assert ss._plan_table_splits(out, 4, b"k0200", b"k0100") == []
+        assert ss._key_byte_range(out, b"k0200", b"k0100") == (0, 0)
+        if has_summary:
+            os.remove(os.path.join(out, "Summary.db"))
+    shutil.rmtree(out)
 
 
 def test_post_2038_deletion_seconds_saturate_not_crash(spark):
@@ -821,14 +858,17 @@ def test_first_key_beyond_successor_and_bounded_window(spark):
     exhaustive index answer, the probe parses ONLY the covering
     Summary.db-resolved Index.db window (strictly fewer bytes than the
     full index), and a table with no Summary.db falls back to the full
-    parse with the same answer. Directory-level min over the
-    per-generation frame resolves the multi-table successor."""
-    for gen in ("v1", "mc"):
+    parse with the same answer. At summary interval 1 every key is a
+    sample, so a key's successor is the next sample, which the window
+    must still reach. Directory-level min over the per-generation frame
+    resolves the multi-table successor."""
+    for gen, interval in itertools.product(("v1", "mc"), (8, 1)):
         out = _tmpdir()
         parts = [(f"k{i:04d}".encode(),
                   [(b"c", 0, 0, 0, i, str(i).encode())])
                  for i in range(300)]
-        ss.write_sstable(parts, out, generation=gen, summary_interval=8)
+        ss.write_sstable(parts, out, generation=gen,
+                         summary_interval=interval)
         keys = [k for k, _ in ss.read_index(os.path.join(out, "Index.db"))]
         import bisect
         probes = [b"a", b"k0000", b"k0007", b"k0007\x00", b"k0125",
@@ -837,8 +877,8 @@ def test_first_key_beyond_successor_and_bounded_window(spark):
             nxt, parsed, total = ss._successor_in_dir(out, p)
             i = bisect.bisect_right(keys, p)
             want = keys[i] if i < len(keys) else None
-            assert nxt == want, (gen, p)
-            assert parsed < total, (gen, p, parsed, total)
+            assert nxt == want, (gen, interval, p)
+            assert parsed < total, (gen, interval, p, parsed, total)
         # no-Summary fallback: full parse, same successor
         os.remove(os.path.join(out, "Summary.db"))
         nxt, parsed, total = ss._successor_in_dir(out, b"k0125")
@@ -931,7 +971,7 @@ def test_corrupt_summary_fails_loud():
     sp = os.path.join(out, "Summary.db")
     open(sp, "wb").write(struct.pack(">II", 64, 5) + b"\x00\x02")
     with pytest.raises(ss.CorruptSSTableError, match="Summary.db"):
-        ss._read_summary(out)
+        list(ss._iter_summary(out))
     shutil.rmtree(out)
 
 
@@ -2903,11 +2943,13 @@ def test_droppable_census_grace_window(spark):
 
 
 def test_summary_window_equals_bisect_window(spark):
-    """The streaming O(1)-memory summary-window pass (the executor-side
-    review fix) must resolve exactly the same Index.db byte window as
-    the list-based bisect (_read_index_window) for random layouts and
-    probes — including open ends, probes before the first / after the
-    last key, and exact sample-boundary hits."""
+    """The streaming O(1)-memory summary-window pass must resolve the
+    Index.db byte window a bisect over the whole sample list resolves,
+    and the walk over that window must hold the whole-index reference's
+    run and the entry that ends it, for random layouts and probes —
+    including open ends, probes before the first / after the last key,
+    and exact sample-boundary hits."""
+    import bisect
     import random
 
     for seed in (3, 17):
@@ -2919,7 +2961,10 @@ def test_summary_window_equals_bisect_window(spark):
         ss.write_sstable(
             [(k, [(b"c", 0, 0, 0, 1, b"v")]) for k in keys],
             base, summary_interval=rng.choice((2, 4, 7)))
-        samples = ss._read_summary(base)
+        samples = list(ss._iter_summary(base))
+        sample_keys = [k for k, _, _ in samples]
+        full = ss.read_index(os.path.join(base, "Index.db"))
+        size = ss._data_size(base)
         probes = [(None, None), (None, keys[0]), (keys[-1], None),
                   (b"k0000", b"zzzz")]
         for _ in range(25):
@@ -2931,22 +2976,26 @@ def test_summary_window_equals_bisect_window(spark):
             probes.append((k, k))
             probes.append((k, keys[-1]))
         for start, stop in probes:
-            want, want_end = ss._read_index_window(
-                base, samples, start, stop)
-            win = ss._summary_window(base, start, stop)
-            assert win is not None
-            ix_start, ix_end, win_end = win
-            index_path = os.path.join(base, "Index.db")
-            with open(index_path, "rb") as f:
-                f.seek(ix_start)
-                buf = (f.read(ix_end - ix_start)
-                       if ix_end is not None else f.read())
-            got = ss._parse_index_entries(
-                buf, "v1", index_path, base_off=ix_start)
-            got_end = (win_end if win_end is not None
-                       else ss._data_size(base))
-            assert got == want and got_end == want_end, (seed, start,
-                                                         stop)
+            lo_i = (0 if start is None else
+                    max(0, bisect.bisect_right(sample_keys, start) - 1))
+            hi_i = (len(samples) if stop is None else
+                    min(len(samples),
+                        bisect.bisect_left(sample_keys, stop) + 1))
+            ix_start, ix_end = ss._summary_window(base, start, stop)
+            assert (ix_start, ix_end) == (
+                samples[lo_i][1],
+                samples[hi_i][1] if hi_i < len(samples) else None), (
+                seed, start, stop)
+            win = [(k, off) for k, _, off in
+                   ss._iter_index_with_offsets(base, ix_start, ix_end)]
+            i = full.index(win[0])
+            assert win == full[i:i + len(win)], (seed, start, stop)
+            lo, bs, be = ss.select_index_range(full, size, start, stop)
+            hi = (len(full) if stop is None
+                  else bisect.bisect_left([k for k, _ in full], stop))
+            assert i <= lo and i + len(win) >= min(hi + 1, len(full)), (
+                seed, start, stop)
+            assert ss._key_byte_range(base, start, stop) == (bs, be)
         shutil.rmtree(base)
 
 
