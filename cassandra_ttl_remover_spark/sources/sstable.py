@@ -84,8 +84,6 @@ import shutil
 import struct
 from typing import Iterable, Iterator
 
-from cassandra_ttl_remover_spark.plans import local_frame
-
 DELETION_MASK = 0x01
 EXPIRATION_MASK = 0x02
 #: Cassandra 2.x ColumnSerializer constants (public on-disk contract); the
@@ -633,15 +631,11 @@ def resample_summary_dir(table_dir: str, *, min_index_interval: int,
     name = os.path.basename(table_dir)
     meta = _summary_meta(table_dir)
     if meta is None:
-        samples = []
-        for i, ent in enumerate(_iter_index_with_offsets(table_dir)):
-            if i % min_index_interval == 0:
-                samples.append(ent)
-        _write_summary(table_dir, min_index_interval, samples)
         return {"generation": name, "action": "rebuild",
                 "interval_before": None, "entries_before": None,
                 "interval_after": min_index_interval,
-                "entries_after": len(samples)}
+                "entries_after": _rebuild_summary(table_dir,
+                                                  min_index_interval)}
     interval, n = meta
     eff_min = min_index_interval
     if summary_budget_bytes is not None and n:
@@ -661,18 +655,23 @@ def resample_summary_dir(table_dir: str, *, min_index_interval: int,
                 "interval_after": interval * f,
                 "entries_after": len(kept)}
     if interval > max_index_interval:
-        samples = []
-        for i, ent in enumerate(_iter_index_with_offsets(table_dir)):
-            if i % max_index_interval == 0:
-                samples.append(ent)
-        _write_summary(table_dir, max_index_interval, samples)
         return {"generation": name, "action": "rebuild",
                 "interval_before": interval, "entries_before": n,
                 "interval_after": max_index_interval,
-                "entries_after": len(samples)}
+                "entries_after": _rebuild_summary(table_dir,
+                                                  max_index_interval)}
     return {"generation": name, "action": "noop",
             "interval_before": interval, "entries_before": n,
             "interval_after": interval, "entries_after": n}
+
+
+def _rebuild_summary(table_dir: str, interval: int) -> int:
+    """Rewrite ``table_dir``'s Summary.db from every ``interval``-th
+    Index.db entry (the writer's sampling); returns the sample count."""
+    samples = list(itertools.islice(_iter_index_with_offsets(table_dir),
+                                    0, None, interval))
+    _write_summary(table_dir, interval, samples)
+    return len(samples)
 
 
 def resample_summaries(spark, path: str, *, min_index_interval: int,
@@ -700,19 +699,34 @@ def resample_summaries(spark, path: str, *, min_index_interval: int,
 def _per_table(spark, path: str, one, schema: str):
     """The fleet sweeps' fan-out: one row ``one(table_dir)`` (a dict
     keyed by ``schema``'s columns) per table under ``path``
-    (:func:`_resolve_table_dirs`), one executor task per table up to 32,
-    zero shuffle."""
-    import pandas as pd
+    (:func:`_resolve_table_dirs`), run by :func:`_spec_job`."""
+    return _spec_job(spark, [(d,) for d in _resolve_table_dirs(path)],
+                     lambda d: [one(d)], schema)
 
-    dirs = _resolve_table_dirs(path)
+
+def _spec_job(spark, specs: list[tuple], rows, schema: str):
+    """The one fan-out of driver-planned work: a frame of ``schema`` with
+    the rows of ``rows(*spec)`` for every spec, each spec run by one task
+    of a single stage with no exchange, at most ``defaultParallelism``
+    tasks. Specs stay Python objects in the task closure, so they carry
+    any bytes. ``rows`` yields tuples (columns by position) or dicts
+    (columns by name); a task streams them out in frames of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, so it holds
+    one batch, not its specs' output."""
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def _run(batches):
-        for pdf in batches:
-            yield pd.DataFrame([one(d) for d in pdf["dir"]])
+        import pandas as pd
 
-    return (local_frame(spark, [(d,) for d in dirs], "dir string")
-            .repartition(min(len(dirs), 32))
-            .mapInPandas(_run, schema=schema))
+        out = (row for pdf in batches for i in pdf["id"]
+               for row in rows(*specs[i]))
+        while chunk := list(itertools.islice(out, batch if batch > 0
+                                             else None)):
+            yield pd.DataFrame(chunk)
+
+    n = max(1, min(len(specs), spark.sparkContext.defaultParallelism))
+    return spark.range(len(specs), numPartitions=n).mapInPandas(
+        _run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -837,16 +851,13 @@ def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
     :func:`scan_partition_slice`, a GENERATOR: rows stream out one at a
     time so per-task memory is the consumer's batch size, not the slice
     width (a pathological wide partition cannot OOM a task). ``markers``
-    is the planned block's open-RT list as ``[start, end, ldt, mfda]``
-    items. From ``off`` on, the partition is parsed one ColumnIndex.db
-    block span at a time, framed as a record, up to the first atom at or
-    past ``cell_stop`` (without the sidecar: all of it at once)."""
-    for s, e, ldt, mfda in markers:
-        s = s.decode("utf-8") if isinstance(s, bytes) else s
-        e = e.decode("utf-8") if isinstance(e, bytes) else e
-        if e >= cell_start and s < cell_stop:
-            yield (key, s, "range_tombstone", None,
-                   int(ldt), int(mfda), e)
+    is the planned block's open-RT list as :func:`plan_partition_slice`
+    returns it, ``(start, end, ldt, mfda)`` with byte bounds, compared as
+    bytes (UTF-8 byte order is code-point order). From ``off`` on, the
+    partition is parsed one ColumnIndex.db block span at a time, framed
+    as a record, up to the first atom at or past ``cell_stop`` (without
+    the sidecar: all of it at once). A field that is not UTF-8 raises
+    :func:`_cell_row`'s ValueError naming the partition's offset."""
     kb, start, stop = (x.encode() for x in (key, cell_start, cell_stop))
     data_path = os.path.join(d, "Data.db")
     head, end = _key_byte_range(d, kb, kb + b"\x00")
@@ -854,6 +865,10 @@ def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
         raise CorruptSSTableError(
             f"{data_path}: index offset {off} does not start partition "
             f"{key!r}")
+    for s, e, ldt, mfda in markers:
+        if e >= start and s < stop:
+            yield _cell_row(key, (s, RANGE_TOMBSTONE_MASK, 0, ldt, mfda, e),
+                            data_path, head)
     mc = _table_generation(d) == "mc"
     # a span inside the partition is framed as a live partition's record
     wlen = _uvint_bytes if mc else _U16.pack
@@ -886,13 +901,12 @@ def _iter_slice_one_dir(d: str, off: int, at_cell: bool, markers: list,
                                      and cell[5] >= start):
                     # a range tombstone opening before the slice still
                     # covers it when its end bound reaches the start
-                    yield _cell_row(key, cell, data_path, off)
+                    yield _cell_row(key, cell, data_path, head)
             lo = hi
 
 
 def scan_partition_slice(spark, path: str, key: str, cell_start: str,
-                         cell_stop: str,
-                         max_cells_per_batch: int = 65536):
+                         cell_stop: str):
     """Clustering-range slice of ONE partition across a directory of
     generations — the reference's wide-row read path: bloom check, index
     probe, then the PROMOTED COLUMN INDEX picks the covering cell block
@@ -910,62 +924,19 @@ def scan_partition_slice(spark, path: str, key: str, cell_start: str,
     intersects the slice — so the result carries every RT a consumer
     needs to resolve liveness inside ``[cell_start, cell_stop)``.
 
-    Scale: one tiny task per surviving generation (bloom-dropped tables
-    never open their index); each task seeks once and reads O(blocks
-    covering the slice) bytes. At 10⁶ cells/partition this is the
-    difference between KBs and GBs per slice. Per-task MEMORY is bounded
-    by ``max_cells_per_batch`` (rows stream out in Arrow batches), so
-    even a slice spanning a whole pathological partition cannot OOM the
-    task."""
-    import json
-
-    import pandas as pd
-
-    kb = key.encode()
-    start_b = cell_start.encode()
-    specs = []
-    for d in _resolve_table_dirs(path):
-        plan = plan_partition_slice(d, kb, start_b)
-        if plan is not None:
-            off, at_cell, open_rts = plan
-            markers = json.dumps([
-                [s.decode("utf-8"), e.decode("utf-8"), ldt, mfda]
-                for s, e, ldt, mfda in open_rts
-            ])
-            specs.append((d, off, at_cell, markers))
-    if not specs:
-        return local_frame(spark, [], SSTABLE_SCHEMA)
-
-    cols = ["pk", "cell", "kind", "ttl", "expiration",
-            "writetime", "value"]
-
-    def _read(batches):
-        # bounded per-task materialization: the slice streams out in
-        # Arrow batches of <= max_cells_per_batch rows, so a
-        # pathologically wide slice costs one batch of memory, never
-        # the whole window (VERDICT r7 #6)
-        for pdf in batches:
-            buf = []
-            for d, off, at_cell, markers in zip(
-                    pdf["dir"], pdf["off"], pdf["at_cell"],
-                    pdf["markers"]):
-                for row in _iter_slice_one_dir(
-                        d, int(off), bool(at_cell), json.loads(markers),
-                        key, cell_start, cell_stop):
-                    buf.append(row)
-                    if len(buf) >= max_cells_per_batch:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-            if buf:  # zero yields from mapInPandas is valid
-                yield pd.DataFrame(buf, columns=cols)
-
-    return (
-        local_frame(spark,
-            specs, "dir string, off long, at_cell boolean, markers string",
-        )
-        .repartition(min(len(specs), 32))
-        .mapInPandas(_read, schema=SSTABLE_SCHEMA)
-    )
+    Scale: the driver plans each generation (:func:`plan_partition_slice`;
+    bloom-dropped tables never open their index) and the surviving plans
+    run as one :func:`_spec_job`, one generation per spec; each seeks
+    once and reads O(blocks covering the slice) bytes. At 10⁶
+    cells/partition this is the difference between KBs and GBs per
+    slice. Rows stream out of :func:`_iter_slice_one_dir` in Arrow-sized
+    frames, so even a slice spanning a whole pathological partition
+    holds one batch of rows."""
+    kb, start = key.encode(), cell_start.encode()
+    specs = [(d, *plan, key, cell_start, cell_stop)
+             for d in _resolve_table_dirs(path)
+             if (plan := plan_partition_slice(d, kb, start)) is not None]
+    return _spec_job(spark, specs, _iter_slice_one_dir, SSTABLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2337,14 +2308,11 @@ def _plan_merge_cuts(dirs: list[str], num_splits: int,
 def _merge_ranges(dirs: list[str], num_splits: int,
                   max_planner_keys: int = 65536) -> list[tuple]:
     """The k-way merge's task specs: contiguous half-open key ranges
-    ``(start, stop)`` cut by :func:`_plan_merge_cuts`, ``None`` = open.
-    Cut points ship as HEX so partition keys stay opaque bytes end to
-    end — a strict-UTF-8 decode here crashed the planner on corpora with
-    non-UTF-8 keys even though the on-disk format and every comparison
-    treat keys as bytes (ADVICE r8)."""
-    cuts = [c.hex() for c in _plan_merge_cuts(dirs, num_splits,
-                                              max_planner_keys)]
-    bounds = [None, *cuts, None]
+    ``(start, stop)`` of key bytes cut by :func:`_plan_merge_cuts`,
+    ``None`` = open. Keys stay opaque bytes end to end, as the on-disk
+    format and every comparison treat them."""
+    bounds = [None, *_plan_merge_cuts(dirs, num_splits, max_planner_keys),
+              None]
     return list(zip(bounds, bounds[1:]))
 
 
@@ -2389,20 +2357,18 @@ def _key_byte_range(table_dir: str, key_start: bytes | None,
     return first, last
 
 
-def _merge_range(dirs: list[str], ks: str | None, kp: str | None,
+def _merge_range(dirs: list[str], ks: bytes | None, kp: bytes | None,
                  threshold: int) -> Iterator[tuple[bytes, list]]:
-    """One merge task as a streaming k-way merge: the hex key range
-    ``[ks, kp)``'s parsed partitions from EVERY generation
+    """One merge task as a streaming k-way merge: the key range ``[ks,
+    kp)``'s parsed partitions (``None`` = open) from EVERY generation
     (:func:`_key_byte_range`) merged on key bytes by ``heapq.merge``
     (stable: a key's partitions arrive in generation order), each key
     resolved by :func:`_resolve_atoms`. Yields ``(key, resolved rows)`` in
     key order, holding one partition per generation at a time."""
-    start = bytes.fromhex(ks) if ks is not None else None
-    stop = bytes.fromhex(kp) if kp is not None else None
     key = operator.itemgetter(0)
     merged = heapq.merge(*(
         (part for _, _, part in _partition_records(
-            os.path.join(d, "Data.db"), *_key_byte_range(d, start, stop),
+            os.path.join(d, "Data.db"), *_key_byte_range(d, ks, kp),
             _parse_partition))
         for d in dirs), key=key)
     for k, group in itertools.groupby(merged, key=key):
@@ -2492,26 +2458,19 @@ def merge_compact_sorted(spark, path: str, *, gc_grace_us: int,
     shadowing sees the complete deletion picture. Planner memory is
     bounded by ``max_planner_keys`` (see :func:`_plan_merge_cuts`);
     per-task working state is one partition per generation, whatever
-    the range's size (:func:`_merge_range`)."""
+    the range's size (:func:`_merge_range`), and a task holds one Arrow
+    batch of output rows (:func:`_spec_job`)."""
     dirs = _resolve_table_dirs(path)
-    ranges = _merge_ranges(dirs, num_splits, max_planner_keys)
     threshold = int(now_us) - int(gc_grace_us)
-    # a task holds one Arrow batch of rows (the session's batch size)
-    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
-    def _merge(batches):
-        import pandas as pd
+    def _merge(ks, kp):
+        for key, resolved in _merge_range(dirs, ks, kp, threshold):
+            for row in resolved:
+                yield _merged_row(key, *row)
 
-        rows = (_merged_row(key, *row)
-                for pdf in batches for ks, kp in zip(pdf["ks"], pdf["kp"])
-                for key, resolved in _merge_range(dirs, ks, kp, threshold)
-                for row in resolved)
-        while chunk := list(itertools.islice(rows, batch if batch > 0
-                                             else None)):
-            yield pd.DataFrame(chunk, columns=_MERGED_COLUMNS)
-
-    return local_frame(spark, ranges, "ks string, kp string").mapInPandas(
-        _merge, schema=MERGED_SCHEMA)
+    return _spec_job(spark, _merge_ranges(dirs, num_splits,
+                                          max_planner_keys),
+                     _merge, MERGED_SCHEMA)
 
 
 def stream_digests(spark, path: str):
@@ -2732,8 +2691,8 @@ def _gc_split(shard_dir: str, data_path: str, start: int, end: int,
     return w.n_partitions, n_in, n_out
 
 
-def _compact_range(shard_dir: str, dirs: list[str], ks: str | None,
-                   kp: str | None, threshold: int) -> tuple[int, int]:
+def _compact_range(shard_dir: str, dirs: list[str], ks: bytes | None,
+                   kp: bytes | None, threshold: int) -> tuple[int, int]:
     """The compaction task: each key of the streaming merge of ``[ks,
     kp)`` over ``dirs`` (:func:`_merge_range`) added to one table at
     ``shard_dir`` as the merge resolves it. Returns ``(n_partitions,

@@ -784,8 +784,8 @@ def test_slice_decode_streams_constant_memory(tmp_path):
     """VERDICT r7 #6: a slice spanning a WHOLE 200k-cell partition must
     stream, not materialize — peak allocations while consuming the
     iterator stay far below the ~30 MB the full row list costs (the
-    task-side guarantee behind scan_partition_slice's
-    max_cells_per_batch)."""
+    task-side guarantee behind scan_partition_slice, whose spec job
+    streams the rows out one Arrow batch at a time)."""
     import tracemalloc
 
     from cassandra_ttl_remover_spark.sources import sstable as ss

@@ -1319,6 +1319,76 @@ def test_slice_reemits_open_range_tombstones(spark):
     shutil.rmtree(out)
 
 
+def test_slice_non_utf8_open_rt_bound_fails_naming_partition(spark):
+    """An open range tombstone whose end bound is not UTF-8 fails the
+    slice with the scan's ValueError, naming the Data.db and the
+    partition's head offset (not the block the slice seeks to)."""
+    cells = [(b"0000:a", ss.RANGE_TOMBSTONE_MASK, 0, 1_700_000_000,
+              1_700_000_000_000_500, b"9999:\xff")]
+    cells += [(f"{i:04d}:c".encode(), 0, 0, 0, 1_700_000_000_000_000 + i,
+               b"v") for i in range(299)]
+    out = _tmpdir()
+    ss.write_sstable([(b"p", cells)], out)
+    plan = ss.plan_partition_slice(out, b"p", b"0200:")
+    assert plan[0] > 0 and plan[1] is True and plan[2]
+    want = (f"{out}/Data.db: RT end bound of the partition at offset 0 "
+            "is not UTF-8")
+    with pytest.raises(Exception) as scan:
+        ss.scan_sstable(spark, out).collect()
+    assert want in str(scan.value)
+    with pytest.raises(ValueError) as task:
+        list(ss._iter_slice_one_dir(out, *plan, "p", "0200:", "0300:"))
+    assert str(task.value).startswith(want)
+    with pytest.raises(Exception) as sliced:
+        ss.scan_partition_slice(spark, out, "p", "0200:", "0300:").collect()
+    assert want in str(sliced.value)
+    shutil.rmtree(out)
+
+
+def _job_shape(spark, fn) -> tuple[list, int, int, int]:
+    """``fn()``'s result, then the jobs, stages and tasks it ran, read
+    from the status tracker by job group."""
+    sc = spark.sparkContext
+    gid = f"shape-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "plan shape")
+    try:
+        got = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(gid)
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    tasks = sum(st.getStageInfo(s).numTasks for s in stages)
+    return got, len(jobs), len(stages), tasks
+
+
+def test_sweeps_and_slice_are_one_job_one_stage(spark):
+    """The per-table sweeps (verify_digests standing in for all six) and
+    the slice run their specs as one job of one stage with no exchange,
+    at most min(specs, defaultParallelism) tasks."""
+    from cassandra_ttl_remover_spark.plans import exchange_count
+
+    base = _tmpdir()
+    for g in range(6):
+        ss.write_sstable(
+            [(b"p", [(f"{i:04d}:c".encode(), 0, 0, 0, g * 1000 + i, b"v")
+                     for i in range(g * 20, g * 20 + 100)])],
+            os.path.join(base, f"g{g}"), colindex_every=8)
+    par = spark.sparkContext.defaultParallelism
+    df = ss.verify_digests(spark, base)
+    assert exchange_count(df) == 0
+    rows, jobs, stages, tasks = _job_shape(spark, df.collect)
+    assert len(rows) == 6 and all(r.digest_ok and r.toc_ok for r in rows)
+    assert (jobs, stages) == (1, 1) and 0 < tasks <= min(6, par)
+    df = ss.scan_partition_slice(spark, base, "p", "0030:", "0050:")
+    assert exchange_count(df) == 0
+    rows, jobs, stages, tasks = _job_shape(spark, df.collect)
+    assert sorted({r.cell for r in rows}) == [
+        f"{i:04d}:c" for i in range(30, 50)]
+    assert (jobs, stages) == (1, 1) and 0 < tasks <= min(6, par)
+    shutil.rmtree(base)
+
+
 def test_scrub_healthy_and_each_corruption_isolated(spark):
     """A healthy table is all-green (shallow and deep); each corruption
     flips ONLY its own verdict: data byte -> digest, stray file -> toc,
@@ -1429,8 +1499,8 @@ def test_merge_compact_sorted_equals_argmax_form(spark):
 
 
 def test_merge_compact_sorted_moves_no_cell_bytes(spark):
-    """The merge plan's only exchange is the tiny key-range table — the
-    cell stream itself never shuffles (the 100 TB claim)."""
+    """The merge plan has no exchange: the cell stream never shuffles
+    (the 100 TB claim)."""
     from cassandra_ttl_remover_spark.plans import exchange_count
 
     base = _tmpdir()
@@ -1438,7 +1508,7 @@ def test_merge_compact_sorted_moves_no_cell_bytes(spark):
                               os.path.join(base, "gen1"))
     df = ss.merge_compact_sorted(
         spark, base, gc_grace_us=0, now_us=0, num_splits=4)
-    assert exchange_count(df) <= 1  # the n-row range-table repartition
+    assert exchange_count(df) == 0
     shutil.rmtree(base)
 
 
@@ -1451,19 +1521,11 @@ def test_merge_compact_sorted_is_one_job_one_stage(spark):
             [(f"k{i:03d}".encode(), [(b"c", 0, 0, 0, g, b"v")])
              for i in range(g, 40, g + 1)],
             os.path.join(base, f"g{g}"), summary_interval=4)
-    sc = spark.sparkContext
-    gid = f"merge-shape-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(gid, "merge_compact_sorted plan shape")
-    try:
-        rows = ss.merge_compact_sorted(spark, base, gc_grace_us=0, now_us=0,
-                                       num_splits=4).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(rows) == 40
-    st = sc.statusTracker()
-    (job,) = st.getJobIdsForGroup(gid)
-    (stage,) = st.getJobInfo(job).stageIds
-    assert st.getStageInfo(stage).numTasks == min(sc.defaultParallelism, len(
+    rows, jobs, stages, tasks = _job_shape(
+        spark, ss.merge_compact_sorted(spark, base, gc_grace_us=0, now_us=0,
+                                       num_splits=4).collect)
+    assert len(rows) == 40 and (jobs, stages) == (1, 1)
+    assert tasks == min(spark.sparkContext.defaultParallelism, len(
         ss._merge_ranges(ss._resolve_table_dirs(base), 4)))
     shutil.rmtree(base)
 
@@ -2532,11 +2594,8 @@ try:
             if rewrite == "compact":
                 ss.compact_rewrite(None, src, out, gc_grace_us=0,
                                    now_us=thr, num_splits=splits)
-                specs = [(f"shard={i:05d}",
-                          *(b if b is None else bytes.fromhex(b)
-                            for b in rng))
-                         for i, rng in enumerate(ss._merge_ranges(dirs,
-                                                                  splits))]
+                specs = [(f"shard={i:05d}", *rng) for i, rng
+                         in enumerate(ss._merge_ranges(dirs, splits))]
                 keys = sorted({k for parts in gens for k in parts})
                 expect = {shard: [
                     (k, *_model_resolve(
